@@ -45,16 +45,15 @@ def main(argv: list[str] | None = None) -> int:
     elif args.command == "sync":
         result = {"sync": fwd.sync()}
     else:
-        reports = fwd.check(repair=args.repair)
-        result = {
-            "check": {
-                t: {
-                    "ranges": rep.count(),
-                    "mismatched": rep.filter("mismatch").count(),
-                }
-                for t, rep in reports.items()
+        # with --repair the reports are what repair found, taken before it ran
+        result = {"check": {}}
+        for t, rep in fwd.check(repair=args.repair).items():
+            rows = rep.collect()
+            result["check"][t] = {
+                "ranges": len(rows),
+                "mismatched": sum(r.mismatch for r in rows),
+                "duplicates": sum(r.n_dup for r in rows),
             }
-        }
     print(json.dumps(result, sort_keys=True))
     return 0
 

@@ -22,7 +22,7 @@
       path: /path/to/state         # metadata store (migbq: sqlite/peewee)
 
 migbq's MSSQL host/port/database keys map 1:1 onto the JDBC url; its
-sqlite metadata DB maps onto a parquet state directory.
+sqlite metadata DB is `meta.path`/migbq.sqlite (stdlib sqlite3).
 """
 
 from __future__ import annotations

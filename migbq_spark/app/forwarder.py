@@ -6,44 +6,54 @@ The reference's hand-rolled serial loop
     for lo in range(min_pk, max_pk, batch_size):
         SELECT * WHERE pk > lo AND pk <= lo+batch_size  → gzip → BQ load job
 
-collapses into ONE declarative pipeline per table (SURVEY §3.2): a
-partitioned read whose partitions ARE the PK ranges (JDBC stride or
-parquet row groups), a single distributed sink write, and a metadata
-update — Spark's scheduler supplies the parallelism, retry, and
-speculative re-execution migbq implemented by hand around its loop.
+collapses into ONE bounded pass per table (SURVEY §3.2): a partitioned
+read whose partitions ARE the PK ranges (JDBC stride or parquet row
+groups), one distributed write into a staging directory, and one commit
+that publishes the files and records progress (`metadata.py`) — Spark's
+scheduler supplies the parallelism, retry, and speculative re-execution
+migbq implemented by hand around its loop.
 
 Commands (mirroring `migbq run|sync|check config.yml`):
-- run    — full load per table; records progress + per-range job log.
+- run    — full load per table; with full_refresh the table starts over.
 - sync   — incremental: forward only pk > last-migrated (EP2; §2
            `incremental_delta`).
 - check  — count reconciliation source vs destination, per PK range
-           (EP3; §2 `check_count_reconcile`); with repair=True,
-           re-forwards mismatched ranges and dedups the destination by
-           keep-latest-per-PK (§2 `win_rownum_dedup` — migbq's BQ dedup
-           DML).
+           (EP3; §2 `check_count_reconcile`), duplicate keys included;
+           with repair=True, re-forwards ranges the destination is short
+           of and rewrites it with one row per PK (§2 `win_rownum_dedup`
+           — migbq's BQ dedup DML).
 
-Scale notes (100 TB): per-table work is a scan + an append — no driver
-funnel; JDBC ingestion parallelism = ceil(pk_span / batch_size) stride
-partitions (capped), exactly migbq's batch size semantics run N-wide.
-The job log records the *planned* stride ranges with their actual row
-counts (computed distributed, one groupBy), so check/retry semantics are
-preserved without serializing execution.
+Scale notes (100 TB): per-table work is one scan + one write — no driver
+funnel; the row count and last PK come from the same pass
+(`DataFrame.observe`).  JDBC ingestion parallelism = ceil(pk_span /
+batch_size) stride partitions (capped) over the keys past the last
+migrated one, exactly migbq's batch size semantics run N-wide.  Every
+read of a JDBC call is bounded by its MIN/MAX probe, so rows inserted
+while the call runs are left to the next one.  The job log holds one row
+per table per call: a call commits all or nothing.
 """
 
 from __future__ import annotations
 
-import time
+import shutil
 import uuid
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from migbq_spark.app.config import PipelineConfig, TableSpec
-from migbq_spark.app.metadata import MetadataStore
+from migbq_spark.app.metadata import MetadataStore, local_frame
 from migbq_spark.session import ensure_runtime_confs
 
 _MAX_JDBC_PARTITIONS = 256
+
+_RANGES_SCHEMA = T.StructType([T.StructField("range_lo", T.LongType())])
+_REPORT_SCHEMA = T.StructType(
+    [T.StructField(c, T.LongType()) for c in ("range_lo", "n_src", "n_dst", "n_dup")]
+    + [T.StructField("mismatch", T.BooleanType())]
+)
 
 #: message fragments that plausibly mean "this identifier-quoting combo
 #: is wrong for this store" (SQLState 42xxx family: syntax error,
@@ -77,23 +87,25 @@ class Forwarder:
 
     # ------------------------------------------------------------- sources
 
-    def read_source(self, table: TableSpec, lo: int | None = None) -> DataFrame:
-        """Source read with optional exclusive lower PK bound (sync)."""
+    def read_source(self, table: TableSpec, lo: int | None = None) -> DataFrame | None:
+        """Source read with optional exclusive lower PK bound (sync).  A
+        JDBC read is also bounded above by its bounds probe, and is None
+        when the probe finds no rows past ``lo``."""
         if self.cfg.in_type == "parquet":
             df = self.spark.read.parquet(f"{self.cfg.in_path}/{table.name}.parquet")
-        elif self.cfg.in_type == "jdbc":
-            df = self._read_jdbc(table)
-        else:
-            raise ValueError(f"unknown in.type {self.cfg.in_type!r}")
-        if lo is not None:
-            df = df.filter(F.col(table.pk) > lo)  # pushed to scan/JDBC
-        return df
+            if lo is not None:
+                df = df.filter(F.col(table.pk) > lo)  # pushed to the scan
+            return df
+        if self.cfg.in_type == "jdbc":
+            return self._read_jdbc(table, lo)
+        raise ValueError(f"unknown in.type {self.cfg.in_type!r}")
 
-    def _read_jdbc(self, table: TableSpec) -> DataFrame:
+    def _read_jdbc(self, table: TableSpec, lo: int | None) -> DataFrame | None:
         """Partitioned JDBC read: Spark emits one stride query per
         partition — migbq's PK-range sweep, parallelized.  Bounds come
-        from a one-row min/max probe (migbq's first query, §2
-        `agg_pk_bounds`)."""
+        from a one-row min/max probe of the keys past ``lo`` (migbq's
+        first query, §2 `agg_pk_bounds`), and every stride query is
+        filtered to ``(lo, hi]``."""
         def reader():
             # fresh reader per use: DataFrameReader options accumulate,
             # and 'query' (probe) conflicts with 'dbtable' (range read)
@@ -123,12 +135,13 @@ class Forwarder:
             (f'"{table.pk}"', f'"{table.name}"'),
             (table.pk, f'"{table.name}"'),
         ):
+            past = "" if lo is None else f" WHERE {pk_q} > {int(lo)}"
             try:
                 bounds = (
                     reader().option(
                         "query",
                         f"SELECT MIN({pk_q}) AS lo, MAX({pk_q}) AS hi "
-                        f"FROM {tbl_q}",
+                        f"FROM {tbl_q}{past}",
                     )
                     .load()
                     .collect()[0]
@@ -151,12 +164,12 @@ class Forwarder:
         # Row field name is not reliably lowercase
         lo_b, hi_b = bounds[0], bounds[1]
         if lo_b is None:
-            return reader().option("dbtable", table.name).load()
+            return None
         span = max(int(hi_b) - int(lo_b) + 1, 1)
         n_part = min(
             max(span // max(self.cfg.batch_size, 1), 1), _MAX_JDBC_PARTITIONS
         )
-        return (
+        df = (
             reader().option("dbtable", table.name)
             .option("partitionColumn", table.pk)
             .option("lowerBound", str(lo_b))
@@ -164,6 +177,10 @@ class Forwarder:
             .option("numPartitions", str(n_part))
             .load()
         )
+        bounded = F.col(table.pk) <= int(hi_b)
+        if lo is not None:
+            bounded &= F.col(table.pk) > lo
+        return df.filter(bounded)
 
     # --------------------------------------------------------------- sinks
 
@@ -178,163 +195,168 @@ class Forwarder:
 
     def read_dest(self, table: TableSpec) -> DataFrame | None:
         p = Path(self._dest_path(table))
-        if not p.exists():
+        if not any(p.glob("*.parquet")):
             return None
         return self.spark.read.parquet(str(p))
+
+    def _commit(
+        self,
+        table: TableSpec,
+        df: DataFrame,
+        run_id: str,
+        command: str,
+        range_lo: int | None = None,
+        replaces: list[str] | None = None,
+    ) -> int:
+        """Write ``df`` once into the table's staging directory, then
+        publish it with its progress (`MetadataStore.stage`/`publish`).
+        With ``replaces`` the rows replace those files of the destination;
+        otherwise they are appended, and a pass that found no rows is
+        discarded."""
+        dest = Path(self._dest_path(table))
+        staging = dest / "_staging" / run_id
+        pk = F.col(table.pk)
+        seen = Observation()
+        df.observe(
+            seen, F.count(F.lit(1)).alias("n_rows"), F.max(pk).alias("last_pk")
+        ).write.parquet(str(staging))
+        n_rows, last_pk = seen.get["n_rows"], seen.get["last_pk"]
+        if not n_rows and replaces is None:
+            shutil.rmtree(staging)
+            self.meta.append_jobs([(table.name, range_lo, range_lo, 0, "done", run_id)])
+            return 0
+        self.meta.stage(
+            run_id, table.name, command, str(dest), str(staging),
+            range_lo, n_rows, last_pk, replaces,
+        )
+        self.meta.publish(run_id, table.name)
+        return n_rows
+
+    def _recover(self) -> None:
+        """Finish what an interrupted call left behind: staged runs are
+        published, unrecorded staging and dropped tables are deleted."""
+        self.meta.recover()
+        for table in self.cfg.tables:
+            dest = Path(self._dest_path(table))
+            shutil.rmtree(dest / "_staging", ignore_errors=True)
+            for old in dest.parent.glob(f".{dest.name}.*.dropped"):
+                shutil.rmtree(old)
 
     # ------------------------------------------------------------ commands
 
     def run(self, full_refresh: bool = False) -> dict[str, int]:
         """EP1: bulk migration of every configured table."""
+        self._recover()
         out: dict[str, int] = {}
         run_id = uuid.uuid4().hex[:12]
         for table in self.cfg.tables:
             if full_refresh:
+                # progress first: a crash after it leaves a destination
+                # check(repair=True) can dedup, never one that sync would
+                # extend from a stale high-water mark
+                self.meta.clear_progress(table.name)
                 dest = Path(self._dest_path(table))
                 if dest.exists():
-                    import shutil
-
-                    shutil.rmtree(dest)
-            out[table.name] = self._forward(table, lo=None, run_id=run_id)
+                    old = dest.with_name(f".{dest.name}.{run_id}.dropped")
+                    dest.rename(old)
+                    shutil.rmtree(old)
+            out[table.name] = self._forward(table, lo=None, run_id=run_id, command="run")
         return out
 
     def sync(self) -> dict[str, int]:
         """EP2: forward only rows beyond the last migrated PK."""
+        self._recover()
         out: dict[str, int] = {}
         run_id = uuid.uuid4().hex[:12]
         for table in self.cfg.tables:
             out[table.name] = self._forward(
-                table, lo=self.meta.last_pk(table.name), run_id=run_id
+                table, lo=self.meta.last_pk(table.name), run_id=run_id, command="sync"
             )
         return out
 
-    def _forward(self, table: TableSpec, lo: int | None, run_id: str) -> int:
+    def _forward(self, table: TableSpec, lo: int | None, run_id: str, command: str) -> int:
         src = self.read_source(table, lo=lo)
-        pk = F.col(table.pk)
+        if src is None:  # the bounds probe found nothing past lo
+            self.meta.append_jobs([(table.name, lo, lo, 0, "done", run_id)])
+            return 0
+        return self._commit(table, src, run_id, command, range_lo=lo)
 
-        # Plan the migbq-style ranges and their row counts in ONE
-        # distributed pass (groupBy on pk div batch_size) — the log keeps
-        # migbq's range granularity without serializing execution.  The
-        # per-range rows never touch the driver: the log is a distributed
-        # parquet append, and only MIN/MAX/COUNT scalars come back (one
-        # row) for the progress update.
-        bs = self.cfg.batch_size
-        ranges = src.groupBy((pk - 1 - (pk - 1) % bs).alias("range_lo")).agg(
-            F.count(F.lit(1)).alias("n_rows"), F.max(pk).alias("max_pk")
-        )
-        ranges.persist()
-        try:
-            totals = ranges.agg(
-                F.sum("n_rows").alias("n_rows"), F.max("max_pk").alias("last_pk")
-            ).collect()[0]
-            if totals.n_rows is None:
-                return 0
-
-            src.write.mode("append").parquet(self._dest_path(table))
-
-            self.meta.append_jobs_df(
-                ranges.select(
-                    F.lit(table.name).alias("table_name"),
-                    F.col("range_lo"),
-                    (F.col("range_lo") + bs).alias("range_hi"),
-                    F.col("n_rows"),
-                    F.lit("done").alias("state"),
-                    F.lit(run_id).alias("run_id"),
-                )
-            )
-        finally:
-            ranges.unpersist()
-        n_rows = int(totals.n_rows)
-        last_pk = int(totals.last_pk)
-        prev = self.meta.progress().filter(
-            F.col("table_name") == table.name
-        ).collect()
-        prev_rows = int(prev[0].n_rows) if prev else 0
-        self.meta.set_progress(table.name, last_pk, prev_rows + n_rows, run_id)
-        return n_rows
+    def _range_lo(self, table: TableSpec) -> Column:
+        """The batch-size PK range a key falls in, by its exclusive lower
+        bound: migbq's loop step ``pk > lo AND pk <= lo + batch_size``."""
+        pk, bs = F.col(table.pk), self.cfg.batch_size
+        return pk - 1 - (pk - 1) % bs
 
     def check(self, repair: bool = False) -> dict[str, DataFrame]:
-        """EP3: per-range count reconciliation source vs destination;
-        optional repair = re-forward mismatched ranges + dedup dest."""
+        """EP3: per-range reconciliation of source vs destination.
+
+        Each table's report (range_lo, n_src, n_dst = distinct keys,
+        n_dup = rows beyond one per key, mismatch) is collected once, and
+        returned as that snapshot; with ``repair`` it is what the repair
+        acted on."""
+        self._recover()
+        run_id = uuid.uuid4().hex[:12]
         reports: dict[str, DataFrame] = {}
         for table in self.cfg.tables:
             pk = F.col(table.pk)
-            bs = self.cfg.batch_size
-            rng = (pk - 1 - (pk - 1) % bs).alias("range_lo")
-            src_counts = (
-                self.read_source(table)
-                .groupBy(rng)
-                .agg(F.count(F.lit(1)).alias("n_src"))
-            )
+            rng = self._range_lo(table).alias("range_lo")
+            src = self.read_source(table)
+            if src is None:
+                src_counts = self.spark.createDataFrame([], "range_lo long, n_src long")
+            else:
+                src_counts = src.groupBy(rng).agg(F.count(F.lit(1)).alias("n_src"))
             dest = self.read_dest(table)
             if dest is None:
                 dest_counts = self.spark.createDataFrame(
-                    [], "range_lo long, n_dst long"
+                    [], "range_lo long, n_dst long, n_dup long"
                 )
             else:
                 dest_counts = (
-                    dest.select(pk).distinct()
+                    dest.groupBy(pk).agg(F.count(F.lit(1)).alias("n"))
                     .groupBy(rng)
-                    .agg(F.count(F.lit(1)).alias("n_dst"))
+                    .agg(
+                        F.count(F.lit(1)).alias("n_dst"),
+                        (F.sum("n") - F.count(F.lit(1))).alias("n_dup"),
+                    )
                 )
-            report = (
+            rows = sorted(
                 src_counts.join(dest_counts, "range_lo", "full")
                 .select(
                     "range_lo",
                     F.coalesce("n_src", F.lit(0)).alias("n_src"),
                     F.coalesce("n_dst", F.lit(0)).alias("n_dst"),
+                    F.coalesce("n_dup", F.lit(0)).alias("n_dup"),
                 )
-                .withColumn("mismatch", F.col("n_src") != F.col("n_dst"))
+                .collect()
             )
-            reports[table.name] = report
+            reports[table.name] = local_frame(
+                self.spark,
+                [(*r, r.n_src != r.n_dst or r.n_dup > 0) for r in rows],
+                _REPORT_SCHEMA,
+            )
             if repair:
-                self._repair(table, report)
+                self._repair(table, rows, run_id)
         return reports
 
-    def _repair(self, table: TableSpec, report: DataFrame) -> None:
-        """Re-forward mismatched ranges, then rewrite the destination
-        keeping exactly one row per PK (migbq's ROW_NUMBER()=1 dedup —
-        retried loads double-insert, the dedup repairs).  The dedup probe
-        is independent of the range reconciliation: duplicate PKs leave
-        distinct-count reconciliation green (§2 `agg_having_dups` is the
-        reference's separate duplicate check)."""
-        # The mismatched-range set stays distributed: a broadcast semi-join
-        # selects the rows to re-forward (at 100 TB a fully-corrupt dest
-        # would make a collected isin() list |table|/batch_size long).
-        # localCheckpoint materializes the mismatch set ONCE before the
-        # append below: otherwise the fix.write job would re-run the full
-        # source/dest reconciliation AND re-scan the destination parquet
-        # it is appending to in the same action — correct only while the
-        # file index stays pinned, fragile under task retries (ADVICE r2).
-        bad_ranges = (
-            report.filter("mismatch").select("range_lo").localCheckpoint(eager=True)
-        )
-        n_bad = bad_ranges.limit(1).count()
-        if n_bad:
-            pk = F.col(table.pk)
-            bs = self.cfg.batch_size
+    def _repair(self, table: TableSpec, report: list, run_id: str) -> None:
+        """Re-forward the ranges whose distinct keys fall short of the
+        source, and rewrite the destination with one row per PK (migbq's
+        ROW_NUMBER()=1 dedup — retried loads double-insert, the dedup
+        repairs).  ``dropDuplicates`` keeps one arbitrary row of each
+        key, not the latest: the copies are of the same source row.  The
+        rewrite goes through the staged commit, replacing exactly the
+        files it read, and resets progress to what it wrote."""
+        short = [(r.range_lo,) for r in report if r.n_dst < r.n_src]
+        if not short and not any(r.n_dup for r in report):
+            return
+        dest = self.read_dest(table)
+        keep = dest
+        if short:
             fix = self.read_source(table).join(
-                F.broadcast(bad_ranges),
-                (pk - 1 - (pk - 1) % bs) == F.col("range_lo"),
+                F.broadcast(local_frame(self.spark, short, _RANGES_SCHEMA)),
+                self._range_lo(table) == F.col("range_lo"),
                 "left_semi",
             )
-            fix.write.mode("append").parquet(self._dest_path(table))
-
-        dest = self.read_dest(table)
-        if dest is None:
-            return
-        totals = dest.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.count_distinct(F.col(table.pk)).alias("nd"),
-        ).collect()[0]
-        if int(totals.n) == int(totals.nd) and not n_bad:
-            return
-        # keep-one-per-pk rewrite (atomic swap through a temp dir)
-        dest_path = self._dest_path(table)
-        deduped = dest.dropDuplicates([table.pk])
-        tmp = f"{dest_path}.__dedup__{int(time.time() * 1e6)}"
-        deduped.write.mode("overwrite").parquet(tmp)
-        import shutil
-
-        shutil.rmtree(dest_path)
-        Path(tmp).rename(dest_path)
+            keep = fix if dest is None else dest.unionByName(fix)
+        replaces = [] if dest is None else [f.rsplit("/", 1)[-1] for f in dest.inputFiles()]
+        self._commit(table, keep.dropDuplicates([table.pk]), run_id, "repair", replaces=replaces)

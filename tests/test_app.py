@@ -74,13 +74,30 @@ def test_check_clean_and_repair(spark, cfg_path, tmp_path):
     events = fwd.cfg.tables[0]
     dup = fwd.read_source(events).filter("event_id <= 500")
     dup.write.mode("append").parquet(fwd._dest_path(events))
+    n_dup = dup.count()
     rep = fwd.check()["events"]
-    # distinct-pk counting means counts still reconcile, but repair dedups
-    fwd.check(repair=True)
+    # every key is present, but the duplicated ranges are mismatches
+    assert rep.filter("n_src != n_dst").count() == 0
+    assert rep.filter("mismatch").count() == rep.filter("n_dup > 0").count() > 0
+    assert rep.agg(F.sum("n_dup")).collect()[0][0] == n_dup
+    found = fwd.check(repair=True)["events"]
+    assert found.agg(F.sum("n_dup")).collect()[0][0] == n_dup  # what repair found
     n_src = fwd.read_source(events).count()
     dest = fwd.read_dest(events)
     assert dest.count() == n_src
     assert dest.select("event_id").distinct().count() == n_src
+    assert fwd.meta.progress().filter("table_name = 'events'").first().n_rows == n_src
+    assert fwd.check()["events"].filter("mismatch").count() == 0
+
+
+def test_full_refresh_resets_progress(spark, cfg_path, sf_dir):
+    fwd = _forwarder(spark, cfg_path)
+    n_src = spark.read.parquet(f"{sf_dir}/nation.parquet").count()
+    fwd.cfg.tables = [t for t in fwd.cfg.tables if t.name == "nation"]
+    for _ in range(3):
+        assert fwd.run(full_refresh=True) == {"nation": n_src}
+        assert fwd.meta.progress().first().n_rows == n_src
+        assert fwd.read_dest(fwd.cfg.tables[0]).count() == n_src
 
 
 def test_missing_range_requeue(spark, cfg_path):
@@ -171,7 +188,7 @@ def test_cli_jdbc_roundtrip(spark, tmp_path, sf_dir, capsys):
     assert dest.select("n_nationkey").distinct().count() == n_src + n_new
 
 
-def test_cli_surface(cfg_path, capsys):
+def test_cli_surface(spark, cfg_path, capsys):
     from migbq_spark.app.cli import main
 
     assert main(["run", cfg_path]) == 0
@@ -185,6 +202,113 @@ def test_cli_surface(cfg_path, capsys):
     assert main(["check", cfg_path]) == 0
     check_out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
     assert check_out["check"]["events"]["mismatched"] == 0
+
+    # `check --repair` prints what repair found, not the repaired state
+    fwd = _forwarder(spark, cfg_path)
+    events = fwd.cfg.tables[0]
+    dup = fwd.read_source(events).filter("event_id <= 500")
+    n_dup = dup.count()
+    dup.write.mode("append").parquet(fwd._dest_path(events))
+    assert main(["check", cfg_path, "--repair"]) == 0
+    found = json.loads(capsys.readouterr().out.strip().splitlines()[-1])["check"]["events"]
+    assert found["mismatched"] > 0 and found["duplicates"] == n_dup
+    assert main(["check", cfg_path]) == 0
+    after = json.loads(capsys.readouterr().out.strip().splitlines()[-1])["check"]["events"]
+    assert after == {"ranges": found["ranges"], "mismatched": 0, "duplicates": 0}
+
+
+def _keys(spark, n_from: int, n_to: int):
+    """Rows with keys ``n_from .. n_to - 1``."""
+    return spark.range(n_from, n_to).select(
+        F.col("id"), (F.col("id") * 7 % 13).alias("v")
+    )
+
+
+def _assert_exactly_once(fwd, n: int) -> None:
+    """The destination holds keys 0 .. n - 1 once each, progress agrees
+    with it, and check() reconciles."""
+    table = fwd.cfg.tables[0]
+    got = fwd.read_dest(table).agg(
+        F.count(F.lit(1)).alias("rows"),
+        F.count_distinct("id").alias("keys"),
+        F.max("id").alias("hi"),
+    ).first()
+    assert (got.rows, got.keys, got.hi) == (n, n, n - 1)
+    prog = fwd.meta.progress().first()
+    assert (prog.n_rows, prog.last_pk) == (n, n - 1)
+    assert fwd.check()[table.name].filter("mismatch").count() == 0
+
+
+def test_sync_bounded_by_probe(spark, tmp_path):
+    """Rows a JDBC source gains between the bounds probe and the write are
+    left to the next sync, which forwards them once."""
+    from migbq_spark.app import Forwarder, PipelineConfig
+
+    url = f"jdbc:derby:memory:race_{tmp_path.name};create=true"
+    driver = "org.apache.derby.jdbc.EmbeddedDriver"
+
+    def insert(lo, hi, mode):
+        (_keys(spark, lo, hi).write.format("jdbc").option("url", url)
+         .option("dbtable", "t").option("driver", driver).mode(mode).save())
+
+    insert(0, 100, "overwrite")
+    fwd = Forwarder(spark, PipelineConfig.from_dict({
+        "in": {"type": "jdbc", "url": url, "driver": driver,
+               "tables": {"t": {"pk": "id"}}, "batch_size": 50},
+        "out": {"type": "parquet", "path": str(tmp_path / "dest")},
+        "meta": {"path": str(tmp_path / "meta")},
+    }))
+    read_source = fwd.read_source
+
+    def racing(table, lo=None):
+        df = read_source(table, lo=lo)  # the probe has run
+        insert(100, 120, "append")
+        return df
+
+    fwd.read_source = racing
+    assert fwd.sync() == {"t": 100}
+    fwd.read_source = read_source
+    assert fwd.sync() == {"t": 20}
+    _assert_exactly_once(fwd, 120)
+
+
+@pytest.mark.parametrize(
+    "step,after",
+    [("stage", False), ("stage", True), ("_publish_files", True), ("_commit_progress", True)],
+    ids=["before-manifest", "after-manifest", "after-publish", "in-progress-commit"],
+)
+def test_sync_crash_recovers_exactly_once(spark, tmp_path, monkeypatch, step, after):
+    """A sync that dies at any step of the commit leaves state the next
+    plain sync completes: every key once, progress equal to the
+    destination."""
+    from migbq_spark.app import Forwarder, PipelineConfig
+
+    src = tmp_path / "src"
+    _keys(spark, 0, 1000).write.parquet(str(src / "t.parquet"))
+    fwd = Forwarder(spark, PipelineConfig.from_dict({
+        "in": {"type": "parquet", "path": str(src), "tables": {"t": {"pk": "id"}},
+               "batch_size": 250},
+        "out": {"type": "parquet", "path": str(tmp_path / "dest")},
+        "meta": {"path": str(tmp_path / "meta")},
+    }))
+    assert fwd.run() == {"t": 1000}
+    _keys(spark, 1000, 1200).write.mode("append").parquet(str(src / "t.parquet"))
+
+    real = getattr(fwd.meta, step)
+
+    def crash(*a, **kw):
+        if after:
+            real(*a, **kw)
+        raise RuntimeError(f"killed at {step}")
+
+    monkeypatch.setattr(fwd.meta, step, crash)
+    with pytest.raises(RuntimeError, match="killed"):
+        fwd.sync()
+    monkeypatch.undo()
+    fwd.sync()
+    _assert_exactly_once(fwd, 1200)
+    assert fwd.sync() == {"t": 0}
+    assert not any((tmp_path / "dest" / "t").glob("_staging/*"))  # nothing left staged
 
 
 def test_bench_final_line_parses_small():
