@@ -14,8 +14,8 @@ SURVEY.md §1.1/§3.1).  Here the same state lives in stdlib ``sqlite3``, in
 first key).  A call commits all or nothing, so finer-grained rows would
 describe nothing.
 
-Every write to a destination goes through one commit protocol (the one
-``pkrange_source.LoadJobWriter.commit`` uses for load jobs):
+Every write to a destination goes through one commit protocol, which
+records the manifest before it moves any file, so a crash is replayed:
 
 1. the forwarder writes the rows to ``<dest>/_staging/<run_id>``, a path
    Spark's file index hides from readers of ``<dest>``;
@@ -29,6 +29,12 @@ delete in it is idempotent, so a process killed between any two steps is
 finished by the next call.  Rows staged but never recorded are discarded
 by the caller: progress never counted them, so the next call reads them
 again.
+
+``pkrange_source.LoadJobWriter`` (the ``migbq_loadjob`` sink) is
+different: its ``commit`` moves the staged parts first and writes
+``_MANIFEST.json`` last, with no replay, and a failed job is only
+``abort``-ed (staging deleted).  It publishes one Spark write; it does
+not track progress.
 
 Each transaction opens its own connection and creates the directory when
 needed, so the store survives its directory being removed between calls.

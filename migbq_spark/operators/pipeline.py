@@ -44,26 +44,6 @@ from pyspark.sql import functions as F
 from migbq_spark.catalog import load
 from migbq_spark.registry import register
 
-#: Curation-funnel scan strategy (r14): one persisted-token-base corpus
-#: scan (default) vs the r13 three-scan composition, A/B'd at sf10
-#: (SCALING_r14.md).  The env override exists for the A/B harness only.
-_FUNNEL_ONE_SCAN = os.environ.get("MIGBQ_FUNNEL_ONE_SCAN", "1") == "1"
-
-#: Checkpoint/action FUSION (r15, guide §1.2 step 1 / §2.4): at sites
-#: where an eager localCheckpoint is immediately followed by a driver
-#: ACTION over the SAME frame (the CC fixpoint's per-round stats agg),
-#: eager=False lets the action's own job materialize the checkpoint —
-#: one pass instead of materialize-then-re-read, one job instead of
-#: two, identical blocks and identical downstream plans.  False =
-#: fused (adopted); the flag exists so the A/B harness
-#: (scripts/ab_ckpt_fuse.py) can flip arms in one session.  NOT
-#: applied to the audit-sample checkpoints (their first consumer is a
-#: broadcast build, which did NOT reliably absorb the sample job —
-#: measured flat wall / +0.1 s CPU, reverted) nor to materialize-once
-#: tables whose first action is the caller's (lazy there would just
-#: shift the build into the timed probe, saving nothing).
-_CKPT_EAGER = False
-
 #: Previous invocation's persisted token base (unpersisted on the next
 #: call — the HITS §12 rule: never leak DISK_ONLY caches across runs).
 _FUNNEL_CACHE: DataFrame | None = None
@@ -1582,11 +1562,13 @@ def _cc_twostar_components(pairs: DataFrame) -> DataFrame:
         ).collect()[0]
         return r["n"], r["h"]
 
-    # eager=_CKPT_EAGER (False): the _edge_stats agg right below (and,
-    # per round, the one for E2) computes every partition anyway, so the
-    # lazy checkpoint materializes inside that job — fusing the former
-    # checkpoint job + cached re-read into ONE pass over the edge set.
-    E = _cc_canon(pairs).localCheckpoint(eager=_CKPT_EAGER)
+    # Lazy checkpoint: the _edge_stats agg right below (and, per round,
+    # the one for E2) computes every partition anyway, so the checkpoint
+    # materializes inside that job — one pass over the edge set instead
+    # of a checkpoint job plus a cached re-read.  Sites whose first
+    # consumer is a broadcast build stay eager: the build did not absorb
+    # the checkpoint job there.
+    E = _cc_canon(pairs).localCheckpoint(eager=False)
     n, h = _edge_stats(E)
     # Size the loop's shuffle partitions from the OBSERVED edge count
     # (~100k edges per task, floor 8): each round is ~5 tiny shuffles,
@@ -1604,7 +1586,7 @@ def _cc_twostar_components(pairs: DataFrame) -> DataFrame:
         for _ in range(16):
             E2 = _cc_canon(
                 _cc_small_star(_cc_large_star(E))
-            ).localCheckpoint(eager=_CKPT_EAGER)
+            ).localCheckpoint(eager=False)
             # exact fixpoint test at half the cost of a symmetric diff:
             # exceptAll(E2, E) empty means every E2 row (with
             # multiplicity) occurs in E; with equal counts that IS
@@ -2519,19 +2501,16 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     in the registry, proving the STAGES interact exactly as specified
     (precedence, singleton components, split boundaries).
 
-    Scale (100 TB): ONE corpus scan (r14; was three — one per composed
-    stage, measured in SCALING_r13.md Addendum 2): the split token
-    array (doc_id, source, t) is persisted DISK_ONLY once and all
-    three signals — LSH/CC components, the quality blend, the
-    decontamination trigram probe — derive from the cached base
-    (`_tok_df(arr=...)` → minhash → `_cross_source_cc`;
-    `_decontam_from_arr`).  DISK_ONLY per the HITS §12 rule: the token
-    base is fact-scale, so it must never be heap-resident; each
-    invocation unpersists the previous round's cache.  The verdict
-    stays a row-local CASE over three joined signals, each
+    Scale (100 TB): ONE corpus scan.  The split token array
+    (doc_id, source, t) is staged once and all three signals — LSH/CC
+    components, the quality blend, the decontamination trigram probe —
+    derive from the staged base (`_tok_df(arr=...)` → minhash →
+    `_cross_source_cc`; `_decontam_from_arr`).  The token base is
+    fact-scale, so it is never heap-resident (parquet snapshot or
+    DISK_ONLY persist); each invocation drops the previous one.  The
+    verdict stays a row-local CASE over three joined signals, each
     individually scale-shaped (two-star CC, one aggregation, one
-    vocab-probe join).  sf10 A/B (r14, min-of-2 warm, fresh sessions):
-    one-scan vs the r13 three-scan form — see SCALING_r14.md.
+    vocab-probe join).
 
     Staging contract (r15): the parquet snapshot goes under
     `MIGBQ_STAGE_DIR` when set (on a cluster: a shared FS / object
@@ -2541,95 +2520,60 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     path.  One live funnel frame at a time: each invocation deletes
     the previous snapshot, so re-executing a PREVIOUS invocation's
     returned DataFrame raises rather than silently rescanning."""
-    if _FUNNEL_ONE_SCAN:
-        d = load(spark, sf_dir, "documents")
-        # unpersist the PREVIOUS round's cache BEFORE persisting the new
-        # one: a repeat invocation builds an identical logical plan, so
-        # persist-then-unpersist would register "already cached" and the
-        # unpersist of the old frame would evict the new entry too
-        # (measured r14: the second invocation ran with 3 file scans and
-        # zero InMemoryTableScans — the plan contract now pins this)
-        global _FUNNEL_CACHE, _FUNNEL_STAGE_DIR
-        if _FUNNEL_CACHE is not None:
-            _FUNNEL_CACHE.unpersist()
-            _FUNNEL_CACHE = None
-        if _FUNNEL_STAGE_DIR is not None:
-            shutil.rmtree(_FUNNEL_STAGE_DIR, ignore_errors=True)
-            _FUNNEL_STAGE_DIR = None
-        stage_root = (
-            _funnel_stage_root(spark)
-            if os.environ.get("MIGBQ_FUNNEL_STAGE", "parquet") == "parquet"
-            else None
-        )
-        if stage_root is not None:
-            # COLUMNAR token-base staging (r14 opt round, guide §6): the
-            # DISK_ONLY cache serialized fact-scale rows through the
-            # generic block serializer; a parquet snapshot compresses the
-            # token arrays columnar and re-reads them with a vectorized
-            # scan.  sf10 A/B (min-of-2 x 2 interleaved rounds, e2e
-            # build+noop): run-1 78.4 -> 70.8 s (-10%), steady state
-            # flat (68-69 s both arms).  The snapshot lives in a fresh
-            # per-invocation dir under `_funnel_stage_root` (deleted on
-            # the NEXT invocation — so a DataFrame returned by the
-            # PREVIOUS invocation becomes unreadable once a new one runs:
-            # ONE live funnel frame at a time — plus an atexit reap of
-            # the final dir) so nothing persists across bench/oracle
-            # runs.  On non-local masters without MIGBQ_STAGE_DIR this
-            # branch is skipped for the cluster-safe DISK_ONLY persist
-            # (r14 ADVICE: a driver-local temp path is not a shared FS).
-            dest = tempfile.mkdtemp(
-                prefix="migbq_funnel_tok_", dir=stage_root
-            )
-            _FUNNEL_STAGE_DIR = dest
-            d.select(
-                "doc_id",
-                "source",
-                F.filter(F.split("text", " "), lambda t: t != "").alias("t"),
-            ).write.mode("overwrite").parquet(dest + "/t")
-            arr = spark.read.parquet(dest + "/t")
-        else:
-            arr = d.select(
-                "doc_id",
-                "source",
-                F.filter(F.split("text", " "), lambda t: t != "").alias("t"),
-            ).persist(StorageLevel.DISK_ONLY)
-            _FUNNEL_CACHE = arr
-        comps = _cross_source_cc(
-            _portable_band_df(
-                spark,
-                sf_dir,
-                mins=_portable_minhash_df(
-                    spark, sf_dir, toks=_tok_df(spark, sf_dir, arr=arr)
-                ),
-            )
-        )
-        n_tokens = F.size(F.array_distinct("t")).cast("bigint")
-        n_all = F.size("t").cast("bigint")
-        ttr = n_tokens * F.lit(1.0) / n_all
-        q = arr.where(n_all > 0).select(
-            "doc_id",
-            "source",
-            n_tokens.alias("n_tokens"),
-            (
-                F.lit(0.5) * ttr
-                + F.lit(0.5) * F.least(n_all / F.lit(50.0), F.lit(1.0))
-            ).alias("quality"),
-        )
-        leak_src = _decontam_from_arr(arr.select("doc_id", "t"))
-        return _funnel_report(comps, q, leak_src)
-    comps = dedup_cross_source_cc(spark, sf_dir)
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
-    n_tokens = F.size(F.array_distinct(toks)).cast("bigint")
-    # NOTE: quality uses ALL-token counts; n_tokens output is DISTINCT
-    # tokens (matches the oracle's tok CTE, which is DISTINCT)
-    n_all = F.size(toks).cast("bigint")
+    # unpersist the PREVIOUS round's cache BEFORE persisting the new
+    # one: a repeat invocation builds an identical logical plan, so
+    # persist-then-unpersist would register "already cached" and the
+    # unpersist of the old frame would evict the new entry too (the
+    # second invocation would then rescan the corpus; the plan
+    # contract pins this)
+    global _FUNNEL_CACHE, _FUNNEL_STAGE_DIR
+    if _FUNNEL_CACHE is not None:
+        _FUNNEL_CACHE.unpersist()
+        _FUNNEL_CACHE = None
+    if _FUNNEL_STAGE_DIR is not None:
+        shutil.rmtree(_FUNNEL_STAGE_DIR, ignore_errors=True)
+        _FUNNEL_STAGE_DIR = None
+    base = d.select(
+        "doc_id",
+        "source",
+        F.filter(F.split("text", " "), lambda t: t != "").alias("t"),
+    )
+    stage_root = _funnel_stage_root(spark)
+    if stage_root is not None:
+        # Columnar staging: a parquet snapshot compresses the token
+        # arrays and re-reads them with a vectorized scan, where the
+        # DISK_ONLY cache pushes fact-scale rows through the generic
+        # block serializer (sf10: first run -10 %, steady state flat).
+        # The snapshot lives in a fresh per-invocation dir, deleted by
+        # the NEXT invocation (plus an atexit reap of the last one), so
+        # nothing persists across runs.  Executors write it, so
+        # `_funnel_stage_root` returns None unless the path is shared.
+        dest = tempfile.mkdtemp(
+            prefix="migbq_funnel_tok_", dir=stage_root
+        )
+        _FUNNEL_STAGE_DIR = dest
+        base.write.mode("overwrite").parquet(dest + "/t")
+        arr = spark.read.parquet(dest + "/t")
+    else:
+        arr = base.persist(StorageLevel.DISK_ONLY)
+        _FUNNEL_CACHE = arr
+    comps = _cross_source_cc(
+        _portable_band_df(
+            spark,
+            sf_dir,
+            mins=_portable_minhash_df(
+                spark, sf_dir, toks=_tok_df(spark, sf_dir, arr=arr)
+            ),
+        )
+    )
+    n_tokens = F.size(F.array_distinct("t")).cast("bigint")
+    n_all = F.size("t").cast("bigint")
     ttr = n_tokens * F.lit(1.0) / n_all
     # where(n_all > 0) mirrors the oracle's INNER join against its q
-    # CTE: zero-token docs have no quality row there and would otherwise
-    # carry quality = 0/0 = NULL here, making every fate-CASE branch
-    # NULL-false and mis-filing the doc as 'kept'.
-    q = d.where(n_all > 0).select(
+    # CTE: a zero-token doc would otherwise carry quality = 0/0 = NULL,
+    # making every fate-CASE branch NULL-false and filing it as 'kept'.
+    q = arr.where(n_all > 0).select(
         "doc_id",
         "source",
         n_tokens.alias("n_tokens"),
@@ -2638,14 +2582,14 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.lit(0.5) * F.least(n_all / F.lit(50.0), F.lit(1.0))
         ).alias("quality"),
     )
-    leak_src = decontaminate_train_drop(spark, sf_dir)
+    leak_src = _decontam_from_arr(arr.select("doc_id", "t"))
     return _funnel_report(comps, q, leak_src)
 
 
 def _funnel_report(
     comps: DataFrame, q: DataFrame, leak_src: DataFrame
 ) -> DataFrame:
-    """Shared verdict/report tail of the curation funnel: rank by
+    """Verdict/report tail of the curation funnel: rank by
     quality within CC component, CASE-file each doc's fate, aggregate
     per source."""
     labeled = q.join(comps, "doc_id", "left").withColumn(

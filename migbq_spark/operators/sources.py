@@ -486,11 +486,11 @@ def pk_range_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     RDBMS query and this is migbq's MSSQL sweep running N-wide with
     predicate pushdown — the custom-source escape hatch for systems
     without a built-in connector."""
-    from migbq_spark.pkrange_source import register_pkrange_source
+    from migbq_spark.pkrange_source import register_sources
 
     ensure_runtime_confs(spark)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    register_pkrange_source(spark)
+    register_sources(spark)
     df = (
         spark.read.format("migbq_pkrange")
         .option("path", path_for(sf_dir, "orders"))
@@ -526,10 +526,10 @@ def load_job_sink_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     from pathlib import Path as _P
 
-    from migbq_spark.pkrange_source import register_loadjob_sink
+    from migbq_spark.pkrange_source import register_sources
 
     ensure_runtime_confs(spark)
-    register_loadjob_sink(spark)
+    register_sources(spark)
     dest = _stage_dir(sf_dir, "nation_loadjob")
     shutil.rmtree(dest, ignore_errors=True)
     src = load(spark, sf_dir, "nation").select(

@@ -32,14 +32,6 @@ from migbq_spark.catalog import load
 from migbq_spark.common import dec
 from migbq_spark.registry import register
 
-#: Checkpoint/action fusion toggle — see pipeline._CKPT_EAGER.  False =
-#: fused (adopted): where an eager localCheckpoint is immediately driven
-#: by an action over the same frame (the BPE trainer's per-round argmax
-#: collect, the perplexity LM's broadcast size-guard count, bm25's dl
-#: rollup checkpoint, label propagation's changed-count), eager=False
-#: lets that action's job materialize the blocks — one pass, one job.
-_CKPT_EAGER = False
-
 # ------------------------------------------------------------- pii_scrub
 
 @register(
@@ -535,14 +527,14 @@ def dup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
         .union(pairs.select(F.col("b_id").alias("u"), F.col("a_id").alias("v")))
         .persist()
     )
-    # eager=_CKPT_EAGER (False): each round's changed-count below joins
+    # eager=False: each round's changed-count below joins
     # new_labels against labels and computes every partition of both, so
     # the lazy checkpoints materialize inside that one job — fusing the
     # per-round checkpoint job + cached re-read into the count's pass.
     labels = (
         edges.select(F.col("u").alias("id")).distinct()
         .withColumn("label", F.col("id"))
-        .localCheckpoint(eager=_CKPT_EAGER)
+        .localCheckpoint(eager=False)
     )
     for _ in range(20):
         nbr = edges.join(
@@ -552,7 +544,7 @@ def dup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             nbr.union(labels)
             .groupBy("id")
             .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=_CKPT_EAGER)
+            .localCheckpoint(eager=False)
         )
         changed = (
             new_labels.alias("n")
@@ -1337,7 +1329,7 @@ def _bpe_train(
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("weight"))
     )
-    # eager=_CKPT_EAGER (False): every round's argmax collect below runs
+    # eager=False: every round's argmax collect below runs
     # TakeOrderedAndProject over the full pair-count aggregation, which
     # computes every partition of `words` — the lazy checkpoint
     # materializes inside that job (one pass per round instead of
@@ -1347,7 +1339,7 @@ def _bpe_train(
     words = freqs.select(
         "weight",
         F.expr("split(concat(word, '_'), '')").alias("syms"),
-    ).localCheckpoint(eager=_CKPT_EAGER)
+    ).localCheckpoint(eager=False)
 
     merges: list[tuple[int, str, str, int]] = []
     rounds = 0
@@ -1390,7 +1382,7 @@ def _bpe_train(
             sym_expr = _bpe_merge_expr(sym_expr, left, right)
         words = words.select(
             "weight", F.expr(sym_expr).alias("syms")
-        ).localCheckpoint(eager=_CKPT_EAGER)
+        ).localCheckpoint(eager=False)
     return merges, rounds
 
 
@@ -1759,14 +1751,14 @@ def quality_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     # joins then broadcast explicitly — the same "LM fits an executor"
     # contract the docstring already states (checkpointed lineage
     # reports no stats, so the planner can't make that call itself).
-    # eager=_CKPT_EAGER (False): the size-guard tr.count() below computes
+    # eager=False: the size-guard tr.count() below computes
     # every partition, so the lazy checkpoint materializes inside the
     # count's job — one pass over the LM build instead of two.
     tr = (
         pos.filter(F.pmod("doc_id", F.lit(10)) < 8)
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("c2"))
-        .localCheckpoint(eager=_CKPT_EAGER)
+        .localCheckpoint(eager=False)
     )
     un = tr.groupBy("w1").agg(F.sum("c2").alias("c1"))
     v = un.agg(F.count(F.lit(1)).alias("vsz"))
@@ -3513,12 +3505,12 @@ def bm25_top_terms_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pressure, and the 100 TB-safe form for a postings table this hot
     # is partitioned parquet staging (the funnel's instrument), not a
     # slower block level.
-    # eager=_CKPT_EAGER (False): dl's eager checkpoint job right below
+    # eager=False: dl's eager checkpoint job right below
     # aggregates over every tf partition, so the lazy tf checkpoint
     # materializes inside that job — the postings lineage runs once,
     # storing tf blocks and dl in the same pass (the former eager form
     # paid a separate tf job plus a cached re-read for dl).
-    tf = tf.localCheckpoint(eager=_CKPT_EAGER)
+    tf = tf.localCheckpoint(eager=False)
     # doc lengths + corpus stats derive from tf, not a second corpus pass
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")).localCheckpoint()
     stats = dl.agg(

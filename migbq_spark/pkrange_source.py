@@ -10,12 +10,18 @@ SURVEY.md §3.1 EP1) is:
 
 Here that loop IS the data source: ``partitions()`` plans one
 ``InputPartition`` per PK stride (bounds come from parquet row-group
-statistics — no data scan), Spark schedules the strides in parallel
+statistics — no data scan — or, where a row group has none, from a
+read of the pk column alone), Spark schedules the strides in parallel
 across executors, and ``read()`` serves each stride as Arrow record
 batches.  ``pushFilters()`` accepts pk comparison predicates and
 tightens the planned stride set, so ``WHERE pk > x`` prunes whole
 partitions before any task launches — the DataSource-V2 contract,
 honored from pure Python.
+
+The module also holds the streaming twin (``migbq_pkrange_stream``,
+offset = last forwarded pk) and the two load-job sinks
+(``migbq_loadjob``, ``migbq_loadjob_stream``); ``register_sources``
+registers all four on a session.
 
 Scale (100 TB): swap the pyarrow file read inside ``read()`` for the
 per-range RDBMS query and this is migbq's MSSQL sweep running N-wide
@@ -52,6 +58,59 @@ _PA_TO_SPARK = {
 }
 
 
+def _supported(sch) -> list[str]:
+    """Names of the Arrow schema's columns that have a Spark type."""
+    return [f.name for f in sch if str(f.type) in _PA_TO_SPARK]
+
+
+def _schema_ddl(path: str, columns: list[str] | None = None) -> str:
+    """Spark DDL of the parquet file or directory at ``path``: the named
+    ``columns``, or every column of a supported type."""
+    import pyarrow.parquet as pq
+
+    sch = pq.ParquetDataset(path).schema
+    return ", ".join(
+        f"{c} {_PA_TO_SPARK[str(sch.field(c).type)]}"
+        for c in columns or _supported(sch)
+    )
+
+
+def _row_groups(path: str, pk: str) -> list[tuple] | None:
+    """``(min, max, num_rows)`` of ``pk`` for every row group of the
+    parquet file or directory at ``path``, from statistics alone (no
+    data read); ``None`` if any row group lacks pk min/max statistics."""
+    import pyarrow.dataset as ds
+
+    groups = []
+    for frag in ds.dataset(path, format="parquet").get_fragments():
+        md = frag.metadata
+        names = {md.schema.column(i).name: i for i in range(md.num_columns)}
+        ci = names[pk]
+        for rg in range(md.num_row_groups):
+            st = md.row_group(rg).column(ci).statistics
+            if st is None or not st.has_min_max:
+                return None
+            groups.append((st.min, st.max, md.row_group(rg).num_rows))
+    return groups
+
+
+def plan_strides(
+    mn: int,
+    mx: int,
+    lo: int | None,
+    hi: int | None,
+    batch_size: int,
+) -> list[tuple[int, int]]:
+    """migbq's stride plan: closed-open ``[s, s + batch_size)`` strides
+    tiling the keys ``mn..mx`` (inclusive) intersected with the pushed
+    bounds ``[lo, hi)`` (``None`` = unbounded); empty when they miss."""
+    lo = mn if lo is None else max(mn, lo)
+    hi = mx + 1 if hi is None else min(mx + 1, hi)
+    return [
+        (s, min(s + batch_size, hi)) for s in range(lo, hi, batch_size)
+    ]
+
+
 class PkRangePartition(InputPartition):
     """One migbq stride: pk ∈ [lo, hi)."""
 
@@ -60,9 +119,10 @@ class PkRangePartition(InputPartition):
 
 
 class PkRangeDataSource(DataSource):
-    """``spark.read.format("migbq_pkrange")`` over a parquet file.
+    """``spark.read.format("migbq_pkrange")`` over a parquet file or
+    directory.
 
-    Options: ``path`` (file), ``pk`` (integer primary-key column),
+    Options: ``path``, ``pk`` (integer primary-key column),
     ``batch_size`` (stride width, default 4096), ``columns``
     (comma-separated projection; default all supported columns).
     """
@@ -72,21 +132,9 @@ class PkRangeDataSource(DataSource):
         return "migbq_pkrange"
 
     def schema(self) -> str:
-        import pyarrow.parquet as pq
-
-        sch = pq.read_schema(self.options["path"])
-        cols = self._columns(sch)
-        return ", ".join(
-            f"{c} {_PA_TO_SPARK[str(sch.field(c).type)]}" for c in cols
-        )
-
-    def _columns(self, sch) -> list[str]:
         opt = self.options.get("columns")
-        if opt:
-            return [c.strip() for c in opt.split(",")]
-        return [
-            f.name for f in sch if str(f.type) in _PA_TO_SPARK
-        ]
+        cols = [c.strip() for c in opt.split(",")] if opt else None
+        return _schema_ddl(self.options["path"], cols)
 
     def reader(self, schema) -> "PkRangeReader":
         return PkRangeReader(dict(self.options), [f.name for f in schema])
@@ -137,30 +185,30 @@ class PkRangeReader(DataSourceReader):
     # ---------------------------------------------------------- planning
 
     def partitions(self):
-        """migbq's bounds probe + stride plan — from row-group STATISTICS
-        (metadata only, no data scan), intersected with pushed bounds."""
-        import pyarrow.parquet as pq
+        """migbq's bounds probe + stride plan, intersected with the
+        pushed bounds.  The probe reads row-group statistics; if any
+        row group has none, it reads the pk column alone (migbq's
+        ``SELECT MIN(pk), MAX(pk)``)."""
+        groups = _row_groups(self.path, self.pk)
+        if groups is None:
+            import pyarrow.compute as pc
+            import pyarrow.parquet as pq
 
-        md = pq.ParquetFile(self.path).metadata
-        names = {md.schema.column(i).name: i for i in range(md.num_columns)}
-        ci = names[self.pk]
-        mn: int | None = None
-        mx: int | None = None
-        for rg in range(md.num_row_groups):
-            st = md.row_group(rg).column(ci).statistics
-            if st is None or not st.has_min_max:
-                continue
-            mn = st.min if mn is None else min(mn, st.min)
-            mx = st.max if mx is None else max(mx, st.max)
-        if mn is None:
-            return [PkRangePartition(0, 0)]
-        lo = mn if self.lo is None else max(mn, self.lo)
-        hi = mx + 1 if self.hi is None else min(mx + 1, self.hi)
-        if lo >= hi:
-            return [PkRangePartition(0, 0)]
-        return [
-            PkRangePartition(s, min(s + self.batch_size, hi))
-            for s in range(lo, hi, self.batch_size)
+            mm = pc.min_max(
+                pq.read_table(self.path, columns=[self.pk]).column(self.pk)
+            ).as_py()
+            mn, mx = mm["min"], mm["max"]
+        elif groups:
+            mn, mx = min(g[0] for g in groups), max(g[1] for g in groups)
+        else:
+            mn = mx = None
+        strides = [] if mn is None else plan_strides(
+            mn, mx, self.lo, self.hi, self.batch_size
+        )
+        # Spark needs at least one partition: an empty key range plans
+        # one empty stride, which ``read`` serves as no rows.
+        return [PkRangePartition(lo, hi) for lo, hi in strides] or [
+            PkRangePartition(0, 0)
         ]
 
     # ------------------------------------------------------------ reading
@@ -183,31 +231,29 @@ class PkRangeReader(DataSourceReader):
         yield from table.to_batches()
 
 
-def _pickle_self_by_value() -> None:
-    """Ship this module BY VALUE inside cloudpickle payloads: the data
-    source is unpickled in Spark-launched Python runners (driver-side
-    for streaming offset management, workers for reads) that may not
-    have this repo on sys.path — an externally-built session can't be
-    given PYTHONPATH after its JVM is up, and addPyFile only reaches
-    task workers.  By-value pickling embeds the class code itself, so
-    no import is needed on the other side."""
-    try:
-        import sys as _sys
+def _hi_bound(groups: list[tuple], lo_excl, batch_size: int):
+    """Smallest pk upper bound that — by the row-group statistics
+    ``groups`` alone — still guarantees the next stride can fill
+    ``batch_size`` rows past ``lo_excl``.  This is what bounds the
+    per-micro-batch read: without it, ``read`` would scan every row
+    beyond the offset each batch (O(N²/batch) over a full drain).
 
-        from pyspark import cloudpickle
+    Returns ``None`` when fewer than ``batch_size`` rows remain (then
+    the unbounded read IS the bounded read — it returns only the tail).
 
-        cloudpickle.register_pickle_by_value(_sys.modules[__name__])
-    except Exception:
-        pass  # older cloudpickle: fall back to by-reference + PYTHONPATH
-
-
-def register_pkrange_source(spark) -> None:
-    """Idempotently register the source on ``spark``."""
-    _pickle_self_by_value()
-    try:
-        spark.dataSource.register(PkRangeDataSource)
-    except Exception:
-        pass  # already registered on this session
+    Integer min/max stats are exact, so a group with max > lo_excl
+    holds >= 1 row past the offset; a group with min > lo_excl holds
+    ALL its rows past it.  Accumulate groups in max order until the
+    guaranteed row count reaches batch_size — the last accumulated max
+    is a sufficient cap."""
+    guaranteed = 0
+    for mn, mx, nrows in sorted(groups, key=lambda g: g[1]):
+        if lo_excl is not None and mx <= lo_excl:
+            continue
+        guaranteed += nrows if (lo_excl is None or mn > lo_excl) else 1
+        if guaranteed >= batch_size:
+            return mx
+    return None
 
 
 class PkRangeStreamReader(SimpleDataSourceStreamReader):
@@ -225,7 +271,6 @@ class PkRangeStreamReader(SimpleDataSourceStreamReader):
         self.path = options["path"]
         self.pk = options.get("pk", "id")
         self.batch_size = int(options.get("batch_size", "4096"))
-        self.columns = None  # resolved lazily from the file
 
     def initialOffset(self) -> dict:
         # start BEFORE the smallest key: the first batch forwards from
@@ -241,100 +286,35 @@ class PkRangeStreamReader(SimpleDataSourceStreamReader):
         if hi_incl is not None:
             filters.append((self.pk, "<=", hi_incl))
         t = pq.read_table(self.path, filters=filters or None)
-        cols = [
-            f.name for f in t.schema if str(f.type) in _PA_TO_SPARK
-        ]
-        t = t.select(cols).sort_by(self.pk)
-        return t
-
-    def _hi_bound(self, lo_excl):
-        """Smallest pk upper bound that — by parquet row-group STATISTICS
-        alone, no data read — still guarantees the next stride can fill
-        ``batch_size`` rows past ``lo_excl``.  This is what bounds the
-        per-micro-batch read: without it, ``read`` would scan every row
-        beyond the offset each batch (O(N²/batch) over a full drain).
-
-        Returns ``None`` when stats are missing or when fewer than
-        ``batch_size`` rows remain (then the unbounded read IS the
-        bounded read — it returns only the tail)."""
-        import pyarrow.dataset as ds
-
-        try:
-            groups = []  # (min, max, num_rows) per live row group
-            for frag in ds.dataset(self.path, format="parquet").get_fragments():
-                md = frag.metadata
-                names = {
-                    md.schema.column(i).name: i for i in range(md.num_columns)
-                }
-                ci = names[self.pk]
-                for rg in range(md.num_row_groups):
-                    col = md.row_group(rg).column(ci)
-                    st = col.statistics
-                    if st is None or not st.has_min_max:
-                        return None  # stats gap → no safe pruning
-                    if lo_excl is None or st.max > lo_excl:
-                        groups.append(
-                            (st.min, st.max, md.row_group(rg).num_rows)
-                        )
-        except Exception:
-            return None
-        # Integer min/max stats are exact, so a group with max > lo_excl
-        # holds >= 1 row past the offset; a group with min > lo_excl
-        # holds ALL its rows past it.  Accumulate groups in max order
-        # until the guaranteed row count reaches batch_size — the last
-        # accumulated max is a sufficient cap.
-        groups.sort(key=lambda g: g[1])
-        guaranteed = 0
-        for mn, mx, nrows in groups:
-            guaranteed += nrows if (lo_excl is None or mn > lo_excl) else 1
-            if guaranteed >= self.batch_size:
-                return mx
-        return None  # tail smaller than one stride: read it all
-
-    def _group_maxima(self, lo_excl):
-        """Sorted distinct row-group maxima past ``lo_excl`` (stats
-        only, no data read) — the widening ladder for the stats-lied
-        retry in ``read``.  Empty on any stats gap."""
-        import pyarrow.dataset as ds
-
-        try:
-            maxima = set()
-            for frag in ds.dataset(self.path, format="parquet").get_fragments():
-                md = frag.metadata
-                names = {
-                    md.schema.column(i).name: i for i in range(md.num_columns)
-                }
-                ci = names[self.pk]
-                for rg in range(md.num_row_groups):
-                    st = md.row_group(rg).column(ci).statistics
-                    if st is None or not st.has_min_max:
-                        return []
-                    if lo_excl is None or st.max > lo_excl:
-                        maxima.add(st.max)
-            return sorted(maxima)
-        except Exception:
-            return []
+        return t.select(_supported(t.schema)).sort_by(self.pk)
 
     def read(self, start: dict):
         last = start.get("last_pk")
-        hi = self._hi_bound(last)
+        try:
+            groups = _row_groups(self.path, self.pk)
+        except (KeyError, OSError, ValueError):
+            # a file without the pk or with unreadable metadata: take
+            # the unbounded read, which reports the file's real error
+            groups = None
+        hi = None if groups is None else _hi_bound(
+            groups, last, self.batch_size
+        )
         t = self._read_range(last, hi)
         if t.num_rows == 0 and hi is not None:
-            # Defensive (r6 ADVICE): _hi_bound's guarantee rests on
-            # row-group min/max stats being EXACT for the pk's physical
-            # type.  If stats ever over-promise (e.g. truncated bounds
-            # on a non-integer pk), the bounded read could return 0 rows
+            # Defensive: _hi_bound's guarantee rests on row-group
+            # min/max stats being EXACT for the pk's physical type.  If
+            # stats ever over-promise (e.g. truncated bounds on a
+            # non-integer pk), the bounded read could return 0 rows
             # while rows remain past the cap — and an availableNow drain
             # would then terminate early, silently dropping the tail.
             # Widen PROGRESSIVELY through the remaining row-group maxima
             # (doubling the group span each attempt) rather than one
-            # unbounded read: on a large backlog the old unbounded retry
-            # materialized every remaining row into one Arrow table
-            # before the stride cut (r7 ADVICE).  Geometric widening
-            # keeps total retry work within ~2x the final bounded read;
-            # the unbounded read is the LAST resort only, when even the
-            # global stats max returns nothing.
-            maxima = [m for m in self._group_maxima(last) if m > hi]
+            # unbounded read, which would materialize every remaining
+            # row into one Arrow table before the stride cut.  Geometric
+            # widening keeps total retry work within ~2x the final
+            # bounded read; the unbounded read is the LAST resort only,
+            # when even the global stats max returns nothing.
+            maxima = sorted({g[1] for g in groups if g[1] > hi})
             span = 1
             while t.num_rows == 0 and maxima:
                 idx = min(span, len(maxima)) - 1
@@ -383,53 +363,62 @@ class PkRangeStreamDataSource(DataSource):
         return "migbq_pkrange_stream"
 
     def schema(self) -> str:
-        import os
-
-        import pyarrow.parquet as pq
-
-        path = self.options["path"]
-        if os.path.isdir(path):
-            sch = pq.ParquetDataset(path).schema
-        else:
-            sch = pq.read_schema(path)
-        return ", ".join(
-            f"{f.name} {_PA_TO_SPARK[str(f.type)]}"
-            for f in sch
-            if str(f.type) in _PA_TO_SPARK
-        )
+        return _schema_ddl(self.options["path"])
 
     def simpleStreamReader(self, schema) -> PkRangeStreamReader:
         return PkRangeStreamReader(dict(self.options))
 
 
-def register_pkrange_stream_source(spark) -> None:
-    """Idempotently register the streaming source on ``spark``."""
-    _pickle_self_by_value()
-    try:
-        spark.dataSource.register(PkRangeStreamDataSource)
-    except Exception:
-        pass
-
-
 class LoadJobCommitMessage(WriterCommitMessage):
-    """Per-task receipt: (staged file name, rows, bytes).
+    """Per-task receipt: (staged file name, rows, bytes, final name).
 
-    ``final_filename`` (streaming epochs only) is the deterministic name
-    ``commit`` publishes the attempt-unique staged file under — staging
+    ``final_filename`` is the deterministic name the streaming epoch
+    commit publishes the attempt-unique staged file under — staging
     names must be attempt-unique so concurrent attempts of one partition
     (speculation, zombie post-retry attempts) can never interleave
     writes into a shared gzip stream, while the published name stays
-    deterministic so a REPLAYED epoch overwrites instead of duplicating."""
+    deterministic so a REPLAYED epoch overwrites instead of duplicating.
+    The batch commit keeps the staged name."""
 
     def __init__(
-        self,
-        filename: str,
-        n_rows: int,
-        n_bytes: int,
-        final_filename: str | None = None,
+        self, filename: str, n_rows: int, n_bytes: int, final_filename: str
     ):
         self.filename, self.n_rows, self.n_bytes = filename, n_rows, n_bytes
-        self.final_filename = final_filename or filename
+        self.final_filename = final_filename
+
+
+def _stage_part(dest: str, cols: list[str], iterator) -> LoadJobCommitMessage:
+    """Write one task's rows as a gzip-NDJSON part under
+    ``<dest>/_staging`` (attempt-unique name) and return its receipt."""
+    import gzip
+    import json
+    import os
+    import uuid as _uuid
+
+    from pyspark import TaskContext
+
+    tc = TaskContext.get()
+    part = tc.partitionId() if tc is not None else 0
+    staging = os.path.join(dest, "_staging")
+    os.makedirs(staging, exist_ok=True)
+    fname = f"part-{part:05d}-{_uuid.uuid4().hex[:8]}.jsonl.gz"
+    tmp = os.path.join(staging, fname)
+    n = 0
+    with gzip.open(tmp, "wt") as fh:
+        for row in iterator:
+            fh.write(json.dumps(dict(zip(cols, row)), sort_keys=True))
+            fh.write("\n")
+            n += 1
+    return LoadJobCommitMessage(
+        fname, n, os.path.getsize(tmp), f"part-{part:05d}.jsonl.gz"
+    )
+
+
+def _drop_staging(dest: str) -> None:
+    import os
+    import shutil
+
+    shutil.rmtree(os.path.join(dest, "_staging"), ignore_errors=True)
 
 
 class LoadJobWriter(DataSourceWriter):
@@ -448,26 +437,7 @@ class LoadJobWriter(DataSourceWriter):
         self.cols = [f.name for f in schema.fields]
 
     def write(self, iterator):
-        import gzip
-        import json
-        import os
-        import uuid as _uuid
-
-        from pyspark import TaskContext
-
-        tc = TaskContext.get()
-        part = tc.partitionId() if tc is not None else 0
-        staging = os.path.join(self.dest, "_staging")
-        os.makedirs(staging, exist_ok=True)
-        fname = f"part-{part:05d}-{_uuid.uuid4().hex[:8]}.jsonl.gz"
-        tmp = os.path.join(staging, fname)
-        n = 0
-        with gzip.open(tmp, "wt") as fh:
-            for row in iterator:
-                fh.write(json.dumps(dict(zip(self.cols, row)), sort_keys=True))
-                fh.write("\n")
-                n += 1
-        return LoadJobCommitMessage(fname, n, os.path.getsize(tmp))
+        return _stage_part(self.dest, self.cols, iterator)
 
     def commit(self, messages):
         import json
@@ -486,7 +456,7 @@ class LoadJobWriter(DataSourceWriter):
             files.append(
                 {"file": m.filename, "rows": m.n_rows, "bytes": m.n_bytes}
             )
-        shutil.rmtree(staging, ignore_errors=True)
+        _drop_staging(self.dest)
         manifest = {
             "n_files": len(files),
             "n_rows": sum(f["rows"] for f in files),
@@ -496,10 +466,7 @@ class LoadJobWriter(DataSourceWriter):
             json.dump(manifest, fh, sort_keys=True)
 
     def abort(self, messages):
-        import os
-        import shutil
-
-        shutil.rmtree(os.path.join(self.dest, "_staging"), ignore_errors=True)
+        _drop_staging(self.dest)
 
 
 class LoadJobSinkDataSource(DataSource):
@@ -511,15 +478,6 @@ class LoadJobSinkDataSource(DataSource):
 
     def writer(self, schema, overwrite: bool) -> LoadJobWriter:
         return LoadJobWriter(dict(self.options), schema)
-
-
-def register_loadjob_sink(spark) -> None:
-    """Idempotently register the load-job sink on ``spark``."""
-    _pickle_self_by_value()
-    try:
-        spark.dataSource.register(LoadJobSinkDataSource)
-    except Exception:
-        pass
 
 
 class EpochLoadJobStreamWriter(DataSourceStreamWriter):
@@ -543,31 +501,9 @@ class EpochLoadJobStreamWriter(DataSourceStreamWriter):
         self.fail_once_path = options.get("fail_once_path")
 
     def write(self, iterator):
-        import gzip
-        import json
         import os
-        import uuid as _uuid
 
-        from pyspark import TaskContext
-
-        tc = TaskContext.get()
-        part = tc.partitionId() if tc is not None else 0
-        staging = os.path.join(self.dest, "_staging")
-        os.makedirs(staging, exist_ok=True)
-        # Stage under an ATTEMPT-unique name (two live attempts of the
-        # same partition — speculative execution, or a zombie attempt
-        # surviving a retry — must never share a gzip stream); commit()
-        # renames to the deterministic epoch filename, which is what
-        # keeps a replayed epoch an overwrite rather than a duplicate.
-        final = f"part-{part:05d}.jsonl.gz"
-        fname = f"part-{part:05d}-{_uuid.uuid4().hex[:8]}.jsonl.gz"
-        tmp = os.path.join(staging, fname)
-        n = 0
-        with gzip.open(tmp, "wt") as fh:
-            for row in iterator:
-                fh.write(json.dumps(dict(zip(self.cols, row)), sort_keys=True))
-                fh.write("\n")
-                n += 1
+        msg = _stage_part(self.dest, self.cols, iterator)
         if self.fail_once_path:
             try:
                 fd = os.open(
@@ -579,9 +515,7 @@ class EpochLoadJobStreamWriter(DataSourceStreamWriter):
                 )
             except FileExistsError:
                 pass  # already failed once: proceed normally
-        return LoadJobCommitMessage(
-            fname, n, os.path.getsize(tmp), final_filename=final
-        )
+        return msg
 
     def commit(self, messages, batchId: int):
         import json
@@ -599,11 +533,10 @@ class EpochLoadJobStreamWriter(DataSourceStreamWriter):
             src = os.path.join(staging, m.filename)
             if os.path.exists(src):
                 # attempt-unique staged name -> deterministic epoch name
-                dst = getattr(m, "final_filename", m.filename)
-                shutil.move(src, os.path.join(epoch_dir, dst))
-                files.append({"file": dst, "rows": m.n_rows})
+                shutil.move(src, os.path.join(epoch_dir, m.final_filename))
+                files.append({"file": m.final_filename, "rows": m.n_rows})
         # also sweeps losing-attempt leftovers from this epoch
-        shutil.rmtree(staging, ignore_errors=True)
+        _drop_staging(self.dest)
         with open(os.path.join(self.dest, "_EPOCHS.jsonl"), "a") as fh:
             fh.write(
                 json.dumps(
@@ -618,10 +551,7 @@ class EpochLoadJobStreamWriter(DataSourceStreamWriter):
             )
 
     def abort(self, messages, batchId: int):
-        import os
-        import shutil
-
-        shutil.rmtree(os.path.join(self.dest, "_staging"), ignore_errors=True)
+        _drop_staging(self.dest)
 
 
 class EpochLoadJobStreamDataSource(DataSource):
@@ -635,10 +565,36 @@ class EpochLoadJobStreamDataSource(DataSource):
         return EpochLoadJobStreamWriter(dict(self.options), schema)
 
 
-def register_loadjob_stream_sink(spark) -> None:
-    """Idempotently register the streaming load-job sink on ``spark``."""
-    _pickle_self_by_value()
+def _pickle_self_by_value() -> None:
+    """Ship this module BY VALUE inside cloudpickle payloads: the data
+    source is unpickled in Spark-launched Python runners (driver-side
+    for streaming offset management, workers for reads) that may not
+    have this repo on sys.path — an externally-built session can't be
+    given PYTHONPATH after its JVM is up, and addPyFile only reaches
+    task workers.  By-value pickling embeds the class code itself, so
+    no import is needed on the other side."""
     try:
-        spark.dataSource.register(EpochLoadJobStreamDataSource)
+        import sys as _sys
+
+        from pyspark import cloudpickle
+
+        cloudpickle.register_pickle_by_value(_sys.modules[__name__])
     except Exception:
-        pass
+        pass  # older cloudpickle: fall back to by-reference + PYTHONPATH
+
+
+def register_sources(spark) -> None:
+    """Idempotently register this module's four data sources on
+    ``spark``: ``migbq_pkrange``, ``migbq_pkrange_stream``,
+    ``migbq_loadjob`` and ``migbq_loadjob_stream``."""
+    _pickle_self_by_value()
+    for ds in (
+        PkRangeDataSource,
+        PkRangeStreamDataSource,
+        LoadJobSinkDataSource,
+        EpochLoadJobStreamDataSource,
+    ):
+        try:
+            spark.dataSource.register(ds)
+        except Exception:
+            pass  # already registered on this session

@@ -1397,10 +1397,10 @@ def pk_range_stream_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pyarrow.parquet as pq
 
-    from migbq_spark.pkrange_source import register_pkrange_stream_source
+    from migbq_spark.pkrange_source import register_sources
 
     ensure_runtime_confs(spark)
-    register_pkrange_stream_source(spark)
+    register_sources(spark)
     path = path_for(sf_dir, "events")
     n_rows = pq.ParquetFile(path).metadata.num_rows
     bs = max(1, -(-n_rows // 3))  # ≤3 data strides at any sf
@@ -1458,14 +1458,10 @@ def stream_pk_sync_loadjob(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import pyarrow.parquet as pq
 
-    from migbq_spark.pkrange_source import (
-        register_loadjob_stream_sink,
-        register_pkrange_stream_source,
-    )
+    from migbq_spark.pkrange_source import register_sources
 
     ensure_runtime_confs(spark)
-    register_pkrange_stream_source(spark)
-    register_loadjob_stream_sink(spark)
+    register_sources(spark)
     path = path_for(sf_dir, "events")
     n_rows = pq.ParquetFile(path).metadata.num_rows
     bs = max(1, -(-n_rows // 3))

@@ -4,8 +4,7 @@ count for a list of registered queries, on a UI-enabled engine session.
 Wall seconds on this box swing with host weather; executor CPU from the
 REST API is the throttle-immune number (r15 method note).  Use for
 target selection and same-session before/after probes — adoption
-decisions still require the interleaved A/B form (alternating arms in
-one session).
+decisions still require an interleaved A/B (alternating arms).
 
 Usage: python scripts/profile_ops.py <query> [<query> ...] [--rounds=N]
 """
@@ -23,9 +22,57 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 from migbq_spark import registry  # noqa: E402
-from scripts.ab_ckpt_fuse import _cpu_since, _ui_spark  # noqa: E402
+from migbq_spark.session import RUNTIME_CONFS  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+
+def _ui_spark():
+    """get_spark() twin with the UI enabled (REST CPU metrics)."""
+    from pyspark.sql import SparkSession
+
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or "*"
+    b = (
+        SparkSession.builder.master(f"local[{cpus}]")
+        .appName("profile-ops")
+        .config("spark.sql.shuffle.partitions", "32")
+        .config("spark.sql.adaptive.enabled", "true")
+        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
+        .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.driver.memory", os.environ.get("MIGBQ_DRIVER_MEM", "8g"))
+        .config("spark.ui.enabled", "true")
+        .config("spark.ui.retainedJobs", "100000")
+        .config("spark.ui.retainedStages", "100000")
+    )
+    for k, v in RUNTIME_CONFS.items():
+        b = b.config(k, v)
+    return b.getOrCreate()
+
+
+def _cpu_since(ui: str, app: str, first_job: int) -> float:
+    """Executor CPU (s) summed over stages of jobs >= first_job."""
+    try:
+        jobs = json.load(
+            urllib.request.urlopen(f"{ui}/api/v1/applications/{app}/jobs")
+        )
+        stage_ids = set()
+        for j in jobs:
+            if j["jobId"] >= first_job:
+                stage_ids.update(j["stageIds"])
+        stages = json.load(
+            urllib.request.urlopen(f"{ui}/api/v1/applications/{app}/stages")
+        )
+        return (
+            sum(
+                s.get("executorCpuTime", 0)
+                for s in stages
+                if s["stageId"] in stage_ids
+            )
+            / 1e9
+        )
+    except Exception:
+        return float("nan")
 
 
 def main() -> None:

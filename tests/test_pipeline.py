@@ -575,39 +575,31 @@ def test_cc_twostar_screened_fixpoint_chain(spark):
 
 
 def test_ckpt_fusion_value_neutral(spark, sf_dir):
-    """r15: the checkpoint/action fusion (lazy localCheckpoint
-    materialized by the per-round driver action, pipeline._CKPT_EAGER
-    = False) must be value-identical to the eager r14 form at both
-    fused loop sites — the CC fixpoint and the BPE trainer — and the
-    fused form must be the shipped default."""
-    from migbq_spark.operators import pipeline, training
+    """The lazy localCheckpoint at the fused loop sites (materialized by
+    each round's action) must give the values the eager form
+    gave: pinned for the CC fixpoint and the BPE trainer."""
     from migbq_spark.operators.pipeline import _cc_twostar_components
     from migbq_spark.operators.training import _bpe_train
-
-    assert pipeline._CKPT_EAGER is False
-    assert training._CKPT_EAGER is False
 
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(0, 25)] + [(50, 52), (52, 54)],
         "u: long, v: long",
     )
-    results, merge_tables = [], []
-    for eager in (True, False):
-        pipeline._CKPT_EAGER = eager
-        training._CKPT_EAGER = eager
-        try:
-            results.append(
-                {
-                    (r.doc_id, r.component_id)
-                    for r in _cc_twostar_components(edges).collect()
-                }
-            )
-            merge_tables.append(_bpe_train(spark, sf_dir, n_merges=4)[0])
-        finally:
-            pipeline._CKPT_EAGER = False
-            training._CKPT_EAGER = False
-    assert results[0] == results[1]
-    assert merge_tables[0] == merge_tables[1]
+    comps = {
+        (r.doc_id, r.component_id)
+        for r in _cc_twostar_components(edges).collect()
+    }
+    assert comps == {(i, 0) for i in range(26)} | {
+        (50, 50), (52, 50), (54, 50)
+    }
+    if sf_dir.rstrip("/").endswith("sf0.001"):
+        merges, _ = _bpe_train(spark, sf_dir, n_merges=4)
+        assert merges == [
+            (0, "e", "r", 4650),
+            (1, "e", "_", 4644),
+            (2, "n", "_", 2898),
+            (3, "o", "r", 2880),
+        ]
 
 
 def test_minhash_merge_equals_full_recompute(spark, sf_dir):
@@ -702,6 +694,52 @@ def test_pkrange_source_plans_and_prunes_strides():
     assert len(back) == 1
 
 
+def test_pkrange_source_reads_files_without_pk_statistics(spark, tmp_path):
+    """A parquet file whose pk column has no row-group statistics must
+    still be planned over its real key range: the batch source returns
+    every row, and the same rows the stream source drains."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from migbq_spark.pkrange_source import PkRangeStreamReader, register_sources
+
+    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    register_sources(spark)
+    n = 1_000
+    t = pa.table(
+        {
+            "pk": pa.array(range(5_000, 5_000 + n), pa.int64()),
+            "v": pa.array(range(n), pa.int64()),
+        }
+    )
+    no_stats = tmp_path / "no_stats.parquet"
+    pq.write_table(t, no_stats, write_statistics=False, row_group_size=300)
+    v_stats = tmp_path / "v_stats_only.parquet"
+    pq.write_table(t, v_stats, write_statistics=["v"], row_group_size=300)
+    for path in (no_stats, v_stats):
+        got = sorted(
+            tuple(r)
+            for r in spark.read.format("migbq_pkrange")
+            .option("path", str(path))
+            .option("pk", "pk")
+            .option("batch_size", "100")
+            .load()
+            .collect()
+        )
+        assert got == sorted(zip(range(5_000, 5_000 + n), range(n)))
+        reader = PkRangeStreamReader(
+            {"path": str(path), "pk": "pk", "batch_size": "100"}
+        )
+        off, drained = reader.initialOffset(), []
+        while True:
+            it, off = reader.read(off)
+            batch = list(it)
+            if not batch:
+                break
+            drained += batch
+        assert got == sorted(drained)
+
+
 def test_loadjob_sink_commit_protocol(spark, tmp_path):
     """r5: the custom sink must publish atomically — a commit leaves
     parts + manifest and no staging dir; a mid-write task failure must
@@ -711,9 +749,9 @@ def test_loadjob_sink_commit_protocol(spark, tmp_path):
 
     from pyspark.sql import functions as F
 
-    from migbq_spark.pkrange_source import register_loadjob_sink
+    from migbq_spark.pkrange_source import register_sources
 
-    register_loadjob_sink(spark)
+    register_sources(spark)
     df = spark.range(100).select(F.col("id").cast("long").alias("id"))
 
     ok_dest = str(tmp_path / "ok")

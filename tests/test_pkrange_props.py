@@ -7,31 +7,12 @@ import struct
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from migbq_spark.pkrange_source import PkRangeReader
-
-
-def _mk_reader(batch_size):
-    r = PkRangeReader.__new__(PkRangeReader)
-    r.path, r.pk = "unused", "pk"
-    r.batch_size = batch_size
-    r.columns = ["pk"]
-    r.lo = r.hi = None
-    return r
+from migbq_spark.pkrange_source import plan_strides
 
 
 def _strides(lo, hi, batch_size, pushed_lo=None, pushed_hi=None):
-    """Re-implement partitions() bound math on explicit bounds (the real
-    method reads parquet metadata; the math under test is identical)."""
-    r = _mk_reader(batch_size)
-    r.lo, r.hi = pushed_lo, pushed_hi
-    eff_lo = lo if r.lo is None else max(lo, r.lo)
-    eff_hi = hi + 1 if r.hi is None else min(hi + 1, r.hi)
-    if eff_lo >= eff_hi:
-        return []
-    return [
-        (s, min(s + batch_size, eff_hi))
-        for s in range(eff_lo, eff_hi, batch_size)
-    ]
+    """partitions()' stride plan for keys lo..hi under pushed bounds."""
+    return plan_strides(lo, hi, pushed_lo, pushed_hi, batch_size)
 
 
 @given(
@@ -172,23 +153,25 @@ def test_stream_hi_bound_prunes_row_groups(tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
+    from migbq_spark.pkrange_source import _hi_bound, _row_groups
+
     n = 10_000
     t = pa.table({"pk": pa.array(range(n), pa.int64()),
                   "v": pa.array(range(n), pa.int64())})
     p = tmp_path / "big.parquet"
     pq.write_table(t, p, row_group_size=500)
 
-    r = _stream_reader(p, 100)
-    hi = r._hi_bound(None)
+    groups = _row_groups(str(p), "pk")
+    hi = _hi_bound(groups, None, 100)
     # one 500-row group already guarantees 100 rows
     assert hi is not None and hi <= 499
-    hi2 = r._hi_bound(4_321)
+    hi2 = _hi_bound(groups, 4_321, 100)
     assert hi2 is not None and 4_321 < hi2 <= 5_499
     # bounded read serves exactly one stride and advances correctly
     rows, batches = _drain_stream(_stream_reader(p, 1_000))
     assert len(rows) == n and batches[0] == 1_000
-    # missing-stats / tail fallback: remaining rows < batch_size → None
-    assert _stream_reader(p, 100)._hi_bound(n - 50) is None
+    # tail fallback: remaining rows < batch_size → None
+    assert _hi_bound(groups, n - 50, 100) is None
 
 
 def test_stream_stats_lied_retry_widens_bounded(tmp_path, monkeypatch):

@@ -371,9 +371,9 @@ def test_pk_stream_source_picks_up_new_data_between_runs(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from migbq_spark.pkrange_source import register_pkrange_stream_source
+    from migbq_spark.pkrange_source import register_sources
 
-    register_pkrange_stream_source(spark)
+    register_sources(spark)
     src = tmp_path / "src"
     src.mkdir()
 
@@ -434,13 +434,9 @@ def test_stream_loadjob_crash_replay_exactly_once(spark, tmp_path):
     import pyarrow.parquet as pq
     import pytest
 
-    from migbq_spark.pkrange_source import (
-        register_loadjob_stream_sink,
-        register_pkrange_stream_source,
-    )
+    from migbq_spark.pkrange_source import register_sources
 
-    register_pkrange_stream_source(spark)
-    register_loadjob_stream_sink(spark)
+    register_sources(spark)
     src = tmp_path / "src"
     src.mkdir()
     n_rows = 250
