@@ -1,13 +1,24 @@
-"""SparkSession factory and per-session runtime configuration.
+"""SparkSession factory and per-session configuration.
 
-Two paths:
-- ``get_spark()`` builds a local session (tests / bench) with the configs
-  an executor-cluster deployment would also want (AQE, Arrow, sane shuffle
-  partitions).
-- ``ensure_runtime_confs(spark)`` is called by every query on whatever
-  session the driver hands us: it sets only *runtime-settable* confs that
-  correctness depends on (ns-parquet mitigation, UTC session tz).  This is
-  what makes the engine work on a SparkSession we didn't build.
+Two kinds of conf, applied on two paths:
+- ``BUILD_CONFS`` are set when ``get_spark()`` builds a local session
+  (tests, bench, the CLI).  Some of them are *static*: Spark reads them
+  once at session build and ignores a later ``spark.conf.set``.  An
+  externally built session keeps whatever its builder set for these.
+- ``RUNTIME_CONFS`` are applied by ``ensure_runtime_confs(spark)``, which
+  every query calls on whatever session the driver hands us.  They are
+  all *runtime-settable*, and correctness depends on them (ns-parquet
+  mitigation, UTC session tz).  This is what makes the engine work on a
+  SparkSession we didn't build.
+
+``spark.sql.codegen.cache.maxEntries`` (static) is 1000, ten times
+Spark's default of 100.  The default is smaller than the engine's working
+set of generated classes: ``dedup_keep_cluster_canonical`` alone
+generates 110–120 distinct classes, one pass of the benchmark's
+curation-plus-query mix 221–231, and a sweep of ``DRIVER_WINDOW``
+721–814.  With an LRU cache of 100 every warm call then misses on every
+class and pays a Janino compile plus a fresh HotSpot JIT again; with
+1000, a warm call compiles nothing.
 
 Scale notes (100 TB): shuffle.partitions here is sized for local[32]; on a
 real cluster set spark.sql.shuffle.partitions ≈ 2-3× total cores and rely
@@ -21,6 +32,18 @@ import os
 from pathlib import Path
 
 from pyspark.sql import SparkSession
+
+#: Confs set at session build.  ``session_builder`` adds the
+#: environment-dependent ones (shuffle partitions, driver memory).
+BUILD_CONFS: dict[str, str] = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    # static; sized in the module docstring
+    "spark.sql.codegen.cache.maxEntries": "1000",
+    "spark.ui.enabled": "false",
+}
 
 #: Confs that must hold on ANY session running our queries (all are
 #: runtime-settable; verified on pyspark 4.1.2).
@@ -97,16 +120,33 @@ def _ship_package(spark: SparkSession) -> None:
     sc._migbq_pkg_shipped = True
 
 
+def session_builder(
+    app_name: str,
+    cpus: str | int | None = None,
+    shuffle_partitions: int | None = None,
+) -> SparkSession.Builder:
+    """A local-session builder carrying BUILD_CONFS and RUNTIME_CONFS."""
+    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
+    shuffle_partitions = shuffle_partitions or int(
+        os.environ.get("MIGBQ_SHUFFLE_PARTITIONS", "32")
+    )
+    builder = (
+        SparkSession.builder.master(f"local[{cpus}]")
+        .appName(app_name)
+        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.driver.memory", os.environ.get("MIGBQ_DRIVER_MEM", "8g"))
+    )
+    for k, v in {**BUILD_CONFS, **RUNTIME_CONFS}.items():
+        builder = builder.config(k, v)
+    return builder
+
+
 def get_spark(
     app_name: str = "migbq-spark",
     cpus: str | int | None = None,
     shuffle_partitions: int | None = None,
 ) -> SparkSession:
     """Build a local SparkSession with the engine's standard configuration."""
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS") or "*"
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("MIGBQ_SHUFFLE_PARTITIONS", "32")
-    )
     # transformWithState's driver-side StreamingPythonRunner spawns a
     # fresh python process whose sys.path comes from the JVM's inherited
     # PYTHONPATH, NOT from addPyFile includes — so the repo root must be
@@ -120,17 +160,4 @@ def get_spark(
         os.environ["PYTHONPATH"] = (
             repo_root + (os.pathsep + existing if existing else "")
         )
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("MIGBQ_DRIVER_MEM", "8g"))
-        .config("spark.ui.enabled", "false")
-    )
-    for k, v in RUNTIME_CONFS.items():
-        builder = builder.config(k, v)
-    return builder.getOrCreate()
+    return session_builder(app_name, cpus, shuffle_partitions).getOrCreate()

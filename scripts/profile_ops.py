@@ -1,5 +1,8 @@
 """Per-operator profiler: warm e2e wall (min-of-N), executor CPU and job
 count for a list of registered queries, on a UI-enabled engine session.
+For each run it also prints the compile cost outside executor tasks: the
+classes Janino compiled (``compiles``) and the CPU of the JVM's C1/C2 JIT
+compiler threads (``jit``).
 
 Wall seconds on this box swing with host weather; executor CPU from the
 REST API is the throttle-immune number (r15 method note).  Use for
@@ -22,32 +25,53 @@ REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
 from migbq_spark import registry  # noqa: E402
-from migbq_spark.session import RUNTIME_CONFS  # noqa: E402
+from migbq_spark.session import session_builder  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def _ui_spark():
-    """get_spark() twin with the UI enabled (REST CPU metrics)."""
-    from pyspark.sql import SparkSession
-
-    cpus = os.environ.get("SPARK_GRAFT_CPUS") or "*"
-    b = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile-ops")
-        .config("spark.sql.shuffle.partitions", "32")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("MIGBQ_DRIVER_MEM", "8g"))
+    """The engine's local session (``session_builder``) with the UI on, for
+    the REST CPU metrics."""
+    return (
+        session_builder("profile-ops")
         .config("spark.ui.enabled", "true")
         .config("spark.ui.retainedJobs", "100000")
         .config("spark.ui.retainedStages", "100000")
+        .getOrCreate()
     )
-    for k, v in RUNTIME_CONFS.items():
-        b = b.config(k, v)
-    return b.getOrCreate()
+
+
+def _janino_compiles(spark) -> int:
+    """Classes Janino has compiled in this JVM so far (``CodegenMetrics``;
+    a hit in Spark's generated-class cache does not count)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+def _jit_ticks(pid: int) -> dict[int, int]:
+    """CPU ticks (utime + stime) of each live ``C1/C2 CompilerThread*``
+    thread of the JVM, by thread id, from ``/proc/<pid>/task/*/stat``."""
+    ticks = {}
+    for task in Path(f"/proc/{pid}/task").iterdir():
+        try:
+            # comm is cut at 15 characters: "C2 CompilerThre"
+            if (task / "comm").read_text().startswith(
+                ("C1 CompilerThre", "C2 CompilerThre")
+            ):
+                stat = (task / "stat").read_text().rsplit(")", 1)[1].split()
+                ticks[int(task.name)] = int(stat[11]) + int(stat[12])
+        except (OSError, IndexError):
+            pass  # the thread ended meanwhile
+    return ticks
+
+
+def _jit_cpu_s(before: dict[int, int], after: dict[int, int]) -> float:
+    """JIT compiler CPU (s) between two ``_jit_ticks`` reads.  HotSpot
+    starts and retires compiler threads on demand; one retired in between
+    is not counted, so this can undercount, never overcount."""
+    ticks = sum(t - before.get(tid, 0) for tid, t in after.items())
+    return ticks / os.sysconf("SC_CLK_TCK")
 
 
 def _cpu_since(ui: str, app: str, first_job: int) -> float:
@@ -86,6 +110,7 @@ def main() -> None:
     sc = spark.sparkContext
     ui = sc.uiWebUrl
     app = sc.applicationId
+    jvm_pid = int(spark._jvm.java.lang.ProcessHandle.current().pid())
     # session warm-up (JVM/codegen/parquet footers), same as bench.py
     queries["agg_pk_bounds"](spark, SF_DIR).collect()
     summary = {}
@@ -99,29 +124,37 @@ def main() -> None:
                     urllib.request.urlopen(f"{ui}/api/v1/applications/{app}/jobs")
                 )
             )
+            compiles0, jit0 = _janino_compiles(spark), _jit_ticks(jvm_pid)
             t0 = time.monotonic()
             df = fn(spark, SF_DIR)
             df.write.format("noop").mode("overwrite").save()
             wall = time.monotonic() - t0
+            compiles = _janino_compiles(spark) - compiles0
+            jit = _jit_cpu_s(jit0, _jit_ticks(jvm_pid))
             jobs1 = json.load(
                 urllib.request.urlopen(f"{ui}/api/v1/applications/{app}/jobs")
             )
             njobs = len(jobs1) - jobs0
             first = sorted(j["jobId"] for j in jobs1)[jobs0] if njobs else 0
             cpu = _cpu_since(ui, app, first)
-            runs.append((wall, njobs, cpu))
+            runs.append((wall, njobs, cpu, compiles, jit))
             print(
                 f"{qid:36s} r{r} wall={wall:7.3f}s jobs={njobs:3d} "
-                f"cpu={cpu:7.2f}s",
+                f"cpu={cpu:7.2f}s compiles={compiles:4d} jit={jit:6.2f}s",
                 flush=True,
             )
-        walls = sorted(w for w, _, _ in runs)
-        jobs = sorted(n for _, n, _ in runs)[len(runs) // 2]
-        cpus = sorted(c for _, _, c in runs)
-        summary[qid] = (walls[0], jobs, cpus[0])
-    print("\n== summary (warm wall_min / median jobs / cpu_min) ==")
-    for qid, (w, j, c) in summary.items():
-        print(f"{qid:36s} wall_min={w:7.3f} jobs={j:3d} cpu_min={c:7.2f}")
+        walls, jobs, cpus, compiles, jits = (sorted(col) for col in zip(*runs))
+        mid = len(runs) // 2
+        summary[qid] = (walls[0], jobs[mid], cpus[0], compiles[mid], jits[mid])
+    print(
+        "\n== summary (warm wall_min / median jobs / cpu_min / "
+        "median compiles / median jit) =="
+    )
+    for qid, (w, j, c, n, t) in summary.items():
+        print(
+            f"{qid:36s} wall_min={w:7.3f} jobs={j:3d} cpu_min={c:7.2f} "
+            f"compiles={n:4d} jit={t:6.2f}"
+        )
     spark.stop()
 
 

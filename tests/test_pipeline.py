@@ -556,6 +556,20 @@ def test_keep_cluster_canonical_invariants(spark, sf_dir):
             assert (r.kept_doc_id, r.component_id) in comps
 
 
+def test_warm_dedup_call_compiles_nothing(spark, sf_dir):
+    """A repeated call must find all its generated classes in Spark's
+    codegen cache.  The dedup generates more classes than the default
+    cache of 100 holds, so with the default every warm call recompiles
+    them all (Janino, then a fresh JIT of each class)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = metrics.METRIC_COMPILATION_TIME()
+    Q["dedup_keep_cluster_canonical"](spark, sf_dir).collect()
+    before = compiles.getCount()
+    Q["dedup_keep_cluster_canonical"](spark, sf_dir).collect()
+    recompiled = compiles.getCount() - before
+    assert recompiled == 0, f"warm call compiled {recompiled} classes"
+
+
 def test_cc_twostar_screened_fixpoint_chain(spark):
     """r14 opt round: the fixpoint loop's cheap (count, hash-sum)
     screen must not change the result — a 40-node chain forces several
