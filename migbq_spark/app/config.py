@@ -15,9 +15,8 @@
           pk: event_id
       batch_size: 50000
     out:
-      type: parquet | bigquery
+      type: parquet                # bigquery raises: needs spark-bigquery-connector
       path: /path/to/dest          # parquet "dataset" directory
-      dataset: project.dataset     # bigquery
     meta:
       path: /path/to/state         # metadata store (migbq: sqlite/peewee)
 
@@ -27,7 +26,7 @@ sqlite metadata DB is `meta.path`/migbq.sqlite (stdlib sqlite3).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from pathlib import Path
 
 import yaml
@@ -51,9 +50,7 @@ class PipelineConfig:
     jdbc_user: str | None = None
     jdbc_password: str | None = None
     out_path: str | None = None
-    bq_dataset: str | None = None
     meta_path: str = ".stage/meta"
-    extra: dict = field(default_factory=dict)
 
     @classmethod
     def from_dict(cls, raw: dict) -> "PipelineConfig":
@@ -73,9 +70,7 @@ class PipelineConfig:
             jdbc_user=i.get("user"),
             jdbc_password=i.get("password"),
             out_path=o.get("path"),
-            bq_dataset=o.get("dataset"),
             meta_path=raw.get("meta", {}).get("path", ".stage/meta"),
-            extra=raw.get("extra", {}),
         )
 
     @classmethod

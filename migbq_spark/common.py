@@ -1,6 +1,7 @@
 """Shared expression helpers enforcing the cross-engine determinism rules
 (SURVEY.md §7.4): DECIMAL-before-aggregation for money doubles, identical
-aliasing on both engine sides, unique window tiebreaks.
+aliasing on both engine sides, unique window tiebreaks, and the one
+corpus tokenization rule (`tokens`).
 """
 
 from __future__ import annotations
@@ -12,6 +13,17 @@ from pyspark.sql import functions as F
 #: columns — Spark and DuckDB disagree in the last ulp of a raw
 #: SUM(double) (different add order), decimal addition is exact.
 DEC = "decimal(18,2)"
+
+
+def tokens() -> Column:
+    """The corpus tokenization rule over the documents' ``text``: split on
+    one space, drop empty tokens.
+
+    The documents fixture ends every text with a space, so the split
+    yields an empty final token on both engines; the DuckDB oracles
+    spell the same rule as ``list_filter(string_split(text, ' '),
+    t -> t <> '')``."""
+    return F.filter(F.split("text", " "), lambda t: t != "")
 
 
 def dec(col: str | Column) -> Column:

@@ -3263,6 +3263,12 @@ def _pair_fan_kernel(batches):
 
     for batch in batches:
         col = batch.column(0)
+        if col.null_count:
+            # the offsets of a null slot may span undefined values, which
+            # would fan into spurious pair keys — reject, never guess
+            raise ValueError(
+                f"pair-fan kernel got {col.null_count} null basket(s)"
+            )
         offs = col.offsets.to_numpy(zero_copy_only=False).astype(np.int64)
         vals = col.values.to_numpy(zero_copy_only=False)
         if vals.dtype != np.int64:

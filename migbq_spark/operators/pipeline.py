@@ -17,6 +17,18 @@ measures recall against the exact oracle-checked operators.
 engines compute bit-identically, making the full LSH pipeline
 value-hash oracle-checked as well.
 
+Every near-dup operator and audit composes ONE builder per step:
+
+| step                 | builder |
+| tokens               | `common.tokens` (the one tokenization rule), `_tok_df` |
+| signatures           | `_portable_minhash_df`, per-token hash `_md5_hash` or `_xxhash` |
+| banding              | `_band_structs`, `_portable_band_df` |
+| candidates           | `_bucket_pairs` via `_corpus_candidates` (repartition + dropDuplicates) or `_sample_candidates` (broadcast + distinct) |
+| exact verify         | `_with_exact_jaccard` over `_jaccard` |
+| audit pair build     | `_sampled_token_pairs` under `_exact_jaccard_pairs_df` and `_containment_pairs_df` |
+| sketch estimates     | `_side_signatures` + `_n_match` |
+| connected components | `_cc_twostar_components` (run to the fixpoint) |
+
 Scale notes (100 TB): every op is explode → groupBy → (bucketed)
 self-join — linear shuffles plus a join whose size is controlled by the
 banding/cell parameters, never a full n² pair enumeration.  The bucket
@@ -42,6 +54,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from migbq_spark.catalog import load
+from migbq_spark.common import tokens
 from migbq_spark.registry import register
 
 #: Previous invocation's persisted token base (unpersisted on the next
@@ -107,16 +120,8 @@ def _tok_df(
             F.explode(F.array_distinct("t")).alias("token"),
         )
     d = load(spark, sf_dir, "documents")
-    return (
-        d.select(
-            "doc_id",
-            "source",
-            F.explode(
-                F.array_distinct(
-                    F.filter(F.split("text", " "), lambda t: t != "")
-                )
-            ).alias("token"),
-        )
+    return d.select(
+        "doc_id", "source", F.explode(F.array_distinct(tokens())).alias("token")
     )
 
 
@@ -126,103 +131,21 @@ _MINHASH_K = 16
 _LSH_BANDS = 4  # 4 bands × 4 rows ⇒ P(candidate) = 1-(1-j^4)^4
 
 
-@register("dedup_minhash_lsh")  # rows-only: xxhash64 is engine-specific
-def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash + banded LSH near-duplicate candidates, verified exactly.
+def _md5_hash(i: int) -> F.Column:
+    """Portable per-token hash ``i``: the top 60 bits of md5(i ':' token),
+    bit-identical between Spark's ``conv(substr(md5(..),1,15),16,10)``
+    and DuckDB's ``CAST('0x'||substr(md5(..),1,15) AS BIGINT)``."""
+    return F.conv(
+        F.substring(F.md5(F.concat_ws(":", F.lit(i), F.col("token"))), 1, 15),
+        16,
+        10,
+    ).cast("bigint")
 
-    shingle(=token) → 16 minhashes (min of seeded xxhash64 per doc, ONE
-    shuffle) → 4 bands of 4 rows → bucket-join on (source, band,
-    band_hash) → exact Jaccard verification of the candidates only.
 
-    The bucket join is BLOCKED ON SOURCE (r3), matching the exact
-    operator's semantics — and for a scale reason: the sf0.1 fixture
-    holds a ~2.6 k-doc cross-source near-dup mega-cluster, and an
-    unblocked bucket join enumerates its ~n²/2 ≈ 12 M pairs (measured
-    91 s — banding bounds bucket COUNT, not bucket SIZE when the data
-    really is one giant similarity cluster).  Listing all pairs of a
-    mega-cluster is inherently quadratic in ANY engine; the 100 TB
-    answer for CROSS-SOURCE cluster discovery is
-    `dedup_cross_source_cc` (unblocked buckets → per-bucket star edges →
-    two-star CC, linear in bucket sizes), while the pair-listing form
-    stays usable blocked.  Quality vs the exact operator is pinned in
-    tests/test_pipeline.py (recall ≥ 0.9 at τ=0.8 on the fixture)."""
-    toks = _tok_df(spark, sf_dir)
-    # same single-task guard as _portable_band_df: the exchange on the
-    # grouping keys is inevitable; placing it before the 16 hash-min
-    # aggregates parallelizes them over any input split layout
-    mins = toks.repartition("doc_id", "source").groupBy("doc_id", "source").agg(
-        *[
-            F.min(F.xxhash64(F.lit(i), F.col("token"))).alias(f"mh{i}")
-            for i in range(_MINHASH_K)
-        ]
-    )
-    rows_per_band = _MINHASH_K // _LSH_BANDS
-    bands = mins.select(
-        "doc_id",
-        "source",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.xxhash64(
-                            *[F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
-                        ).alias("bh"),
-                    )
-                    for b in range(_LSH_BANDS)
-                ]
-            )
-        ).alias("bb"),
-    ).select("doc_id", "source", "bb.band", "bb.bh")
-    a, b = bands.alias("a"), bands.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.source") == F.col("b.source"))
-            & (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        # Pinned CPU-proportional repartition BEFORE the dedup: AQE
-        # coalesces the dedup's exchange by the JOIN INPUT's bytes (the
-        # bands are small) and cannot see the bucket join's row
-        # explosion, so the ~1.3 M pre-distinct pair rows collapse into
-        # 2 tasks.  hashpartitioning(a_id, b_id) satisfies the dedup's
-        # required distribution — no extra exchange, just parallelism
-        # (measured 3.7 s → 1.45 s for candidates+verify at sf0.1).
-        .repartition(
-            spark.sparkContext.defaultParallelism, "a_id", "b_id"
-        )
-        .dropDuplicates()
-    )
-    # exact verification of candidates only
-    sets = load(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.array_distinct(F.filter(F.split("text", " "), lambda t: t != "")).alias(
-            "toks"
-        ),
-    )
-    sa = sets.select(F.col("doc_id").alias("a_id"), F.col("toks").alias("a_toks"))
-    sb = sets.select(F.col("doc_id").alias("b_id"), F.col("toks").alias("b_toks"))
-    verified = (
-        candidates.join(sa, "a_id")
-        .join(sb, "b_id")
-        .select(
-            "a_id",
-            "b_id",
-            (
-                F.size(F.array_intersect("a_toks", "b_toks"))
-                / (
-                    F.size("a_toks")
-                    + F.size("b_toks")
-                    - F.size(F.array_intersect("a_toks", "b_toks"))
-                )
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= 0.8)
-    )
-    return verified
+def _xxhash(i: int) -> F.Column:
+    """Seeded xxhash64 per-token hash ``i``: ~3× cheaper than
+    `_md5_hash` but engine-specific, so its consumers are rows-only."""
+    return F.xxhash64(F.lit(i), F.col("token"))
 
 
 def _portable_minhash_df(
@@ -230,14 +153,12 @@ def _portable_minhash_df(
     sf_dir: str,
     docs: DataFrame | None = None,
     toks: DataFrame | None = None,
+    h=_md5_hash,
 ) -> DataFrame:
-    """(doc_id, source, mh0..mh15) — the 16 PORTABLE md5-derived 60-bit
-    MinHash components per document (each hash = top 60 bits of
-    md5(seed ':' token), bit-identical between Spark's
-    ``conv(substr(md5(..),1,15),16,10)`` and DuckDB's
-    ``CAST('0x'||substr(md5(..),1,15) AS BIGINT)``).  Shared by
-    `_portable_band_df` (banding) and `minhash_jaccard_estimate`
-    (component-match accuracy audit).
+    """(doc_id, source, mh0..mh15) — the 16 MinHash components per
+    document: mh_i = min over the doc's distinct tokens of ``h(i)``
+    (default `_md5_hash`, the portable family the oracles mirror).  The
+    one signature builder of every MinHash operator and audit.
 
     ``docs`` (optional, a broadcastable (doc_id) frame) restricts the
     build to those documents BEFORE any hashing — signatures are
@@ -255,15 +176,6 @@ def _portable_minhash_df(
         toks = _tok_df(spark, sf_dir)
     if docs is not None:
         toks = toks.join(F.broadcast(docs), "doc_id")
-
-    def h(i: int) -> F.Column:
-        return F.conv(
-            F.substring(
-                F.md5(F.concat_ws(":", F.lit(i), F.col("token"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("bigint")
 
     # Hash the VOCABULARY, not the occurrences (r5): evaluating 16
     # md5+conv per doc-token row made the signature build the whole
@@ -297,40 +209,165 @@ def _portable_minhash_df(
     )
 
 
+def _band_structs(n_bands: int, rows: int) -> list[F.Column]:
+    """The ``n_bands`` × ``rows`` banding of the mh0.. signature columns:
+    one (band, bkey) struct per band, bkey = the comma-joined
+    ``rows``-tuple (no second hash — portable)."""
+    return [
+        F.struct(
+            F.lit(b).alias("band"),
+            F.concat_ws(
+                ",",
+                *[F.col(f"mh{b * rows + r}").cast("string") for r in range(rows)],
+            ).alias("bkey"),
+        )
+        for b in range(n_bands)
+    ]
+
+
 def _portable_band_df(
     spark: SparkSession, sf_dir: str, mins: DataFrame | None = None
 ) -> DataFrame:
     """(doc_id, source, band, bkey) — `_portable_minhash_df` signatures
-    banded 4×4 (bkey = the comma-joined 4-tuple, no second hash —
-    portable).  Shared by `dedup_minhash_portable` (source-blocked pair
-    listing) and `dedup_cross_source_cc` (unblocked cluster
-    discovery).  Pass ``mins`` to band an already-built (or
-    checkpointed/sample-restricted) signature table instead of
-    re-deriving the whole lineage."""
+    in the production 4×4 banding.  Pass ``mins`` to band an
+    already-built (or checkpointed/sample-restricted) signature table
+    instead of re-deriving the whole lineage."""
     if mins is None:
         mins = _portable_minhash_df(spark, sf_dir)
-    rows_per_band = _MINHASH_K // _LSH_BANDS
     return mins.select(
         "doc_id",
         "source",
         F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band"),
-                        F.concat_ws(
-                            ",",
-                            *[
-                                F.col(f"mh{b * rows_per_band + r}").cast("string")
-                                for r in range(rows_per_band)
-                            ],
-                        ).alias("bkey"),
-                    )
-                    for b in range(_LSH_BANDS)
-                ]
-            )
+            F.array(*_band_structs(_LSH_BANDS, _MINHASH_K // _LSH_BANDS))
         ).alias("bb"),
     ).select("doc_id", "source", "bb.band", "bb.bkey")
+
+
+def _bucket_pairs(
+    bands: DataFrame, build: DataFrame, by: tuple[str, ...] = ()
+) -> DataFrame:
+    """(*by, a_id, b_id) — every doc pair sharing a (source, *by, band,
+    bkey) bucket, a_id < b_id, once per shared bucket; ``build`` is
+    ``bands`` itself or its broadcast.
+
+    BLOCKED ON SOURCE (r3), matching the exact operators' semantics —
+    and for a scale reason: banding bounds bucket COUNT, not bucket
+    SIZE, and an unblocked bucket join over the sf0.1 fixture's ~2.6
+    k-doc cross-source near-dup mega-cluster enumerates its ~n²/2 ≈ 12 M
+    pairs (measured 91 s).  Listing all pairs of a mega-cluster is
+    inherently quadratic in ANY engine; cross-source cluster discovery
+    is `dedup_cross_source_cc` (per-bucket star edges → two-star CC)."""
+    a, b = bands.alias("a"), build.alias("b")
+    cond = F.col("a.doc_id") < F.col("b.doc_id")
+    for k in ("source", *by, "band", "bkey"):
+        cond = cond & (F.col(f"a.{k}") == F.col(f"b.{k}"))
+    return a.join(b, cond).select(
+        *[F.col(f"a.{k}").alias(k) for k in by],
+        F.col("a.doc_id").alias("a_id"),
+        F.col("b.doc_id").alias("b_id"),
+    )
+
+
+def _corpus_candidates(spark: SparkSession, bands: DataFrame) -> DataFrame:
+    """(a_id, b_id) — distinct `_bucket_pairs` at corpus scale.
+
+    Pinned CPU-proportional repartition BEFORE the dedup: AQE coalesces
+    the dedup's exchange by the JOIN INPUT's bytes (the bands are small)
+    and cannot see the bucket join's row explosion, so the ~1.3 M
+    pre-distinct pair rows collapse into 2 tasks.
+    hashpartitioning(a_id, b_id) satisfies the dedup's required
+    distribution — no extra exchange, just parallelism (measured 3.7 s →
+    1.45 s for candidates+verify at sf0.1)."""
+    return (
+        _bucket_pairs(bands, bands)
+        .repartition(spark.sparkContext.defaultParallelism, "a_id", "b_id")
+        .dropDuplicates()
+    )
+
+
+def _sample_candidates(bands: DataFrame, *by: str) -> DataFrame:
+    """(*by, a_id, b_id) — distinct `_bucket_pairs` over an audit sample.
+    Explicit broadcast (r14, guide §3.1): the bands are bounded by the
+    code-enforced audit budget but derive from checkpointed lineage
+    with no stats, so without the hint the planner sort-merge-joins a
+    build side that can never outgrow an executor."""
+    return _bucket_pairs(bands, F.broadcast(bands), by).distinct()
+
+
+def _jaccard(a: str, b: str) -> F.Column:
+    """Exact Jaccard of two distinct-token array columns, as double."""
+    shared = F.size(F.array_intersect(a, b))
+    return shared * F.lit(1.0) / (F.size(a) + F.size(b) - shared)
+
+
+def _with_exact_jaccard(
+    spark: SparkSession, sf_dir: str, pairs: DataFrame
+) -> DataFrame:
+    """``pairs`` (a_id, b_id, ...) plus ``jaccard``, the two documents'
+    exact token-set Jaccard — the verify step, run on candidates only."""
+    sets = load(spark, sf_dir, "documents").select(
+        "doc_id", F.array_distinct(tokens()).alias("toks")
+    )
+    sa = sets.select(F.col("doc_id").alias("a_id"), F.col("toks").alias("a_toks"))
+    sb = sets.select(F.col("doc_id").alias("b_id"), F.col("toks").alias("b_toks"))
+    return (
+        pairs.join(sa, "a_id")
+        .join(sb, "b_id")
+        .withColumn("jaccard", _jaccard("a_toks", "b_toks"))
+        .drop("a_toks", "b_toks")
+    )
+
+
+def _side_signatures(mins: DataFrame, side: str) -> DataFrame:
+    """(<side>_id, <side>0..<side>15) — a signature table renamed for
+    one side ("a" or "b") of a pair join."""
+    return mins.select(
+        F.col("doc_id").alias(f"{side}_id"),
+        *[F.col(f"mh{i}").alias(f"{side}{i}") for i in range(_MINHASH_K)],
+    )
+
+
+def _n_match(eq=lambda x, y: x == y) -> F.Column:
+    """bigint count of the 16 component positions i where ``eq(a{i},
+    b{i})`` holds, over a pair frame joined with both sides'
+    `_side_signatures` — the sketch statistic of the estimate audits."""
+    return sum(
+        F.when(eq(F.col(f"a{i}"), F.col(f"b{i}")), 1).otherwise(0)
+        for i in range(_MINHASH_K)
+    ).cast("bigint")
+
+
+def _lsh_dedup_pairs(spark: SparkSession, sf_dir: str, h) -> DataFrame:
+    """(a_id, b_id, jaccard) — source-blocked MinHash-LSH near-dup pairs
+    under per-token hash ``h``: signatures → 4×4 banding → corpus
+    candidates → exact-Jaccard verify ≥ 0.8.
+
+    The signature table is materialized ONCE (r14, the r9
+    `minhash_jaccard_estimate` lesson): the bucket self-join otherwise
+    re-derives the ENTIRE signature lineage — corpus scan, vocab
+    distinct, 16-hash vocab join, 16-min groupBy — on BOTH sides (12
+    parquet scans in the before-plan; 6 after).  |docs| × 16 int64 is
+    the signature store a real pipeline persists anyway (~70 MB at
+    sf10)."""
+    mins = _portable_minhash_df(spark, sf_dir, h=h).localCheckpoint()
+    cand = _corpus_candidates(spark, _portable_band_df(spark, sf_dir, mins=mins))
+    return (
+        _with_exact_jaccard(spark, sf_dir, cand)
+        .filter(F.col("jaccard") >= 0.8)
+        .select("a_id", "b_id", "jaccard")
+    )
+
+
+@register("dedup_minhash_lsh")  # rows-only: xxhash64 is engine-specific
+def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """MinHash + banded LSH near-duplicate candidates, verified exactly
+    (`_lsh_dedup_pairs` under the seeded xxhash64 family).
+
+    shingle(=token) → 16 minhashes → 4 bands of 4 rows → bucket-join on
+    (source, band, bkey) → exact Jaccard verification of the candidates
+    only.  Quality vs the exact operator is pinned in
+    tests/test_pipeline.py (recall ≥ 0.9 at τ=0.8 on the fixture)."""
+    return _lsh_dedup_pairs(spark, sf_dir, _xxhash)
 
 
 @register(
@@ -391,63 +428,11 @@ def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 100 TB dedup path's evidence from "recall pinned in tests" to
     driver-grade value-hash equality.
 
-    Same scale shape as the xxhash64 form, including the r3 source
-    blocking (see `dedup_minhash_lsh`: an unblocked bucket join on the
-    sf0.1 fixture's ~2.6 k-doc mega-cluster enumerates 12 M pairs;
-    pair-listing a mega-cluster is inherently quadratic, cluster
-    discovery belongs to `dup_cc_twostar`).  One groupBy computes all 16
-    minhashes (map-side combinable), band keys are the concatenated
-    4-tuples (no second hash — portable), and the exact verify runs on
-    candidates only.  md5 costs ~3× xxhash64 per token; at 100 TB prefer
-    the xxhash64 twin when cross-engine determinism isn't required."""
-    # Materialize the signature table ONCE (r14, the r9
-    # `minhash_jaccard_estimate` lesson applied to the production dedup
-    # op itself): the bucket self-join re-derived the ENTIRE signature
-    # lineage — corpus scan, vocab distinct, 16-hash vocab join, 16-min
-    # groupBy — on BOTH sides (12 parquet scans in the before-plan; 6
-    # after).  |docs| × 16 int64 is the signature store a real pipeline
-    # persists anyway (~70 MB at sf10).
-    bands = _portable_band_df(
-        spark, sf_dir, mins=_portable_minhash_df(spark, sf_dir).localCheckpoint()
-    )
-    a, b = bands.alias("a"), bands.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.source") == F.col("b.source"))
-            & (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        # pinned repartition before the dedup — see dedup_minhash_lsh
-        .repartition(
-            spark.sparkContext.defaultParallelism, "a_id", "b_id"
-        )
-        .dropDuplicates()
-    )
-    sets = load(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.array_distinct(F.filter(F.split("text", " "), lambda t: t != "")).alias(
-            "toks"
-        ),
-    )
-    sa = sets.select(F.col("doc_id").alias("a_id"), F.col("toks").alias("a_toks"))
-    sb = sets.select(F.col("doc_id").alias("b_id"), F.col("toks").alias("b_toks"))
-    shared = F.size(F.array_intersect("a_toks", "b_toks"))
-    return (
-        candidates.join(sa, "a_id")
-        .join(sb, "b_id")
-        .select(
-            "a_id",
-            "b_id",
-            (
-                shared * F.lit(1.0)
-                / (F.size("a_toks") + F.size("b_toks") - shared)
-            ).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= 0.8)
-    )
+    Same builders as the xxhash64 form (`_lsh_dedup_pairs`, source
+    blocking in `_bucket_pairs`).  md5 costs ~3× xxhash64 per token; at
+    100 TB prefer the xxhash64 twin when cross-engine determinism isn't
+    required."""
+    return _lsh_dedup_pairs(spark, sf_dir, _md5_hash)
 
 
 # ---------------------------------------------------------------- SimHash
@@ -466,7 +451,7 @@ def _simhash_pairs(toks: DataFrame, h: F.Column) -> DataFrame:
     operator's cost at any scale."""
     hv = F.col("__h")
     # repartition on exactly the grouping keys (same single-task guard as
-    # _portable_band_df: the exchange is required anyway; placing it
+    # _portable_minhash_df: the exchange is required anyway; placing it
     # before the 32 conditional sums parallelizes them over any input
     # split layout)
     sums = toks.repartition("doc_id", "source").withColumn("__h", h).groupBy(
@@ -1222,7 +1207,7 @@ def lang_id_ngram(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine parity.  Broadcastable profile (50 rows) → the classify
     join is map-side at any corpus size."""
     d = load(spark, sf_dir, "documents")
-    toks_arr = F.filter(F.split("text", " "), lambda t: t != "")
+    toks_arr = tokens()
     tok = d.select("doc_id", F.explode(F.array_distinct(toks_arr)).alias("token"))
     freq = (
         d.select("lang", F.explode(toks_arr).alias("token"))
@@ -1276,7 +1261,7 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     token length, and a blended score — integer counts + IEEE double
     arithmetic, bit-stable cross-engine."""
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
+    toks = tokens()
     n_tokens = F.size(toks).cast("bigint")
     n_distinct = F.size(F.array_distinct(toks)).cast("bigint")
     n_stop = F.size(
@@ -1316,7 +1301,7 @@ def token_count_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting: whitespace tokens + a BPE-ish estimate (≈1 token
     per 4 chars, per word — integer math so both engines agree exactly)."""
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
+    toks = tokens()
     return d.select(
         "doc_id",
         F.size(toks).cast("bigint").alias("n_ws_tokens"),
@@ -1345,7 +1330,7 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct token set — order/duplication-insensitive identity, the
     groupable key for corpus-level near-exact dedup."""
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
+    toks = tokens()
     return d.select(
         "doc_id",
         F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(toks)))).alias("fp"),
@@ -1544,8 +1529,12 @@ def _cc_small_star(E: DataFrame) -> DataFrame:
 def _cc_twostar_components(pairs: DataFrame) -> DataFrame:
     """Run alternating large-star/small-star contractions over the edge
     list ``(u, v)`` to the fixpoint and return ``(doc_id, component_id)``
-    with component_id = min node id in the component.  O(log n) rounds;
-    per-round lineage cut with localCheckpoint."""
+    with component_id = min node id in the component.  The one CC
+    fixpoint: `dup_connected_components`, `dup_cc_twostar` and the
+    cross-source dedup all run on it.  O(log n) rounds, looped until a
+    round leaves the edge set unchanged (never a round cap, which would
+    return a non-fixpoint labelling); per-round lineage cut with
+    localCheckpoint."""
     def _edge_stats(df: DataFrame) -> tuple[int, object]:
         """(count, xxhash64-sum) of the canonical edge set in ONE tiny
         agg job — a NECESSARY condition screen for set equality (r14
@@ -1583,7 +1572,8 @@ def _cc_twostar_components(pairs: DataFrame) -> DataFrame:
         "spark.sql.shuffle.partitions", str(max(8, n // 100_000))
     )
     try:
-        for _ in range(16):
+        changed = True
+        while changed:
             E2 = _cc_canon(
                 _cc_small_star(_cc_large_star(E))
             ).localCheckpoint(eager=False)
@@ -1597,8 +1587,6 @@ def _cc_twostar_components(pairs: DataFrame) -> DataFrame:
             n2, h2 = _edge_stats(E2)
             changed = (n2 != n) or (h2 != h) or E2.exceptAll(E).count() > 0
             E, n, h = E2, n2, h2
-            if not changed:
-                break
     finally:
         if saved is None:
             spark.conf.unset("spark.sql.shuffle.partitions")
@@ -1621,32 +1609,24 @@ def _cc_twostar_components(pairs: DataFrame) -> DataFrame:
 def dup_cc_twostar(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components via alternating LARGE-STAR / SMALL-STAR
     contractions (Kiveris et al., "Connected Components in MapReduce and
-    Beyond") — the O(log n)-round scale path for
-    `dup_connected_components`, whose plain min-label propagation needs
-    O(diameter) rounds and degrades on long chains.  Each round is two
+    Beyond") over the `ngram_jaccard` near-dup edges — the registry id
+    of the two-star algorithm itself; `dup_connected_components` runs
+    the same `_cc_twostar_components` fixpoint, and both are
+    hash-checked against one recursive-CTE oracle.  Each round is two
     groupBy+join passes over the edge list; the fixpoint is the star
     graph rooting every node at its component minimum, extracted
     directly from the final edges (root = the `least` side of each
     canonical star edge).
 
-    Hash-checked against the SAME recursive-CTE fixpoint oracle as the
-    propagation variant — both algorithms must land on identical
-    components.
-
     Scale (100 TB): round count is logarithmic in the largest component
     (pathological chains included); per-round cost is |E| shuffled on
     node id; lineage is cut per round with localCheckpoint."""
-    from migbq_spark.operators.training import ngram_jaccard
-
-    pairs = ngram_jaccard(spark, sf_dir).select(
-        F.col("a_id").alias("u"), F.col("b_id").alias("v")
-    )
-    return _cc_twostar_components(pairs)
+    return _training.dup_connected_components(spark, sf_dir)
 
 
-# the two-star fixpoint must equal the propagation fixpoint — reuse the
-# identical recursive-CTE oracle text (import training first: this module
-# loads before it in registry._load_all)
+# one fixpoint, one oracle: reuse dup_connected_components' recursive-CTE
+# oracle text (import training first: this module loads before it in
+# registry._load_all)
 from migbq_spark import registry as _registry  # noqa: E402
 from migbq_spark.operators import training as _training  # noqa: E402, F401
 
@@ -1830,7 +1810,7 @@ def dedup_keep_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     keyed by component) on top of the CC rounds; nothing quadratic."""
     comps = dedup_cross_source_cc(spark, sf_dir)
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
+    toks = tokens()
     n_tokens = F.size(toks).cast("bigint")
     ttr = F.size(F.array_distinct(toks)).cast("bigint") * F.lit(1.0) / n_tokens
     # where(n_tokens > 0) mirrors the oracle's INNER join against its q
@@ -1894,26 +1874,14 @@ def minhash_merge_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     dedup sketch the LSH family stores."""
     toks = _tok_df(spark, sf_dir)
 
-    def h(i: int) -> F.Column:
-        return F.conv(
-            F.substring(
-                F.md5(F.concat_ws(":", F.lit(i), F.col("token"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("bigint")
-
     def sig(part: DataFrame) -> DataFrame:
-        # dedup (source, token) BEFORE hashing: min over duplicate
-        # occurrences is the same min, so the 16-way md5 fan runs once
-        # per distinct token instead of once per occurrence (r10 sweep
-        # -tail fix: 1.59 -> 0.97 s warm at sf0.1), and the partial
-        # distinct collapses map-side before the one shuffle.
+        # a source's signature is the componentwise min of its docs'
+        # signatures (min of mins), so the one signature builder serves
+        # here too — hashing each distinct token once
         return (
-            part.select("source", "token")
-            .distinct()
+            _portable_minhash_df(spark, sf_dir, toks=part)
             .groupBy("source")
-            .agg(*[F.min(h(i)).alias(f"v{i}") for i in range(_MINHASH_K)])
+            .agg(*[F.min(f"mh{i}").alias(f"v{i}") for i in range(_MINHASH_K)])
         )
 
     base = sig(toks.filter(F.col("doc_id") % 2 == 0))
@@ -1995,7 +1963,7 @@ def contamination_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     to a 64-bit key (`xxhash64`) to shrink the shuffle payload — kept
     as raw text here so the DuckDB oracle stays byte-identical."""
     d = load(spark, sf_dir, "documents")
-    toks = F.expr("filter(split(text, ' '), t -> t <> '')")
+    toks = tokens()
     base = d.select(
         "doc_id", F.pmod("doc_id", F.lit(10)).alias("m"), toks.alias("t")
     ).filter(F.size("t") >= _SHINGLE_MIN_TOKS)
@@ -2070,7 +2038,7 @@ def decontaminate_train_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
     through map-side distinct.  Same shape as the screen, so the pair
     runs off one shared shingle scan under Spark's exchange reuse."""
     d = load(spark, sf_dir, "documents")
-    toks = F.expr("filter(split(text, ' '), t -> t <> '')")
+    toks = tokens()
     return _decontam_from_arr(
         d.select("doc_id", toks.alias("t"))
     )
@@ -2140,7 +2108,7 @@ def repeated_ngram_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     (doc, gram) dedup before the count, all map-side combinable; no
     second shuffle, no window."""
     d = load(spark, sf_dir, "documents")
-    toks = F.expr("filter(split(text, ' '), t -> t <> '')")
+    toks = tokens()
     base = d.select("doc_id", toks.alias("t")).filter(
         F.size("t") >= _SHINGLE_MIN_TOKS
     )
@@ -2199,9 +2167,7 @@ def cross_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = (
         d.select(
             "source",
-            F.explode(
-                F.expr("filter(split(text, ' '), t -> t <> '')")
-            ).alias("t"),
+            F.explode(tokens()).alias("t"),
         )
         .distinct()
     )
@@ -2290,7 +2256,7 @@ def heaps_law_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tok = d.select(
         "doc_id",
-        F.explode(F.expr("filter(split(text, ' '), t -> t <> '')")).alias("t"),
+        F.explode(tokens()).alias("t"),
     )
     firsts = tok.groupBy("t").agg(F.min("doc_id").alias("first_id"))
     vocab_h = (
@@ -2352,9 +2318,7 @@ def doc_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = (
         d.select(
             "doc_id",
-            F.explode(
-                F.filter(F.split("text", " "), lambda t: t != "")
-            ).alias("t"),
+            F.explode(tokens()).alias("t"),
         )
         .groupBy("doc_id", "t")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -2537,7 +2501,7 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = d.select(
         "doc_id",
         "source",
-        F.filter(F.split("text", " "), lambda t: t != "").alias("t"),
+        tokens().alias("t"),
     )
     stage_root = _funnel_stage_root(spark)
     if stage_root is not None:
@@ -2755,7 +2719,7 @@ def dup_span_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     `dup_span_ratio_hashed` (below), which exchanges int64 span keys
     instead (identical outputs, pinned by test + the same oracle)."""
     d = load(spark, sf_dir, "documents")
-    toks = F.expr("filter(split(text, ' '), t -> t <> '')")
+    toks = tokens()
     base = d.select("doc_id", toks.alias("t")).filter(F.size("t") >= 5)
     spans_arr = base.select(
         "doc_id",
@@ -2828,7 +2792,7 @@ def dup_span_ratio_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale (100 TB): spans never materialize as strings at all; the one
     wide exchange carries (int64 doc, int64 key, int64 count)."""
     d = load(spark, sf_dir, "documents")
-    toks = F.expr("filter(split(text, ' '), t -> t <> '')")
+    toks = tokens()
     base = d.select("doc_id", toks.alias("t")).filter(F.size("t") >= 5)
     spans_arr = base.select(
         "doc_id",
@@ -2935,62 +2899,21 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the three branches (measured 31.7 s at sf1 for three rebuilds;
     one materialized build + reuse is the way a real pipeline stores
     signatures anyway — |docs| × 16 int64, ~70 MB at sf10)."""
-    mins_ck = _portable_minhash_df(spark, sf_dir).localCheckpoint()
-    bands = _portable_band_df(spark, sf_dir, mins=mins_ck)
-    a, b = bands.alias("a"), bands.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.source") == F.col("b.source"))
-            & (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id"))
-        .repartition(spark.sparkContext.defaultParallelism, "a_id", "b_id")
-        .dropDuplicates()
+    mins = _portable_minhash_df(spark, sf_dir).localCheckpoint()
+    cand = _corpus_candidates(spark, _portable_band_df(spark, sf_dir, mins=mins))
+    matched = (
+        cand.join(_side_signatures(mins, "a"), "a_id")
+        .join(_side_signatures(mins, "b"), "b_id")
+        .withColumn("n_match", _n_match())
     )
-    mins = mins_ck
-    siga = mins.select(
-        F.col("doc_id").alias("a_id"),
-        F.array(*[f"mh{i}" for i in range(_MINHASH_K)]).alias("a_sig"),
-    )
-    sigb = mins.select(
-        F.col("doc_id").alias("b_id"),
-        F.array(*[f"mh{i}" for i in range(_MINHASH_K)]).alias("b_sig"),
-    )
-    n_match = F.size(
-        F.filter(
-            F.zip_with("a_sig", "b_sig", lambda x, y: x == y),
-            lambda m: m,
-        )
-    )
-    sets = load(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.array_distinct(
-            F.filter(F.split("text", " "), lambda t: t != "")
-        ).alias("toks"),
-    )
-    sa = sets.select(F.col("doc_id").alias("a_id"), F.col("toks").alias("a_toks"))
-    sb = sets.select(F.col("doc_id").alias("b_id"), F.col("toks").alias("b_toks"))
-    shared = F.size(F.array_intersect("a_toks", "b_toks"))
-    exact = shared * F.lit(1.0) / (
-        F.size("a_toks") + F.size("b_toks") - shared
-    )
-    est = F.col("__n_match") / F.lit(float(_MINHASH_K))
-    return (
-        cand.join(siga, "a_id")
-        .join(sigb, "b_id")
-        .withColumn("__n_match", n_match)
-        .join(sa, "a_id")
-        .join(sb, "b_id")
-        .select(
-            "a_id",
-            "b_id",
-            F.round(est, 4).alias("est_jaccard"),
-            F.round(exact, 4).alias("exact_jaccard"),
-            F.round(F.abs(est - exact), 4).alias("abs_err"),
-        )
+    est = F.col("n_match") / F.lit(float(_MINHASH_K))
+    exact = F.col("jaccard")
+    return _with_exact_jaccard(spark, sf_dir, matched).select(
+        "a_id",
+        "b_id",
+        F.round(est, 4).alias("est_jaccard"),
+        F.round(exact, 4).alias("exact_jaccard"),
+        F.round(F.abs(est - exact), 4).alias("abs_err"),
     )
 
 
@@ -3600,7 +3523,7 @@ def doc_chunk_stride(spark: SparkSession, sf_dir: str) -> DataFrame:
     tokens / stride.  The chunk md5 is computed from the SLICE, so the
     full text column never leaves the scan stage."""
     d = load(spark, sf_dir, "documents")
-    toks = F.expr("filter(split(text, ' '), t -> t <> '')")
+    toks = tokens()
     base = d.select("doc_id", toks.alias("t")).withColumn(
         "n_toks", F.size("t")
     ).filter(F.col("n_toks") >= 1)
@@ -3665,7 +3588,7 @@ def dedup_token_sort_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     fp = F.md5(
         F.concat_ws(
-            " ", F.array_sort(F.expr("filter(split(text, ' '), t -> t <> '')"))
+            " ", F.array_sort(tokens())
         )
     )
     base = d.select("doc_id", fp.alias("fingerprint"))
@@ -3752,9 +3675,7 @@ def sketch_count_min_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFram
     either way.  Measured sf10: 183 s → see SCALING_r08."""
     d = load(spark, sf_dir, "documents")
     toks = d.select(
-        F.explode(
-            F.expr("filter(split(text, ' '), t -> t <> '')")
-        ).alias("token")
+        F.explode(tokens()).alias("token")
     )
 
     def bucket(seed_col, token_col) -> F.Column:
@@ -3971,7 +3892,7 @@ def doc_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     xxhash64-key trick applies verbatim when trigram strings dominate
     the shuffle."""
     d = load(spark, sf_dir, "documents")
-    toks = F.expr("filter(split(text, ' '), t -> t <> '')")
+    toks = tokens()
     base = d.select("doc_id", toks.alias("t")).filter(F.size("t") >= 3)
     tri = base.select(
         "doc_id",
@@ -4050,7 +3971,7 @@ def winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     DISTINCT, whose input is already the winnowed ~2/(w+1) density.
     The doc text never leaves the scan stage."""
     d = load(spark, sf_dir, "documents")
-    toks = F.expr("filter(split(text, ' '), t -> t <> '')")
+    toks = tokens()
     base = d.select("doc_id", toks.alias("t")).withColumn(
         "n", F.size("t")
     ).filter(F.col("n") >= 4)
@@ -4110,7 +4031,7 @@ def prefix_dup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable groupBy on the 128-bit hash; group rows with
     HAVING n>=2 are a tiny fraction of the corpus."""
     d = load(spark, sf_dir, "documents")
-    toks = F.expr("filter(split(text, ' '), t -> t <> '')")
+    toks = tokens()
     base = (
         d.select("doc_id", toks.alias("t"))
         .filter(F.size("t") >= 16)
@@ -4466,34 +4387,20 @@ def _audit_docs_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _exact_jaccard_pairs_df(
-    spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
+def _sampled_token_pairs(
+    spark: SparkSession, sf_dir: str, docs: DataFrame
 ) -> DataFrame:
-    """(a_id, b_id) — EXACT ground truth: same-source doc pairs with
-    token-set Jaccard >= 0.8, over the `_audit_docs_df` sample (the
-    pair budget is CODE-ENFORCED since r9: ≤ |sources| · cap² pairs at
-    any corpus size; byte-identical to the uncapped form at the ≤ cap
-    docs/source fixture SFs; pass an already-checkpointed ``docs``
-    sample so the rank window isn't re-derived per plan branch).
-    Jaccard >= 0.8 forces
-    0.8·|B| <= |A| <= |B|/0.8, so two integer size compares skip the
-    array_intersect for pairs that can never reach the threshold —
-    result-identical, oracles unchanged.  On THIS fixture the band
-    keeps 52% of pairs and the wall time is a wash; on a size-diverse
-    real corpus it prunes the bulk of the blocked cross product, which
-    is why the guard ships."""
-    if docs is None:
-        docs = _audit_docs_df(spark, sf_dir)
+    """(a_id, b_id, a_toks, b_toks) — every same-source pair a_id < b_id
+    of the ``docs`` audit sample (pass the checkpointed `_audit_docs_df`
+    so the rank window isn't re-derived per plan branch) with both
+    distinct-token sets: the pair build under `_exact_jaccard_pairs_df`
+    and `_containment_pairs_df`.  ≤ |sources| · `_AUDIT_DOC_CAP`² pairs
+    at any corpus size (CODE-ENFORCED since r9); byte-identical to the
+    uncapped form at the ≤ cap docs/source fixture SFs."""
     toksets = (
         load(spark, sf_dir, "documents")
         .join(F.broadcast(docs), "doc_id")
-        .select(
-            "doc_id",
-            "source",
-            F.array_distinct(
-                F.filter(F.split("text", " "), lambda t: t != "")
-            ).alias("toks"),
-        )
+        .select("doc_id", "source", F.array_distinct(tokens()).alias("toks"))
     )
     # Materialize the sampled token sets once (r14 opt round, guide
     # §2.4): `toksets` embeds a FULL documents text scan (the sample
@@ -4506,37 +4413,42 @@ def _exact_jaccard_pairs_df(
     # scan-count term is the one that grows with corpus size.
     toksets = toksets.localCheckpoint(eager=True)
     a = toksets.select(
-        F.col("doc_id").alias("a_id"),
-        "source",
-        F.col("toks").alias("a_toks"),
+        F.col("doc_id").alias("a_id"), "source", F.col("toks").alias("a_toks")
     )
     b = toksets.select(
         F.col("doc_id").alias("b_id"),
         F.col("source").alias("b_source"),
         F.col("toks").alias("b_toks"),
     )
-    shared = F.size(F.array_intersect("a_toks", "b_toks"))
-    jac = shared / (F.size("a_toks") + F.size("b_toks") - shared)
-    size_band = (
-        F.size("a_toks") * F.lit(10) >= F.size("b_toks") * F.lit(8)
-    ) & (F.size("b_toks") * F.lit(10) >= F.size("a_toks") * F.lit(8))
     # Explicit broadcast (r14, guide §3.1): both sides are ≤ |sources|·cap
-    # rows BY CONSTRUCTION (the code-enforced audit budget), but the
-    # sample arrives localCheckpoint'ed and checkpointed lineage reports
-    # no stats — the planner falls back to SortMergeJoin (2 extra
-    # exchanges + sorts) for a join whose build side can never outgrow an
-    # executor.  Same rule as `embedding_pca_power_iter`'s checkpointed
-    # matvec inputs.  Measured r14 (noop, min-of-3, sf0.1 audit family):
-    # SMJ → BHJ across the four audit ops, see OPTIMIZATION_r14.md.
+    # rows BY CONSTRUCTION, but the sample arrives localCheckpoint'ed and
+    # checkpointed lineage reports no stats — the planner falls back to
+    # SortMergeJoin (2 extra exchanges + sorts) for a join whose build
+    # side can never outgrow an executor.  Measured r14 (noop, min-of-3,
+    # sf0.1 audit family): SMJ → BHJ across the four audit ops, see
+    # OPTIMIZATION_r14.md.
+    return a.join(
+        F.broadcast(b),
+        (F.col("source") == F.col("b_source")) & (F.col("a_id") < F.col("b_id")),
+    ).select("a_id", "b_id", "a_toks", "b_toks")
+
+
+def _exact_jaccard_pairs_df(
+    spark: SparkSession, sf_dir: str, docs: DataFrame
+) -> DataFrame:
+    """(a_id, b_id) — EXACT ground truth: the `_sampled_token_pairs` with
+    token-set Jaccard >= 0.8.  Jaccard >= 0.8 forces 0.8·|B| <= |A| <=
+    |B|/0.8, so two integer size compares skip the array_intersect for
+    pairs that can never reach the threshold — result-identical, oracles
+    unchanged.  On THIS fixture the band keeps 52% of pairs and the wall
+    time is a wash; on a size-diverse real corpus it prunes the bulk of
+    the blocked cross product, which is why the guard ships."""
+    na, nb = F.size("a_toks"), F.size("b_toks")
+    size_band = (na * F.lit(10) >= nb * F.lit(8)) & (nb * F.lit(10) >= na * F.lit(8))
     return (
-        a.join(
-            F.broadcast(b),
-            (F.col("source") == F.col("b_source"))
-            & (F.col("a_id") < F.col("b_id"))
-            & size_band,
-        )
-        .select("a_id", "b_id", jac.alias("jac"))
-        .filter(F.col("jac") >= 0.8)
+        _sampled_token_pairs(spark, sf_dir, docs)
+        .filter(size_band)
+        .filter(_jaccard("a_toks", "b_toks") >= 0.8)
         .select("a_id", "b_id")
     )
 
@@ -4632,29 +4544,12 @@ def minhash_band_fp_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = _portable_band_df(
         spark,
         sf_dir,
-        mins=_portable_minhash_df(
-            spark, sf_dir, docs=sample
-        ).localCheckpoint(),
+        mins=_portable_minhash_df(spark, sf_dir, docs=sample).localCheckpoint(),
     )
-    # Explicit broadcasts (r14, guide §3.1): every frame here is bounded
-    # by the code-enforced audit budget (bands ≤ sample·bands rows, truth
-    # ≤ |sources|·cap² pairs) but derives from checkpointed lineage with
-    # no stats; without the hints the planner SMJ'd both joins (measured:
-    # 10 SortMergeJoins / 20 exchanges in the before-plan).
-    cand = (
-        bands.alias("a")
-        .join(
-            F.broadcast(bands.alias("b")),
-            (F.col("a.source") == F.col("b.source"))
-            & (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id")
-        )
-        .distinct()
-    )
+    # truth is ≤ |sources|·cap² pairs but checkpoint-derived (no stats):
+    # broadcast it explicitly, as `_sample_candidates` does (r14: 10
+    # SortMergeJoins / 20 exchanges in the before-plan without hints)
+    cand = _sample_candidates(bands)
     truth = _exact_jaccard_pairs_df(spark, sf_dir, docs=sample)
     hits = cand.join(F.broadcast(truth), ["a_id", "b_id"]).agg(
         F.count(F.lit(1)).alias("n_hit")
@@ -4701,7 +4596,7 @@ def _block_df(spark: SparkSession, sf_dir: str) -> DataFrame:
         d.select(
             "doc_id",
             "source",
-            F.expr("filter(split(text, ' '), t -> t <> '')").alias("t"),
+            tokens().alias("t"),
         )
         .filter(F.size("t") >= 1)
         .select(
@@ -4973,7 +4868,7 @@ def decontaminate_bloom_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = d.select(
         "doc_id",
         F.pmod("doc_id", F.lit(10)).alias("m"),
-        F.expr("filter(split(text, ' '), t -> t <> '')").alias("t"),
+        tokens().alias("t"),
     ).filter(F.size("t") >= _SHINGLE_MIN_TOKS)
     grams = base.select(
         "doc_id",
@@ -5154,44 +5049,14 @@ def minhash_band_shape_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     # candidate generation is ONE self-join keyed on (shape, source,
     # band, bkey).
     structs = [
-        F.struct(
-            F.lit(f"{b}x{r}").alias("shape"),
-            F.lit(i).alias("band"),
-            F.concat_ws(
-                ",",
-                *[
-                    F.col(f"mh{i * r + j}").cast("string")
-                    for j in range(r)
-                ],
-            ).alias("bkey"),
-        )
+        band.withField("shape", F.lit(f"{b}x{r}"))
         for b, r in ((2, 8), (4, 4), (8, 2))
-        for i in range(b)
+        for band in _band_structs(b, r)
     ]
     bands = mins.select(
         "doc_id", "source", F.explode(F.array(*structs)).alias("bb")
     ).select("doc_id", "source", "bb.shape", "bb.band", "bb.bkey")
-    # Explicit broadcasts (r14, guide §3.1): sample-bounded,
-    # checkpoint-derived sides report no stats → the planner SMJ'd both
-    # joins (8 SortMergeJoins / 16 exchanges in the before-plan) for
-    # build sides the audit budget caps at any corpus size.
-    cand = (
-        bands.alias("a")
-        .join(
-            F.broadcast(bands.alias("b")),
-            (F.col("a.shape") == F.col("b.shape"))
-            & (F.col("a.source") == F.col("b.source"))
-            & (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.shape").alias("shape"),
-            F.col("a.doc_id").alias("a_id"),
-            F.col("b.doc_id").alias("b_id"),
-        )
-        .distinct()
-    )
+    cand = _sample_candidates(bands, "shape")
     truth = _exact_jaccard_pairs_df(spark, sf_dir, docs=sample)
     per_shape = (
         cand.join(
@@ -5223,62 +5088,21 @@ def minhash_band_shape_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _containment_pairs_df(
-    spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
+    spark: SparkSession, sf_dir: str, docs: DataFrame
 ) -> DataFrame:
-    """(a_id, b_id, n_a, n_b, shared) — every same-source doc pair
+    """(a_id, b_id, n_a, n_b, shared) — every `_sampled_token_pairs` pair
     size-oriented (a = smaller token set, tie by doc_id) with its exact
-    intersection size, over the `_audit_docs_df` sample (pair budget
-    CODE-ENFORCED since r9 — ≤ |sources| · `_AUDIT_DOC_CAP`² pairs at
-    any corpus size; byte-identical to the uncapped form at the ≤ cap
-    docs/source fixture SFs; pass an already-checkpointed ``docs``
-    sample so the rank window isn't re-derived per plan branch).
-    Shared with `minhash_containment_estimate` and
+    intersection size.  Shared with `minhash_containment_estimate` and
     `minhash_bbit_estimate`, which audit sketch estimators on exactly
     these pairs."""
-    if docs is None:
-        docs = _audit_docs_df(spark, sf_dir)
-    toksets = (
-        load(spark, sf_dir, "documents")
-        .join(F.broadcast(docs), "doc_id")
-        .select(
-            "doc_id",
-            "source",
-            F.array_distinct(
-                F.filter(F.split("text", " "), lambda t: t != "")
-            ).alias("toks"),
-        )
-    )
-    # Same materialize-once as `_exact_jaccard_pairs_df` (r14 opt
-    # round): the full-corpus text scan behind the broadcast sample
-    # filter re-derived per consumer branch; ≤ |sources|·cap rows.
-    toksets = toksets.localCheckpoint(eager=True)
-    a = toksets.select(
-        F.col("doc_id").alias("x"), "source", F.col("toks").alias("x_toks")
-    )
-    b = toksets.select(
-        F.col("doc_id").alias("y"),
-        F.col("source").alias("y_source"),
-        F.col("toks").alias("y_toks"),
-    )
-    nx, ny = F.size("x_toks"), F.size("y_toks")
-    shared = F.size(F.array_intersect("x_toks", "y_toks"))
-    x_is_a = (nx < ny) | ((nx == ny) & (F.col("x") < F.col("y")))
-    # Explicit broadcast (r14, guide §3.1): sample-bounded build side
-    # (≤ |sources|·cap rows by the code-enforced audit budget) behind a
-    # localCheckpoint that reports no stats — without the hint the
-    # planner SMJs a join that is broadcastable at ANY corpus size.
-    return (
-        a.join(
-            F.broadcast(b),
-            (F.col("source") == F.col("y_source")) & (F.col("x") < F.col("y")),
-        )
-        .select(
-            F.when(x_is_a, F.col("x")).otherwise(F.col("y")).alias("a_id"),
-            F.when(x_is_a, F.col("y")).otherwise(F.col("x")).alias("b_id"),
-            F.least(nx, ny).alias("n_a"),
-            F.greatest(nx, ny).alias("n_b"),
-            shared.alias("shared"),
-        )
+    na, nb = F.size("a_toks"), F.size("b_toks")
+    a_first = na <= nb  # ties keep the pair's doc_id order (a_id < b_id)
+    return _sampled_token_pairs(spark, sf_dir, docs).select(
+        F.when(a_first, F.col("a_id")).otherwise(F.col("b_id")).alias("a_id"),
+        F.when(a_first, F.col("b_id")).otherwise(F.col("a_id")).alias("b_id"),
+        F.least(na, nb).alias("n_a"),
+        F.greatest(na, nb).alias("n_b"),
+        F.size(F.array_intersect("a_toks", "b_toks")).alias("shared"),
     )
 
 
@@ -5815,21 +5639,7 @@ def minhash_containment_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = _containment_pairs_df(spark, sf_dir, docs=sample).filter(
         F.col("shared") * F.lit(1.0) / F.col("n_a") >= 0.8
     )
-    mins = _portable_minhash_df(
-        spark, sf_dir, docs=sample
-    ).localCheckpoint()
-    ma = mins.select(
-        F.col("doc_id").alias("a_id"),
-        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(_MINHASH_K)],
-    )
-    mb = mins.select(
-        F.col("doc_id").alias("b_id"),
-        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(_MINHASH_K)],
-    )
-    n_match = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(_MINHASH_K)
-    ).cast("bigint")
+    mins = _portable_minhash_df(spark, sf_dir, docs=sample).localCheckpoint()
     exact_c = F.col("shared") * F.lit(1.0) / F.col("n_a")
     est_c = (
         F.col("n_match")
@@ -5841,9 +5651,9 @@ def minhash_containment_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sample-bounded (≤ |sources|·cap rows × 16 int64) behind a
     # localCheckpoint with no stats — SMJ'd without the hint.
     return (
-        o.join(F.broadcast(ma), "a_id")
-        .join(F.broadcast(mb), "b_id")
-        .withColumn("n_match", n_match)
+        o.join(F.broadcast(_side_signatures(mins, "a")), "a_id")
+        .join(F.broadcast(_side_signatures(mins, "b")), "b_id")
+        .withColumn("n_match", _n_match())
         .select(
             "a_id",
             "b_id",
@@ -5956,25 +5766,7 @@ def minhash_bbit_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     this op grades the estimator those bands would verify with."""
     sample = _audit_docs_df(spark, sf_dir).localCheckpoint()
     o = _containment_pairs_df(spark, sf_dir, docs=sample)
-    mins = _portable_minhash_df(
-        spark, sf_dir, docs=sample
-    ).localCheckpoint()
-    ma = mins.select(
-        F.col("doc_id").alias("a_id"),
-        *[F.col(f"mh{i}").alias(f"a{i}") for i in range(_MINHASH_K)],
-    )
-    mb = mins.select(
-        F.col("doc_id").alias("b_id"),
-        *[F.col(f"mh{i}").alias(f"b{i}") for i in range(_MINHASH_K)],
-    )
-    m_full = sum(
-        F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
-        for i in range(_MINHASH_K)
-    ).cast("bigint")
-    m_bbit = sum(
-        F.when(F.col(f"a{i}") % 4 == F.col(f"b{i}") % 4, 1).otherwise(0)
-        for i in range(_MINHASH_K)
-    ).cast("bigint")
+    mins = _portable_minhash_df(spark, sf_dir, docs=sample).localCheckpoint()
     jac = F.col("shared").cast("double") / (
         F.col("n_a") + F.col("n_b") - F.col("shared")
     )
@@ -5985,10 +5777,10 @@ def minhash_bbit_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Explicit broadcasts (r14, guide §3.1): same sample-bounded
     # checkpointed signature sides as `minhash_containment_estimate`.
     return (
-        o.join(F.broadcast(ma), "a_id")
-        .join(F.broadcast(mb), "b_id")
-        .withColumn("m_full", m_full)
-        .withColumn("m_bbit", m_bbit)
+        o.join(F.broadcast(_side_signatures(mins, "a")), "a_id")
+        .join(F.broadcast(_side_signatures(mins, "b")), "b_id")
+        .withColumn("m_full", _n_match())
+        .withColumn("m_bbit", _n_match(lambda x, y: x % 4 == y % 4))
         .select(
             "a_id",
             "b_id",
@@ -6070,7 +5862,7 @@ def dedup_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = d.select(
         "doc_id",
         F.array_sort(
-            F.array_distinct(F.filter(F.split("text", " "), lambda x: x != ""))
+            F.array_distinct(tokens())
         ).alias("ts"),
     ).filter(F.size("ts") >= 1)
     keyed = t.select(
@@ -6743,7 +6535,7 @@ def bloom_m_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 10 != 8
     )
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
+    toks = tokens()
     tok = d.select(
         (F.col("doc_id") % 10).alias("grp"), toks.alias("t")
     ).filter(F.size("t") >= 3)

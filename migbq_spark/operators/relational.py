@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from migbq_spark.catalog import load
-from migbq_spark.common import DEC
+from migbq_spark.common import DEC, tokens
 from migbq_spark.registry import register
 
 #: events.value dollars -> exact int64 cents (r12 SQL-surface batch).
@@ -287,7 +287,7 @@ def explode_outer_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts must not silently drop token-less documents.  The fixture is
     genuinely mixed (~20% of docs have no token > 6 chars)."""
     d = load(spark, sf_dir, "documents")
-    long_toks = F.filter(F.split("text", " "), lambda t: F.length(t) > 6)
+    long_toks = F.filter(tokens(), lambda t: F.length(t) > 6)
     return d.select(
         "doc_id", F.explode_outer(long_toks).alias("long_token")
     )
@@ -1189,12 +1189,13 @@ def array_sort_comparator(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale (100 TB): entirely row-local HOF work in codegen — sort
     cost is per-row O(k log k), no shuffle."""
     d = load(spark, sf_dir, "documents").filter(F.col("doc_id") % 17 == 0)
-    sorted_toks = F.expr(
-        "array_sort(filter(split(text, ' '), t -> t <> ''),"
-        " (a, b) -> CASE"
-        "   WHEN length(a) < length(b) THEN -1"
-        "   WHEN length(a) > length(b) THEN 1"
-        "   WHEN a < b THEN -1 WHEN a > b THEN 1 ELSE 0 END)"
+    sorted_toks = F.array_sort(
+        tokens(),
+        lambda a, b: F.when(F.length(a) < F.length(b), -1)
+        .when(F.length(a) > F.length(b), 1)
+        .when(a < b, -1)
+        .when(a > b, 1)
+        .otherwise(0),
     )
     # graded columns are scalar renderings (array columns are
     # driver-canonicalizer-unsafe): count, 5 shortest, the longest
@@ -1382,7 +1383,7 @@ def posexplode_position_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale (100 TB): explode fan capped at 10 rows/doc; map-side
     collapse to |sources|·10 rows."""
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
+    toks = tokens()
     base = d.select("source", F.slice(toks, 1, 10).alias("t")).where(
         F.size("t") > 0
     )

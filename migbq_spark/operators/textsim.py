@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from migbq_spark.catalog import load
-from migbq_spark.common import dec
+from migbq_spark.common import dec, tokens
 from migbq_spark.registry import register
 
 #: Tile width for the blocked jaccard kernel: peak per-task memory is
@@ -48,11 +48,6 @@ _JACCARD_TILES = 8
 _JACCARD_TILE_MIN_DOCS = _JACCARD_CHUNK
 
 
-def _tokens(col: str = "text") -> F.Column:
-    """Non-empty whitespace tokens (trailing-space fixture caveat)."""
-    return F.filter(F.split(F.col(col), " "), lambda t: t != "")
-
-
 @register(
     "arr_explode_tokens",
     oracle="""
@@ -66,7 +61,7 @@ def arr_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenize + explode + corpus token frequency."""
     d = load(spark, sf_dir, "documents")
     return (
-        d.select(F.explode(_tokens()).alias("token"))
+        d.select(F.explode(tokens()).alias("token"))
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("freq"))
     )
@@ -85,7 +80,7 @@ def arr_explode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 def arr_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """size / array_distinct / array_contains over token arrays."""
     d = load(spark, sf_dir, "documents")
-    toks = _tokens()
+    toks = tokens()
     return d.select(
         "doc_id",
         F.size(toks).cast("bigint").alias("n_tokens"),
@@ -145,7 +140,7 @@ def near_dup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is the exact small-scale path; `dedup_minhash_lsh` is the
     banded-LSH candidate generator for 100 TB (SURVEY §4.2)."""
     d = load(spark, sf_dir, "documents")
-    docs = d.select("doc_id", "source", F.array_distinct(_tokens()).alias("toks"))
+    docs = d.select("doc_id", "source", F.array_distinct(tokens()).alias("toks"))
     return jaccard_pairs_frame(spark, docs)
 
 
@@ -670,7 +665,7 @@ def arrays_zip_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     slices — no join, no positional explode+self-join); one
     map-side-combinable count; top-20 is TakeOrderedAndProject."""
     d = load(spark, sf_dir, "documents")
-    toks = F.expr("filter(split(text, ' '), t -> t <> '')")
+    toks = tokens()
     base = d.select(toks.alias("t")).filter(F.size("t") >= 2)
     bg = base.select(
         F.explode(

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from migbq_spark.catalog import load
-from migbq_spark.common import dec
+from migbq_spark.common import dec, tokens
 from migbq_spark.registry import register
 
 # ------------------------------------------------------------- pii_scrub
@@ -232,7 +232,7 @@ def dedup_keep_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id in each fingerprint group survives.  One hash aggregation on
     the fingerprint — linear at any scale."""
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
+    toks = tokens()
     fp = F.md5(F.concat_ws(" ", F.array_sort(F.array_distinct(toks))))
     return (
         d.select(fp.alias("fp"), "doc_id")
@@ -507,58 +507,24 @@ def dup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits into keep-one-per-CLUSTER dedup (pairs alone under-delete:
     A~B, B~C but A≁C must still collapse to one cluster).
 
-    Spark side is ITERATIVE min-label propagation — each round every
-    node takes min(own label, neighbors' labels) — run to convergence
-    with a per-round changed-count check; per-round lineage is cut with
-    localCheckpoint so the plan doesn't grow with iterations.  The
-    oracle is the same fixpoint via a recursive CTE (reachability
-    closure + min) — non-SQL-expressible in single-pass SQL, but DuckDB
-    recursion makes it hash-checkable anyway.
+    Spark side is the two-star contraction fixpoint
+    (`pipeline._cc_twostar_components`, shared with `dup_cc_twostar`
+    and the cross-source dedup): O(log n) rounds, run until a round
+    changes nothing, so a long chain is never cut short.  The oracle is
+    the same fixpoint via a recursive CTE (reachability closure + min)
+    — non-SQL-expressible in single-pass SQL, but DuckDB recursion
+    makes it hash-checkable anyway.
 
-    Scale (100 TB): rounds = graph diameter (near-dup clusters are
-    shallow — a handful); each round is one join+groupBy on the edge
-    list, |E| ≪ |docs|² thanks to the τ-filtered candidate generation
-    (at scale, MinHash-LSH candidates feed the same loop — see
-    dedup_minhash_lsh).  The alternating large-star/small-star variant
-    drops rounds to O(log n) for pathological chains."""
-    pairs = ngram_jaccard(spark, sf_dir).select("a_id", "b_id")
-    edges = (
-        pairs.select(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
-        .union(pairs.select(F.col("b_id").alias("u"), F.col("a_id").alias("v")))
-        .persist()
+    Scale (100 TB): |E| ≪ |docs|² thanks to the τ-filtered candidate
+    generation (at scale, MinHash-LSH candidates feed the same
+    fixpoint — see `dedup_cross_source_cc`); per-round cost is |E|
+    shuffled on node id."""
+    from migbq_spark.operators.pipeline import _cc_twostar_components
+
+    pairs = ngram_jaccard(spark, sf_dir).select(
+        F.col("a_id").alias("u"), F.col("b_id").alias("v")
     )
-    # eager=False: each round's changed-count below joins
-    # new_labels against labels and computes every partition of both, so
-    # the lazy checkpoints materialize inside that one job — fusing the
-    # per-round checkpoint job + cached re-read into the count's pass.
-    labels = (
-        edges.select(F.col("u").alias("id")).distinct()
-        .withColumn("label", F.col("id"))
-        .localCheckpoint(eager=False)
-    )
-    for _ in range(20):
-        nbr = edges.join(
-            labels.select(F.col("id").alias("v"), "label"), "v"
-        ).select(F.col("u").alias("id"), "label")
-        new_labels = (
-            nbr.union(labels)
-            .groupBy("id")
-            .agg(F.min("label").alias("label"))
-            .localCheckpoint(eager=False)
-        )
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    edges.unpersist()
-    return labels.select(
-        F.col("id").alias("doc_id"), F.col("label").alias("component_id")
-    )
+    return _cc_twostar_components(pairs)
 
 
 # ------------------------------------------------------ tfidf_top_terms
@@ -600,7 +566,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     sorts anywhere."""
     toks = load(spark, sf_dir, "documents").select(
         "doc_id",
-        F.explode(F.filter(F.split("text", " "), lambda t: t != "")).alias(
+        F.explode(tokens()).alias(
             "token"
         ),
     )
@@ -660,7 +626,7 @@ def vocab_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     window below is over |vocab| rows, not |tokens|."""
     toks = load(spark, sf_dir, "documents").select(
         "doc_id",
-        F.explode(F.filter(F.split("text", " "), lambda t: t != "")).alias(
+        F.explode(tokens()).alias(
             "token"
         ),
     )
@@ -801,7 +767,7 @@ def ngram_lm_bigram_probs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the join."""
     d = load(spark, sf_dir, "documents")
     toks = d.select(
-        F.filter(F.split("text", " "), lambda t: t != "").alias("ts")
+        tokens().alias("ts")
     ).filter(F.size("ts") >= 2)
     pairs = toks.select(
         F.explode(
@@ -869,7 +835,7 @@ def zipf_fit_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale (100 TB): token counting is the canonical combinable
     aggregation; the regression runs on 100 rows."""
     toks = load(spark, sf_dir, "documents").select(
-        F.explode(F.filter(F.split("text", " "), lambda t: t != "")).alias(
+        F.explode(tokens()).alias(
             "token"
         )
     )
@@ -935,7 +901,7 @@ def entropy_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast) and the final reduction is per-source-vocab sized."""
     toks = load(spark, sf_dir, "documents").select(
         "source",
-        F.explode(F.filter(F.split("text", " "), lambda t: t != "")).alias(
+        F.explode(tokens()).alias(
             "token"
         ),
     )
@@ -997,9 +963,7 @@ def group_top_p_nucleus(spark: SparkSession, sf_dir: str) -> DataFrame:
     cnt = (
         d.select(
             "source",
-            F.explode(
-                F.filter(F.split("text", " "), lambda t: t != "")
-            ).alias("token"),
+            F.explode(tokens()).alias("token"),
         )
         .groupBy("source", "token")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -1120,9 +1084,7 @@ def pack_sequences_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     offsets within a range shard only need the shard's base offset (one
     broadcast scalar per shard)."""
     d = load(spark, sf_dir, "documents")
-    n_tokens = F.size(
-        F.filter(F.split("text", " "), lambda t: t != "")
-    ).cast("bigint")
+    n_tokens = F.size(tokens()).cast("bigint")
     t = d.select("doc_id", "source", n_tokens.alias("n_tokens"))
     w = (
         Window.partitionBy("source")
@@ -1322,9 +1284,7 @@ def _bpe_train(
     d = load(spark, sf_dir, "documents")
     freqs = (
         d.select(
-            F.explode(
-                F.filter(F.split("text", " "), lambda t: t != "")
-            ).alias("word")
+            F.explode(tokens()).alias("word")
         )
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("weight"))
@@ -1486,7 +1446,7 @@ def tokenizer_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length(F.replace(F.col("text"), F.lit(" "), F.lit(""))).alias(
             "n_chars"
         ),
-        F.filter(F.split("text", " "), lambda t: t != "").alias("t"),
+        tokens().alias("t"),
     ).filter(F.size("t") >= 1)
     # Tokenize the corpus ONCE: `base` feeds three branches (vocab
     # distinct, per-doc word counts, the narrow source/n_chars rejoin)
@@ -1651,7 +1611,7 @@ def tokenizer_bpe_apply_trie(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length(F.replace(F.col("text"), F.lit(" "), F.lit(""))).alias(
             "n_chars"
         ),
-        F.filter(F.split("text", " "), lambda t: t != "").alias("t"),
+        tokens().alias("t"),
     ).filter(F.size("t") >= 1)
     # Same tokenize-once materialization as the fold twin (3 corpus
     # scans → 1 across the vocab/word-count/rejoin branches).
@@ -1729,7 +1689,7 @@ def quality_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id",
-        F.filter(F.split("text", " "), lambda t: t != "").alias("ts"),
+        tokens().alias("ts"),
     ).filter(F.size("ts") >= 2)
     pos = toks.select(
         "doc_id",
@@ -1888,7 +1848,7 @@ def quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale (100 TB): entirely row-local (split + array HOFs, no
     shuffle, no UDF) — embarrassingly parallel at any corpus size."""
     d = load(spark, sf_dir, "documents")
-    ws = F.filter(F.split("text", " "), lambda w: w != "")
+    ws = tokens()
     n_sym = F.length("text") - F.length(
         F.regexp_replace("text", "[^a-z0-9 ]", "")
     )
@@ -2070,7 +2030,7 @@ def collapse_repeated_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB 1-based `(x, i)` with NULL `t[0]`) — entirely row-local,
     no shuffle, no UDF; embarrassingly parallel at 100 TB."""
     d = load(spark, sf_dir, "documents")
-    toks = F.expr("filter(split(text, ' '), t -> t <> '')")
+    toks = tokens()
     base = d.select("doc_id", toks.alias("t")).filter(F.size("t") > 0)
     kept = F.filter(
         "t",
@@ -2206,7 +2166,7 @@ def js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     toks = d.select(
         "source",
-        F.explode(F.filter(F.split("text", " "), lambda t: t != "")).alias(
+        F.explode(tokens()).alias(
             "token"
         ),
     )
@@ -2521,7 +2481,7 @@ def pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcasts it); top-20 is TakeOrderedAndProject — no global
     sort materialization."""
     d = load(spark, sf_dir, "documents")
-    toks = F.expr("filter(split(text, ' '), t -> t <> '')")
+    toks = tokens()
     base = d.select("doc_id", toks.alias("t")).withColumn("n", F.size("t"))
     uni = (
         base.select(F.explode("t").alias("w"))
@@ -2613,9 +2573,7 @@ def vocab_oov_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     occ = d.select(
         "doc_id",
-        F.explode(
-            F.expr("filter(split(text, ' '), t -> t <> '')")
-        ).alias("token"),
+        F.explode(tokens()).alias("token"),
     )
     vocab = (
         occ.groupBy("token")
@@ -2786,7 +2744,7 @@ def doc_length_log2_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     frame.  One scan, one exchange of a few dozen rows."""
     d = load(spark, sf_dir, "documents")
     n = d.select(
-        F.size(F.expr("filter(split(text, ' '), t -> t <> '')")).alias(
+        F.size(tokens()).alias(
             "n_toks"
         )
     ).filter(F.col("n_toks") >= 1)
@@ -2926,9 +2884,7 @@ def tokenizer_unigram_seed_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     words = (
         d.select(
-            F.explode(
-                F.expr("filter(split(text, ' '), t -> t <> '')")
-            ).alias("word")
+            F.explode(tokens()).alias("word")
         )
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("freq"))
@@ -3133,7 +3089,7 @@ def ngram_lm_kneser_ney(spark: SparkSession, sf_dir: str) -> DataFrame:
     the 1-row type total broadcasts."""
     d = load(spark, sf_dir, "documents")
     toks = d.select(
-        F.filter(F.split("text", " "), lambda t: t != "").alias("ts")
+        tokens().alias("ts")
     ).filter(F.size("ts") >= 2)
     pairs = toks.select(
         F.explode(
@@ -3228,7 +3184,7 @@ def pareto_skyline_quality_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
     frontier sizes are ~log n for independent dimensions, so the global
     pass sees a vanishing fraction of the corpus."""
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
+    toks = tokens()
     q = d.select(
         "doc_id",
         "source",
@@ -3314,7 +3270,7 @@ def curriculum_interleave_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     The GLOBAL position window runs only on the 25 × |sources| slice,
     so the single-partition global sort is bounded, not corpus-sized."""
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
+    toks = tokens()
     q = (
         d.select(
             "doc_id",
@@ -3390,7 +3346,7 @@ def token_budget_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapses map-side to |sources| rows; the budget scalars are one
     broadcast row.  The corpus is read exactly once."""
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
+    toks = tokens()
     # lineage cut: the |sources|-row count frame feeds BOTH the output
     # and the budget scalars — without the checkpoint Catalyst re-derives
     # it from the corpus in each branch (two full scans for one table)
@@ -3485,7 +3441,7 @@ def bm25_top_terms_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = load(spark, sf_dir, "documents").select(
         "doc_id",
         "source",
-        F.explode(F.filter(F.split("text", " "), lambda t: t != "")).alias(
+        F.explode(tokens()).alias(
             "token"
         ),
     )
@@ -3674,9 +3630,7 @@ def keyphrase_rake_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = d.select(
         "doc_id",
         "source",
-        F.posexplode(
-            F.filter(F.split("text", " "), lambda t: t != "")
-        ).alias("i", "w"),
+        F.posexplode(tokens()).alias("i", "w"),
     ).withColumn("is_stop", F.col("w").isin(*_RAKE_STOPS))
     w_pid = Window.partitionBy("doc_id").orderBy("i")
     occ = (
@@ -3798,7 +3752,7 @@ def pmi_skip_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the 1-row total broadcasts."""
     d = load(spark, sf_dir, "documents")
     toks = d.select(
-        F.filter(F.split("text", " "), lambda t: t != "").alias("ts")
+        tokens().alias("ts")
     ).filter(F.size("ts") >= 3)
     pairs = (
         toks.select(
@@ -4139,7 +4093,7 @@ def ngram_lm_witten_bell(spark: SparkSession, sf_dir: str) -> DataFrame:
     avoid them), and the scalar total broadcasts."""
     d = load(spark, sf_dir, "documents")
     toks = d.select(
-        F.filter(F.split("text", " "), lambda t: t != "").alias("ts")
+        tokens().alias("ts")
     ).filter(F.size("ts") >= 2)
     pairs = toks.select(
         F.explode(
@@ -4242,7 +4196,7 @@ def rrf_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs on <= 300 rows.  Fusing top-K lists — not globally ranking
     the corpus three times — is what makes RRF viable at scale."""
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
+    toks = tokens()
     sig = d.select(
         "doc_id",
         F.col("n_chars").alias("s1"),
@@ -4353,9 +4307,7 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     vocab = (
         d.select(
-            F.explode(
-                F.filter(F.split("text", " "), lambda t: t != "")
-            ).alias("token")
+            F.explode(tokens()).alias("token")
         )
         .groupBy("token")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
@@ -4479,9 +4431,7 @@ def tokenizer_maxmatch_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     wsc = (
         d.select(
             "source",
-            F.explode(
-                F.filter(F.split("text", " "), lambda t: t != "")
-            ).alias("w"),
+            F.explode(tokens()).alias("w"),
         )
         .groupBy("source", "w")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
@@ -4917,7 +4867,7 @@ def span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     window is PARTITIONED by doc_id over in-doc positions (bounded by
     doc length); one doc-keyed rollup.  No global ordering anywhere."""
     d = load(spark, sf_dir, "documents")
-    toks = F.expr("filter(split(text, ' '), t -> t <> '')")
+    toks = tokens()
     base = d.select("doc_id", toks.alias("t")).filter(F.size("t") >= 1)
     pos = base.select(
         "doc_id",
@@ -5130,7 +5080,7 @@ def quality_c4_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale (100 TB): entirely row-local rules + one per-source rollup
     — the cheap-rules-first funnel stage, embarrassingly parallel."""
     d = load(spark, sf_dir, "documents")
-    ws = F.filter(F.split("text", " "), lambda t: t != "")
+    ws = tokens()
     f = d.select(
         "source",
         F.when(
@@ -5239,7 +5189,7 @@ def ngram_lm_stupid_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     point."""
     d = load(spark, sf_dir, "documents")
     toks = d.select(
-        F.filter(F.split("text", " "), lambda t: t != "").alias("ts")
+        tokens().alias("ts")
     )
     uni = (
         toks.select(F.explode("ts").alias("w"))
@@ -5333,7 +5283,7 @@ def fertility_chars_per_token(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lang, source) rollup — scan-speed, no shuffle beyond the
     #groups exchange."""
     d = load(spark, sf_dir, "documents")
-    ws = F.filter(F.split("text", " "), lambda t: t != "")
+    ws = tokens()
     t = d.select(
         "lang",
         "source",
@@ -5648,9 +5598,7 @@ def length_bucket_batching_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale (100 TB): one corpus pass collapsing map-side to ≤ ~20
     bucket registers."""
     d = load(spark, sf_dir, "documents")
-    n_tok = F.size(
-        F.filter(F.split("text", " "), lambda t: t != "")
-    ).cast("bigint")
+    n_tok = F.size(tokens()).cast("bigint")
     b = d.select(n_tok.alias("n_tok")).where(F.col("n_tok") > 0).select(
         (F.length(F.bin(F.col("n_tok") + 1)) - 1).alias("bkt"), "n_tok"
     )
@@ -5728,9 +5676,7 @@ def sentence_split_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.split("text", r"[.!?]"), lambda s: F.trim(s) != ""
         )
     ).cast("bigint")
-    n_words = F.size(
-        F.filter(F.split("text", " "), lambda t: t != "")
-    ).cast("bigint")
+    n_words = F.size(tokens()).cast("bigint")
     s = d.select(
         "source", n_sent.alias("n_sent"), n_words.alias("n_words")
     )
@@ -5812,7 +5758,7 @@ def rouge2_adjacent_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     an equi-join whose build side is the bigram stream itself, NOT a
     pair cross-product; adjacency bounds candidates to one per doc."""
     d = load(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
+    toks = tokens()
     base = d.select("doc_id", "source", toks.alias("t")).where(
         F.size("t") >= 2
     )
@@ -6003,16 +5949,11 @@ def stopword_density_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     stop_arr = "array(" + ",".join(
         f"'{w}'" for w in _STOPWORDS.split(",")
     ) + ")"
-    toks = F.filter(F.split("text", " "), lambda t: t != "")
+    toks = tokens()
     m = d.select(
         "source",
         F.size(toks).cast("bigint").alias("n_tok"),
-        F.size(
-            F.expr(
-                "filter(filter(split(text, ' '), t -> t <> ''),"
-                f" x -> array_contains({stop_arr}, x))"
-            )
-        )
+        F.size(F.filter(toks, lambda x: F.array_contains(F.expr(stop_arr), x)))
         .cast("bigint")
         .alias("n_stop"),
     ).where(F.col("n_tok") > 0)
@@ -6081,9 +6022,7 @@ def readability_fk_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale (100 TB): row-local regex counting; ONE map-side collapse
     to |sources| 4-register rows."""
     d = load(spark, sf_dir, "documents")
-    n_words = F.size(
-        F.filter(F.split("text", " "), lambda t: t != "")
-    ).cast("bigint")
+    n_words = F.size(tokens()).cast("bigint")
     n_sent = F.greatest(
         F.size(
             F.filter(

@@ -822,24 +822,32 @@ class _HandleShim:
         return _MapStateShim()
 
 
-def _drive_processor_inprocess(pdf):
-    """Drive UserProgressProcessor over one key's rows split into
-    PK-ordered synthetic micro-batches; returns the FINAL emission —
-    exactly what the streaming drain's update-mode tail row holds.
-    (Single-parameter signature on purpose: applyInPandas treats a
-    two-parameter function as (key, pdf).)"""
-    n_batches = 3
-    proc = UserProgressProcessor()
-    proc.init(_HandleShim())
-    key = (int(pdf["user_id"].iloc[0]),)
-    pdf = pdf.sort_values("event_id").reset_index(drop=True)
-    step = max(1, (len(pdf) + n_batches - 1) // n_batches)
-    out = None
-    for i in range(0, len(pdf), step):
-        for out in proc.handleInputRows(key, iter([pdf.iloc[i:i + step]]), None):
-            pass
-    proc.close()
-    return out
+def _drive_inprocess(processor_cls: type):
+    """The in-process fallback drive of a transformWithState processor:
+    returns an applyInPandas function that runs ``processor_cls`` over
+    one key's rows split into PK-ordered synthetic micro-batches and
+    returns the FINAL emission — exactly what the streaming drain's
+    update-mode tail row holds.  (The returned function takes one
+    parameter on purpose: applyInPandas treats a two-parameter function
+    as (key, pdf).)"""
+
+    def drive(pdf):
+        n_batches = 3
+        proc = processor_cls()
+        proc.init(_HandleShim())
+        key = (int(pdf["user_id"].iloc[0]),)
+        pdf = pdf.sort_values("event_id").reset_index(drop=True)
+        step = max(1, (len(pdf) + n_batches - 1) // n_batches)
+        out = None
+        for i in range(0, len(pdf), step):
+            for out in proc.handleInputRows(
+                key, iter([pdf.iloc[i:i + step]]), None
+            ):
+                pass
+        proc.close()
+        return out
+
+    return drive
 
 
 @register(
@@ -890,7 +898,7 @@ def stream_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
             _warn_tws_fallback("stream_stateful_tws", exc)
     _TWS_LAST_PATH = "fallback"
     return ev.groupBy("user_id").applyInPandas(
-        _drive_processor_inprocess, _TWS_OUT_SCHEMA
+        _drive_inprocess(UserProgressProcessor), _TWS_OUT_SCHEMA
     )
 
 
@@ -1194,24 +1202,6 @@ class UserTypeCountsProcessor(StatefulProcessor):
         pass
 
 
-def _drive_typecounts_inprocess(pdf):
-    """In-process fallback drive of UserTypeCountsProcessor (same
-    synthetic micro-batching as `_drive_processor_inprocess`), returning
-    the final full-map emission."""
-    n_batches = 3
-    proc = UserTypeCountsProcessor()
-    proc.init(_HandleShim())
-    key = (int(pdf["user_id"].iloc[0]),)
-    pdf = pdf.sort_values("event_id").reset_index(drop=True)
-    step = max(1, (len(pdf) + n_batches - 1) // n_batches)
-    out = None
-    for i in range(0, len(pdf), step):
-        for out in proc.handleInputRows(key, iter([pdf.iloc[i:i + step]]), None):
-            pass
-    proc.close()
-    return out
-
-
 @register(
     "stream_tws_mapstate",
     oracle="""
@@ -1259,7 +1249,7 @@ def stream_tws_mapstate(spark: SparkSession, sf_dir: str) -> DataFrame:
             _warn_tws_fallback("stream_tws_mapstate", exc)
     _TWS_LAST_PATH = "fallback"
     return ev.groupBy("user_id").applyInPandas(
-        _drive_typecounts_inprocess, _TWS_MAP_OUT_SCHEMA
+        _drive_inprocess(UserTypeCountsProcessor), _TWS_MAP_OUT_SCHEMA
     )
 
 
@@ -1299,23 +1289,6 @@ class UserTop3Processor(StatefulProcessor):
 
     def close(self) -> None:
         pass
-
-
-def _drive_top3_inprocess(pdf):
-    """In-process fallback drive of UserTop3Processor (same synthetic
-    micro-batching as `_drive_processor_inprocess`)."""
-    n_batches = 3
-    proc = UserTop3Processor()
-    proc.init(_HandleShim())
-    key = (int(pdf["user_id"].iloc[0]),)
-    pdf = pdf.sort_values("event_id").reset_index(drop=True)
-    step = max(1, (len(pdf) + n_batches - 1) // n_batches)
-    out = None
-    for i in range(0, len(pdf), step):
-        for out in proc.handleInputRows(key, iter([pdf.iloc[i:i + step]]), None):
-            pass
-    proc.close()
-    return out
 
 
 @register(
@@ -1366,7 +1339,7 @@ def stream_tws_liststate(spark: SparkSession, sf_dir: str) -> DataFrame:
             _warn_tws_fallback("stream_tws_liststate", exc)
     _TWS_LAST_PATH = "fallback"
     return ev.groupBy("user_id").applyInPandas(
-        _drive_top3_inprocess, _TWS_TOP3_OUT_SCHEMA
+        _drive_inprocess(UserTop3Processor), _TWS_TOP3_OUT_SCHEMA
     )
 
 

@@ -393,7 +393,8 @@ def test_jaccard_hot_source_fans_out_across_tasks(spark):
     count (tiles=1 reproduces the old one-task-per-source semantics)."""
     from pyspark.sql import functions as F
 
-    from migbq_spark.operators.textsim import _tokens, jaccard_pairs_frame
+    from migbq_spark.common import tokens
+    from migbq_spark.operators.textsim import jaccard_pairs_frame
 
     rows = [
         (i, "alpha beta gamma delta epsilon zeta eta theta " + f"tok{i % 5}",
@@ -402,7 +403,7 @@ def test_jaccard_hot_source_fans_out_across_tasks(spark):
     ]
     docs = spark.createDataFrame(
         rows, "doc_id long, text string, source string"
-    ).select("doc_id", "source", F.array_distinct(_tokens()).alias("toks"))
+    ).select("doc_id", "source", F.array_distinct(tokens()).alias("toks"))
 
     def key_pairs(tiles):
         # tile_min_docs=0 forces the tiled path regardless of source size
@@ -439,14 +440,15 @@ def test_jaccard_adaptive_tile_floor(spark):
     identical either way."""
     from pyspark.sql import functions as F
 
-    from migbq_spark.operators.textsim import _tokens, jaccard_pairs_frame
+    from migbq_spark.common import tokens
+    from migbq_spark.operators.textsim import jaccard_pairs_frame
 
     base = "alpha beta gamma delta epsilon zeta eta theta "
     rows = [(i, base + f"tok{i % 5}", "hot") for i in range(40)]
     rows += [(100 + i, base + f"cold{i % 3}", "cold") for i in range(10)]
     docs = spark.createDataFrame(
         rows, "doc_id long, text string, source string"
-    ).select("doc_id", "source", F.array_distinct(_tokens()).alias("toks"))
+    ).select("doc_id", "source", F.array_distinct(tokens()).alias("toks"))
 
     def pairs(**kw):
         return {
@@ -586,6 +588,23 @@ def test_cc_twostar_screened_fixpoint_chain(spark):
         for r in _cc_twostar_components(edges).collect()
     }
     assert out == {(i, 100) for i in range(100, 141)}
+
+
+def test_dup_connected_components_long_chain(spark, sf_dir, monkeypatch):
+    """A 31-node near-dup chain (30 hops, past any fixed round budget a
+    min-label propagation would need) must come back fully contracted:
+    every node rooted at the chain minimum, never a partial labelling."""
+    from migbq_spark.operators import training
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(200, 230)], "a_id: long, b_id: long"
+    )
+    monkeypatch.setattr(training, "ngram_jaccard", lambda spark, sf_dir: chain)
+    out = {
+        (r.doc_id, r.component_id)
+        for r in Q["dup_connected_components"](spark, sf_dir).collect()
+    }
+    assert out == {(i, 200) for i in range(200, 231)}
 
 
 def test_ckpt_fusion_value_neutral(spark, sf_dir):

@@ -653,8 +653,8 @@ def test_pair_fan_kernel_values_match_bruteforce():
     """The kernel's packed pair keys must equal the brute-force
     C(basket,2) enumeration — across mixed basket lengths, a basket
     shorter than 2 (filtered upstream but the kernel must tolerate it),
-    and an empty batch — and a float-upcast (null part key) batch must
-    fail loudly."""
+    and an empty batch — and a float-upcast (null part key) batch and a
+    null basket must fail loudly."""
     import numpy as np
     import pyarrow as pa
 
@@ -693,6 +693,20 @@ def test_pair_fan_kernel_values_match_bruteforce():
     try:
         list(_pair_fan_kernel(iter(bad)))
         raise AssertionError("expected ValueError on null part key")
+    except ValueError:
+        pass
+    # a null basket whose offsets [2, 5) still span three values: Arrow
+    # leaves a null slot's contents undefined, so the kernel must refuse
+    # the batch instead of fanning them into pair keys
+    nulled = pa.ListArray.from_arrays(
+        pa.array([0, 2, 5, 7], type=pa.int32()),
+        pa.array([1, 2, 3, 4, 5, 6, 7], type=pa.int64()),
+        mask=pa.array([False, True, False]),
+    )
+    assert nulled.null_count == 1
+    try:
+        list(_pair_fan_kernel(iter([pa.record_batch([nulled], ["ps"])])))
+        raise AssertionError("expected ValueError on a null basket")
     except ValueError:
         pass
 

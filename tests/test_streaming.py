@@ -172,7 +172,7 @@ def test_tws_liststate_real_transport_matches_fallback(spark, sf_dir):
 
     ev = load(spark, sf_dir, "events").select("user_id", "event_id")
     fb = ev.groupBy("user_id").applyInPandas(
-        S._drive_top3_inprocess, S._TWS_TOP3_OUT_SCHEMA
+        S._drive_inprocess(S.UserTop3Processor), S._TWS_TOP3_OUT_SCHEMA
     )
     fb_rows = {r.user_id: (r.n_seen, r.top3) for r in fb.collect()}
     assert real_rows == fb_rows
@@ -221,7 +221,7 @@ def test_tws_mapstate_real_transport_matches_fallback(spark, sf_dir):
         "user_id", "event_id", "event_type"
     )
     fb = ev.groupBy("user_id").applyInPandas(
-        S._drive_typecounts_inprocess, S._TWS_MAP_OUT_SCHEMA
+        S._drive_inprocess(S.UserTypeCountsProcessor), S._TWS_MAP_OUT_SCHEMA
     )
     assert real_rows == {
         (r.user_id, r.event_type): (r.n_events, r.last_event_id)
