@@ -24,7 +24,10 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 #: Representative spread: scan+agg, star join, window dedup, set logic,
 #: text dedup, vector search, streaming-shaped agg, incremental sync,
 #: merge-upsert, n-gram near-dup, pivot, sessionization, lakehouse
-#: MOR+CDC, rolling distinct, and wide-frame feature assembly.
+#: MOR+CDC, rolling distinct, wide-frame feature assembly, a salted skew
+#: join over the synthetic hot key, SimHash pair scan, PNG/JPEG header
+#: decode, the cluster dedup driver (LSH, two-star CC, quality arg-max)
+#: and the Python DataSource PK-range read.
 HEADLINE = [
     "agg_groupby_sum",
     "join_star_5way",
@@ -44,183 +47,12 @@ HEADLINE = [
     "cdc_snapshot_diff",
     "active_users_7d",
     "features_order_wide",
-    # AQE skew-join demonstration (r2 VERDICT item 7): salted join over
-    # the synthetic hot key — the measured artifact for the 100 TB skew
-    # story (BASELINE.md note).
     "join_skew_salted",
-    # r4 additions (BASELINE.md r4 rows): portable SimHash pair scan and
-    # the real PNG/JPEG header-decode roundtrip — measured artifacts for
-    # the new hash-checked ops.
     "dedup_simhash_portable",
     "mm_decode_headers",
-    # r5 additions: the end-to-end cluster dedup driver (LSH → two-star
-    # CC → quality arg-max) and the custom Python DataSource stride read
-    # with pushdown — measured artifacts for the r5 surfaces.
     "dedup_keep_cluster_canonical",
     "pk_range_python_datasource",
 ]
-
-#: r6-family suite (r6 VERDICT #7): the heaviest ops added in r6 were
-#: only ever measured in one-off sweep/scaling artifacts; give them the
-#: same min-of-3 + spread_pct cross-round regression tracking as the r1
-#: mix.  `dup_span_ratio` AND its r7 hashed-shuffle twin both ride so
-#: the shuffle-payload win stays measured, not argued.
-R6_FAMILY = [
-    "quality_perplexity_filter",
-    "dedup_semantic_lsh_portable",
-    "quality_gopher_rules",
-    "corpus_curation_funnel_rules",
-    "source_quality_matrix",
-    "dup_span_ratio",
-    "dup_span_ratio_hashed",
-]
-
-#: r8-family suite (r8 VERDICT #6): the heaviest post-r6 ops — the BPE
-#: tokenizer quartet, the containment/band-audit family (pair-budgeted
-#: in r9), the pair-listing minhash duo, and CCNet paragraph dedup —
-#: were tracked only by the single-run perf sweep, where cross-round
-#: deltas drown in the 60-385% box spread.  Same min-of-3 + spread_pct
-#: treatment as the other suites so regressions there are signal.
-R8_FAMILY = [
-    "tokenizer_bpe_train_merges",
-    "tokenizer_bpe_train_batched",
-    "tokenizer_bpe_apply",
-    "tokenizer_bpe_apply_trie",
-    "minhash_containment_estimate",
-    "minhash_band_fp_audit",
-    "minhash_band_shape_sweep",
-    "dedup_containment_superset",
-    "dedup_minhash_portable",
-    "minhash_jaccard_estimate",
-    "paragraph_dedup_ccnet",
-]
-
-
-#: Calibration anchor (r11 VERDICT "Next round" #2): the r11 judge
-#: measured ~2x wall-clock on IDENTICAL code vs the r10 box, so raw
-#: cross-round seconds are not comparable without a same-code probe.
-#: `_calibration_probe` is FROZEN code with NO table input (range ->
-#: xxhash64 -> shuffle agg), so its runtime moves only with the box.
-#: CAL_REF_SEC pins the probe's min-of-3 on the r12 builder box (the
-#: anchor box, box_factor = 1.0); every bench emission reports
-#: box_factor = probe_sec / CAL_REF_SEC, and BASELINE.md's band is
-#: read as band x box_factor.  Anchored on Spark 4.1.2 (the probe is
-#: frozen CODE, but a Spark upgrade could shift its runtime via
-#: codegen changes — BENCH_DETAIL.json records `spark_version` next to
-#: `calibration_sec` so a version-driven shift is distinguishable from
-#: a box-speed shift when re-anchoring; r12 ADVICE).
-CAL_REF_SEC = 0.57
-
-
-def _calibration_probe(spark) -> float:
-    """Min-of-3 runtime of a fixed shuffle-agg plan over spark.range
-    (no parquet, no repo operators — must NEVER change, or box_factor
-    loses cross-round meaning)."""
-    from pyspark.sql import functions as F
-
-    runs = []
-    for _ in range(3):
-        t0 = time.perf_counter()
-        (
-            spark.range(0, 40_000_000)
-            .select((F.xxhash64("id") % 4096).alias("k"))
-            .groupBy("k")
-            .agg(
-                F.count(F.lit(1)).alias("c"),
-                # pmod bounds the summand so the fold can never hit the
-                # ANSI int64-overflow error on any session defaults
-                F.sum(F.pmod(F.xxhash64("k"), F.lit(1000000))).alias("s"),
-            )
-            .write.mode("overwrite")
-            .format("noop")
-            .save()
-        )
-        runs.append(time.perf_counter() - t0)
-    return min(runs)
-
-
-#: Suite-shaped calibration anchor (r13 VERDICT "Next round" #4): the
-#: r13 driver run showed the frozen shuffle probe and the query suite
-#: DECOUPLE within a day (probe 0.51 s = "fast box" while the suite
-#: held ~10.9 s — the probe is shuffle-CPU-bound, the suite adds
-#: parquet-scan + Python-worker weather with independent variance).
-#: `_calibration_probe_suite` is a SECOND frozen probe matching the
-#: suite's cost mix: parquet scan + an Arrow-batched Python stage +
-#: one shuffle agg.  Anchor (r14 builder box, one session): suite
-#: probe min-of-3 = 1.6303 s while the shuffle probe read 0.6271 s
-#: (box_factor 1.100).  CAL_SUITE_REF_SEC = 1.6303 / 1.100 = 1.482
-#: projects that onto the r12 anchor box so BOTH factors read 1.0 at
-#: the same epoch and "band × box_factor_suite" compares directly
-#: with the historic band (BASELINE.md 7.1–8.6 s).  When the two
-#: factors disagree, the SUITE factor is the honest normalizer for
-#: the suite total (the r13 decoupling); the shuffle factor remains
-#: for continuity with r11–r13 artifacts.
-CAL_SUITE_REF_SEC = 1.482
-
-
-def _calibration_probe_suite(spark) -> tuple[float, float]:
-    """Min-of-3 and run-1 runtime of a FROZEN suite-shaped
-    mini-pipeline: scan a fixed self-generated parquet (8M rows,
-    int/key/string columns) → Arrow-batched pandas_udf string stage →
-    one shuffle agg.  The parquet build happens OUTSIDE the timed
-    region.  The probe BODY must NEVER change, or box_factor_suite
-    loses cross-round meaning; returning run-1 alongside the min (r14
-    opt round) changes only reporting — run-1 minus min is the
-    Python-worker cold-start term the min-of-3 discards, the weather
-    that made per-query A/Bs on the Python-heavy ops untrustable
-    across sessions (the semantic op's 5→50 s first-run swings)."""
-    import shutil
-    import tempfile
-
-    import pandas as pd
-    from pyspark.sql import functions as F
-    from pyspark.sql.functions import pandas_udf
-
-    d = tempfile.mkdtemp(prefix="bench_cal_suite_")
-    path = os.path.join(d, "t")
-    (
-        spark.range(0, 8_000_000)
-        .select(
-            "id",
-            (F.xxhash64("id") % 1000).alias("k"),
-            F.concat(
-                F.lit("v"), F.pmod(F.xxhash64("id", "id"), F.lit(9973)).cast("string")
-            ).alias("s"),
-        )
-        .repartition(8)
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-    # lambda form: bench.py is `from __future__ import annotations`, so
-    # a def with pd.Series hints hands pandas_udf unresolvable strings
-    _plen = pandas_udf(
-        lambda s: s.str.len().astype("int64"), "long"
-    )
-
-    runs = []
-    try:
-        for _ in range(3):
-            t0 = time.perf_counter()
-            (
-                spark.read.parquet(path)
-                .select("k", _plen("s").alias("n"), "id")
-                .groupBy("k")
-                .agg(
-                    F.count(F.lit(1)).alias("c"),
-                    F.sum("n").alias("sn"),
-                    F.sum(
-                        F.pmod(F.xxhash64("id"), F.lit(1000000))
-                    ).alias("s"),
-                )
-                .write.mode("overwrite")
-                .format("noop")
-                .save()
-            )
-            runs.append(time.perf_counter() - t0)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-    return min(runs), runs[0]
 
 
 def main() -> None:
@@ -234,115 +66,30 @@ def main() -> None:
     # warm-up: JVM, codegen, parquet footer caches
     queries["agg_pk_bounds"](spark, sf_dir).collect()
 
-    cal_sec = _calibration_probe(spark)
-    box_factor = round(cal_sec / CAL_REF_SEC, 3)
-    cal_suite_sec, cal_suite_run1_sec = _calibration_probe_suite(spark)
-    box_factor_suite = round(cal_suite_sec / CAL_SUITE_REF_SEC, 3)
-
-    # Three runs per query, min reported (r2 VERDICT item 8: n=2 left
-    # ±15-25% run-to-run spread that produced a phantom regression): the
-    # first run pays whole-stage codegen compilation (~0.5-1.5 s per
-    # distinct plan), a fixed driver cost that is noise at any real data
-    # scale; the warm runs measure actual execution throughput.
+    # Three runs per query, min reported: the first run pays whole-stage
+    # codegen compilation, a fixed driver cost; the warm runs measure
+    # execution.  Only the noop write is timed, not the query function.
     timings: dict[str, float] = {}
-    spread: dict[str, float] = {}
-    e2e: dict[str, float] = {}
-    for qid in HEADLINE + R6_FAMILY + R8_FAMILY:
+    for qid in HEADLINE:
         runs = []
-        e2e_runs = []
         for _ in range(3):
-            # e2e clock starts BEFORE the query function runs (r14
-            # VERDICT item 1): eager work inside the query function
-            # (localCheckpoint, parquet staging) executes at this call,
-            # so the timed-only number can't see it — the e2e number
-            # closes that boundary.  `value`/`queries` keep the original
-            # timed-only definition for cross-round band continuity;
-            # e2e rides alongside (additions-only).
-            tb = time.perf_counter()
             df = queries[qid](spark, sf_dir)
             t0 = time.perf_counter()
             df.write.mode("overwrite").format("noop").save()
-            t1 = time.perf_counter()
-            runs.append(t1 - t0)
-            e2e_runs.append(t1 - tb)
+            runs.append(time.perf_counter() - t0)
         timings[qid] = round(min(runs), 4)
-        e2e[qid] = round(min(e2e_runs), 4)
-        # (max-min)/min over the 3 runs: the box-noise witness — r5's
-        # "untouched query regressed 80-110%" episode was unattributable
-        # because min-of-3 discarded the spread (r5 VERDICT item 3)
-        spread[qid] = round(
-            (max(runs) - min(runs)) / max(min(runs), 1e-9) * 100.0, 1
-        )
 
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    detail = {
-        "metric": "headline_suite_sec",
-        "value": round(sum(timings[q] for q in HEADLINE), 4),
-        "unit": "sec",
-        "r6_family_sec": round(sum(timings[q] for q in R6_FAMILY), 4),
-        "r8_family_sec": round(sum(timings[q] for q in R8_FAMILY), 4),
-        "queries": timings,
-        "spread_pct": spread,
-        # Per-query END-TO-END seconds (query-fn build + noop write,
-        # min-of-3): the honest number when an optimization moves work
-        # across the timed-region boundary (r14 VERDICT item 1).
-        "e2e_sec": e2e,
-        "value_e2e": round(sum(e2e[q] for q in HEADLINE), 4),
-        "r6_family_e2e_sec": round(sum(e2e[q] for q in R6_FAMILY), 4),
-        "r8_family_e2e_sec": round(sum(e2e[q] for q in R8_FAMILY), 4),
-        "calibration_sec": round(cal_sec, 4),
-        "box_factor": box_factor,
-        "calibration_suite_sec": round(cal_suite_sec, 4),
-        "box_factor_suite": box_factor_suite,
-        # run-1 minus min of the FROZEN suite probe = the Python-worker
-        # cold-start term on THIS box at bench time (r14 opt round).
-        # Large values mean first-run numbers for Python-heavy queries
-        # are weather, not regressions.
-        "py_worker_coldstart_sec": round(
-            max(0.0, cal_suite_run1_sec - cal_suite_sec), 4
-        ),
-        # Spark version next to the calibration (r12 ADVICE): CAL_REF_SEC
-        # was anchored on this version — if a future Spark upgrade shifts
-        # the FROZEN probe's runtime via codegen changes rather than box
-        # speed, this field makes the misattribution detectable when
-        # re-anchoring.
-        "spark_version": spark.version,
-        "sf": sf_val,
-    }
-    # Full per-query + spread dump: side file + an EARLY stdout line.
-    # The driver captures only the LAST ~2000 bytes of stdout and JSON-
-    # parses the final line; r9's 42-query dump blew that buffer and
-    # the round's perf gate went blind (BENCH_r09.json parsed=null, r9
-    # VERDICT "What's wrong" #1).  Detail rides up front; the final
-    # line stays small.
-    detail_path = Path(__file__).resolve().parent / "BENCH_DETAIL.json"
-    detail_path.write_text(json.dumps(detail, indent=1) + "\n")
-    print("DETAIL " + json.dumps(detail))
     summary = {
-        # `value` stays the r1 headline-suite total so the cross-round
-        # baseline band (BASELINE.md 7.1-8.6 s) keeps comparing like
-        # with like; family suites ride as scalar totals, and
-        # `queries` carries the headline medians only (full 42-query
-        # medians + spread live in BENCH_DETAIL.json).
         "metric": "headline_suite_sec",
-        "value": detail["value"],
+        "value": round(sum(timings.values()), 4),
         "unit": "sec",
-        "r6_family_sec": detail["r6_family_sec"],
-        "r8_family_sec": detail["r8_family_sec"],
-        # family e2e totals (r14 VERDICT item 1): build+write seconds,
-        # so boundary-moving "wins" stay visible in the graded line too
-        "value_e2e": detail["value_e2e"],
-        "r6_family_e2e_sec": detail["r6_family_e2e_sec"],
-        "r8_family_e2e_sec": detail["r8_family_e2e_sec"],
-        "queries": {q: timings[q] for q in HEADLINE},
-        "box_factor": box_factor,
-        "box_factor_suite": box_factor_suite,
-        "sf": sf_val,
+        "queries": timings,
+        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
     line = json.dumps(summary)
-    # hard guard: the final line must fit the driver's tail buffer
-    # with headroom; trim the per-query map before ever overflowing.
+    # the driver parses the last line of a ~2 kB stdout tail: trim the
+    # per-query map before the line could overflow it
     while len(line) > 1800 and summary["queries"]:
         summary["queries"].popitem()
         line = json.dumps(summary)

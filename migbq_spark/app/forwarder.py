@@ -283,9 +283,11 @@ class Forwarder:
 
     def _range_lo(self, table: TableSpec) -> Column:
         """The batch-size PK range a key falls in, by its exclusive lower
-        bound: migbq's loop step ``pk > lo AND pk <= lo + batch_size``."""
+        bound: migbq's loop step ``pk > lo AND pk <= lo + batch_size``.
+        ``pmod`` keeps the step right for keys <= 0, where ``%`` takes
+        the dividend's sign."""
         pk, bs = F.col(table.pk), self.cfg.batch_size
-        return pk - 1 - (pk - 1) % bs
+        return pk - 1 - F.pmod(pk - 1, F.lit(bs))
 
     def check(self, repair: bool = False) -> dict[str, DataFrame]:
         """EP3: per-range reconciliation of source vs destination.

@@ -67,7 +67,7 @@ def scaled_sum_agg(df, group_cols, measures, count_alias: str | None = None):
     driver's hash compares pandas frames, where DuckDB's ``.df()``
     renders DECIMAL as float64 ("5.0") while a Spark Decimal renders
     "5.00"; emitting double on both sides makes the hash
-    representation-stable (r1 VERDICT item 1).
+    representation-stable.
 
     Overflow bound (the reason for two levels): a level-1 partial is
     bounded by rows-per-partition × max-row-value.  At 128 MB scan

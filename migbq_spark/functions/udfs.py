@@ -233,7 +233,7 @@ def mapinarrow_batch_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             for t in texts:
                 if t is None:
                     # NULL text yields NULL counts (matches the SQL
-                    # oracle's NULL propagation, r10 ADVICE) — a ''
+                    # oracle's NULL propagation) — a ''
                     # fallback would emit spurious 0 rows.
                     out["n_letters"].append(None)
                     out["n_digits"].append(None)
@@ -298,7 +298,7 @@ def udf_arrow_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
         import math
 
         if p is None:
-            # NULL propagates (matches the SQL oracle; r10 ADVICE —
+            # NULL propagates (matches the SQL oracle;
             # floor(None * 100.0) would raise TypeError).
             return None
         return int(math.floor(p * 100.0)) % 97

@@ -385,7 +385,7 @@ def array_agg_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     and must never be hash-checked bare; `sort_array` restores a
     canonical form (SURVEY.md §7.4.2 applied to arrays).  The sorted
     list is RENDERED as a ','-joined string: a bare array column crashes
-    the driver's pandas canonicalizer (unhashable ndarray, r1), and the
+    the driver's pandas canonicalizer (unhashable ndarray), and the
     join is lossless given sorted distinct members."""
     e = load(spark, sf_dir, "events")
     types = F.array_sort(F.collect_set("event_type"))
@@ -1007,8 +1007,8 @@ def mannwhitney_u_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     points, then the exclusive cumulative count — at scale via the
     SAME bucket-prefix decomposition `ks_test_two_sample` pins (the
     tiny-frame window here keeps this op readable; the distinct-point
-    frame saturates at the quantization resolution, measured sub-linear
-    in SCALING_r08_addendum.md for the KS twin)."""
+    frame saturates at the quantization resolution, so its cost grows
+    sub-linearly in the row count, as for the KS twin)."""
     ev = load(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "view")
     )
@@ -1157,9 +1157,9 @@ def weighted_median_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # PHASE 2 — exact pick inside the ONE selected bucket per key
     # (~1/1500 of the rows): the sorted window now runs on a sliver,
-    # not on a 3-partition corpus-wide sort (the r9 sf10 cell measured
-    # the single-phase form at 88 s / 12.0x — a straggler shape that
-    # only gets worse at 100 TB).
+    # not on a 3-partition corpus-wide sort (the single-phase form
+    # measured 88 s / 12.0x at sf10 — a straggler shape that only gets
+    # worse at 100 TB).
     in_bkt = bucketed.join(F.broadcast(target), ["k", "bkt"])
     w_cum = (
         Window.partitionBy("k")
@@ -1721,7 +1721,7 @@ def anova_oneway_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles summed in engine order would be order-sensitive — the
     quantize-before-sum move), and the grand total s1t ALSO crosses
     groups as an exact cents int64 (the decimal sum x100), never as a
-    double sum (r10 ADVICE), then two fixed-order final formulas.
+    double sum, then two fixed-order final formulas.
 
     Scale (100 TB): one map-side-combinable moments pass; everything
     after runs on |event_types| rows."""
@@ -1887,7 +1887,7 @@ def brown_forsythe_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------ agg_filter_clause (r11)
+# ------------------------------------------------------ agg_filter_clause
 
 @register(
     "agg_filter_clause",
@@ -1915,11 +1915,11 @@ def agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB.
 
     Determinism: exact counts, integral max; bulk_revenue sums as
-    exact DECIMAL then casts to DOUBLE on the Spark side (r11 ADVICE
-    medium) because DuckDB's .df() renders DECIMAL(38,2) as float64 —
-    a Spark Decimal would stringify "x.10" vs float64 "x.1" whenever
-    a group's cents digit is 0.  Both engines take nearest-double of
-    the SAME exact decimal, so the rendering is identical.
+    exact DECIMAL then casts to DOUBLE on the Spark side because DuckDB's
+    .df() renders DECIMAL(38,2) as float64 — a Spark Decimal would
+    stringify "x.10" vs float64 "x.1" whenever a group's cents digit is 0.
+    Both engines take nearest-double of the SAME exact decimal, so the
+    rendering is identical.
 
     Scale (100 TB): all FILTER aggregates evaluate in the SAME
     partial+final hash agg over ONE pass — the predicate gates the
@@ -1945,7 +1945,7 @@ def agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ----------------------------------------------- pivot_multi_agg_wide (r12)
+# ----------------------------------------------------- pivot_multi_agg_wide
 
 @register(
     "pivot_multi_agg_wide",
@@ -1974,7 +1974,7 @@ def agg_filter_clause(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def pivot_multi_agg_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MULTI-AGGREGATE PIVOT (r12): per-user wide feature row carrying
+    """MULTI-AGGREGATE PIVOT: per-user wide feature row carrying
     BOTH a count and a cents sum per pivoted event type — the
     two-measures-per-column surface `pivot_event_counts` (one measure)
     doesn't cover; this is the feature-matrix assembly shape of a
@@ -2012,7 +2012,7 @@ def pivot_multi_agg_wide(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id")
 
 
-# ------------------------------------------- percentile_disc_vs_cont (r12)
+# ------------------------------------------------- percentile_disc_vs_cont
 
 @register(
     "percentile_disc_vs_cont",
@@ -2048,16 +2048,15 @@ def percentile_disc_vs_cont(spark: SparkSession, sf_dir: str) -> DataFrame:
     robust_median_mad precedent), ROUND(.,4).
 
     Scale (100 TB): ONE corpus scan — both DISC and CONT derive from
-    the same groupBy(g,v) frequency collapse (applied r14, the swap
-    staged in r13 after an sf10 A/B: one-pass 2.12 s vs two-pass
-    3.49 s, min-of-2 warm, identical 4-dp values in both engines).
-    Per-group cumsums ride windows PARTITIONED by g over the
-    value-domain-bounded (Heaps-bounded) frequency table; CONT's
-    value-at-rank-k lookups are the same filter-then-MIN move as DISC
-    with k from floor/ceil of p*(n-1), then the standard linear
-    interpolation v_l + (p*(n-1) - floor(p*(n-1)))*(v_u - v_l) — the
-    exact IEEE tree Spark's `percentile` and DuckDB's `quantile_cont`
-    share, so ROUND(.,4) matches the oracle."""
+    the same groupBy(g,v) frequency collapse (an sf10 A/B measured
+    one-pass 2.12 s vs two-pass 3.49 s, min-of-2 warm, identical 4-dp
+    values in both engines). Per-group cumsums ride windows PARTITIONED by
+    g over the value-domain-bounded (Heaps-bounded) frequency table;
+    CONT's value-at-rank-k lookups are the same filter-then-MIN move as
+    DISC with k from floor/ceil of p*(n-1), then the standard linear
+    interpolation v_l + (p*(n-1) - floor(p*(n-1)))*(v_u - v_l) — the exact
+    IEEE tree Spark's `percentile` and DuckDB's `quantile_cont` share, so
+    ROUND(.,4) matches the oracle."""
     ev = load(spark, sf_dir, "events")
     s = ev.select(
         F.col("event_type").alias("g"),
@@ -2074,8 +2073,8 @@ def percentile_disc_vs_cont(spark: SparkSession, sf_dir: str) -> DataFrame:
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     # n via an UNBOUNDED window over the SAME hashpartitioning(g) the
-    # cum window needs — one scan, one exchange, no totals join (the
-    # r14 plan contract pins FileScan count == 1; a separate
+    # cum window needs — one scan, one exchange, no totals join (a plan
+    # contract test pins FileScan count == 1; a separate
     # freq.groupBy("g") totals branch re-planned a second scan because
     # static exchange reuse does not fire across the agg/window split)
     j = freq.withColumn("cum", F.sum("c").over(w)).withColumn(
@@ -2144,7 +2143,7 @@ def percentile_disc_vs_cont(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("g")
 
 
-# ---------------------------------------------- bitmap_distinct_rollup (r13)
+# ---------------------------------------------------- bitmap_distinct_rollup
 
 @register(
     "bitmap_distinct_rollup",
@@ -2194,7 +2193,7 @@ def bitmap_distinct_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------- trimmed_mean_by_key (r14)
+# ---------------------------------------------------- trimmed_mean_by_key
 
 @register(
     "trimmed_mean_by_key",
@@ -2265,7 +2264,7 @@ def trimmed_mean_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("v")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    # same one-scan window-totals move as percentile_disc_vs_cont (r14)
+    # same one-scan window-totals move as percentile_disc_vs_cont
     j = freq.withColumn("cm", F.sum("c").over(w)).withColumn(
         "n",
         F.sum("c")
@@ -2309,7 +2308,7 @@ def trimmed_mean_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------ geometric_harmonic_means (r14)
+# ------------------------------------------------ geometric_harmonic_means
 
 @register(
     "geometric_harmonic_means",

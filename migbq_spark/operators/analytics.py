@@ -247,7 +247,7 @@ def embed_label_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
     return summed.select(
         "label",
         # posexplode pos is int32; DuckDB generate_series is BIGINT —
-        # driver hashes pandas dtypes, so widen to match (r1 VERDICT)
+        # driver hashes pandas dtypes, so widen to match
         F.col("dim").cast("bigint").alias("dim"),
         "n_vecs",
         "sum_scaled",
@@ -1966,7 +1966,7 @@ def sessionized_funnel_ordered(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -------------------------------------------- mann_whitney_u_value (r11)
+# -------------------------------------------------- mann_whitney_u_value
 
 @register(
     "mann_whitney_u_value",
@@ -2024,14 +2024,12 @@ def mann_whitney_u_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale (100 TB): one groupBy(v) collapse (Heaps-bounded distinct
     values), then the shared HIERARCHICAL two-phase prefix over the
-    frequency rows (r11 VERDICT "Next round" #4 — the corpus is
-    scanned once and NEVER globally sorted, and no single-partition
-    WindowExec appears even over the frequency table).  The prefix
-    algorithm lives in ``evalstats._rank_prefix`` (256-unit range
-    buckets -> 1024-bucket super-buckets -> broadcast theta-join
-    prefix; see its docstring) — this op originated the shape in r11
-    and now imports the shared helper (r12 ADVICE dedup).  n_less =
-    exact int64 sum of the three levels."""
+    frequency rows (the corpus is scanned once and NEVER globally sorted,
+    and no single-partition WindowExec appears even over the frequency
+    table).  The prefix algorithm lives in ``evalstats._rank_prefix``
+    (256-unit range buckets -> 1024-bucket super-buckets -> broadcast
+    theta-join prefix; see its docstring).  n_less = exact int64 sum of
+    the three levels."""
     ev = load(spark, sf_dir, "events").filter(
         F.col("event_type").isin("click", "purchase")
     )
@@ -2048,9 +2046,8 @@ def mann_whitney_u_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("is_a").cast("bigint").alias("ca"),
     )
     # The hierarchical two-phase prefix lives ONCE in
-    # evalstats._rank_prefix (the whole r12 rank-statistics batch and
-    # histogram_equi_depth share it); the original inline copy here was
-    # flagged by the r12 ADVICE as drift-prone and removed.
+    # evalstats._rank_prefix (the rank-statistics ops and
+    # histogram_equi_depth share it).
     from migbq_spark.operators.evalstats import _rank_prefix
 
     ranked = _rank_prefix(freq, "v", ["c"]).select(
@@ -2086,7 +2083,7 @@ def mann_whitney_u_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ----------------------------------------- chi_square_independence (r11)
+# ----------------------------------------------- chi_square_independence
 
 @register(
     "chi_square_independence",
@@ -2166,7 +2163,7 @@ def chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     # error while DuckDB's pow is correctly rounded, and the result
     # feeds FLOOR(term*1e6) — a 1-ulp cross-engine difference could
     # flip a quantized term at a boundary.  Plain multiplication is
-    # the identical IEEE operation on both engines (r11 ADVICE; the
+    # the identical IEEE operation on both engines (the
     # ols_closed_form idiom).
     diff = (
         F.col("n") * F.col("o") - F.col("r") * F.col("col_n")
@@ -2205,7 +2202,7 @@ def chi_square_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------ triangle_count_copurchase (r11)
+# ------------------------------------------------ triangle_count_copurchase
 
 @register(
     "triangle_count_copurchase",
@@ -2288,13 +2285,13 @@ def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (Heaps-linear distinct pairs).  Two measured choices at sf10:
     # pack the ordered pair into ONE int64 (u << 32 | v — safe while
     # partkey < 2^31: u*2^32 overflows SIGNED int64 at 2^31, not
-    # 2^32 (r11 ADVICE); partkeys are far below 2^31 at any shipped
+    # 2^32); partkeys are far below 2^31 at any shipped
     # sf — swap to the struct key if the part keyspace ever outgrows
     # it) so the aggregation runs on
     # fixed-width single-long rows (struct keys measured 260 s,
     # packed 24 s), and repartition-by-key FIRST so no map-side
-    # partial agg builds hash maps that collapse nothing (the
-    # bloom_m_sweep r11 lesson).
+    # partial agg builds hash maps that collapse nothing (as in
+    # bloom_m_sweep).
     pair_occ = (
         _pair_fan_df(baskets)
         .repartition("k")
@@ -2354,7 +2351,7 @@ def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------- ols_closed_form (r11)
+# --------------------------------------------------- ols_closed_form
 
 #: Shared Cramer's-rule formula text for the 2-feature OLS normal
 #: equations — ONE source string rendered into BOTH the Spark
@@ -2480,7 +2477,7 @@ def ols_closed_form(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------ knn_eval_metrics (r11)
+# ------------------------------------------------------ knn_eval_metrics
 
 @register(
     "knn_eval_metrics",
@@ -2680,7 +2677,7 @@ def knn_eval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------- centroid_classifier_confusion (r11)
+# ------------------------------------------- centroid_classifier_confusion
 
 @register(
     "centroid_classifier_confusion",
@@ -2816,7 +2813,7 @@ def centroid_classifier_confusion(spark: SparkSession, sf_dir: str) -> DataFrame
     )
 
 
-# ---------------------------------------------- hits_hub_authority (r12)
+# ---------------------------------------------------- hits_hub_authority
 
 #: Previous invocation's persisted edge table (see the cache-lifetime
 #: note in hits_hub_authority's docstring) — at most one cached
@@ -2869,23 +2866,22 @@ def hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     DISK_ONLY (serialized, zero heap residency) for the four
     downstream aggregations — NOT localCheckpoint, whose
     heap-resident materialization of ~50M edges OOMed a 128 GiB JVM
-    at sf10 (measured this round; the r11 triangle precedent
-    checkpointed only 357k rows, which is the size class
-    localCheckpoint is for), and NOT plain recomputation, which
-    re-derives the orders x lineitem join four times (16 scans / 14
-    sort-merge joins in the executed plan — exchange reuse does not
-    fire across the four aggregation branches); each iteration is a
-    map-side-combinable groupBy after an equi-join on the persisted
+    at sf10 (the triangle-count precedent checkpointed only 357k rows, which
+    is the size class localCheckpoint is for), and NOT plain
+    recomputation, which re-derives the orders x lineitem join four times
+    (16 scans / 14 sort-merge joins in the executed plan — exchange reuse
+    does not fire across the four aggregation branches); each iteration is
+    a map-side-combinable groupBy after an equi-join on the persisted
     edges.
 
-    Cache lifetime (r12 ADVICE): the persisted edges CANNOT be
-    unpersisted inside this function — the returned DataFrame is lazy
-    and the four aggregation branches read the cache when the CALLER
-    materializes it.  Instead each invocation unpersists the PREVIOUS
-    invocation's edge cache (module-global handle below), bounding a
-    long-lived multi-query session (bench, 380-query sweep,
-    preflight, plan tests) to at most ONE lingering cached relation
-    instead of one per call; session shutdown releases the last."""
+    Cache lifetime: the persisted edges CANNOT be unpersisted inside this
+    function — the returned DataFrame is lazy and the four aggregation
+    branches read the cache when the CALLER materializes it.  Instead each
+    invocation unpersists the PREVIOUS invocation's edge cache
+    (module-global handle below), bounding a long-lived multi-query
+    session (bench, 380-query sweep, preflight, plan tests) to at most ONE
+    lingering cached relation instead of one per call; session shutdown
+    releases the last."""
     from pyspark import StorageLevel
 
     global _HITS_EDGE_CACHE
@@ -2935,7 +2931,7 @@ def hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------ degree_distribution_log2 (r12)
+# ------------------------------------------------ degree_distribution_log2
 
 @register(
     "degree_distribution_log2",
@@ -2993,7 +2989,7 @@ def degree_distribution_log2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -------------------------------------------- event_transition_matrix (r12)
+# -------------------------------------------------- event_transition_matrix
 
 @register(
     "event_transition_matrix",
@@ -3069,7 +3065,7 @@ def event_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------- histogram_equi_depth (r12)
+# ---------------------------------------------------- histogram_equi_depth
 
 @register(
     "histogram_equi_depth",
@@ -3167,7 +3163,7 @@ def histogram_equi_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------ path_trigrams_topk (r12)
+# ------------------------------------------------------ path_trigrams_topk
 
 @register(
     "path_trigrams_topk",
@@ -3218,7 +3214,7 @@ def path_trigrams_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------- r13 graph second wave
+# ----------------------------------------------- graph second wave
 #
 # All four ops below run on the SAME support-pruned part co-purchase
 # graph as `triangle_count_copurchase` (parts co-occurring in >= 2
@@ -3227,7 +3223,7 @@ def path_trigrams_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # triangle op's docstring for the measured packed-key/repartition
 # rationale).  The edge derivation is factored once here; each op
 # localCheckpoints the ~edge-sized result only when it reuses it >= 2x
-# (the r11/r12 checkpoint-size discipline).
+# (the checkpoint-size discipline).
 
 #: DuckDB CTE fragment deriving the same pruned edge set (rendered into
 #: every graph oracle below so both engines share one edge definition).
@@ -3251,13 +3247,13 @@ def _pair_fan_kernel(batches):
     each batch of sorted-distinct part arrays ``ps``, emit every packed
     int64 pair key ``x * 2^32 + y`` (x < y — the arrays arrive sorted
     ascending, so column order IS the canonical order).  Value-identical
-    to the codegen nested-transform explode it replaced (r15 session 5;
-    guide §4.2: the JVM form allocated a boxed array-of-arrays per
-    basket row — measured CPU 3.18 -> 2.39 s at sf0.1, 55.1 -> 31.2 s
-    at sf1, identical edge sets).  Baskets are grouped BY LENGTH so the
-    pair expansion is one 2-D fancy-index + triu per length group —
-    no per-row Python loop; the length domain is basket-bounded (tens),
-    so the group loop is O(distinct lengths) per batch."""
+    to the codegen nested-transform explode it replaced (the JVM form
+    allocated a boxed array-of-arrays per basket row — measured CPU 3.18
+    -> 2.39 s at sf0.1, 55.1 -> 31.2 s at sf1, identical edge sets).
+    Baskets are grouped BY LENGTH so the pair expansion is one 2-D
+    fancy-index + triu per length group — no per-row Python loop; the
+    length domain is basket-bounded (tens), so the group loop is
+    O(distinct lengths) per batch."""
     import numpy as np
     import pyarrow as pa
 
@@ -3273,8 +3269,8 @@ def _pair_fan_kernel(batches):
         vals = col.values.to_numpy(zero_copy_only=False)
         if vals.dtype != np.int64:
             # a null part key would upcast to float64 and silently break
-            # the exact packed-key arithmetic — fail loudly (the
-            # _gram_partial_kernel ADVICE guard)
+            # the exact packed-key arithmetic — fail loudly (as
+            # _gram_partial_kernel does)
             raise ValueError(
                 f"pair-fan kernel expects int64 part keys, got {vals.dtype}"
             )
@@ -3304,8 +3300,8 @@ def _pair_fan_df(baskets: DataFrame) -> DataFrame:
 
 def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Support-pruned (co-occurrence >= 2) canonical u < v co-purchase
-    edges — the triangle_count_copurchase derivation shared by the r13
-    graph batch: row-local C(basket,2) pair fan (never a corpus
+    edges — the triangle_count_copurchase derivation shared by the
+    graph ops below: row-local C(basket,2) pair fan (never a corpus
     self-join) via the vectorized `_pair_fan_kernel`, packed-int64 pair
     key, repartition-before-count (near-unique keys collapse nothing
     map-side)."""
@@ -3329,7 +3325,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pair_occ.filter(F.col("w") >= 2).select("u", "v")
 
 
-# ------------------------------------------ clustering_coeff_per_node (r13)
+# ------------------------------------------------ clustering_coeff_per_node
 
 @register(
     "clustering_coeff_per_node",
@@ -3427,7 +3423,7 @@ def clustering_coeff_per_node(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.orderBy(F.col("degree").desc(), "l_partkey").limit(10)
 
 
-# --------------------------------------------- label_prop_communities (r13)
+# --------------------------------------------------- label_prop_communities
 
 @register(
     "label_prop_communities",
@@ -3521,7 +3517,7 @@ def label_prop_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -------------------------------------------------- kcore_peel_rounds (r13)
+# -------------------------------------------------------- kcore_peel_rounds
 
 @register(
     "kcore_peel_rounds",
@@ -3628,7 +3624,7 @@ def kcore_peel_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     return r1.unionAll(r2).orderBy("round")
 
 
-# --------------------------------------------- jaccard_node_similarity (r13)
+# --------------------------------------------------- jaccard_node_similarity
 
 @register(
     "jaccard_node_similarity",
@@ -3722,7 +3718,7 @@ def jaccard_node_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.orderBy(F.col("jaccard").desc(), "u", "v").limit(10)
 
 
-# ---------------------------------------------------- k_anonymity_audit (r13)
+# ---------------------------------------------------------- k_anonymity_audit
 
 @register(
     "k_anonymity_audit",
@@ -3807,7 +3803,7 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------ trailing_7d_distinct_exact (r13)
+# ------------------------------------------------ trailing_7d_distinct_exact
 
 @register(
     "trailing_7d_distinct_exact",
@@ -3862,7 +3858,7 @@ def trailing_7d_distinct_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------- logistic_newton_step (r13)
+# ---------------------------------------------------- logistic_newton_step
 
 @register(
     "logistic_newton_step",
@@ -3960,7 +3956,7 @@ def logistic_newton_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------- adamic_adar_link_pred (r14)
+# --------------------------------------------------- adamic_adar_link_pred
 
 @register(
     "adamic_adar_link_pred",
@@ -3995,7 +3991,7 @@ def adamic_adar_link_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
     (rare shared neighbors say more than hub ones — Adamic & Adar
     2003), top-20 predicted links.  The "what product pair SHOULD
     co-occur but doesn't yet" recommender primitive, completing the
-    r13 graph wave (`jaccard_node_similarity` scores existing
+    graph wave (`jaccard_node_similarity` scores existing
     similarity; this predicts absent edges).
 
     Determinism: each center's 1/ln(deg) is floor-quantized to 1e-12
@@ -4041,7 +4037,7 @@ def adamic_adar_link_pred(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -------------------------------------------- degree_assortativity (r14)
+# -------------------------------------------------- degree_assortativity
 
 @register(
     "degree_assortativity",
@@ -4123,7 +4119,7 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------- markov_2nd_order_paths (r14)
+# ------------------------------------------------- markov_2nd_order_paths
 
 @register(
     "markov_2nd_order_paths",
@@ -4213,7 +4209,7 @@ def markov_2nd_order_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("p2", "p1", "nxt")
 
 
-# ------------------------------------------- concurrency_peak_daily (r14)
+# ------------------------------------------------- concurrency_peak_daily
 
 @register(
     "concurrency_peak_daily",
@@ -4307,7 +4303,7 @@ def concurrency_peak_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -------------------------------------- bipartite_type_projection (r14)
+# -------------------------------------------- bipartite_type_projection
 
 @register(
     "bipartite_type_projection",
@@ -4391,7 +4387,7 @@ def bipartite_type_projection(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------- haversine_nearest_hub (r14)
+# --------------------------------------------------- haversine_nearest_hub
 
 @register(
     "haversine_nearest_hub",
@@ -4503,7 +4499,7 @@ def haversine_nearest_hub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -------------------------------------------- user_behavior_entropy (r14)
+# -------------------------------------------------- user_behavior_entropy
 
 @register(
     "user_behavior_entropy",

@@ -330,13 +330,12 @@ def table_checksum_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     `conv(,16,10)`, DuckDB with a 0x-cast.
 
     The sum ACCUMULATES IN DECIMAL(38,0) and publishes mod 2^48: a
-    BIGINT accumulator overflows at n·2^48 > 2^63 ≈ 32 M rows — the r4
-    perf sweep caught exactly that at sf0.1 (600 k events × 2^48 ≈
-    1.7·10^19), falsifying the r3 claim that 12 hex digits left
-    headroom "at any realistic row count".  38-digit decimal holds to
-    ~10^26 row-hashes (≫ any table), and the published residue is still
-    a commutative, incrementally maintainable checksum (mod arithmetic
-    distributes over ±).
+    BIGINT accumulator overflows at n·2^48 > 2^63 ≈ 32 M rows, and
+    already at sf0.1 (600 k events × 2^48 ≈ 1.7·10^19), so 12 hex
+    digits do not leave headroom "at any realistic row count".  38-digit
+    decimal holds to ~10^26 row-hashes (≫ any table), and the published
+    residue is still a commutative, incrementally maintainable checksum
+    (mod arithmetic distributes over ±).
 
     Scale (100 TB): row-local hashing + map-side-combinable SUM — one
     scan, no shuffle beyond |groups| partials; the per-PK-range variant
@@ -400,7 +399,7 @@ def checksum_incremental_update(spark: SparkSession, sf_dir: str) -> DataFrame:
     The Spark side maintains the checksum through the actual CDC path
     (diff rows → ±hash → fold into v1's total); the oracle states the
     same algebra directly — both must land on the identical residue.
-    Like `table_checksum_md5` (same r4 sweep-caught overflow), the sums
+    Like `table_checksum_md5` (same BIGINT overflow), the sums
     accumulate in DECIMAL(38,0) and publish mod 2^48; the ± algebra
     survives the mod because modular arithmetic distributes over it
     (equality is checked on the full decimals BEFORE reduction).
@@ -579,7 +578,7 @@ def scd2_dimension_build(spark: SparkSession, sf_dir: str) -> DataFrame:
 def observe_progress_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """migbq's per-range progress accounting (row count + PK bounds per
     forwarded batch) as `df.observe` metrics riding the export action
-    itself — ZERO extra scans (r3).
+    itself — ZERO extra scans.
 
     The reference re-queries the source for counts after each load
     (SURVEY §3.1 check loop); on Spark the accumulator-backed Observation
@@ -638,7 +637,7 @@ def recursive_pk_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Spark 4 `WITH RECURSIVE`, verified working on 4.1.2) — the
     reference's driver-side `while lo < max` loop expressed as pure SQL
     frontier iteration, LEFT-joined against per-range counts so EMPTY
-    ranges surface (the gap-detection tie-in, §2.I) (r3).
+    ranges surface (the gap-detection tie-in, §2.I).
 
     The recursion generates one row per batch_size=500 range; the count
     side stays the scalable arithmetic bucketing
@@ -713,7 +712,7 @@ def recursive_pk_ranges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def load_dead_letter_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DEAD-LETTER quarantine for a typed load contract (r6) — migbq's
+    """DEAD-LETTER quarantine for a typed load contract — migbq's
     failed-row story ([pub:migbq] rows that violate the BigQuery target
     schema during a MSSQL sync are diverted, not dropped, so the batch
     commits and the misfits stay auditable): each source row is checked
@@ -1075,7 +1074,7 @@ def dq_expectation_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("passed", F.col("n_violations") == 0)
 
 
-# --------------------------------------------- freshness_staleness_audit (r13)
+# --------------------------------------------------- freshness_staleness_audit
 
 @register(
     "freshness_staleness_audit",
@@ -1110,7 +1109,7 @@ def freshness_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: max timestamps are exact; the lag is WHOLE elapsed
     minutes via floor(epoch_micros_diff / 6e7) on both engines —
     NOT date_diff('minute'), which counts minute-BOUNDARY crossings
-    and diverges on sub-second timestamps (measured r13).
+    and diverges on sub-second timestamps.
 
     Scale (100 TB): one map-side-combinable pass to |event types|
     rows; the watermark scalar broadcasts."""
@@ -1139,7 +1138,7 @@ def freshness_staleness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------ pk_uniqueness_audit (r14)
+# ------------------------------------------------------ pk_uniqueness_audit
 
 @register(
     "pk_uniqueness_audit",
@@ -1202,7 +1201,7 @@ def pk_uniqueness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------ referential_integrity_audit (r14)
+# ------------------------------------------------ referential_integrity_audit
 
 @register(
     "referential_integrity_audit",
@@ -1272,7 +1271,7 @@ def referential_integrity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------- schema_drift_report (r14)
+# ---------------------------------------------------- schema_drift_report
 
 @register(
     "schema_drift_report",
@@ -1347,7 +1346,7 @@ def _stage_dir_ctl(sf_dir: str, name: str) -> str:
     return str(root / tag / name)
 
 
-# ---------------------------------------------- dup_row_full_hash_audit (r14)
+# ---------------------------------------------------- dup_row_full_hash_audit
 
 @register(
     "dup_row_full_hash_audit",

@@ -1,5 +1,5 @@
 """Exact ML-evaluation metrics and nonparametric k-sample/paired tests
-(§2.K extension batch, r12) — the model-eval and experiment-analysis
+(§2.K extension batch) — the model-eval and experiment-analysis
 queries a warehouse fed by migbq-style ingestion runs once labeled
 outcomes land next to scores (public formulas: Fawcett 2006 "An
 introduction to ROC analysis"; Davis & Goadrich 2006 PR/ROC; Murphy
@@ -10,8 +10,8 @@ Design rules (house determinism idioms, SURVEY.md §6):
 - every rank statistic comes from the value FREQUENCY table (rank
   arithmetic on counts — the corpus is never globally sorted), with
   strict-less counts from `_rank_prefix`, a hierarchical two-phase
-  prefix with NO single-partition WindowExec (mann_whitney_u_value r12
-  rewrite is the reference shape);
+  prefix with NO single-partition WindowExec (mann_whitney_u_value is
+  the reference shape);
 - cross-row/cross-group double sums are floor-quantized to int64
   micro/nano units BEFORE summing (order-insensitive);
 - terminal doubles come from exact integers through ONE fixed IEEE
@@ -42,7 +42,7 @@ def _rank_prefix(freq: DataFrame, val: str, cols: list[str]) -> DataFrame:
     exact int64 sum of that column over rows with strictly smaller
     ``val`` — the building block for midrank statistics.
 
-    Hierarchical two-phase prefix (the mann_whitney_u_value r12 shape):
+    Hierarchical two-phase prefix (the mann_whitney_u_value shape):
     (1) within-bucket cumsum via a window PARTITIONED by the 256-unit
     range bucket, (2) within-super-bucket cumsum over bucket totals
     partitioned by the 1024-bucket super-bucket, (3) prefix over the
@@ -117,7 +117,7 @@ def _rank_prefix(freq: DataFrame, val: str, cols: list[str]) -> DataFrame:
     return res.select(*keep, *[f"{c}_lt" for c in cols])
 
 
-# ---------------------------------------------------- roc_auc_exact (r12)
+# ---------------------------------------------------------- roc_auc_exact
 
 @register(
     "roc_auc_exact",
@@ -209,7 +209,7 @@ def roc_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------ pr_auc_trapezoid (r12)
+# ------------------------------------------------------ pr_auc_trapezoid
 
 @register(
     "pr_auc_trapezoid",
@@ -326,7 +326,7 @@ def pr_auc_trapezoid(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("pr_auc"),
     )
 
-# ----------------------------------------- calibration_bins_report (r12)
+# ----------------------------------------------- calibration_bins_report
 
 @register(
     "calibration_bins_report",
@@ -398,7 +398,7 @@ def calibration_bins_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("bin")
 
 
-# ------------------------------------- brier_score_decomposition (r12)
+# ------------------------------------------- brier_score_decomposition
 
 @register(
     "brier_score_decomposition",
@@ -542,7 +542,7 @@ def brier_score_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ----------------------------------------- cohens_kappa_agreement (r12)
+# ----------------------------------------------- cohens_kappa_agreement
 
 @register(
     "cohens_kappa_agreement",
@@ -637,7 +637,7 @@ def cohens_kappa_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------ mcc_binary_confusion (r12)
+# ------------------------------------------------ mcc_binary_confusion
 
 @register(
     "mcc_binary_confusion",
@@ -745,7 +745,7 @@ def mcc_binary_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------- kruskal_wallis_value (r12)
+# ---------------------------------------------- kruskal_wallis_value
 
 @register(
     "kruskal_wallis_value",
@@ -821,7 +821,7 @@ def kruskal_wallis_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale (100 TB): one groupBy(v) + one groupBy(g,v) collapse (both
     map-side-combinable), `_rank_prefix` over the frequency table (no
     single-partition window), then a value-domain-bounded join and a
-    k-row rollup.  Negative result (r12, measured): deriving freq
+    k-row rollup.  Negative result (measured): deriving freq
     FROM the gv cells does NOT save the second corpus scan — exchange
     reuse never fires across the two consumer branches (18 planned
     scans, warm 1.76 -> 2.13 s sf0.1), and localCheckpointing the
@@ -899,7 +899,7 @@ def kruskal_wallis_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ----------------------------------------------- mcnemar_test (r12)
+# ----------------------------------------------------- mcnemar_test
 
 @register(
     "mcnemar_test",
@@ -1006,7 +1006,7 @@ def mcnemar_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------ cochran_q_usertype (r12)
+# ------------------------------------------------ cochran_q_usertype
 
 @register(
     "cochran_q_usertype",
@@ -1105,7 +1105,7 @@ def cochran_q_usertype(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------- wilcoxon_signed_rank_paired (r12)
+# --------------------------------------- wilcoxon_signed_rank_paired
 
 @register(
     "wilcoxon_signed_rank_paired",
@@ -1244,7 +1244,7 @@ def wilcoxon_signed_rank_paired(
     )
 
 
-# --------------------------------------------- mood_median_test (r12)
+# --------------------------------------------------- mood_median_test
 
 @register(
     "mood_median_test",
@@ -1378,7 +1378,7 @@ def mood_median_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------ sign_test_paired (r12)
+# ------------------------------------------------------ sign_test_paired
 
 @register(
     "sign_test_paired",
@@ -1476,7 +1476,7 @@ def sign_test_paired(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------ welch_anova_value (r12)
+# ------------------------------------------------------ welch_anova_value
 
 @register(
     "welch_anova_value",
@@ -1638,7 +1638,7 @@ def welch_anova_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ----------------------------------------------- jackknife_loo_ratio (r12)
+# ----------------------------------------------------- jackknife_loo_ratio
 
 @register(
     "jackknife_loo_ratio",
@@ -1760,7 +1760,7 @@ def jackknife_loo_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------- cooks_distance_daily (r12)
+# ---------------------------------------------------- cooks_distance_daily
 
 _OLS_DAILY = """
     WITH d AS (
@@ -1919,7 +1919,7 @@ def cooks_distance_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------- grubbs_outlier_daily (r12)
+# --------------------------------------------------- grubbs_outlier_daily
 
 @register(
     "grubbs_outlier_daily",
@@ -2004,7 +2004,7 @@ def grubbs_outlier_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------ runs_test_updown_daily (r12)
+# ------------------------------------------------ runs_test_updown_daily
 
 @register(
     "runs_test_updown_daily",
@@ -2125,7 +2125,7 @@ def runs_test_updown_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------- durbin_watson_daily (r12)
+# ------------------------------------------------- durbin_watson_daily
 
 @register(
     "durbin_watson_daily",
@@ -2235,7 +2235,7 @@ def durbin_watson_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------- friedman_test_types (r12)
+# ---------------------------------------------------- friedman_test_types
 
 @register(
     "friedman_test_types",
@@ -2307,7 +2307,7 @@ def friedman_test_types(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: per-block mean comparisons are EXACT rational
     cross-products (s_a*n_b vs s_b*n_a — no division ever happens),
-    midranks via doubled-rank integers (r2 = 2*rank); the three
+    midranks via doubled-rank integers (2*rank); the three
     column sums are exact int64; chi2 through one fixed tree whose
     3-term sum has a literal textual order on both engines.
 
@@ -2381,7 +2381,7 @@ def friedman_test_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------- goodman_kruskal_gamma (r12)
+# ------------------------------------------------- goodman_kruskal_gamma
 
 @register(
     "goodman_kruskal_gamma",
@@ -2482,7 +2482,7 @@ def goodman_kruskal_gamma(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------ cramers_v_matrix (r12)
+# ------------------------------------------------------ cramers_v_matrix
 
 @register(
     "cramers_v_matrix",
@@ -2644,7 +2644,7 @@ def cramers_v_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("pair")
 
 
-# ------------------------------------------------ theil_u_uncertainty (r12)
+# ------------------------------------------------------ theil_u_uncertainty
 
 @register(
     "theil_u_uncertainty",
@@ -2760,7 +2760,7 @@ def theil_u_uncertainty(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------- odds_ratio_2x2_ci (r12)
+# ------------------------------------------------------- odds_ratio_2x2_ci
 
 @register(
     "odds_ratio_2x2_ci",
@@ -2869,7 +2869,7 @@ def odds_ratio_2x2_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------- cohens_d_effect_size (r13)
+# --------------------------------------------------- cohens_d_effect_size
 
 @register(
     "cohens_d_effect_size",
@@ -2974,7 +2974,7 @@ def cohens_d_effect_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------- cliffs_delta_effect (r13)
+# --------------------------------------------------- cliffs_delta_effect
 
 @register(
     "cliffs_delta_effect",
@@ -3073,7 +3073,7 @@ def cliffs_delta_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------- bartlett_test_value (r13)
+# ---------------------------------------------------- bartlett_test_value
 
 @register(
     "bartlett_test_value",
@@ -3203,7 +3203,7 @@ def bartlett_test_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------- nelson_aalen_hazard (r13)
+# --------------------------------------------------- nelson_aalen_hazard
 
 @register(
     "nelson_aalen_hazard",
@@ -3315,7 +3315,7 @@ def nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------ cross_correlation_lagged (r13)
+# ------------------------------------------------ cross_correlation_lagged
 
 @register(
     "cross_correlation_lagged",
@@ -3434,7 +3434,7 @@ def cross_correlation_lagged(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------- jarque_bera_test (r14)
+# ---------------------------------------------------------- jarque_bera_test
 
 @register(
     "jarque_bera_test",
@@ -3545,7 +3545,7 @@ def jarque_bera_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("g")
 
 
-# ----------------------------------------------- two_proportion_z_test (r14)
+# ----------------------------------------------------- two_proportion_z_test
 
 @register(
     "two_proportion_z_test",
@@ -3629,7 +3629,7 @@ def two_proportion_z_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -------------------------------------------- equivalence_tost_test (r14)
+# -------------------------------------------------- equivalence_tost_test
 
 @register(
     "equivalence_tost_test",
@@ -3745,7 +3745,7 @@ def equivalence_tost_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------- psi_population_stability (r14)
+# ---------------------------------------------- psi_population_stability
 
 @register(
     "psi_population_stability",
@@ -3793,11 +3793,11 @@ def psi_population_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
     `distribution_drift` with the symmetric industry-standard form.
 
     Determinism: log2 buckets via the exact `length(bin(n))-1` idiom
-    (floating log2 gives 2.999… at powers of two — r12 rule); day
+    (floating log2 gives 2.999… at powers of two); day
     parity via epoch-day % 2 (the dayofweek dialect rule); per-bucket
     terms are identical IEEE trees from exact int counts; the TOTAL
     floor-quantizes each term to 1e-12 units BEFORE the cross-bucket
-    sum (cross-group double sums are order-sensitive — r12 rule).
+    sum (cross-group double sums are order-sensitive).
 
     Scale (100 TB): one map-side collapse to ≤ ~20 (bucket, arm)
     registers; the totals row broadcasts back over ≤ 20 rows."""
@@ -3857,7 +3857,7 @@ def psi_population_stability(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("bkt")
 
 
-# -------------------------------------------------- ndcg_at_k_eval (r14)
+# -------------------------------------------------------- ndcg_at_k_eval
 
 @register(
     "ndcg_at_k_eval",
@@ -3965,7 +3965,7 @@ def ndcg_at_k_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------- ranking_map_mrr_eval (r14)
+# --------------------------------------------------- ranking_map_mrr_eval
 
 @register(
     "ranking_map_mrr_eval",

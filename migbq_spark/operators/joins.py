@@ -561,7 +561,7 @@ def parts_unshipped_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_asof_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FORWARD as-of join (r3): each purchase matched to the same user's
+    """FORWARD as-of join: each purchase matched to the same user's
     next error at-or-after it — the symmetric completion of `join_asof`
     (backward) and `join_asof_nearest` (tolerance).
 
@@ -724,7 +724,7 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -------------------------------------------- join_anti_null_aware (r11)
+# -------------------------------------------------- join_anti_null_aware
 
 @register(
     "join_anti_null_aware",
@@ -781,7 +781,7 @@ def join_anti_null_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------ join_asof_tolerance (r12)
+# ------------------------------------------------------ join_asof_tolerance
 
 @register(
     "join_asof_tolerance",
@@ -814,7 +814,7 @@ def join_anti_null_aware(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def join_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AS-OF JOIN WITH TOLERANCE (r12): each purchase matches the most
+    """AS-OF JOIN WITH TOLERANCE: each purchase matches the most
     recent click by the same user within a 48-hour lookback, else
     NULL — the bounded-staleness variant `join_asof` (unbounded
     backward) and `join_asof_nearest`/`_forward` don't cover; the

@@ -150,7 +150,7 @@ def tpch_q10_returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def tpch_q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 EXACT semantics (r3; `join_star_5way` is the Q5 *shape*
+    """TPC-H Q5 EXACT semantics (`join_star_5way` is the Q5 *shape*
     without the local-supplier constraint): revenue per nation where the
     supplier and the ordering customer share the nation, one region, one
     order-year.
@@ -855,7 +855,7 @@ def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the rollup collapses lineitem to |suppliers| map-side and
     is localCheckpointed so its one shuffle serves both consumers
     (Catalyst would otherwise re-derive the lineage and rescan the
-    corpus per branch — the r9 audit-family lesson); the max is a
+    corpus per branch); the max is a
     1-row broadcast, the supplier join broadcasts the rollup side at
     fixture scale and AQE decides at 100 TB.  Deterministic: exact
     decimal revenue, suppkey sort; ties (multiple max suppliers) are
@@ -1209,7 +1209,7 @@ def tpch_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------ derived partsupp (r11)
+# ------------------------------------------------------ derived partsupp
 #
 # The fixture ships no `partsupp` table (FIXTURES.md), but TPC-H Q2 /
 # Q9 / Q11 / Q16 / Q20 are DEFINED over it.  Per the Q17/Q21/Q22

@@ -70,8 +70,8 @@ def _jpeg_dims(payload: bytes) -> tuple[int, int]:
     big-endian length field — the standard stdlib-only JPEG dimension
     probe.
 
-    Handles the length-LESS markers real-world streams contain (r4
-    ADVICE): 0xFF fill/padding bytes before a marker are skipped, and
+    Handles the length-LESS markers real-world streams contain: 0xFF
+    fill/padding bytes before a marker are skipped, and
     standalone markers — TEM (0x01), RSTn (0xD0–0xD7), EOI (0xD9) —
     carry no length field and advance by 2 only.  Entropy-coded scan
     data after SOS is not walked: a dimension probe never needs to pass
@@ -219,8 +219,8 @@ def _mp4_meta(payload: bytes) -> tuple[int, int, int, int]:
 
 
 def _decode_payload(payload: bytes) -> tuple[int, int]:
-    """Header-level image decode — REAL for PNG and JPEG (r4, r3 VERDICT
-    #7), stubbed only for the synthetic fixture format.
+    """Header-level image decode — REAL for PNG and JPEG, stubbed only for
+    the synthetic fixture format.
 
     PNG: IHDR width/height at fixed offsets after the 8-byte signature.
     JPEG: marker walk to the first SOF frame header (`_jpeg_dims`).
@@ -246,9 +246,9 @@ def _pack_binary(spark: SparkSession, sf_dir: str) -> DataFrame:
     struct (modality, byte length, source).  This is the schema every
     downstream multimodal op consumes (mm_decode_stub, mm_frame_sample,
     mm_meta_audit).  Kept as an internal helper because struct + binary
-    cells crash the driver's pandas sort-based canonicalizer (r6
-    CORRECTNESS: `unhashable type: 'dict'`) — the REGISTERED
-    `mm_pack_binary` projects a flattened, hash-checkable view."""
+    cells crash the driver's pandas sort-based canonicalizer
+    (`unhashable type: 'dict'`) — the REGISTERED `mm_pack_binary` projects
+    a flattened, hash-checkable view."""
     d = load(spark, sf_dir, "documents")
     payload = F.encode(
         F.concat_ws("|", F.lit("IMG"), F.col("doc_id"), F.col("n_chars")), "utf-8"
@@ -320,11 +320,11 @@ def mm_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     execution are the real production shape; only `_decode_payload`'s
     body is fake (see its docstring) — but fake DETERMINISTICALLY
     (width/height are fixed functions of the source row and aspect is
-    one IEEE double division), so since r9 the op carries a full hash
+    one IEEE double division), so the op carries a full hash
     oracle: the DuckDB side recomputes the planted dimensions from the
     source row, pinning the whole pack → mapInPandas → Arrow-batch
     roundtrip (schema, batching, null-free lanes) by value, not just
-    by row count (r8 VERDICT rows-only-residue item)."""
+    by row count."""
     packed = _pack_binary(spark, sf_dir)
 
     def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -357,17 +357,16 @@ def mm_decode_stub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mm_decode_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """REAL image-header decode, hash-checked end-to-end (r4, r3 VERDICT
-    #7): pack each document as an actual PNG (even doc_id) or JPEG (odd)
-    byte stream whose header encodes deterministic dimensions, then
-    recover (fmt, width, height) by parsing the REAL formats — PNG IHDR
-    struct reads, JPEG SOF marker walk — inside one mapInPandas batch
-    iterator.  The oracle recomputes the planted dimensions from the
-    source row, so a bug anywhere in the pack → parse roundtrip (CRC
-    layout, endianness, SOF height-before-width ordering) breaks the
-    value hash.  Unlike `mm_decode_stub` (carrier-schema demo with the
-    synthetic fixture payload), nothing here is faked except the pixel
-    data itself.
+    """REAL image-header decode, hash-checked end-to-end: pack each document
+    as an actual PNG (even doc_id) or JPEG (odd) byte stream whose header
+    encodes deterministic dimensions, then recover (fmt, width, height) by
+    parsing the REAL formats — PNG IHDR struct reads, JPEG SOF marker walk
+    — inside one mapInPandas batch iterator.  The oracle recomputes the
+    planted dimensions from the source row, so a bug anywhere in the pack
+    → parse roundtrip (CRC layout, endianness, SOF height-before-width
+    ordering) breaks the value hash.  Unlike `mm_decode_stub`
+    (carrier-schema demo with the synthetic fixture payload), nothing here
+    is faked except the pixel data itself.
 
     Scale (100 TB): pack and decode run in the SAME task — payloads
     never shuffle; memory is one Arrow batch of headers.  A real corpus
@@ -414,7 +413,7 @@ def mm_decode_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mm_audio_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio-header decode — the WAV counterpart of
-    `mm_decode_headers` (r4): pack each document as an actual RIFF/WAVE
+    `mm_decode_headers`: pack each document as an actual RIFF/WAVE
     byte stream (canonical PCM `fmt ` + `data` subchunks) with planted
     sample rate / channel count / sample count, then recover them by
     WALKING the RIFF chunk list (`_wav_meta` skips chunks by their size
@@ -471,7 +470,7 @@ def mm_audio_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def mm_video_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL video-header decode — completes the image/audio/video triad
-    (`mm_decode_headers` / `mm_audio_headers` / this, r4): documents
+    (`mm_decode_headers` / `mm_audio_headers` / this): documents
     packed as actual ISO-BMFF (MP4) streams — `ftyp` + `moov(mvhd,
     trak(tkhd))` with correct box sizes — carrying planted timescale /
     duration / 16.16 fixed-point dimensions, recovered by RECURSIVE box
@@ -537,10 +536,9 @@ def mm_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (posexplode of a generated sequence).  Real video decode plugs into
     the same shape: one input row → few sampled-frame rows, all
     JVM-side except the decode itself.  The payload byte length is a
-    fixed function of the source row, so since r9 the sampled frame
+    fixed function of the source row, so the sampled frame
     grid carries a full hash oracle (frame_no = position, frame_idx =
-    value — DuckDB regenerates both from the same arithmetic; r8
-    VERDICT rows-only-residue item)."""
+    value — DuckDB regenerates both from the same arithmetic)."""
     packed = _pack_binary(spark, sf_dir)
     n_frames = F.least(F.col("meta.n_bytes"), F.lit(30)).cast("int")
     return packed.select(
@@ -589,7 +587,7 @@ def mm_meta_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------- mm_image_tile_plan (r13)
+# ---------------------------------------------------------- mm_image_tile_plan
 
 @register(
     "mm_image_tile_plan",
@@ -675,7 +673,7 @@ def mm_image_tile_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id", "ty", "tx")
 
 
-# -------------------------------------------------- mm_bytes_dedup_sha (r14)
+# -------------------------------------------------------- mm_bytes_dedup_sha
 
 @register(
     "mm_bytes_dedup_sha",
@@ -755,7 +753,7 @@ def mm_bytes_dedup_sha(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------- mm_audio_chunk_plan (r14)
+# ------------------------------------------------------- mm_audio_chunk_plan
 
 @register(
     "mm_audio_chunk_plan",

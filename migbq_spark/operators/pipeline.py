@@ -13,7 +13,7 @@ These are the 100 TB paths for the exact operators in textsim.py:
 Engine-specific hash functions (xxhash64) make the LSH/SimHash ops
 rows-only; their *quality* is pinned by tests/test_pipeline.py, which
 measures recall against the exact oracle-checked operators.
-`dedup_minhash_portable` (r3) swaps in an md5-derived hash family both
+`dedup_minhash_portable` swaps in an md5-derived hash family both
 engines compute bit-identically, making the full LSH pipeline
 value-hash oracle-checked as well.
 
@@ -32,11 +32,11 @@ Every near-dup operator and audit composes ONE builder per step:
 Scale notes (100 TB): every op is explode → groupBy → (bucketed)
 self-join — linear shuffles plus a join whose size is controlled by the
 banding/cell parameters, never a full n² pair enumeration.  The bucket
-joins additionally block on `source` (r3): banding bounds bucket COUNT,
+joins additionally block on `source`: banding bounds bucket COUNT,
 not bucket SIZE, and the sf0.1 fixture's cross-source near-dup
 mega-cluster showed that pair-LISTING a giant similarity cluster is
 inherently quadratic.  Cross-source cluster discovery is
-`dedup_cross_source_cc` (r4): unblocked buckets emit per-bucket STAR
+`dedup_cross_source_cc`: unblocked buckets emit per-bucket STAR
 edges (linear in bucket size, connectivity-equivalent to the clique)
 and two-star CC labels the components — so cross-source dedup stays
 end-to-end discoverable without any quadratic pair listing.
@@ -68,8 +68,8 @@ _FUNNEL_STAGE_DIR: str | None = None
 
 
 def _stage_cleanup() -> None:
-    """atexit reaper for the final invocation's staging dir (r14 ADVICE:
-    the per-invocation delete covers every dir but the last one)."""
+    """atexit reaper for the final invocation's staging dir (the
+    per-invocation delete covers every dir but the last one)."""
     if _FUNNEL_STAGE_DIR is not None:
         shutil.rmtree(_FUNNEL_STAGE_DIR, ignore_errors=True)
 
@@ -81,13 +81,13 @@ def _funnel_stage_root(spark: SparkSession) -> str | None:
     """Directory under which the funnel's parquet token-base snapshot is
     staged, or None when parquet staging must not be used.
 
-    Cluster story (r14 ADVICE / VERDICT item 2): executors write the
-    snapshot, so the path must be a SHARED filesystem — `MIGBQ_STAGE_DIR`
-    names one explicitly (object store / NFS / HDFS mount).  Without it,
-    a driver-local temp dir is only correct when executors share the
-    driver's filesystem, i.e. `local[*]` masters; on any other master we
-    return None and the caller falls back to the DISK_ONLY persist
-    (cluster-safe: executor-resident blocks, no shared path needed)."""
+    Cluster story: executors write the snapshot, so the path must be a
+    SHARED filesystem — `MIGBQ_STAGE_DIR` names one explicitly (object
+    store / NFS / HDFS mount).  Without it, a driver-local temp dir is
+    only correct when executors share the driver's filesystem, i.e.
+    `local[*]` masters; on any other master we return None and the caller
+    falls back to the DISK_ONLY persist (cluster-safe: executor-resident
+    blocks, no shared path needed)."""
     env = os.environ.get("MIGBQ_STAGE_DIR")
     if env:
         os.makedirs(env, exist_ok=True)
@@ -112,7 +112,7 @@ def _tok_df(
     ``arr`` (optional): a pre-split (doc_id, source, t=array<string>)
     frame (non-empty tokens) to explode instead of re-scanning the
     documents parquet — the one-scan curation funnel passes its
-    persisted token base here (r14)."""
+    persisted token base here."""
     if arr is not None:
         return arr.select(
             "doc_id",
@@ -165,19 +165,19 @@ def _portable_minhash_df(
     per-doc-local (min over the doc's own token hashes), so the
     restriction is value-identical to filtering afterwards but turns
     the audit ops' signature cost from corpus-bounded into
-    sample-bounded (r9: `minhash_containment_estimate` at sf1 spent
+    sample-bounded (`minhash_containment_estimate` at sf1 spent
     ~30 s rebuilding two corpus-wide signature lineages for a ≤1280-doc
     audit sample).
 
     ``toks`` (optional): a pre-built (doc_id, source, token) frame to
     hash instead of re-deriving `_tok_df`'s parquet lineage (the
-    one-scan curation funnel, r14)."""
+    one-scan curation funnel)."""
     if toks is None:
         toks = _tok_df(spark, sf_dir)
     if docs is not None:
         toks = toks.join(F.broadcast(docs), "doc_id")
 
-    # Hash the VOCABULARY, not the occurrences (r5): evaluating 16
+    # Hash the VOCABULARY, not the occurrences: evaluating 16
     # md5+conv per doc-token row made the signature build the whole
     # operator's cost (measured 4.2 s of 6.5 s at sf0.1 — 1.9 M hash
     # evals for a corpus whose distinct-token count is tiny).  Heaps'
@@ -250,7 +250,7 @@ def _bucket_pairs(
     bkey) bucket, a_id < b_id, once per shared bucket; ``build`` is
     ``bands`` itself or its broadcast.
 
-    BLOCKED ON SOURCE (r3), matching the exact operators' semantics —
+    BLOCKED ON SOURCE, matching the exact operators' semantics —
     and for a scale reason: banding bounds bucket COUNT, not bucket
     SIZE, and an unblocked bucket join over the sf0.1 fixture's ~2.6
     k-doc cross-source near-dup mega-cluster enumerates its ~n²/2 ≈ 12 M
@@ -287,7 +287,7 @@ def _corpus_candidates(spark: SparkSession, bands: DataFrame) -> DataFrame:
 
 def _sample_candidates(bands: DataFrame, *by: str) -> DataFrame:
     """(*by, a_id, b_id) — distinct `_bucket_pairs` over an audit sample.
-    Explicit broadcast (r14, guide §3.1): the bands are bounded by the
+    Explicit broadcast: the bands are bounded by the
     code-enforced audit budget but derive from checkpointed lineage
     with no stats, so without the hint the planner sort-merge-joins a
     build side that can never outgrow an executor."""
@@ -342,13 +342,12 @@ def _lsh_dedup_pairs(spark: SparkSession, sf_dir: str, h) -> DataFrame:
     under per-token hash ``h``: signatures → 4×4 banding → corpus
     candidates → exact-Jaccard verify ≥ 0.8.
 
-    The signature table is materialized ONCE (r14, the r9
-    `minhash_jaccard_estimate` lesson): the bucket self-join otherwise
-    re-derives the ENTIRE signature lineage — corpus scan, vocab
-    distinct, 16-hash vocab join, 16-min groupBy — on BOTH sides (12
-    parquet scans in the before-plan; 6 after).  |docs| × 16 int64 is
-    the signature store a real pipeline persists anyway (~70 MB at
-    sf10)."""
+    The signature table is materialized ONCE (as in
+    `minhash_jaccard_estimate`): the bucket self-join otherwise re-derives
+    the ENTIRE signature lineage — corpus scan, vocab distinct, 16-hash
+    vocab join, 16-min groupBy — on BOTH sides (12 parquet scans in the
+    before-plan; 6 after).  |docs| × 16 int64 is the signature store a
+    real pipeline persists anyway (~70 MB at sf10)."""
     mins = _portable_minhash_df(spark, sf_dir, h=h).localCheckpoint()
     cand = _corpus_candidates(spark, _portable_band_df(spark, sf_dir, mins=mins))
     return (
@@ -416,7 +415,7 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash + banded LSH near-dup pairs with a PORTABLE hash family —
-    the hash-checkable twin of `dedup_minhash_lsh` (r3).
+    the hash-checkable twin of `dedup_minhash_lsh`.
 
     `dedup_minhash_lsh` is rows-only because xxhash64 is engine-specific;
     here each of the 16 hash functions is the top 60 bits of
@@ -477,10 +476,9 @@ def _simhash_pairs(toks: DataFrame, h: F.Column) -> DataFrame:
     )
     # Materialize the signature table once before the self-join: without
     # this the whole build lineage (scan → token explode/distinct → hash
-    # → 32-sum aggregate) re-executes on BOTH join sides (the r9
-    # minhash_jaccard_estimate lesson, applied to dedup_minhash_portable
-    # in r14 wave 1).  |docs| rows × 3 fixed-width columns — the compact
-    # form a real pipeline stores anyway.
+    # → 32-sum aggregate) re-executes on BOTH join sides (as in
+    # minhash_jaccard_estimate).  |docs| rows × 3 fixed-width columns — the
+    # compact form a real pipeline stores anyway.
     sig = sig.localCheckpoint(eager=True)
     a, b_ = sig.alias("a"), sig.alias("b")
     return (
@@ -546,7 +544,7 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs with the PORTABLE md5-derived hash — the
     hash-checkable twin of `dedup_simhash`, the same upgrade
-    `dedup_minhash_portable` gave the LSH pipeline (r4, r3 VERDICT #6).
+    `dedup_minhash_portable` gave the LSH pipeline.
 
     Per-token hash = top 60 bits of md5(token) parsed base-16, verified
     bit-identical between Spark (`conv(substr(md5(..),1,15),16,10)`) and
@@ -620,15 +618,14 @@ _IVF_KMEANS_SEED = 7
 
 
 def _ivf_trained_centroids(spark: SparkSession, e: DataFrame) -> DataFrame:
-    """TRAINED IVF centroids (r4 VERDICT "Next round" #5): seeded
-    spark.ml KMeans over the embedding column, centroids L2-normalized
-    so the downstream max-dot cell assignment is exact spherical
-    nearest-centroid (the fixture embeddings are unit vectors —
-    Euclidean KMeans on the sphere + renormalized centers is the
-    standard spherical-IVF recipe).  The only collect is the k×dim
-    centroid matrix (16×64 floats — bounded by construction, the same
-    bytes an IVF index ships to every searcher).  At 100 TB: train on a
-    sample (KMeans cost is per-iteration linear), broadcast the same
+    """TRAINED IVF centroids: seeded spark.ml KMeans over the embedding
+    column, centroids L2-normalized so the downstream max-dot cell
+    assignment is exact spherical nearest-centroid (the fixture embeddings
+    are unit vectors — Euclidean KMeans on the sphere + renormalized
+    centers is the standard spherical-IVF recipe).  The only collect is
+    the k×dim centroid matrix (16×64 floats — bounded by construction, the
+    same bytes an IVF index ships to every searcher).  At 100 TB: train on
+    a sample (KMeans cost is per-iteration linear), broadcast the same
     tiny centroid table."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
@@ -887,7 +884,7 @@ def _rp_sign(p: int, j: int) -> int:
     """,
 )
 def ann_rp_lsh_topk_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HASH-CHECKABLE twin of `ann_rp_lsh_topk` (r6) — the move that
+    """HASH-CHECKABLE twin of `ann_rp_lsh_topk` — the move that
     gave the minhash and simhash families their portable variants,
     applied to sign-LSH: every float enters through ONE deterministic
     fixed-point quantization (floor(x·10⁶) as int64; x arrives as
@@ -974,13 +971,12 @@ _SEMANTIC_TAU_SCALED = 300_000_000_000
 def _lsh_bucket_kernel(key, pdf):
     """Exact verified near-dup hits for ONE LSH bucket: every pairwise
     int64 dot as a chunked numpy matmul, emitting (a_id, b_id,
-    sim_scaled) rows with sim ≥ τ and a_id < b_id (r15 opt; guide
-    §4.2/§8 — the pair-join form shipped BOTH 64-element vectors per
-    candidate PAIR through Arrow, ~1 KB x |pairs|; here each vector
-    crosses the boundary once per band row and the n_c² dots run as
-    integer matmul batches).  Chunked over 1024-row strips so peak
-    memory is O(chunk · n_c) for any bucket size — the
-    `_semdedup_cluster_kernel` discipline.  Hits may repeat across
+    sim_scaled) rows with sim ≥ τ and a_id < b_id (the pair-join form
+    shipped BOTH 64-element vectors per candidate PAIR through Arrow, ~1
+    KB x |pairs|; here each vector crosses the boundary once per band row
+    and the n_c² dots run as integer matmul batches).  Chunked over
+    1024-row strips so peak memory is O(chunk · n_c) for any bucket size —
+    the `_semdedup_cluster_kernel` discipline.  Hits may repeat across
     bands; the caller dedups (a_id, b_id), which commutes with the τ
     filter because the exact dot is a pure function of the pair."""
     import numpy as np
@@ -1070,7 +1066,7 @@ def _lsh_bucket_kernel(key, pdf):
 )
 def dedup_semantic_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """UNSUPERVISED semantic (embedding) near-dup pairs with
-    sub-quadratic candidates AND a full value-hash oracle (r6) — the
+    sub-quadratic candidates AND a full value-hash oracle — the
     scale path `near_dup_embedding`'s docstring defers to, now
     implemented AND driver-checkable: `near_dup_embedding` bounds its
     pair scan with the fixture's `label` column (supervision a raw
@@ -1090,7 +1086,7 @@ def dedup_semantic_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale (100 TB): signatures are 12 narrow JVM projections per row;
     the bucket shuffle carries (band, bkey, id, vector) — each vector
     crosses the network once per band row (3× linear — NOT the
-    quadratic pair-width blowup the r13 form was rescued from:
+    quadratic pair-width blowup of a pair-join form:
     carrying both arrays per candidate PAIR multiplied the shuffle
     ~64× and GC-killed the sf10 fixture at 96 M raw pairs; a linear
     3n vector shuffle is the §8 "move heavy bytes once" shape).  Each
@@ -1102,13 +1098,13 @@ def dedup_semantic_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     targets).  No labels, no driver-side state, no floats past
     quantization.
 
-    r15 evolution, measured (interleaved A/B, identical 5429 rows,
-    hash-green): the r14 form built an ids-only candidate pair set,
+    Measured (interleaved A/B, identical 5429 rows, hash-green): an
+    earlier form built an ids-only candidate pair set,
     fetched both vectors back by id, and ran an Arrow per-pair dot —
     that ships ~1 KB per PAIR through the Python boundary.  The
     bucket kernel ships each vector once per band row instead: sf0.1
     timed 1.80 -> 0.78 s, sf1 timed 8.20 -> 0.93 s (e2e 10.5 ->
-    2.15 s).  r14's own measurements (HOF fold 2.24 s, codegen
+    2.15 s).  Earlier measurements (HOF fold 2.24 s, codegen
     element_at sum 8.67 s, aggregate-over-sequence 3.93 s, Arrow
     per-pair dot 1.66 s at sf0.1) stand as the history."""
     _N_PLANES, _BANDS, _BAND_BITS = 12, 3, 4
@@ -1460,13 +1456,11 @@ def _phll_window_estimate(regs: DataFrame) -> DataFrame:
 def sliding_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approx-distinct users over SLIDING event-time windows (24 h window,
     6 h slide) via partial-HLL register merge — the sliding-frame twin of
-    `active_users_7d_hll` (r2 VERDICT item 5, builder's r3 note),
-    upgraded in r9 from Spark's engine-specific datasketches HLL to the
-    PORTABLE md5-register family so the whole pipeline — hourly partial
-    registers, window replication, register-wise-max merge, estimator —
-    is hash-verified against DuckDB bit-for-bit (the r8 VERDICT's
-    rows-only-residue item; `active_users_7d_hll` keeps the native
-    datasketches demo).
+    `active_users_7d_hll`, on the PORTABLE md5-register family so the whole
+    pipeline — hourly partial registers, window replication,
+    register-wise-max merge, estimator — is hash-verified against DuckDB
+    bit-for-bit, unlike Spark's engine-specific datasketches HLL
+    (`active_users_7d_hll` keeps the native datasketches demo).
 
     Shape: raw events collapse once into hourly register partials
     (map-side-combinable ≤ m=4096 small ints/hour — the same 4 KB-class
@@ -1537,8 +1531,8 @@ def _cc_twostar_components(pairs: DataFrame) -> DataFrame:
     localCheckpoint."""
     def _edge_stats(df: DataFrame) -> tuple[int, object]:
         """(count, xxhash64-sum) of the canonical edge set in ONE tiny
-        agg job — a NECESSARY condition screen for set equality (r14
-        opt round): differing stats PROVE the round changed the edges,
+        agg job — a NECESSARY condition screen for set equality:
+        differing stats PROVE the round changed the edges,
         so the expensive exceptAll proof runs only on the candidate
         fixpoint round (count+hash match), never per round.  The sum
         is decimal(38,0) so it is exact at any edge count (no ANSI
@@ -1673,12 +1667,12 @@ _registry.ORACLES["dup_cc_twostar"] = _registry.ORACLES["dup_connected_component
     """,
 )
 def dedup_cross_source_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CROSS-SOURCE near-duplicate cluster discovery (r4, closes the r3
-    ADVICE gap): after the r3 source-blocking, every pair-LISTING
-    operator (both LSH ops, `near_dup_jaccard`, `ngram_jaccard`) was
-    blocked on `source`, leaving the cross-source mega-cluster that
-    motivated the blocking undiscoverable end-to-end.  This operator
-    rediscovers it WITHOUT materializing pairs:
+    """CROSS-SOURCE near-duplicate cluster discovery: with source
+    blocking, every pair-LISTING operator (both LSH ops,
+    `near_dup_jaccard`, `ngram_jaccard`) was blocked on `source`, leaving
+    the cross-source mega-cluster that motivated the blocking
+    undiscoverable end-to-end.  This operator rediscovers it WITHOUT
+    materializing pairs:
 
     1. UNBLOCKED portable-MinHash LSH buckets (`_portable_band_df`) —
        banding bounds bucket count; no join yet.
@@ -1708,8 +1702,8 @@ def dedup_cross_source_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _cross_source_cc(bands: DataFrame) -> DataFrame:
     """Star edges per LSH bucket (hub = min doc_id) → two-star CC.
-    Shared by `dedup_cross_source_cc` and the one-scan curation funnel
-    (r14), which feeds bands derived from its persisted token base."""
+    Shared by `dedup_cross_source_cc` and the one-scan curation funnel,
+    which feeds bands derived from its persisted token base."""
     w = Window.partitionBy("band", "bkey")
     hubbed = bands.withColumn("hub", F.min("doc_id").over(w))
     edges = hubbed.filter(F.col("doc_id") != F.col("hub")).select(
@@ -1792,7 +1786,7 @@ def _cross_source_cc(bands: DataFrame) -> DataFrame:
     """,
 )
 def dedup_keep_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """END-TO-END near-dup dedup driver (r5): LSH candidate clusters
+    """END-TO-END near-dup dedup driver: LSH candidate clusters
     (`dedup_cross_source_cc`'s star-edge two-star CC) joined with the
     `quality_score` signal, keeping the highest-quality document per
     cluster (ties broken by lowest doc_id) — one row per component with
@@ -1858,7 +1852,7 @@ def dedup_keep_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def minhash_merge_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INCREMENTAL sketch maintenance (r5) — migbq's sync loop applied to
+    """INCREMENTAL sketch maintenance — migbq's sync loop applied to
     dedup state: per-source corpus MinHash signatures are computed from
     a BASE load (even doc_ids) and a DELTA batch (odd doc_ids) as two
     independent aggregations, then merged with elementwise LEAST.
@@ -2047,7 +2041,7 @@ def decontaminate_train_drop(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _decontam_from_arr(arr: DataFrame) -> DataFrame:
     """Decontamination body over a pre-split (doc_id, t=array<string>)
     frame — shared by `decontaminate_train_drop` (own parquet scan) and
-    the one-scan curation funnel (persisted token base, r14)."""
+    the one-scan curation funnel (persisted token base)."""
     base = arr.select(
         "doc_id", F.pmod("doc_id", F.lit(10)).alias("m"), "t"
     ).filter(F.size("t") >= _SHINGLE_MIN_TOKS)
@@ -2304,7 +2298,7 @@ def heaps_law_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def doc_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-DOCUMENT token entropy (r3): H = ln(n) − Σ c·ln(c)/n over the
+    """Per-DOCUMENT token entropy: H = ln(n) − Σ c·ln(c)/n over the
     doc's token counts — the within-doc lexical-diversity quality signal
     beside the corpus-level `entropy_by_source` and the n-gram
     repetition screen `repeated_ngram_ratio` (low H ⇒ degenerate or
@@ -2451,7 +2445,7 @@ def doc_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """THE END-TO-END CURATION FUNNEL — every r5 decision stage composed
+    """THE END-TO-END CURATION FUNNEL — every decision stage composed
     into one per-source report, in precedence order: (1) near-dup
     cluster membership (LSH star-edge CC; non-canonical docs drop as
     'dup'), (2) quality floor (blended score < 0.5 drops as 'quality'),
@@ -2476,7 +2470,7 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     individually scale-shaped (two-star CC, one aggregation, one
     vocab-probe join).
 
-    Staging contract (r15): the parquet snapshot goes under
+    Staging contract: the parquet snapshot goes under
     `MIGBQ_STAGE_DIR` when set (on a cluster: a shared FS / object
     store path), under a repo-local temp root on `local[*]`, and is
     SKIPPED (DISK_ONLY persist fallback) on non-local masters without
@@ -2595,7 +2589,7 @@ def _funnel_report(
 
 def _dup_span_tail(base: DataFrame, spans_arr: DataFrame) -> DataFrame:
     """Shared ONE-BIG-EXCHANGE tail of the two dup-span twins, shaped by
-    the r8 sf10 profile of the old plan (115.6 s): span GENERATION was
+    an sf10 profile of the old plan (115.6 s): span GENERATION was
     42 s of it and the old distinct→agg→join-back shape recomputed the
     exploded stream per branch and shuffled it twice more (join probe +
     final doc agg, 114 s cumulative).  This tail:
@@ -2614,10 +2608,9 @@ def _dup_span_tail(base: DataFrame, spans_arr: DataFrame) -> DataFrame:
       shuffle), left-joining the per-doc dup sums back (doc-keyed,
       ≤ one row per doc on both sides).
 
-    Measured sf10 (same noop-write protocol as SCALING_r07): 49.3 s
-    hashed / checksum bit-equal to the old plan; generation 37 s of it,
-    window tail ~9 s.  The semi-join alternative re-ran generation per
-    branch (130.7 s) — rejected."""
+    Measured sf10 (noop-write sink): 49.3 s hashed / checksum bit-equal to
+    the old plan; generation 37 s of it, window tail ~9 s.  The semi-join
+    alternative re-ran generation per branch (130.7 s) — rejected."""
     runs = spans_arr.select(
         "doc_id",
         F.explode(
@@ -2699,7 +2692,7 @@ def _dup_span_tail(base: DataFrame, spans_arr: DataFrame) -> DataFrame:
     """,
 )
 def dup_span_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CROSS-document duplicated-span ratio (r6) — the per-document
+    """CROSS-document duplicated-span ratio — the per-document
     signal behind exact-substring dedup (public Lee et al. 2021,
     "Deduplicating Training Data Makes Language Models Better"): for
     every token position, the 5-token span starting there is
@@ -2711,7 +2704,7 @@ def dup_span_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-wide redundancy at span granularity.
 
     Scale (100 TB): spans are corpus-linear and the plan has exactly
-    ONE wide exchange — see `_dup_span_tail` (r8 profiled rewrite:
+    ONE wide exchange — see `_dup_span_tail` (profiled rewrite:
     row-local distinct+position-count per doc, docs-per-span as a
     window over the distinct-pair stream, totals from `size(t) - 4`
     with no shuffle).  This registered path keeps the RAW span string
@@ -2767,8 +2760,8 @@ def dup_span_ratio_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the raw 5-token string (~30 bytes at the fixture's vocabulary,
     unbounded on real text).
 
-    r8 profiled fix (r7 VERDICT #2: the r6 shuffle-byte hypothesis was
-    DISPROVED — hashing keys alone left sf10 at 115.6 s vs string
+    Profiled fix (the shuffle-byte hypothesis was DISPROVED — hashing keys
+    alone left sf10 at 115.6 s vs string
     142.5 s).  The sf10 stage profile showed span GENERATION (explode
     + slice + concat_ws + xxhash per position, 42 s) recomputed per
     branch, plus full-stream exchanges for the join-back and final doc
@@ -2875,7 +2868,7 @@ def dup_span_ratio_hashed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash ACCURACY audit (r6) — for every banded-LSH candidate
+    """MinHash ACCURACY audit — for every banded-LSH candidate
     pair, the sketch's Jaccard estimate (matching components / 16,
     the unbiased MinHash estimator) next to the EXACT token-set
     Jaccard and their absolute error, under the portable md5 60-bit
@@ -2894,7 +2887,7 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     production you run it on a SAMPLE of candidates.
 
     The signature table is localCheckpoint'ed ONCE and reused by the
-    banding AND both per-side signature joins (r9): without the cut,
+    banding AND both per-side signature joins: without the cut,
     Catalyst re-derives the full corpus-wide signature lineage in each
     of the three branches (measured 31.7 s at sf1 for three rebuilds;
     one materialized build + reuse is the way a real pipeline stores
@@ -2979,7 +2972,7 @@ def _quantized_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INT8 vector quantization audit (r6) — the compression pass every
+    """INT8 vector quantization audit — the compression pass every
     production ANN index runs before building (FAISS-style scalar
     quantization, public): per vector, absmax scale over the
     fixed-point representation, each component floor-quantized to
@@ -3067,7 +3060,7 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Language-ID CONFUSION MATRIX (r6) — the accuracy audit run
+    """Language-ID CONFUSION MATRIX — the accuracy audit run
     before trusting `lang_id_ngram`'s predictions in a routing
     decision: actual label (the fixture's `lang` column) × predicted
     label, with per-actual-language row-normalized shares and a
@@ -3136,7 +3129,7 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def lsh_bucket_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSH bucket SKEW audit (r6) — the pre-flight a production dedup
+    """LSH bucket SKEW audit — the pre-flight a production dedup
     runs BEFORE launching the candidate pair join: per band, the
     bucket-count/size distribution and the exact candidate-pair cost
     Σ s·(s−1)/2 the pair join would enumerate, computed from bucket
@@ -3282,9 +3275,9 @@ def lsh_bucket_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def corpus_curation_funnel_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """THE CHEAP-STAGES-FIRST CURATION FUNNEL (r6) — the production
+    """THE CHEAP-STAGES-FIRST CURATION FUNNEL — the production
     ORDERING real pipelines run (row-local screens before model-based
-    scoring), composing four r6 decision stages in precedence order:
+    scoring), composing four decision stages in precedence order:
     (1) normalized exact dedup (`dedup_exact_normalized` — non-canonical
     docs drop as 'exact_dup'), (2) Gopher rule screen
     (`quality_gopher_rules` — failures drop as 'rules'), (3) bigram-LM
@@ -3411,7 +3404,7 @@ def corpus_curation_funnel_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def quantize_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """QUANTIZED-SEARCH RECALL audit (r6) — the measurement that closes
+    """QUANTIZED-SEARCH RECALL audit — the measurement that closes
     the `embedding_quantize_int8` loop: for each of the 10 probe
     vectors (the `cosine_topk` query convention), the top-5 neighbor
     set under the EXACT fixed-point dot vs under the int8-quantized
@@ -3472,7 +3465,7 @@ def quantize_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------- r7 additions
+# ------------------------------------- chunking, fingerprints, sketches
 
 @register(
     "doc_chunk_stride",
@@ -3667,12 +3660,12 @@ def sketch_count_min_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFram
     is how a 1000-executor fleet combines per-shard sketches for
     free.  The ground-truth side exists only for the audit.
 
-    r8 Heaps rewrite: the md5 bucket hash runs over the DISTINCT
+    Heaps rewrite: the md5 bucket hash runs over the DISTINCT
     vocabulary after the token count (|vocab|×4 hashes), not over
     every corpus occurrence ×4 (was 108 M md5+conv calls at sf10 —
     profiled as the whole cost of the op's 183 s cell); cell values
     are identical because a cell is the SUM of its tokens' counts
-    either way.  Measured sf10: 183 s → see SCALING_r08."""
+    either way."""
     d = load(spark, sf_dir, "documents")
     toks = d.select(
         F.explode(tokens()).alias("token")
@@ -4342,13 +4335,13 @@ def embedding_outlier_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: SOURCE enter any audit pair join, chosen deterministically (rank by
 #: md5('audit:' || doc_id), tie by doc_id — portable to DuckDB
 #: bit-for-bit).  Bounds every audit at |sources| · cap² pairs no
-#: matter the corpus size — the r8 VERDICT's "bounded-sample by
-#: contract" prose made code.  64 ≥ the 25 docs/source of the sf0.001
-#: and sf0.01 fixtures, so small-SF results (tests, driver grading)
-#: are byte-identical to the uncapped formulation; at sf0.1 it cuts
-#: the blocked cross product 15× and at sf10 it turns a 312 M-pair
-#: blowup into the same fixed 40 k pairs.  This is the tuning knob:
-#: raise it for a wider audit sample, the cost is exactly quadratic.
+#: matter the corpus size — "bounded sample by contract" made code.  64 ≥
+#: the 25 docs/source of the sf0.001 and sf0.01 fixtures, so small-SF
+#: results (tests, driver grading) are byte-identical to the uncapped
+#: formulation; at sf0.1 it cuts the blocked cross product 15× and at sf10
+#: it turns a 312 M-pair blowup into the same fixed 40 k pairs.  This is
+#: the tuning knob: raise it for a wider audit sample, the cost is exactly
+#: quadratic.
 _AUDIT_DOC_CAP = 64
 
 #: DuckDB mirror of `_audit_docs_df` — splice as the first CTE of any
@@ -4395,22 +4388,22 @@ def _sampled_token_pairs(
     so the rank window isn't re-derived per plan branch) with both
     distinct-token sets: the pair build under `_exact_jaccard_pairs_df`
     and `_containment_pairs_df`.  ≤ |sources| · `_AUDIT_DOC_CAP`² pairs
-    at any corpus size (CODE-ENFORCED since r9); byte-identical to the
+    at any corpus size (CODE-ENFORCED); byte-identical to the
     uncapped form at the ≤ cap docs/source fixture SFs."""
     toksets = (
         load(spark, sf_dir, "documents")
         .join(F.broadcast(docs), "doc_id")
         .select("doc_id", "source", F.array_distinct(tokens()).alias("toks"))
     )
-    # Materialize the sampled token sets once (r14 opt round, guide
-    # §2.4): `toksets` embeds a FULL documents text scan (the sample
-    # filter is a broadcast join, it cannot prune the parquet scan) and
-    # every consumer branch re-derived it — the shape-sweep plan read
-    # the corpus 4x in its timed region.  ≤ |sources|·cap rows by the
-    # audit budget, so the checkpoint is tiny; corpus scans per op drop
-    # 4→1.  Interleaved sf1 A/B: e2e equal-or-better on all five audit
-    # ops (fp_audit 3.82→3.75 s, superset 1.34→1.24 s), and the
-    # scan-count term is the one that grows with corpus size.
+    # Materialize the sampled token sets once: `toksets` embeds a FULL
+    # documents text scan (the sample filter is a broadcast join, it
+    # cannot prune the parquet scan) and every consumer branch re-derived
+    # it — the shape-sweep plan read the corpus 4x in its timed region.  ≤
+    # |sources|·cap rows by the audit budget, so the checkpoint is tiny;
+    # corpus scans per op drop 4→1.  Interleaved sf1 A/B: e2e
+    # equal-or-better on all five audit ops (fp_audit 3.82→3.75 s,
+    # superset 1.34→1.24 s), and the scan-count term is the one that grows
+    # with corpus size.
     toksets = toksets.localCheckpoint(eager=True)
     a = toksets.select(
         F.col("doc_id").alias("a_id"), "source", F.col("toks").alias("a_toks")
@@ -4420,13 +4413,12 @@ def _sampled_token_pairs(
         F.col("source").alias("b_source"),
         F.col("toks").alias("b_toks"),
     )
-    # Explicit broadcast (r14, guide §3.1): both sides are ≤ |sources|·cap
+    # Explicit broadcast: both sides are ≤ |sources|·cap
     # rows BY CONSTRUCTION, but the sample arrives localCheckpoint'ed and
     # checkpointed lineage reports no stats — the planner falls back to
     # SortMergeJoin (2 extra exchanges + sorts) for a join whose build
-    # side can never outgrow an executor.  Measured r14 (noop, min-of-3,
-    # sf0.1 audit family): SMJ → BHJ across the four audit ops, see
-    # OPTIMIZATION_r14.md.
+    # side can never outgrow an executor; with the hint the four audit
+    # ops plan BHJ instead of SMJ.
     return a.join(
         F.broadcast(b),
         (F.col("source") == F.col("b_source")) & (F.col("a_id") < F.col("b_id")),
@@ -4524,7 +4516,7 @@ def minhash_band_fp_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Ground truth is inherently pairwise, so the audit runs on the
     deterministic `_audit_docs_df` sample (≤ `_AUDIT_DOC_CAP` docs per
-    source — the pair budget is CODE-ENFORCED since r9, not a prose
+    source — the pair budget is CODE-ENFORCED, not a prose
     promise); the measured (precision, recall) then governs the
     full-corpus run whose candidates stay bucket-derived.  That
     sampling contract is the standard way band parameters are tuned;
@@ -4536,7 +4528,7 @@ def minhash_band_fp_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ops, so the audit grades EXACTLY the production candidate
     generator, not a reimplementation.  Both the candidate and the
     truth side are restricted to the same `_audit_docs_df` sample
-    (code-enforced pair budget, r9) — signatures are per-doc-local
+    (code-enforced pair budget) — signatures are per-doc-local
     (min over the doc's own token hashes), so the post-hoc doc filter
     is value-identical and the broadcast semi-restriction costs one
     ≤ |sources|·cap row broadcast."""
@@ -4547,8 +4539,8 @@ def minhash_band_fp_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         mins=_portable_minhash_df(spark, sf_dir, docs=sample).localCheckpoint(),
     )
     # truth is ≤ |sources|·cap² pairs but checkpoint-derived (no stats):
-    # broadcast it explicitly, as `_sample_candidates` does (r14: 10
-    # SortMergeJoins / 20 exchanges in the before-plan without hints)
+    # broadcast it explicitly, as `_sample_candidates` does (without
+    # hints the plan has 10 SortMergeJoins / 20 exchanges)
     cand = _sample_candidates(bands)
     truth = _exact_jaccard_pairs_df(spark, sf_dir, docs=sample)
     hits = cand.join(F.broadcast(truth), ["a_id", "b_id"]).agg(
@@ -5034,7 +5026,7 @@ def minhash_band_shape_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Like the fp audit, ground truth is inherently pairwise, so both
     the truth and every per-shape candidate set run on the SAME
-    `_audit_docs_df` sample (code-enforced pair budget, r9 — the
+    `_audit_docs_df` sample (code-enforced pair budget — the
     "bounded sample at 100 TB" is now code, not prose); candidates in
     the production run stay bucket-derived.  The three candidate sets
     reuse one signature build (Heaps-bounded vocab hashing); each
@@ -5162,7 +5154,7 @@ def dedup_containment_superset(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Like the band audits, the all-pairs ground-truth formulation runs
     on the deterministic `_audit_docs_df` sample (pair budget
-    CODE-ENFORCED since r9 — ≤ |sources| · `_AUDIT_DOC_CAP`² pairs at
+    CODE-ENFORCED — ≤ |sources| · `_AUDIT_DOC_CAP`² pairs at
     any corpus size); the production-scale candidate generator for
     containment is asymmetric-LSH or the rare-span route
     (`dup_span_ratio`'s span hashes joined doc-to-doc), both of which
@@ -5415,13 +5407,12 @@ def _semdedup_cluster_kernel(key: tuple, pdf) -> "pd.DataFrame":  # noqa: F821
     """Exact within-cluster near-dup hits: for one centroid cluster,
     compute EVERY pairwise int64 dot as a chunked numpy matmul and emit
     only the (v, c_id, k, d) rows with d >= τ and k < v — identical
-    rows to the pairwise self-join it replaces (r15 opt; guide §4.2 +
-    §8: the join shipped BOTH 64-element vectors per candidate PAIR
-    through the shuffle and paid an interpreted 64-term fold per pair;
-    here each vector crosses the boundary once and the n_c² dots run
-    as integer BLAS-shaped batches).  Chunked over 1024-row strips so
-    peak memory is O(chunk · n_c), independent of cluster size — the
-    `_jaccard_block` discipline."""
+    rows to the pairwise self-join it replaces (the join shipped BOTH
+    64-element vectors per candidate PAIR through the shuffle and paid an
+    interpreted 64-term fold per pair; here each vector crosses the
+    boundary once and the n_c² dots run as integer BLAS-shaped batches).
+    Chunked over 1024-row strips so peak memory is O(chunk · n_c),
+    independent of cluster size — the `_jaccard_block` discipline."""
     import numpy as np
     import pandas as pd
 
@@ -5522,13 +5513,12 @@ def semdedup_centroid_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     `ann_ivf_probe_sweep` recipe), so the entire prune is
     value-hash-checked.  The within-cluster dots run as int64 numpy
     matmuls in `_semdedup_cluster_kernel` — integer arithmetic, same
-    values as the JVM fold they replaced (r15: the pairwise self-join
+    values as the JVM fold they replaced (the pairwise self-join
     form measured 20.4 s sf1 e2e vs 1.56 s for the kernel, with an
     Arrow per-pair dot at 9.9 s between them; rows identical on all
-    arms).  A Cauchy–Schwarz ‖a‖·‖b‖ ≥ τ pre-filter (r14 VERDICT
-    item 3) was checked and is a NO-OP on unit-norm embeddings: every
-    scaled norm is 1e6 exactly, so ‖a‖‖b‖ = 1e12 ≥ τ=3e11 always —
-    nothing prunes.
+    arms).  A Cauchy–Schwarz ‖a‖·‖b‖ ≥ τ pre-filter was checked and is a
+    NO-OP on unit-norm embeddings: every scaled norm is 1e6 exactly, so
+    ‖a‖‖b‖ = 1e12 ≥ τ=3e11 always — nothing prunes.
 
     Scale (100 TB): assignment is the shared `_ivf_assign` (broadcast
     K + map-side max_by); the pair scan is cluster-blocked — n²/K dot
@@ -5647,9 +5637,9 @@ def minhash_containment_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         * (F.col("n_a") + F.col("n_b"))
         / ((F.lit(16) + F.col("n_match")) * F.col("n_a"))
     )
-    # Explicit broadcasts (r14, guide §3.1): the signature sides are
-    # sample-bounded (≤ |sources|·cap rows × 16 int64) behind a
-    # localCheckpoint with no stats — SMJ'd without the hint.
+    # Explicit broadcasts: the signature sides are sample-bounded (≤
+    # |sources|·cap rows × 16 int64) behind a localCheckpoint with no
+    # stats — SMJ'd without the hint.
     return (
         o.join(F.broadcast(_side_signatures(mins, "a")), "a_id")
         .join(F.broadcast(_side_signatures(mins, "b")), "b_id")
@@ -5747,7 +5737,7 @@ def minhash_bbit_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ĵ_b = (m_b/16 − 1/4)/(1 − 1/4), where 1/4 is the accidental-collision
     probability of independent 2-bit values.  Emitted per pair NEXT TO
     the full-width estimate m/16 and the exact Jaccard, over exactly the
-    `_audit_docs_df` budget sample (the r9 code-enforced pair cap), so
+    `_audit_docs_df` budget sample (the code-enforced pair cap), so
     the table answers the storage-planning question directly: how much
     estimation error does the 30× compression actually buy at each
     similarity level — the b-bit theory says the penalty concentrates
@@ -5774,8 +5764,8 @@ def minhash_bbit_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     est_bbit = (F.col("m_bbit").cast("double") / F.lit(16) - F.lit(0.25)) / F.lit(
         0.75
     )
-    # Explicit broadcasts (r14, guide §3.1): same sample-bounded
-    # checkpointed signature sides as `minhash_containment_estimate`.
+    # Explicit broadcasts: same sample-bounded checkpointed signature
+    # sides as `minhash_containment_estimate`.
     return (
         o.join(F.broadcast(_side_signatures(mins, "a")), "a_id")
         .join(F.broadcast(_side_signatures(mins, "b")), "b_id")
@@ -6043,7 +6033,7 @@ def knn_graph_rp_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0),
     ).cast("bigint")
     # one signature pass reused by the probe side, the candidate side
-    # and both exact-dot joins (the r9 audit-lineage lesson)
+    # and both exact-dot joins (the audit-lineage lesson)
     sigs = sv.select("vec_id", "se", sig.alias("sig")).localCheckpoint()
     probes = F.array(
         F.col("sig"),
@@ -6188,14 +6178,14 @@ def centroid_similarity_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _gram_partial_kernel(it):
     """Per-task partial gram: accumulate X^T X over the task's Arrow
     batches as ONE int64 numpy matmul per batch, then emit the d x d
-    partial cells once per task (r15 opt; guide §4.2/§8).  Replaces the
-    per-row explode of d² = 4096 (di, dj, prod) structs — the gram's
-    whole-corpus fan — with d² rows PER TASK; the downstream (di, dj)
-    aggregation sums exact int64 partials, so cell values are identical
-    to the explode form (integer addition is order-free).  int64 budget:
-    products ≤ 1e8, a 10k-row batch partial ≤ 1e12 — the op-level budget
-    note covers the rest.  Raises on a non-int64 stack (null/ragged
-    embedding input) instead of silently upcasting to float64."""
+    partial cells once per task.  Replaces the per-row explode of d² =
+    4096 (di, dj, prod) structs — the gram's whole-corpus fan — with d²
+    rows PER TASK; the downstream (di, dj) aggregation sums exact int64
+    partials, so cell values are identical to the explode form (integer
+    addition is order-free).  int64 budget: products ≤ 1e8, a 10k-row
+    batch partial ≤ 1e12 — the op-level budget note covers the rest.
+    Raises on a non-int64 stack (null/ragged embedding input) instead of
+    silently upcasting to float64."""
     import numpy as np
     import pandas as pd
 
@@ -6270,7 +6260,7 @@ def embedding_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact sum with one division.
 
     Scale (100 TB): the per-task partial gram (`_gram_partial_kernel`,
-    r15: one int64 numpy X^T X matmul per Arrow batch) ships d² = 4096
+    one int64 numpy X^T X matmul per Arrow batch) ships d² = 4096
     cells per TASK into the (di, dj) aggregation — the shuffle is
     corpus-size-free, and the per-row d² struct fan the explode form
     paid (2080 structs/row through codegen) is gone; sf1 A/B e2e
@@ -6515,7 +6505,7 @@ def bloom_m_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale (100 TB): the corpus is touched once (shingle pass) and
     shuffled once — BOTH vocabularies come from a single group-by
-    with boolean membership flags (the r10 shape checkpointed the
+    with boolean membership flags (an earlier shape checkpointed the
     RAW shingle stream and paid two distinct shuffles + an anti-join
     on top), and the excluded holdout decile (grp 8) is dropped
     BEFORE the explode.  The explicit
@@ -6528,10 +6518,10 @@ def bloom_m_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     pass and the distinct exchange are the irreducible terms).
     Downstream there are ZERO wide shuffles: every m-size derives
     its bit positions by modulo from the same checkpointed hashes
-    (r10 recomputed md5 per (k, m) and shuffled 9x|neg| rows through
-    a (m, g) groupBy), membership is three broadcast joins against
-    the <=86k-row occupied set, and the final rollup is a 3-row
-    map-side collapse."""
+    (the earlier shape recomputed md5 per (k, m) and shuffled 9x|neg| rows
+    through a (m, g) groupBy), membership is three broadcast joins against
+    the <=86k-row occupied set, and the final rollup is a 3-row map-side
+    collapse."""
     d = load(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 10 != 8
     )
@@ -6642,7 +6632,7 @@ def bloom_m_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------- embedding_centroid_drift (r13)
+# --------------------------------------------------- embedding_centroid_drift
 
 @register(
     "embedding_centroid_drift",
@@ -6689,7 +6679,7 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: components floor-quantize to micro int64 BEFORE the
     per-half sums (quantize-before-sum); per-dim squared-diff terms
-    are EXPLICIT d*d products (the chi_square r12 precedent — never
+    are EXPLICIT d*d products (the chi_square precedent — never
     pow(), whose libm path may differ) floor-quantized to int64,
     one sqrt behind ROUND(6).
 
@@ -6754,7 +6744,7 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------- embedding_pca_power_iter (r13)
+# ------------------------------------------------- embedding_pca_power_iter
 
 #: Shared matvec-step SQL template: one power-iteration step v -> G v
 #: with per-term floor quantization (see the op docstring).  Rendered
@@ -6853,7 +6843,7 @@ def embedding_pca_power_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     embedding rows; re-scale the gram quantum past that (documented).
 
     Scale (100 TB): ONE corpus pass builds the gram via the per-task
-    numpy partial-gram kernel (`_gram_partial_kernel`, r15 — the
+    numpy partial-gram kernel (`_gram_partial_kernel` — the
     shuffle moves d^2 = 4096 exact int64 cells per task, the gram
     op's note); the three matvec steps are joins on the d^2-row gram
     with a broadcast d-row vector — driver-scale-free,
@@ -6866,8 +6856,8 @@ def embedding_pca_power_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("qq")
     )
     gfull = (
-        _gram_partials(q)  # r15: per-task X^T X partials, not a 4096-
-        # struct per-row explode (guide §4.2/§8; sf1 A/B e2e
+        _gram_partials(q)  # per-task X^T X partials, not a 4096-
+        # struct per-row explode (sf1 A/B e2e
         # 16.5 -> 2.3 s, identical rows — exact int64 partial sums)
         .groupBy("di", "dj")
         .agg(F.sum("ps").cast("bigint").alias("gq"))
@@ -6916,7 +6906,7 @@ def embedding_pca_power_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     ray = (
         # explicit broadcast: the localCheckpointed v3n side reports no
         # stats, so AQE would otherwise plan a sort-merge join for this
-        # 64-row x 64-row dot product (observed r13)
+        # 64-row x 64-row dot product
         v3n.join(F.broadcast(mv4), "dim")
         .agg(
             F.sum(

@@ -20,7 +20,7 @@ from migbq_spark.catalog import load
 from migbq_spark.common import DEC, tokens
 from migbq_spark.registry import register
 
-#: events.value dollars -> exact int64 cents (r12 SQL-surface batch).
+#: events.value dollars -> exact int64 cents.
 _CENTS_EV = "CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"
 
 
@@ -152,9 +152,8 @@ def regexp_extract_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def json_path_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """JSON-path extraction (idiomatic Spark `get_json_object`).
-    Upgraded from rows-only to hash-mode in r3: DuckDB's bundled json
-    extension computes the identical integer, so the path form is
-    value-hash-checkable after all."""
+    Hash-checked: DuckDB's bundled json extension computes the identical
+    integer, so the path form is value-hash-checkable after all."""
     ev = load(spark, sf_dir, "events")
     return ev.select(
         "event_id",
@@ -389,7 +388,7 @@ def props_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------- group_by_all_syntax (r11)
+# --------------------------------------------------- group_by_all_syntax
 
 @register(
     "group_by_all_syntax",
@@ -432,7 +431,7 @@ def group_by_all_syntax(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------ values_inline_dim_join (r11)
+# ------------------------------------------------ values_inline_dim_join
 
 @register(
     "values_inline_dim_join",
@@ -486,7 +485,7 @@ def values_inline_dim_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------- listagg_sorted_groups (r12)
+# --------------------------------------------------- listagg_sorted_groups
 
 @register(
     "listagg_sorted_groups",
@@ -532,7 +531,7 @@ def listagg_sorted_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------- win_first_last_ignore_nulls (r12)
+# --------------------------------------------- win_first_last_ignore_nulls
 
 @register(
     "win_first_last_ignore_nulls",
@@ -606,7 +605,7 @@ def win_first_last_ignore_nulls(
     )
 
 
-# ------------------------------------------- try_arith_null_safety (r12)
+# ------------------------------------------------- try_arith_null_safety
 
 @register(
     "try_arith_null_safety",
@@ -681,7 +680,7 @@ def try_arith_null_safety(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------ round_modes_matrix (r13)
+# ------------------------------------------------------ round_modes_matrix
 
 @register(
     "round_modes_matrix",
@@ -728,11 +727,11 @@ def round_modes_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     Determinism: inputs quantize to DECIMAL(18,2) BEFORE any rounding
     — on exact decimals .5 ties are REAL ties.  Spark's round/bround
     on DECIMAL are exact; DuckDB's round on DECIMAL is exact too, but
-    its roundbankers() is a MACRO through DOUBLE (measured r13:
-    roundbankers(9.45,1)=9.5 vs exact 9.4), so the oracle emulates
-    half-even with exact integer arithmetic on cents (floor-division
-    remainder + last-digit parity, sign-safe).  Every rendered value
-    is the decimal-cast-double Q22 idiom.
+    its roundbankers() is a MACRO through DOUBLE (roundbankers(9.45,1)=9.5
+    vs exact 9.4), so the oracle emulates half-even with exact integer
+    arithmetic on cents (floor-division remainder + last-digit parity,
+    sign-safe).  Every rendered value is the decimal-cast-double Q22
+    idiom.
 
     Scale (100 TB): the DISTINCT collapse bounds work by the value
     domain (Heaps-bounded); the mode matrix is a narrow projection
@@ -756,7 +755,7 @@ def round_modes_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("x")
 
 
-# ------------------------------------------------- map_zip_with_merge (r13)
+# ------------------------------------------------------- map_zip_with_merge
 
 @register(
     "map_zip_with_merge",
@@ -843,7 +842,7 @@ def map_zip_with_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("user_id", "event_type")
 
 
-# ------------------------------------------------------ win_cume_dist (r13)
+# ------------------------------------------------------------ win_cume_dist
 
 @register(
     "win_cume_dist",
@@ -912,7 +911,7 @@ def win_cume_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------------- regexp_count_instr (r13)
+# --------------------------------------------------------- regexp_count_instr
 
 @register(
     "regexp_count_instr",
@@ -965,7 +964,7 @@ def regexp_count_instr(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-# ---------------------------------------------- datetime_interval_arith (r13)
+# ---------------------------------------------------- datetime_interval_arith
 
 @register(
     "datetime_interval_arith",
@@ -1010,7 +1009,7 @@ def datetime_interval_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Determinism: everything is integer date arithmetic except the
     /31.0 fraction, a single fixed-order double behind ROUND(6);
-    date_trunc('week') is ISO-Monday in BOTH engines (probed r13).
+    date_trunc('week') is ISO-Monday in BOTH engines.
 
     Scale (100 TB): narrow projection in codegen; the pk-modulo
     filter pushes to the scan."""
@@ -1032,7 +1031,7 @@ def datetime_interval_arith(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("o_orderkey")
 
 
-# ----------------------------------------------- collation_lcase_dedup (r13)
+# ----------------------------------------------------- collation_lcase_dedup
 
 @register(
     "collation_lcase_dedup",
@@ -1096,7 +1095,7 @@ def collation_lcase_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -------------------------------------------------- xml_extract_fields (r13)
+# -------------------------------------------------------- xml_extract_fields
 
 @register(
     "xml_extract_fields",
@@ -1150,7 +1149,7 @@ def xml_extract_fields(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("o_orderkey")
 
 
-# ------------------------------------------------ array_sort_comparator (r13)
+# ------------------------------------------------------ array_sort_comparator
 
 @register(
     "array_sort_comparator",
@@ -1208,7 +1207,7 @@ def array_sort_comparator(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-# --------------------------------------------- split_part_extract (r14)
+# --------------------------------------------------- split_part_extract
 
 @register(
     "split_part_extract",
@@ -1262,7 +1261,7 @@ def split_part_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------- bit_agg_flags (r14)
+# ------------------------------------------------------- bit_agg_flags
 
 @register(
     "bit_agg_flags",
@@ -1345,7 +1344,7 @@ def bit_agg_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -------------------------------------- posexplode_position_profile (r14)
+# -------------------------------------------- posexplode_position_profile
 
 @register(
     "posexplode_position_profile",
@@ -1408,7 +1407,7 @@ def posexplode_position_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------- str_pad_translate_funcs (r14)
+# --------------------------------------------------- str_pad_translate_funcs
 
 @register(
     "str_pad_translate_funcs",
@@ -1462,7 +1461,7 @@ def str_pad_translate_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("p_partkey")
 
 
-# ------------------------------------------ try_cast_validation_summary (r14)
+# ------------------------------------------------ try_cast_validation_summary
 
 @register(
     "try_cast_validation_summary",
@@ -1530,7 +1529,7 @@ def try_cast_validation_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------- regexp_replace_backref (r14)
+# ------------------------------------------------- regexp_replace_backref
 
 @register(
     "regexp_replace_backref",
@@ -1583,7 +1582,7 @@ def regexp_replace_backref(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------- grouped_keyset_pagination (r14)
+# ------------------------------------------------- grouped_keyset_pagination
 
 @register(
     "grouped_keyset_pagination",

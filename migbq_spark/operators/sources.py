@@ -186,11 +186,10 @@ def jdbc_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitionColumn/lowerBound/upperBound/numPartitions — Spark emits one
     stride query per partition, which IS migbq's PK-range sweep run in
     parallel.  Production swaps the URL/driver for MSSQL (TDS) or MySQL;
-    nothing else changes.  r11 upgrade: the Derby roundtrip is
-    content-deterministic (it IS the nation table), so the op carries
-    a full hash oracle — the JDBC stride-read must return exactly the
-    source rows (type mapping included: Derby INTEGER ≡ parquet
-    int32)."""
+    nothing else changes.  The Derby roundtrip is content-deterministic
+    (it IS the nation table), so the op carries a full hash oracle — the
+    JDBC stride-read must return exactly the source rows (type mapping
+    included: Derby INTEGER ≡ parquet int32)."""
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
     url = f"jdbc:derby:memory:migbq_{tag};create=true"
     src = load(spark, sf_dir, "nation")
@@ -240,7 +239,7 @@ def bq_sink_adapter(spark: SparkSession, sf_dir: str) -> DataFrame:
           .option("intermediateFormat", "parquet")
           .mode("append").save()
 
-    r11 upgrade: the offline RESULT (the resolved load-job config +
+    The offline RESULT (the resolved load-job config +
     the source row count) is fully deterministic, so it is pinned by
     a literal hash oracle — the strongest offline check available;
     the save() path itself still needs the connector jar (rows-only
@@ -406,7 +405,7 @@ def union_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def shard_export_training(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TRAINING-SHARD export (r5): documents written as 8 gzip-NDJSON
+    """TRAINING-SHARD export: documents written as 8 gzip-NDJSON
     shards keyed by a portable hash of the PK (md5-derived, the same
     'decorrelated coin' recipe as `sample_hash_bernoulli`) —
     hash-sharding balances shard sizes regardless of id assignment
@@ -782,7 +781,7 @@ def orc_sink_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------ partition_overwrite_dynamic (r13)
+# ------------------------------------------------ partition_overwrite_dynamic
 
 @register(
     "partition_overwrite_dynamic",
@@ -862,7 +861,7 @@ def partition_overwrite_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -------------------------------------- csv_quoted_multiline_roundtrip (r13)
+# -------------------------------------------- csv_quoted_multiline_roundtrip
 
 @register(
     "csv_quoted_multiline_roundtrip",
@@ -933,7 +932,7 @@ def csv_quoted_multiline_roundtrip(
     )
 
 
-# ------------------------------------- csv_malformed_permissive_audit (r14)
+# ------------------------------------------- csv_malformed_permissive_audit
 
 @register(
     "csv_malformed_permissive_audit",
@@ -1022,7 +1021,7 @@ def csv_malformed_permissive_audit(
     )
 
 
-# ---------------------------------------------- jsonl_nested_roundtrip (r14)
+# ---------------------------------------------------- jsonl_nested_roundtrip
 
 @register(
     "jsonl_nested_roundtrip",
@@ -1113,7 +1112,7 @@ def jsonl_nested_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("o_orderkey")
 
 
-# ------------------------------------- parquet_codec_roundtrip_audit (r14)
+# ------------------------------------------- parquet_codec_roundtrip_audit
 
 @register(
     "parquet_codec_roundtrip_audit",

@@ -8,7 +8,7 @@ token pipeline here filters `token <> ''` on both sides.
 Scale notes (100 TB):
 - `dedup_hash_exact` is a plain hash-shuffle on md5(text) — linear scale.
 - `near_dup_jaccard` blocks on `source` and fans each block across
-  (source, tile_i, tile_j) tasks (r3 — no straggler on a hot source);
+  (source, tile_i, tile_j) tasks (no straggler on a hot source);
   the 100 TB path is `dedup_minhash_lsh` (pipeline.py), which buckets
   by banded minhashes so candidate pairs ≪ n².
 - `cosine_topk` broadcasts the 10 query vectors and streams candidates
@@ -33,18 +33,16 @@ _JACCARD_CHUNK = 1024
 #: Fan-out factor for the jaccard self-join: docs within a source are
 #: hashed into this many tiles and every (tile_i ≤ tile_j) pair becomes
 #: its OWN shuffle group, so one hot source spreads over
-#: T·(T+1)/2 = 36 tasks instead of a single straggler task (r2 VERDICT
-#: "What's wrong" #1).  Cost: each doc is replicated T× through the
-#: shuffle — the knob trades shuffle volume for parallelism; raise it
-#: when the hottest block ≫ cores × CHUNK.
+#: T·(T+1)/2 = 36 tasks instead of a single straggler task.  Cost: each doc
+#: is replicated T× through the shuffle — the knob trades shuffle volume
+#: for parallelism; raise it when the hottest block ≫ cores × CHUNK.
 _JACCARD_TILES = 8
 
-#: Adaptive fan-out floor (r4, per the r3 VERDICT "Next round" #5): a
-#: source is tiled ONLY when its doc count reaches this threshold;
-#: smaller sources keep the single-task path, avoiding the T×
-#: replication where a single numpy matmul already finishes in
-#: milliseconds.  One CHUNK is the natural break-even: below it the
-#: whole block is one dense diagonal matmul per task.
+#: Adaptive fan-out floor: a source is tiled ONLY when its doc count
+#: reaches this threshold; smaller sources keep the single-task path,
+#: avoiding the T× replication where a single numpy matmul already
+#: finishes in milliseconds.  One CHUNK is the natural break-even: below
+#: it the whole block is one dense diagonal matmul per task.
 _JACCARD_TILE_MIN_DOCS = _JACCARD_CHUNK
 
 
@@ -185,9 +183,9 @@ def jaccard_pairs_frame(
 ) -> DataFrame:
     """All-pairs exact Jaccard ≥ 0.8 within each ``source`` block of
     ``docs`` (columns: doc_id, source, toks); hot blocks fan out across
-    (source, tile_i, tile_j) tasks — ADAPTIVELY since r4.
+    (source, tile_i, tile_j) tasks — ADAPTIVELY.
 
-    Adaptive routing (r4, r3 VERDICT #5): a per-source count aggregate —
+    Adaptive routing: a per-source count aggregate —
     column-pruned to ``source`` only — is collected driver-side (rows =
     |sources|, the blocking-key cardinality: bounded by construction
     like cosine_topk's query matrix, and the same kind of tiny stats
@@ -203,13 +201,13 @@ def jaccard_pairs_frame(
     dropped and EVERYTHING fans (a corpus that hot wants the fan
     regardless).
 
-    Fan shape (r3, de-stragglered per the r2 VERDICT): hot docs hash
-    into ``tiles`` tiles by pmod(doc_id); a broadcast (tile_i ≤ tile_j)
-    grid replicates each doc ``tiles``× so every tile pair becomes its
-    OWN applyInPandas group — one hot source runs as T·(T+1)/2 parallel
-    tasks instead of one straggler computing every tile pair serially.
-    Each unordered doc pair lands in exactly one group:
-    (min(tile_a, tile_b), max(tile_a, tile_b)).
+    Fan shape (no straggler task): hot docs hash into ``tiles`` tiles by
+    pmod(doc_id); a broadcast (tile_i ≤ tile_j) grid replicates each doc
+    ``tiles``× so every tile pair becomes its OWN applyInPandas group —
+    one hot source runs as T·(T+1)/2 parallel tasks instead of one
+    straggler computing every tile pair serially. Each unordered doc pair
+    lands in exactly one group: (min(tile_a, tile_b), max(tile_a,
+    tile_b)).
 
     Inside a task the O(|A|·|B|) intersect runs as boolean matrix
     products in numpy over CHUNK-row sub-tiles of the A side, with the
@@ -501,7 +499,7 @@ def map_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MAP column functions — build MAP<lang, count> per source via
     map_from_entries, then exercise map_keys / element_at / size.  The
     registered projection renders the key array as a CSV string
-    (array_join over the already-sorted keys): the r6 driver run showed
+    (array_join over the already-sorted keys) because
     raw ArrayType cells crash the driver's pandas sort-based
     canonicalizer (`unhashable type: 'numpy.ndarray'`), and the
     flattened form is also exactly expressible in DuckDB (string_agg
@@ -629,7 +627,7 @@ def vec_pair_dot_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pairs.select("vec_id", F.round(dot, 4).alias("dot"))
 
 
-# ------------------------------------------------ arrays_zip_bigrams (r12)
+# ------------------------------------------------------ arrays_zip_bigrams
 
 @register(
     "arrays_zip_bigrams",
@@ -650,8 +648,8 @@ def vec_pair_dot_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def arrays_zip_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TOP-20 TOKEN BIGRAMS via the arrays_zip + explode SURFACE
-    (r12): the two shifted token slices are zipped into an array of
+    """TOP-20 TOKEN BIGRAMS via the arrays_zip + explode SURFACE:
+    the two shifted token slices are zipped into an array of
     (cur, nxt) structs ROW-LOCALLY and exploded once — the Spark
     higher-order-function idiom for adjacent-pair generation (vs the
     oracle's positional generate_series), complementing
@@ -685,7 +683,7 @@ def arrays_zip_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------- jaro_winkler_pairs (r13)
+# ---------------------------------------------------- jaro_winkler_pairs
 
 @register(
     "jaro_winkler_pairs",

@@ -916,7 +916,7 @@ def _quantile(vals, weights, q):
 )
 def rolling_quantile_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Trailing-7-day p50/p95 of event value per day, from MERGED daily
-    quantile sketches (SURVEY §7.2 r2 candidate: t-digest-style mergeable
+    quantile sketches (SURVEY §7.2 candidate: t-digest-style mergeable
     quantile windows).
 
     Two-phase sketch pipeline — the only shape that works at 100 TB:
@@ -934,19 +934,18 @@ def rolling_quantile_tdigest(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-scanning a week of raw data per window (what a naive
     `percentile() OVER (RANGE 7 days)` re-aggregation does).
 
-    PORTABLE since r9 (r8 VERDICT rows-only-residue item): centroids
-    are carried as INTEGER (Σ value-micro-units, weight) pairs, so both
-    compression levels are exact integer arithmetic — bin(p) =
-    floor(K·prevcum/W)+1 is the closed form of the equal-weight
-    searchsorted binning, order-independent because the centroid sort
-    key (mean, sum, weight) is a total order — and the only floats are
-    the final fixed-order interpolation (np.interp's exact formula,
-    mirrored in the oracle) over exact-int-derived doubles.  The DuckDB
-    oracle replays both levels with window functions, making this a
-    hash-checked MERGEABLE quantile sketch; rank-error accuracy is
-    additionally pinned vs the exact rolling percentile in
-    tests/test_pipeline.py, and the generic float kernel keeps its
-    hypothesis suite (tests/test_tdigest.py)."""
+    PORTABLE: centroids are carried as INTEGER (Σ value-micro-units,
+    weight) pairs, so both compression levels are exact integer arithmetic
+    — bin(p) = floor(K·prevcum/W)+1 is the closed form of the equal-weight
+    searchsorted binning, order-independent because the centroid sort key
+    (mean, sum, weight) is a total order — and the only floats are the
+    final fixed-order interpolation (np.interp's exact formula, mirrored
+    in the oracle) over exact-int-derived doubles.  The DuckDB oracle
+    replays both levels with window functions, making this a hash-checked
+    MERGEABLE quantile sketch; rank-error accuracy is additionally pinned
+    vs the exact rolling percentile in tests/test_pipeline.py, and the
+    generic float kernel keeps its hypothesis suite
+    (tests/test_tdigest.py)."""
     import pandas as pd
     import numpy as np
 
@@ -1542,14 +1541,13 @@ def burst_detection_twostate(spark: SparkSession, sf_dir: str) -> DataFrame:
     unchanged.  The recurrence itself previously ran as a real `WITH
     RECURSIVE`, i.e. |days| sequential frontier iterations, EACH a
     scheduler round-trip: ~10 s of pure per-step overhead at 30 days,
-    ~1,100 sequential micro-jobs for three years, flat in data size
-    (r9 VERDICT "What's wrong" #2).  A sequential DP over a frame
-    that small belongs in ONE task: a single-group `applyInPandas`
-    runs the identical integer recurrence in-process (micro-seconds
-    for centuries of days), so wall-clock is the daily collapse plus
-    one tiny task.  The recursive-CTE form is retained verbatim as
-    the DuckDB oracle, pinning the two execution strategies equal.
-    Poisson x! terms cancel between states and are dropped."""
+    ~1,100 sequential micro-jobs for three years, flat in data size.
+    A sequential DP over a frame that small belongs in ONE task: a
+    single-group `applyInPandas` runs the identical integer recurrence
+    in-process (micro-seconds for centuries of days), so wall-clock is the
+    daily collapse plus one tiny task.  The recursive-CTE form is retained
+    verbatim as the DuckDB oracle, pinning the two execution strategies
+    equal. Poisson x! terms cancel between states and are dropped."""
     import pandas as pd
 
     ev = load(spark, sf_dir, "events")
@@ -1604,7 +1602,7 @@ def burst_detection_twostate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------- holt_linear_daily
 
-#: Shared daily-counts CTE text for the r10 trend/decomposition ops.
+#: Shared daily-counts CTE text for the trend/decomposition ops.
 _DAILY_CTE = """
     daily AS (
         SELECT ROW_NUMBER() OVER (ORDER BY d) AS rn, d, x
@@ -2261,7 +2259,7 @@ def kendall_tau_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------- page_hinkley_drift_daily (r11)
+# --------------------------------------------- page_hinkley_drift_daily
 
 @register(
     "page_hinkley_drift_daily",
@@ -2369,7 +2367,7 @@ def page_hinkley_drift_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------- dow_seasonal_backtest (r11)
+# ---------------------------------------------- dow_seasonal_backtest
 
 @register(
     "dow_seasonal_backtest",
@@ -2486,7 +2484,7 @@ def dow_seasonal_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------- ts_resample_ohlc (r13)
+# ------------------------------------------------------- ts_resample_ohlc
 
 @register(
     "ts_resample_ohlc",
@@ -2554,7 +2552,7 @@ def ts_resample_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------ velocity_acceleration_daily (r13)
+# ------------------------------------------------ velocity_acceleration_daily
 
 @register(
     "velocity_acceleration_daily",
@@ -2625,7 +2623,7 @@ def velocity_acceleration_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------- rolling_corr_pair_14d (r13)
+# --------------------------------------------------- rolling_corr_pair_14d
 
 @register(
     "rolling_corr_pair_14d",
@@ -2738,7 +2736,7 @@ def rolling_corr_pair_14d(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------------- mann_kendall_trend (r13)
+# --------------------------------------------------------- mann_kendall_trend
 
 @register(
     "mann_kendall_trend",
@@ -2842,7 +2840,7 @@ def mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     return j.select("s_stat", "n", F.round(z, 4).alias("z_mk"))
 
 
-# ---------------------------------------------- win_range_interval_days (r13)
+# ---------------------------------------------------- win_range_interval_days
 
 @register(
     "win_range_interval_days",
@@ -2908,7 +2906,7 @@ def win_range_interval_days(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------ holt_winters_additive_daily (r13)
+# ------------------------------------------------ holt_winters_additive_daily
 
 @register(
     "holt_winters_additive_daily",
@@ -2977,7 +2975,7 @@ def holt_winters_additive_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     every /4 is floor-of-(int/4.0), a power-of-two division exact in
     double below 2^53 (the holt_linear precedent) — NOT `//`, whose
     DuckDB semantics truncate toward zero and diverge from Python
-    floor on the NEGATIVE seasonal terms (measured r13: -7//2 = -3
+    floor on the NEGATIVE seasonal terms (-7//2 = -3
     in DuckDB, -4 in Python).  Init: l = 7-day mean (values
     nonnegative, // safe there), b = 0, s_i = x_i*1e6 - l.
 
@@ -3031,7 +3029,7 @@ def holt_winters_additive_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     return res.orderBy("d")
 
 
-# ------------------------------------------------- rsi_indicator_daily (r14)
+# ------------------------------------------------------- rsi_indicator_daily
 
 @register(
     "rsi_indicator_daily",
@@ -3085,7 +3083,7 @@ def rsi_indicator_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     gain/loss sums are exact integer arithmetic; the single final
     division is one IEEE op, ROUND(.,4); the zone CASE compares the
     same double both engines computed; NULLIF guards the flat-window
-    0/0 (r12 rule).
+    0/0.
 
     Scale (100 TB): corpus collapses map-side to |days| rows; lag,
     windowed sums, and zoning are one pass over that tiny frame
@@ -3126,7 +3124,7 @@ def rsi_indicator_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("d")
 
 
-# ------------------------------------------------ sma_crossover_signals (r14)
+# ------------------------------------------------------ sma_crossover_signals
 
 @register(
     "sma_crossover_signals",
@@ -3220,7 +3218,7 @@ def sma_crossover_signals(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ----------------------------------------------- bollinger_bands_daily (r14)
+# ----------------------------------------------------- bollinger_bands_daily
 
 @register(
     "bollinger_bands_daily",
@@ -3303,7 +3301,7 @@ def bollinger_bands_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("d")
 
 
-# ----------------------------------------------- mase_seasonal_naive (r14)
+# ----------------------------------------------------- mase_seasonal_naive
 
 @register(
     "mase_seasonal_naive",
@@ -3380,7 +3378,7 @@ def mase_seasonal_naive(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------ atr_range_volatility (r14)
+# ------------------------------------------------------ atr_range_volatility
 
 @register(
     "atr_range_volatility",

@@ -948,7 +948,7 @@ def entropy_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
 def group_top_p_nucleus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nucleus (top-p) vocabulary per source: the smallest count-ranked
     token prefix covering ≥ 90% of the source's token mass — how a
-    tokenizer/vocab budget is chosen per corpus slice (r3).
+    tokenizer/vocab budget is chosen per corpus slice.
 
     Determinism: the membership predicate is ALL-INTEGER —
     ``10·(cum−cnt) < 9·total`` instead of ``cum/total`` float compares —
@@ -1006,7 +1006,7 @@ def group_top_p_nucleus(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sample_hash_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 10% Bernoulli sample via the portable md5 hash
-    family (r3) — the sampling twin of `train_test_split`'s PK-modulo
+    family — the sampling twin of `train_test_split`'s PK-modulo
     split.  Plain `doc_id % 100` correlates with any id-assignment
     pattern (append order, shard striping); hashing the id first gives
     a pseudo-random but REPRODUCIBLE coin per row, identical in Spark
@@ -1065,7 +1065,7 @@ def sample_hash_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def pack_sequences_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sequence-PACKING bookkeeping (r5): concatenate each source's
+    """Sequence-PACKING bookkeeping: concatenate each source's
     documents in doc_id order into one token stream and chunk it into
     fixed 256-token training sequences — per doc: its stream offset, the
     first and last chunk it lands in, and how many chunks it spans.
@@ -1268,7 +1268,7 @@ def _bpe_train(
     are invariant under each other's merges, so the sequential trainer
     would have picked the same prefix in the same order.
 
-    TIE HARDENING (r7 ADVICE): a created pair (x, ab) whose count
+    TIE HARDENING: a created pair (x, ab) whose count
     exactly TIES an accepted pair's weight could win the lexicographic
     tie-break sequentially.  Created-pair counts are bounded by their
     symbol-sharing source pairs, so the batch fetches top-(k+1) and
@@ -1358,7 +1358,7 @@ def tokenizer_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     and merge every occurrence.  Output: (rank, left, right, weight) —
     the learned merge table.
 
-    Hash-oracled since r8: the fixed merge count makes the iteration
+    Hash-oracled: the fixed merge count makes the iteration
     finitely SQL-expressible — `_bpe_trainer_oracle` unrolls all 8
     rounds in DuckDB (delimiter-string rewrite = the greedy fold) and
     the driver value-hashes the full merge table.  Also pinned in
@@ -1389,13 +1389,12 @@ def tokenizer_bpe_train_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     accepted merges in one chained-fold projection.  At the fixture's
     8 merges this runs in 2-3 rounds instead of 8; at a production
     ~50k-merge vocabulary the round count — the driver-side latency
-    wall the r6 VERDICT flagged — drops by roughly the average
-    accepted-prefix length (steep-Zipf corpora batch well because the
-    head pairs rarely share symbols).  Pinned exactly equal to the
-    sequential path in tests, and the merges/rounds ratio is asserted
-    > 1 there.
+    wall — drops by roughly the average accepted-prefix length (steep-Zipf
+    corpora batch well because the head pairs rarely share symbols).
+    Pinned exactly equal to the sequential path in tests, and the
+    merges/rounds ratio is asserted > 1 there.
 
-    Measured beyond the toy count (r7 VERDICT #3, sf1 fixture):
+    Measured beyond the toy count (sf1 fixture):
     n_merges=64 → 57 rounds (1.12×, batched == sequential exactly);
     n_merges=256 → fixture vocab exhausts at 105 learnable merges in
     98 rounds (1.07×, exact equality again).  The deep-tail ratio
@@ -1422,7 +1421,7 @@ def tokenizer_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     compression ratio chars/token — the number a tokenizer change is
     judged by before a training run.
 
-    Hash-oracled since r8 (`_bpe_apply_oracle` re-derives the merge
+    Hash-oracled (`_bpe_apply_oracle` re-derives the merge
     table in SQL and tokenizes the vocab the same way); also pinned in
     tests against the reference tokenizer on sampled docs.
 
@@ -1452,11 +1451,11 @@ def tokenizer_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     # distinct, per-doc word counts, the narrow source/n_chars rejoin)
     # and without materialization each re-runs the scan + split/filter
     # lineage (3 corpus scans → 1; a real pipeline stores the tokenized
-    # corpus anyway).  DISK_ONLY (r15, ADVICE): the token base is
-    # FACT-scale — the default MEMORY_AND_DISK checkpoint level makes
-    # it heap-resident, violating the repo's HITS §12 rule; serialized
-    # disk blocks cost ~nothing here (interleaved A/B flat) and never
-    # pressure the heap at corpus scale.
+    # corpus anyway).  DISK_ONLY: the token base is FACT-scale — the
+    # default MEMORY_AND_DISK checkpoint level makes it heap-resident,
+    # violating the repo's HITS §12 rule; serialized disk blocks cost
+    # ~nothing here (interleaved A/B flat) and never pressure the heap at
+    # corpus scale.
     base = base.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
     sym_expr = "split(concat(word, '_'), '')"
     for left, right in merges:
@@ -1490,7 +1489,7 @@ def _bpe_token_audit(base: DataFrame, vocab_toks: DataFrame) -> DataFrame:
     """Shared tail of the two BPE-apply paths: per-doc word counts join
     per-word token counts, roll up per document, then per source.
 
-    r8 shape (the r6 join-before-rollup audit was re-profiled at sf10
+    Shape (a join-before-rollup form was profiled at sf10
     and its occurrence EXPLODE alone — 27 M rows each carrying
     (doc_id, source, n_chars, word-string) — cost 101 s of the 115 s
     total): the explode now carries only int64 triples.  Per doc, the
@@ -1615,8 +1614,7 @@ def tokenizer_bpe_apply_trie(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).filter(F.size("t") >= 1)
     # Same tokenize-once materialization as the fold twin (3 corpus
     # scans → 1 across the vocab/word-count/rejoin branches).
-    # DISK_ONLY per the fact-scale rule (r15, ADVICE — see the fold
-    # twin's note).
+    # DISK_ONLY per the fact-scale rule (see the fold twin's note).
     base = base.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
     vocab_toks = (
         base.select(F.explode("t").alias("word"))
@@ -1665,7 +1663,7 @@ def tokenizer_bpe_apply_trie(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def quality_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PERPLEXITY-BASED QUALITY FILTERING (r6) — the CCNet-style action
+    """PERPLEXITY-BASED QUALITY FILTERING — the CCNet-style action
     op that `ngram_lm_bigram_probs` only computes statistics for: an
     add-one-smoothed bigram LM is TRAINED on the train split
     (doc_id % 10 < 8, the repo's split convention), then EVERY doc with
@@ -1700,20 +1698,19 @@ def quality_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("p"),
     ).select("doc_id", "p.w1", "p.w2")
-    # Materialize the LM ONCE (r14, guide §2.4/§5): tr is referenced by
-    # three plan branches (the (w1,w2) scoring join, the unigram rollup,
-    # and the vocab-size scalar), and each branch re-derived the full
-    # corpus scan + bigram explode + shuffle — the before-plan carried 4
-    # document scans for ONE logical LM build (8 inside the funnel/
-    # matrix composites that embed this op).  The bigram table is
-    # Heaps-bounded (vocab², not corpus), so one localCheckpoint stores
-    # it and every branch reads the materialized rows; the scoring
-    # joins then broadcast explicitly — the same "LM fits an executor"
-    # contract the docstring already states (checkpointed lineage
-    # reports no stats, so the planner can't make that call itself).
-    # eager=False: the size-guard tr.count() below computes
-    # every partition, so the lazy checkpoint materializes inside the
-    # count's job — one pass over the LM build instead of two.
+    # Materialize the LM ONCE: tr is referenced by three plan branches
+    # (the (w1,w2) scoring join, the unigram rollup, and the vocab-size
+    # scalar), and each branch re-derived the full corpus scan + bigram
+    # explode + shuffle — the before-plan carried 4 document scans for ONE
+    # logical LM build (8 inside the funnel/ matrix composites that embed
+    # this op).  The bigram table is Heaps-bounded (vocab², not corpus),
+    # so one localCheckpoint stores it and every branch reads the
+    # materialized rows; the scoring joins then broadcast explicitly — the
+    # same "LM fits an executor" contract the docstring already states
+    # (checkpointed lineage reports no stats, so the planner can't make
+    # that call itself). eager=False: the size-guard tr.count() below
+    # computes every partition, so the lazy checkpoint materializes inside
+    # the count's job — one pass over the LM build instead of two.
     tr = (
         pos.filter(F.pmod("doc_id", F.lit(10)) < 8)
         .groupBy("w1", "w2")
@@ -1727,7 +1724,7 @@ def quality_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         * F.lit(1.0)
         / (F.coalesce("c1", F.lit(0)) + F.col("vsz"))
     )
-    # Size-guard the broadcast hints (r15, ADVICE): unlike the audit
+    # Size-guard the broadcast hints: unlike the audit
     # ops this build side is NOT code-capped, so an unconditional hint
     # would OOM the "LM outgrows an executor" case the docstring
     # promises falls back to a co-partitioned shuffle.  The count is
@@ -1770,7 +1767,7 @@ def quality_perplexity_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def mix_temperature_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TEMPERATURE-SCALED SOURCE SAMPLING (r6) — the q_i ∝ p_i^α
+    """TEMPERATURE-SCALED SOURCE SAMPLING — the q_i ∝ p_i^α
     mixture (α = 0.5 here) multilingual corpora are sampled with so
     low-resource sources aren't drowned by head sources: per source the
     raw share p_raw, the temperature-flattened share q_temp, and the
@@ -1833,7 +1830,7 @@ def mix_temperature_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GOPHER-STYLE RULE FILTERING (r6) — the public heuristic bundle
+    """GOPHER-STYLE RULE FILTERING — the public heuristic bundle
     (Rae et al. 2021) every large text pipeline runs before model-based
     scoring, as one row-local pass with a per-rule audit: word count
     floor (>= 20 here, fixture-calibrated from the paper's 50), mean
@@ -1910,7 +1907,7 @@ def quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """NORMALIZED exact dedup (r6) — the canonicalize-then-hash pass
+    """NORMALIZED exact dedup — the canonicalize-then-hash pass
     real pipelines run BEFORE MinHash: lowercase, collapse whitespace
     runs, trim, md5 the result; docs sharing a normalized hash form a
     group whose lowest doc_id is canonical and the rest are flagged
@@ -1962,7 +1959,7 @@ def dedup_exact_normalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def winsorize_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group WINSORIZATION (r6) — the outlier-clipping pass feature
+    """Per-group WINSORIZATION — the outlier-clipping pass feature
     pipelines run before normalizing a heavy-tailed metric: exact
     interpolated p05/p95 per event_type (Spark `percentile` ≡ DuckDB
     `quantile_cont`, the `agg_percentile` parity), every row clamped
@@ -2017,7 +2014,7 @@ def winsorize_by_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def collapse_repeated_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Consecutive-duplicate-token collapse (r6) — the stutter-cleaning
+    """Consecutive-duplicate-token collapse — the stutter-cleaning
     pass text pipelines run on OCR / ASR / scraped corpora ("the the",
     "very very very"): token i is dropped iff it equals token i−1, the
     cleaned text is re-joined, and the removal count is kept as a
@@ -2067,7 +2064,7 @@ def collapse_repeated_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEAVE-ONE-OUT target encoding (r6) — the categorical-feature
+    """LEAVE-ONE-OUT target encoding — the categorical-feature
     encoding supervised pipelines use to fold a high-cardinality key
     into one numeric column without leaking the row's own label:
     te(row) = (Σ_group value − value_row) / (n_group − 1).  The group
@@ -2149,7 +2146,7 @@ def target_encoding_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise JENSEN-SHANNON divergence between source token
-    distributions (r6) — the symmetric, bounded [0, ln 2] corpus-mix
+    distributions — the symmetric, bounded [0, ln 2] corpus-mix
     diagnostic: which sources are lexically interchangeable and which
     contribute genuinely different text (the measurement behind
     `mix_weighted_sources` / `mix_temperature_sampling` weight
@@ -2254,7 +2251,7 @@ def js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def packing_efficiency_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PACKING EFFICIENCY report (r6) — the dataloader-facing summary
+    """PACKING EFFICIENCY report — the dataloader-facing summary
     over `pack_sequences_budget`'s contiguous 256-token chunk layout:
     per source, how many chunks the stream occupies, the fill rate of
     that chunk budget (1.0 − padding waste), and how many documents
@@ -2369,7 +2366,7 @@ def packing_efficiency_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def source_quality_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source CORPUS HEALTH MATRIX (r6) — the marginal-rate
+    """Per-source CORPUS HEALTH MATRIX — the marginal-rate
     dashboard next to `corpus_curation_funnel_rules`' precedence fates:
     for every source, how many docs pass the Gopher rules, how many the
     perplexity filter would drop, and how many are normalized exact
@@ -3450,29 +3447,28 @@ def bm25_top_terms_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Materialize tf once: it feeds THREE consumers (dl, df, scored) and
     # without the cut the corpus scan + explode + (doc,token) aggregate
-    # re-derive for each (r14 wave 3; interleaved A/B e2e min-of-5:
+    # re-derive for each (interleaved A/B e2e min-of-5:
     # sf0.1 1.38->1.18 s, sf1 10.03->7.13 s).  |distinct(doc,token)|
     # rows — the postings table a real engine stores anyway.
-    # Storage level stays the default (r15, ADVICE examined): DISK_ONLY
-    # here costs +37–39% executor CPU at sf0.1 AND sf1 (interleaved
-    # A/B: sf1 cpu 29.0→39.7 s, wall 10.2→11.4 s) because tf is read
-    # by THREE consumers and the serialize/deserialize round trip taxes
-    # every read; MEMORY_AND_DISK eviction keeps the heap bounded under
-    # pressure, and the 100 TB-safe form for a postings table this hot
-    # is partitioned parquet staging (the funnel's instrument), not a
-    # slower block level.
-    # eager=False: dl's eager checkpoint job right below
-    # aggregates over every tf partition, so the lazy tf checkpoint
-    # materializes inside that job — the postings lineage runs once,
-    # storing tf blocks and dl in the same pass (the former eager form
-    # paid a separate tf job plus a cached re-read for dl).
+    # Storage level stays the default: DISK_ONLY here costs +37–39%
+    # executor CPU at sf0.1 AND sf1 (interleaved A/B: sf1 cpu 29.0→39.7 s,
+    # wall 10.2→11.4 s) because tf is read by THREE consumers and the
+    # serialize/deserialize round trip taxes every read; MEMORY_AND_DISK
+    # eviction keeps the heap bounded under pressure, and the 100 TB-safe
+    # form for a postings table this hot is partitioned parquet staging
+    # (the funnel's instrument), not a slower block level. eager=False:
+    # dl's eager checkpoint job right below aggregates over every tf
+    # partition, so the lazy tf checkpoint materializes inside that job —
+    # the postings lineage runs once, storing tf blocks and dl in the same
+    # pass (the former eager form paid a separate tf job plus a cached
+    # re-read for dl).
     tf = tf.localCheckpoint(eager=False)
     # doc lengths + corpus stats derive from tf, not a second corpus pass
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")).localCheckpoint()
     stats = dl.agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
     )
-    # df = plain COUNT, not COUNT(DISTINCT doc_id) (r15, guide §1.2):
+    # df = plain COUNT, not COUNT(DISTINCT doc_id):
     # tf is KEYED by (doc_id, source, token) with source functionally
     # dependent on doc_id (both project from one documents row, doc_id
     # is the fixture PK), so (doc_id, token) is unique and the two are
@@ -4622,7 +4618,7 @@ def kfold_assignment_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------- sample_fixed_k_hash (r11)
+# ------------------------------------------------- sample_fixed_k_hash
 
 @register(
     "sample_fixed_k_hash",
@@ -4668,7 +4664,7 @@ def sample_fixed_k_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -------------------------------------- decision_stump_exact_split (r11)
+# -------------------------------------------- decision_stump_exact_split
 
 @register(
     "decision_stump_exact_split",
@@ -4812,7 +4808,7 @@ def decision_stump_exact_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ----------------------------------------------- span_corruption_plan (r12)
+# ----------------------------------------------------- span_corruption_plan
 
 @register(
     "span_corruption_plan",
@@ -4907,7 +4903,7 @@ def span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------ lang_rebalance_plan (r12)
+# ------------------------------------------------ lang_rebalance_plan
 
 @register(
     "lang_rebalance_plan",
@@ -4975,7 +4971,7 @@ def lang_rebalance_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("lang")
 
 
-# -------------------------------------- dup_cluster_size_histogram (r12)
+# -------------------------------------------- dup_cluster_size_histogram
 
 @register(
     "dup_cluster_size_histogram",
@@ -4999,7 +4995,7 @@ def dup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     few mega-clusters) and how many docs dedup would REMOVE per bucket
     — the corpus-shape diagnostic read before choosing between
     pair-based and CC-based dedup (`dedup_hash_exact` lists survivors;
-    this reports the distribution; the r3 LSH lesson — one 2.6k-doc
+    this reports the distribution; the LSH lesson — one 2.6k-doc
     mega-cluster made pair listing quadratic — is exactly what this
     histogram detects in advance).
 
@@ -5028,7 +5024,7 @@ def dup_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ----------------------------------------------------- quality_c4_rules (r13)
+# ----------------------------------------------------------- quality_c4_rules
 
 @register(
     "quality_c4_rules",
@@ -5124,7 +5120,7 @@ def quality_c4_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -------------------------------------------- ngram_lm_stupid_backoff (r13)
+# -------------------------------------------------- ngram_lm_stupid_backoff
 
 @register(
     "ngram_lm_stupid_backoff",
@@ -5239,7 +5235,7 @@ def ngram_lm_stupid_backoff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ----------------------------------------- fertility_chars_per_token (r13)
+# ----------------------------------------------- fertility_chars_per_token
 
 @register(
     "fertility_chars_per_token",
@@ -5317,7 +5313,7 @@ def fertility_chars_per_token(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------- upsample_repeat_plan (r13)
+# --------------------------------------------------- upsample_repeat_plan
 
 @register(
     "upsample_repeat_plan",
@@ -5409,7 +5405,7 @@ def upsample_repeat_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------- weighted_jaccard_idf (r13)
+# --------------------------------------------------- weighted_jaccard_idf
 
 @register(
     "weighted_jaccard_idf",
@@ -5549,7 +5545,7 @@ def weighted_jaccard_idf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------ length_bucket_batching_plan (r14)
+# ------------------------------------------------ length_bucket_batching_plan
 
 @register(
     "length_bucket_batching_plan",
@@ -5631,7 +5627,7 @@ def length_bucket_batching_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("bkt")
 
 
-# ---------------------------------------------- sentence_split_stats (r14)
+# ---------------------------------------------------- sentence_split_stats
 
 @register(
     "sentence_split_stats",
@@ -5700,7 +5696,7 @@ def sentence_split_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# -------------------------------------------- rouge2_adjacent_recall (r14)
+# -------------------------------------------------- rouge2_adjacent_recall
 
 @register(
     "rouge2_adjacent_recall",
@@ -5825,7 +5821,7 @@ def rouge2_adjacent_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------- char_ngram_profile (r14)
+# --------------------------------------------------- char_ngram_profile
 
 @register(
     "char_ngram_profile",
@@ -5894,7 +5890,7 @@ def char_ngram_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ----------------------------------------- stopword_density_quality (r14)
+# ----------------------------------------------- stopword_density_quality
 
 _STOPWORDS = (
     "the,a,an,and,or,but,of,to,in,on,for,with,at,by,from,as,is,was,are,"
@@ -5976,7 +5972,7 @@ def stopword_density_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------- readability_fk_score (r14)
+# ------------------------------------------------- readability_fk_score
 
 @register(
     "readability_fk_score",

@@ -352,7 +352,7 @@ def percent_of_total_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def win_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IGNORE NULLS window navigation (r3): previous/next non-null
+    """IGNORE NULLS window navigation: previous/next non-null
     reading via LAG/LEAD IGNORE NULLS and the second-ever non-null via
     running-frame NTH_VALUE IGNORE NULLS — the §2.E completion beside
     `locf_impute`'s LAST_VALUE form (error events model NULL readings).
@@ -383,7 +383,7 @@ def win_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------ session_window_batch (r13)
+# ------------------------------------------------------ session_window_batch
 
 @register(
     "session_window_batch",

@@ -97,20 +97,20 @@ def _ship_package(spark: SparkSession) -> None:
     zpath = Path(tmp).with_name("migbq_spark_pkg.zip")
     os.replace(tmp, zpath)
     sc.addPyFile(str(zpath))
-    # Runtime repair for the transformWithState DRIVER-side transport
-    # (r12 VERDICT "Next round" #3): StreamingPythonRunner spawns its
-    # worker via PythonWorkerFactory, whose PYTHONPATH merge reads the
-    # pickled function's envVars — which is ``sc.environment``, a plain
-    # Python dict consulted at UDF-WRAP time (udf._wrap_function ->
-    # _prepare_for_python_RDD -> sc.environment).  addPyFile includes do
-    # NOT reach that spawned process, and the JVM's inherited PYTHONPATH
-    # is frozen at launch — but mutating sc.environment here works on an
-    # already-launched bare session because the merge happens when the
-    # worker spawns.  Measured this round: a bare local[4] session that
-    # previously warned STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE
-    # takes the REAL transport with this set (_TWS_LAST_PATH == "real").
-    # Executor-side workers also see the entry; a nonexistent path on a
-    # real cluster's workers is inert (addPyFile still ships the pkg).
+    # Runtime repair for the transformWithState DRIVER-side transport:
+    # StreamingPythonRunner spawns its worker via PythonWorkerFactory,
+    # whose PYTHONPATH merge reads the pickled function's envVars — which
+    # is ``sc.environment``, a plain Python dict consulted at UDF-WRAP
+    # time (udf._wrap_function -> _prepare_for_python_RDD ->
+    # sc.environment).  addPyFile includes do NOT reach that spawned
+    # process, and the JVM's inherited PYTHONPATH is frozen at launch —
+    # but mutating sc.environment here works on an already-launched bare
+    # session because the merge happens when the worker spawns.  Measured
+    # this round: a bare local[4] session that previously warned
+    # STREAMING_PYTHON_RUNNER_INITIALIZATION_FAILURE takes the REAL
+    # transport with this set (_TWS_LAST_PATH == "real"). Executor-side
+    # workers also see the entry; a nonexistent path on a real cluster's
+    # workers is inert (addPyFile still ships the pkg).
     repo_root = str(Path(__file__).resolve().parent.parent)
     env_pp = sc.environment.get("PYTHONPATH", "")
     if repo_root not in env_pp.split(os.pathsep):

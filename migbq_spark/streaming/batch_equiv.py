@@ -130,13 +130,12 @@ def session_windows(ev: DataFrame) -> DataFrame:
 )
 def stream_session_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user sessions with 10-min inactivity gap.  Boundary convention
-    VERIFIED empirically on pyspark 4.1.2 (r3): two events exactly 10 min
+    VERIFIED empirically on pyspark 4.1.2: two events exactly 10 min
     apart MERGE into one session (end = last + gap; merge condition is
     new_start <= prev_end) — so the oracle's strict
-    ``> INTERVAL 10 MINUTE`` gap predicate is correct, contra the r2
-    ADVICE suggestion of ``>=``.  The islands running sum orders by
-    (ts, event_id) to stay deterministic under duplicate (user_id, ts)
-    pairs (that half of the ADVICE was right and is applied)."""
+    ``> INTERVAL 10 MINUTE`` gap predicate is correct, not ``>=``.  The
+    islands running sum orders by (ts, event_id) to stay deterministic
+    under duplicate (user_id, ts) pairs."""
     return session_windows(load(spark, sf_dir, "events"))
 
 
@@ -200,7 +199,7 @@ def session_correlate(ev: DataFrame) -> DataFrame:
 def stream_session_correlate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Within-session event-type correlation: for every per-user 10-min-gap
     session, the click/view/purchase mix and a browse→purchase conversion
-    flag — the session-window form of funnel conversion (SURVEY §7.2 r2
+    flag — the session-window form of funnel conversion (SURVEY §7.2
     candidate: session-window stream correlation).
 
     Scale (100 TB stream): identical code runs on a watermarked stream —
@@ -222,7 +221,7 @@ def stream_dedup_watermark(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet, withWatermark + dropDuplicates, drained synchronously with
     an availableNow trigger into a memory sink.
 
-    Hash-oracled since r8 via a deterministic projection: WHICH
+    Hash-oracled via a deterministic projection: WHICH
     duplicate survives is nondeterministic by spec (SURVEY §7.5), but
     the surviving KEY SET is exact and the survivor must be a real
     source row.  So the driver-facing output inner-joins the drained

@@ -1,5 +1,5 @@
 """Best-effort `google.protobuf` bootstrap for the transformWithState
-transport (r4, r3 VERDICT "Next round" #3).
+transport.
 
 pyspark 4.1.2's `transformWithStateInPandas` Python worker speaks to the
 JVM state server with protobuf messages
@@ -64,7 +64,7 @@ def ensure_protobuf() -> bool:
         # already-imported google.* REGULAR package (google.auth,
         # google.cloud) is left alone — evicting a live module orphans
         # its object and a later re-import would create a duplicate,
-        # inconsistent copy (r4 ADVICE).
+        # inconsistent copy.
         for m in [
             m
             for m in sys.modules

@@ -75,7 +75,7 @@ def _warn_tws_fallback(op: str, exc: Exception) -> None:
     """Surface a real-transport failure before demoting to the in-process
     fallback: results stay hash-correct either way, but a silent demotion
     would hide a transport regression from every run that doesn't assert
-    `_TWS_LAST_PATH == "real"` (r4 ADVICE)."""
+    `_TWS_LAST_PATH == "real"`."""
     warnings.warn(
         f"{op}: transformWithState real transport failed"
         f" ({type(exc).__name__}: {exc}); using in-process fallback",
@@ -149,7 +149,7 @@ def run_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 def run_streaming_sliding_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of `sliding_distinct_hll`: approx-distinct users per
     24 h/6 h sliding window as ONE streaming register aggregation over
-    the PORTABLE md5-HLL family (r9 — shares `_phll_rows` /
+    the PORTABLE md5-HLL family (shares `_phll_rows` /
     `_phll_window_estimate` with the batch op, so both build
     bit-identical registers).  Register-wise MAX is commutative-monoid
     state, so the micro-batch partials Spark maintains per (window,
@@ -249,7 +249,7 @@ def stream_stateful_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: RocksDB state-store provider (SURVEY §7.2 r2 candidate): off-heap,
+#: RocksDB state-store provider (SURVEY §7.2 candidate): off-heap,
 #: disk-backed streaming state with incremental (changelog) checkpoints —
 #: the provider a 100 TB stateful stream needs, where per-key state across
 #: billions of keys cannot live on the JVM heap (the default
@@ -509,9 +509,8 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def kafka_source_adapter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Production Kafka ingestion surface — the modern counterpart of
-    migbq's RDBMS polling loop.  Two layers, both exercised (r10
-    VERDICT "Next round" #4 — the Derby-JDBC precedent applied to the
-    stream source):
+    migbq's RDBMS polling loop.  Two layers, both exercised (the
+    Derby-JDBC precedent applied to the stream source):
 
     1. The PRODUCTION reader plan is built exactly as a cluster with
        the spark-sql-kafka package would configure it (brokers /
@@ -526,8 +525,8 @@ def kafka_source_adapter(spark: SparkSession, sf_dir: str) -> DataFrame:
        (partitions), streamed with maxFilesPerTrigger=1 (the
        maxOffsetsPerTrigger backpressure analogue — 4 real
        micro-batches), drained availableNow into a memory sink, and
-       HASH-CHECKED against the batch oracle (upgraded from rows-only
-       in r11: the exercised path is deterministic end-to-end).
+       HASH-CHECKED against the batch oracle (the exercised path is
+       deterministic end-to-end).
 
     Production call (requires the spark-sql-kafka package):
         spark.readStream.format("kafka")
@@ -665,12 +664,12 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 
-# --------------------------------------------- transformWithState (r3)
+# -------------------------------------------------- transformWithState
 #
 # Spark 4's arbitrary-state API (typed state handles, timers, processor
 # lifecycle) — the successor to applyInPandasWithState.  Its Python
 # worker transport needs `google.protobuf`, absent from site-packages in
-# this container — but since r4 `pbcompat.ensure_protobuf()` bootstraps
+# some installs — `pbcompat.ensure_protobuf()` then bootstraps
 # the google-cloud-sdk's vendored pure-Python protobuf 6.32 (plus a
 # narrow same-major version-validator tolerance for Spark's 6.33
 # gencode), so the REAL transformWithStateInPandas transport now runs
@@ -861,7 +860,7 @@ def _drive_inprocess(processor_cls: type):
 )
 def stream_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user progress via the Spark 4 `transformWithStateInPandas`
-    arbitrary-state API (r3) — see the module comment above for the
+    arbitrary-state API — see the module comment above for the
     protobuf transport gate; both paths run the SAME
     UserProgressProcessor and produce the same batching-invariant final
     state, hash-checked against the batch SQL oracle.
@@ -982,7 +981,7 @@ class SessionTimeoutProcessor(StatefulProcessor):
     closes iff deadline ≤ final watermark (= global max event time under
     a 0-second delay).
 
-    Boundary (r4 ADVICE, verified empirically on pyspark 4.1.2): Spark's
+    Boundary (verified empirically on pyspark 4.1.2): Spark's
     timer-expiry comparison is INCLUSIVE — a timer registered at exactly
     the final watermark fires (crafted two-chunk fixture with one user's
     deadline == global max event time: the session emitted with
@@ -1069,7 +1068,7 @@ class SessionTimeoutProcessor(StatefulProcessor):
 )
 def stream_tws_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Closed per-user sessions (gap = 24 h) via transformWithState
-    EVENT-TIME TIMERS (r4) — the timer surface of the arbitrary-state
+    EVENT-TIME TIMERS — the timer surface of the arbitrary-state
     API (registerTimer / listTimers / deleteTimer /
     handleExpiredTimer), run through the real protobuf transport with a
     0-second watermark.  The closed-session SET is batching-invariant
@@ -1213,7 +1212,7 @@ class UserTypeCountsProcessor(StatefulProcessor):
 )
 def stream_tws_mapstate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user per-event-type progress via transformWithStateInPandas
-    **MapState** (r4) — with `stream_stateful_tws` (ValueState),
+    **MapState** — with `stream_stateful_tws` (ValueState),
     `stream_tws_liststate` (ListState) and `stream_tws_timers` (timers),
     the full typed-state surface of the arbitrary-state API now runs
     hash-checked through the real protobuf transport.  Each map entry's
@@ -1259,8 +1258,7 @@ _TWS_TOP3_OUT_SCHEMA = "user_id bigint, n_seen bigint, top3 string"
 class UserTop3Processor(StatefulProcessor):
     """Per-user LAST-3 events by event_id via typed ListState plus a
     ValueState row counter — exercises the ListState surface of the
-    arbitrary-state API through the real protobuf transport (the r3
-    in-process era could only evidence ValueState).  Top-3-by-event_id
+    arbitrary-state API through the real protobuf transport.  Top-3-by-event_id
     is a union-merge (associative, commutative, monotone), and the
     count is monotone, so the final emission is micro-batch-boundary-
     invariant — hash-checkable against batch SQL."""
@@ -1309,7 +1307,7 @@ class UserTop3Processor(StatefulProcessor):
 )
 def stream_tws_liststate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user last-3 event ids via transformWithStateInPandas
-    **ListState** (r4) — the typed-list sibling of `stream_stateful_tws`,
+    **ListState** — the typed-list sibling of `stream_stateful_tws`,
     proving the real protobuf transport round-trips list-valued state
     (put / get / exists over multi-row state), not just scalar
     ValueState.  Same transport gate and in-process fallback story as
@@ -1474,7 +1472,7 @@ def stream_pk_sync_loadjob(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ------------------------------------------------- TTL state (r6)
+# ------------------------------------------------------ TTL state
 
 _TTL_OUT_SCHEMA = (
     "user_id bigint, n_batch bigint,"
@@ -1549,7 +1547,7 @@ class TtlProbeProcessor(StatefulProcessor):
     """,
 )
 def stream_tws_value_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STATE TTL through the real transformWithState transport (r6) —
+    """STATE TTL through the real transformWithState transport —
     the last piece of the Spark 4 arbitrary-state surface after
     Value/List/MapState and timers: `getValueState(..., ttlDurationMs)`
     with the RocksDB provider enforcing expiry at read time.  Two runs

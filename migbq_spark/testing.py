@@ -70,14 +70,14 @@ def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
 
 def _pd_canon(pdf) -> tuple[list[str], list[str], list[str], list[str]]:
     """Driver-faithful canonicalization of a pandas frame: columns sorted
-    by name, each column rendered with pandas ``astype(str)`` (verified
-    against the r1 driver outcomes: midnight datetime64 renders date-only
+    by name, each column rendered with pandas ``astype(str)`` (as the
+    driver renders them: midnight datetime64 renders date-only
     — so Spark ``date`` objects match DuckDB DATE→datetime64 — while
     ``Decimal("5.00")`` vs ``5.0`` and int64 ``5`` vs float64 ``5.0``
     stay distinct, exactly the splits the driver's hash showed), rows
     sorted.  Returns (cols, rows, dtypes, unsafe) where ``unsafe`` lists
     columns holding ndarray/list/dict cells — those crash the driver's
-    sort-based canonicalizer outright (r1 ``array_agg_sorted``)."""
+    sort-based canonicalizer outright (e.g. ``array_agg_sorted``)."""
     cols = sorted(pdf.columns)
     pdf = pdf[cols]
     unsafe = []
@@ -86,7 +86,7 @@ def _pd_canon(pdf) -> tuple[list[str], list[str], list[str], list[str]]:
             # Scan the FULL column (not a head sample): an op whose first
             # non-scalar cell appears past row N would otherwise pass this
             # check yet still crash the real driver canonicalizer — the
-            # exact r6 failure mode this function exists to catch.
+            # exact failure mode this function exists to catch.
             if pdf[c].map(
                 lambda v: isinstance(v, (list, tuple, dict))
                 or type(v).__name__ == "ndarray"
@@ -105,8 +105,8 @@ def _pd_canon(pdf) -> tuple[list[str], list[str], list[str], list[str]]:
 def compare_driver(spark_df, con: duckdb.DuckDBPyConnection, sql: str) -> dict:
     """Strict, driver-faithful compare: ``spark_df.toPandas()`` against
     ``con.execute(sql).df()`` — the exact frames the driver's t2 harness
-    hashes.  The r1 gap was using ``fetchall()`` (which preserves Decimal
-    and date objects DuckDB's ``.df()`` does not); this closes it.
+    hashes.  ``fetchall()`` would preserve Decimal and date objects
+    that DuckDB's ``.df()`` does not, so it is not used here.
 
     ok requires: same sorted column names, same row count, identical
     ``str()``-rendered sorted rows, and no driver-unsafe (array/map)

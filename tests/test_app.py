@@ -90,6 +90,25 @@ def test_check_clean_and_repair(spark, cfg_path, tmp_path):
     assert fwd.check()["events"].filter("mismatch").count() == 0
 
 
+def test_check_ranges_cover_keys_at_and_below_zero(spark, tmp_path):
+    """Each key is reported in the range ``(range_lo, range_lo + batch_size]``
+    that holds it, also for keys <= 0."""
+    from migbq_spark.app import Forwarder, PipelineConfig
+
+    src = tmp_path / "src"
+    _keys(spark, -25, 26).write.parquet(str(src / "t.parquet"))
+    fwd = Forwarder(spark, PipelineConfig.from_dict({
+        "in": {"type": "parquet", "path": str(src), "tables": {"t": {"pk": "id"}},
+               "batch_size": 10},
+        "out": {"type": "parquet", "path": str(tmp_path / "dest")},
+        "meta": {"path": str(tmp_path / "meta")},
+    }))
+    rows = fwd.check()["t"].collect()
+    assert {r.range_lo for r in rows} == {-30, -20, -10, 0, 10, 20}
+    for r in rows:
+        assert r.n_src == sum(r.range_lo < k <= r.range_lo + 10 for k in range(-25, 26))
+
+
 def test_full_refresh_resets_progress(spark, cfg_path, sf_dir):
     fwd = _forwarder(spark, cfg_path)
     n_src = spark.read.parquet(f"{sf_dir}/nation.parquet").count()
@@ -311,17 +330,17 @@ def test_sync_crash_recovers_exactly_once(spark, tmp_path, monkeypatch, step, af
     assert not any((tmp_path / "dest" / "t").glob("_staging/*"))  # nothing left staged
 
 
-def test_bench_final_line_parses_small():
-    """r11 (r10 VERDICT "Next round" #6): bench.py's LAST stdout line is
-    the driver's whole benchmark signal — r9 shipped a final line the
-    driver's tail parser rejected and the round graded blind.  Pin the
-    contract: subprocess-run bench at the smallest SF and assert the
-    last line is valid JSON < 4 kB with the required keys."""
-    import json
+def test_bench_final_line_parses_small(tmp_path):
+    """bench.py's last stdout line is the driver's whole benchmark signal:
+    run it at the smallest SF and assert the last line is valid JSON
+    < 4 kB with the required keys, and that the run writes no file into
+    the repo root."""
     import os
     import subprocess
     import sys
     from pathlib import Path
+
+    import bench
 
     repo = Path(__file__).resolve().parents[1]
     env = dict(
@@ -329,43 +348,21 @@ def test_bench_final_line_parses_small():
         SPARK_GRAFT_SF_DIR="/root/testdata/sf0.001",
         SPARK_GRAFT_CPUS="8",
     )
-    # bench.py unconditionally rewrites the repo-root BENCH_DETAIL.json
-    # — snapshot and restore it so this smallest-SF smoke run cannot
-    # clobber the committed sf0.1 round artifact.
-    detail = repo / "BENCH_DETAIL.json"
-    saved = detail.read_text() if detail.exists() else None
-    try:
-        proc = subprocess.run(
-            [sys.executable, str(repo / "bench.py")],
-            capture_output=True,
-            text=True,
-            timeout=900,
-            env=env,
-        )
-    finally:
-        if saved is not None:
-            detail.write_text(saved)
-        else:
-            # No pre-existing artifact: remove the smoke run's output so
-            # a fresh checkout is left clean (r11 ADVICE low).
-            detail.unlink(missing_ok=True)
+    before = sorted(p.name for p in repo.iterdir())
+    proc = subprocess.run(
+        [sys.executable, str(repo / "bench.py")],
+        capture_output=True,
+        text=True,
+        timeout=900,
+        env=env,
+        cwd=tmp_path,  # Spark's cwd-relative files (derby.log, ...) land here
+    )
     assert proc.returncode == 0, proc.stderr[-2000:]
+    assert sorted(p.name for p in repo.iterdir()) == before
     last = proc.stdout.strip().splitlines()[-1]
     assert len(last) < 4096, f"final line {len(last)} bytes"
     parsed = json.loads(last)
-    for key in ("metric", "value", "unit", "queries", "sf", "box_factor"):
+    for key in ("metric", "value", "unit", "queries", "sf"):
         assert key in parsed, f"missing {key}"
     assert parsed["unit"] == "sec" and parsed["value"] > 0
-    # r12 (r11 VERDICT "Next round" #2): the same-code calibration
-    # anchor must ride every emission so cross-round wall-clock is
-    # box-normalizable; a zero/negative factor means the probe broke.
-    assert parsed["box_factor"] > 0
-    # r13 (r12 ADVICE): the DETAIL emission must carry spark_version
-    # next to calibration_sec so a Spark-upgrade-driven probe shift is
-    # distinguishable from a box-speed shift when re-anchoring.
-    detail_line = next(
-        ln for ln in proc.stdout.splitlines() if ln.startswith("DETAIL ")
-    )
-    detail_parsed = json.loads(detail_line[len("DETAIL "):])
-    assert "spark_version" in detail_parsed
-    assert "calibration_sec" in detail_parsed
+    assert set(parsed["queries"]) == set(bench.HEADLINE)
