@@ -1,7 +1,8 @@
 """Shared expression helpers enforcing the cross-engine determinism rules
 (SURVEY.md §7.4): DECIMAL-before-aggregation for money doubles, identical
-aliasing on both engine sides, unique window tiebreaks, and the one
-corpus tokenization rule (`tokens`).
+aliasing on both engine sides, unique window tiebreaks, the one corpus
+tokenization rule (`tokens`), and the vector kernels: the one embedding
+fixed-point quantizer (`fixed_point`) and the two dot folds (`dot`, `idot`).
 """
 
 from __future__ import annotations
@@ -26,17 +27,49 @@ def tokens() -> Column:
     return F.filter(F.split("text", " "), lambda t: t != "")
 
 
+def fixed_point(scale: float = 1000000.0) -> Column:
+    """The one fixed-point quantization of the ``embedding`` column: every
+    component as ``floor(x·scale)`` int64 — micro-units (10⁶) unless an operator
+    documents another scale.  Components arrive as float32, so the
+    float→double product is exact IEEE in both engines and everything
+    downstream of it is integer arithmetic no engine can reorder into a
+    different answer.  The DuckDB oracles spell the same rule as
+    ``list_transform(embedding, x -> CAST(FLOOR(CAST(x AS DOUBLE) *
+    1000000.0) AS BIGINT))``."""
+    return F.transform(
+        "embedding",
+        lambda x: F.floor(x.cast("double") * F.lit(scale)).cast("bigint"),
+    )
+
+
+def dot(a: str | Column, b: str | Column) -> Column:
+    """Σ a[i]·b[i] over two numeric arrays, each component widened to
+    double before multiplying, folded left to right from ``0.0`` —
+    one fused JVM-side chain, no UDF.  The fold order is fixed, so a
+    caller that compares with an engine summing in another order rounds
+    the result (the float-sensitive convention)."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def idot(a: str | Column, b: str | Column) -> Column:
+    """Exact int64 Σ a[i]·b[i] over two integer arrays (a ``fixed_point``
+    vector, a ±1 hyperplane, an int8 code): integer addition is
+    order-free, so the value is bit-identical in every engine."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y),
+        F.lit(0).cast("bigint"),
+        lambda acc, x: acc + x,
+    )
+
+
 def dec(col: str | Column) -> Column:
     """CAST(col AS DECIMAL(18,2)) — apply before aggregating money doubles."""
     c = F.col(col) if isinstance(col, str) else col
     return c.cast(DEC)
-
-
-def as_dec(col: Column) -> Column:
-    """Cast a computed aggregate back to DECIMAL(18,2) so both engines
-    render the same scale (intermediate decimal arithmetic widens scale
-    differently across engines)."""
-    return col.cast(DEC)
 
 
 def cents(col: str | Column) -> Column:

@@ -29,6 +29,15 @@ Every near-dup operator and audit composes ONE builder per step:
 | sketch estimates     | `_side_signatures` + `_n_match` |
 | connected components | `_cc_twostar_components` (run to the fixpoint) |
 
+The embedding operators do the same:
+
+| step                 | builder |
+| quantize             | `common.fixed_point` (floor(x·10⁶) int64), `_scaled_emb`, `_quantized_embeddings` |
+| dot                  | `common.dot` (double products) or `common.idot` (exact int64) |
+| sign-LSH signature   | `_rp_signature` over the `_rp_sign` hyperplanes, `_rp_portable_sigs` |
+| multi-probe top-k    | `_rp_probe_topk` (hamming-1 probes, pair dedup, rank) |
+| IVF assign           | `_ivf_assign` (broadcast centroids, map-side max_by) |
+
 Scale notes (100 TB): every op is explode → groupBy → (bucketed)
 self-join — linear shuffles plus a join whose size is controlled by the
 banding/cell parameters, never a full n² pair enumeration.  The bucket
@@ -54,7 +63,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from migbq_spark.catalog import load
-from migbq_spark.common import tokens
+from migbq_spark.common import dot, fixed_point, idot, tokens
 from migbq_spark.registry import register
 
 #: Previous invocation's persisted token base (unpersisted on the next
@@ -598,14 +607,9 @@ def near_dup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("b_id"), F.col("label").alias("b_label"),
         F.col("embedding").alias("b_emb"),
     )
-    dot = F.aggregate(
-        F.zip_with("a_emb", "b_emb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     return (
         a.join(b, (F.col("label") == F.col("b_label")) & (F.col("a_id") < F.col("b_id")))
-        .select("a_id", "b_id", "label", F.round(dot, 4).alias("sim"))
+        .select("a_id", "b_id", "label", F.round(dot("a_emb", "b_emb"), 4).alias("sim"))
         .filter(F.col("sim") >= 0.3)
     )
 
@@ -671,15 +675,13 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_pipeline.py."""
     e = load(spark, sf_dir, "embeddings")
     cents = _ivf_trained_centroids(spark, e)
-    dot = F.aggregate(
-        F.zip_with("embedding", "cent_emb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     w_assign = Window.partitionBy("vec_id").orderBy(F.desc("cdot"), F.asc("cent_id"))
     assigned = (
         e.join(F.broadcast(cents))
-        .select("vec_id", "label", "embedding", "cent_id", dot.alias("cdot"))
+        .select(
+            "vec_id", "label", "embedding", "cent_id",
+            dot("embedding", "cent_emb").alias("cdot"),
+        )
         .withColumn("rn", F.row_number().over(w_assign))
         .filter(F.col("rn") == 1)
         .select("vec_id", "embedding", "cent_id")
@@ -688,44 +690,121 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = e.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_emb")
     )
-    qdot = F.aggregate(
-        F.zip_with("q_emb", "cent_emb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
     w_probe = Window.partitionBy("q_id").orderBy(F.desc("qcdot"), F.asc("cent_id"))
     probes = (
         q.join(F.broadcast(cents))
-        .select("q_id", "q_emb", "cent_id", qdot.alias("qcdot"))
+        .select("q_id", "q_emb", "cent_id", dot("q_emb", "cent_emb").alias("qcdot"))
         .withColumn("rn", F.row_number().over(w_probe))
         .filter(F.col("rn") <= _IVF_N_PROBE)
         .select("q_id", "q_emb", "cent_id")
-    )
-    sim = F.aggregate(
-        F.zip_with("q_emb", "embedding", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
     )
     w_rank = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("n_id"))
     return (
         probes.join(assigned, "cent_id")
         .filter(F.col("q_id") != F.col("vec_id"))
         .select(
-            "q_id", F.col("vec_id").alias("n_id"), F.round(sim, 4).alias("sim")
+            "q_id",
+            F.col("vec_id").alias("n_id"),
+            F.round(dot("q_emb", "embedding"), 4).alias("sim"),
         )
         .withColumn("rnk", F.row_number().over(w_rank))
         .filter(F.col("rnk") <= 5)
     )
 
 
+_RP_PLANES = 12
+
+
+def _rp_sign(p: int, j: int) -> int:
+    """±1 hyperplane entry for (plane p, dim j): md5-parity of the first
+    digest byte — reproducible in any engine with an md5 function, no
+    RNG state (same family as the portable minhash seeds).  The DuckDB
+    oracles spell it as ``md5('rp:' || p || ':' || j)``."""
+    import hashlib as _hl
+
+    return 1 if _hl.md5(f"rp:{p}:{j}".encode()).digest()[0] % 2 == 0 else -1
+
+
+def _rp_signature(col: str, fold) -> F.Column:
+    """The sign-LSH signature of vector column ``col``: bit p is set iff
+    ``fold(col, plane p) > 0`` over the 12 `_rp_sign` hyperplanes,
+    packed into a bigint.  ``fold`` is `common.dot` for float vectors
+    and `common.idot` for `common.fixed_point` vectors.  Each projection
+    is one fold over an array literal of signs — 12 compact
+    higher-order expressions instead of 768 inlined products (whose
+    codegen compile alone measured ~7 s of a cold call)."""
+    return sum(
+        (
+            F.when(
+                fold(col, F.array(*[F.lit(_rp_sign(p, j)) for j in range(64)]))
+                > 0,
+                F.lit(1 << p),
+            ).otherwise(F.lit(0))
+            for p in range(_RP_PLANES)
+        ),
+        F.lit(0),
+    ).cast("bigint")
+
+
+def _rp_probe_topk(
+    sigs: DataFrame, vec: str, sim, sim_name: str, k: int, queries=None
+) -> DataFrame:
+    """(q_id, n_id, <sim_name>, rnk) — the sign-LSH multi-probe search:
+    each query row of ``sigs`` (vec_id, ``vec``, sig) probes its own
+    bucket plus all 12 hamming-1 buckets, candidate pairs are deduped
+    (a neighbor can share several probed buckets), scored by
+    ``sim(q_vec, n_vec)`` and ranked (score DESC, n_id ASC) to the
+    top-``k`` per query.  ``queries`` filters the query side; every row
+    queries when it is None (the kNN graph).
+
+    Scale (100 TB): the probe fan-out is 13× on the query side only;
+    the bucket join shuffles (bucket, id, vector) keyed by signature,
+    and bucket sizes are the LSH-bounded ones."""
+    probes = F.array(
+        F.col("sig"),
+        *[F.col("sig").bitwiseXOR(F.lit(1 << p)) for p in range(_RP_PLANES)],
+    )
+    q = (sigs if queries is None else sigs.filter(queries)).select(
+        F.col("vec_id").alias("q_id"),
+        F.col(vec).alias("q_vec"),
+        F.explode(probes).alias("bucket"),
+    )
+    cand = sigs.select(
+        F.col("vec_id").alias("n_id"),
+        F.col(vec).alias("n_vec"),
+        F.col("sig").alias("bucket"),
+    )
+    w = Window.partitionBy("q_id").orderBy(F.desc(sim_name), F.asc("n_id"))
+    return (
+        q.join(cand, "bucket")
+        .filter(F.col("q_id") != F.col("n_id"))
+        .select("q_id", "n_id", sim("q_vec", "n_vec").alias(sim_name))
+        .dropDuplicates(["q_id", "n_id"])
+        .withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+    )
+
+
+def _rp_portable_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, se, sig) — the portable sign-LSH index:
+    `common.fixed_point` vectors spread round-robin over the default
+    parallelism (the fixture is one row group, so it scans as one
+    partition) and their `_rp_signature` under the exact int64 fold.  Shared by
+    `ann_rp_lsh_topk_portable`, `dedup_semantic_lsh_portable` and
+    `knn_graph_rp_portable`."""
+    sv = load(spark, sf_dir, "embeddings").repartition(
+        spark.sparkContext.defaultParallelism
+    ).select("vec_id", fixed_point().alias("se"))
+    return sv.select("vec_id", "se", _rp_signature("se", idot).alias("sig"))
+
+
 @register("ann_rp_lsh_topk")  # rows-only: float-sum sign flips at ~0 differ per engine
 def ann_rp_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Random-hyperplane (sign) LSH approximate nearest neighbors — the
-    second ANN family next to `ann_ivf_topk`: 12 deterministic ±1
-    hyperplanes (md5-parity per (plane, dim), reproducible with no RNG
-    state), each vector's signature = the 12 dot-product signs packed
-    into an int, candidates = same-bucket vectors plus all hamming-1
-    buckets (multi-probe), ranked by exact cosine within the probe set.
+    second ANN family next to `ann_ivf_topk`: each vector's
+    `_rp_signature` over the raw float vector, searched by
+    `_rp_probe_topk` (own bucket plus all hamming-1 buckets) and ranked
+    by exact cosine within the probe set.
     For unit vectors P[sign differs] = angle/π per plane, so TRULY
     near neighbors (cosine → 1) collide with probability → 1 while the
     probe set stays |corpus| / 2^12 × 13 in expectation.  On the
@@ -744,80 +823,18 @@ def ann_rp_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiply-adds per row, JVM-side); the bucket join shuffles only
     (bucket, id, vec); multi-probe trades recall for 13× probe fan
     instead of a wider candidate scan."""
-    _N_PLANES = 12
     e = load(spark, sf_dir, "embeddings")
-
-    def sign_lit(p: int, j: int) -> int:
-        import hashlib as _hl
-
-        return 1 if _hl.md5(f"rp:{p}:{j}".encode()).digest()[0] % 2 == 0 else -1
-
-    def proj(p: int, col: str) -> F.Column:
-        # Σ_j emb[j] * (±1) as one zip_with/aggregate over an array
-        # literal of signs — 12 compact higher-order expressions instead
-        # of 768 inlined products (whose codegen compile alone measured
-        # ~7 s of the op's cold time)
-        signs = F.array(*[F.lit(float(sign_lit(p, j))) for j in range(64)])
-        return F.aggregate(
-            F.zip_with(F.col(col), signs, lambda x, s: x.cast("double") * s),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-
-    def signature(col: str) -> F.Column:
-        return sum(
-            (
-                F.when(proj(p, col) > 0, F.lit(1 << p)).otherwise(F.lit(0))
-                for p in range(_N_PLANES)
-            ),
-            F.lit(0),
-        ).cast("bigint")
-
     sigs = e.repartition(spark.sparkContext.defaultParallelism).select(
-        "vec_id", "embedding", signature("embedding").alias("sig")
+        "vec_id", "embedding", _rp_signature("embedding", dot).alias("sig")
     )
-    # multi-probe: each vector also registers under its hamming-1 buckets
-    probes = F.array(
-        F.col("sig"), *[
-            F.col("sig").bitwiseXOR(F.lit(1 << p)) for p in range(_N_PLANES)
-        ]
+    return _rp_probe_topk(
+        sigs,
+        "embedding",
+        lambda a, b: F.round(dot(a, b), 4),
+        "sim",
+        5,
+        queries=F.col("vec_id") < 10,
     )
-    q = (
-        sigs.filter(F.col("vec_id") < 10)
-        .select(
-            F.col("vec_id").alias("q_id"),
-            F.col("embedding").alias("q_emb"),
-            F.explode(probes).alias("bucket"),
-        )
-    )
-    cand = sigs.select(
-        F.col("vec_id").alias("n_id"),
-        F.col("embedding").alias("n_emb"),
-        F.col("sig").alias("bucket"),
-    )
-    sim = F.aggregate(
-        F.zip_with("q_emb", "n_emb", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim"), F.asc("n_id"))
-    return (
-        q.join(cand, "bucket")
-        .filter(F.col("q_id") != F.col("n_id"))
-        .select("q_id", "n_id", F.round(sim, 4).alias("sim"))
-        .dropDuplicates(["q_id", "n_id"])
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 5)
-    )
-
-
-def _rp_sign(p: int, j: int) -> int:
-    """±1 hyperplane entry for (plane p, dim j): md5-parity of the first
-    digest byte — reproducible in any engine with an md5 function, no
-    RNG state (same family as the portable minhash seeds)."""
-    import hashlib as _hl
-
-    return 1 if _hl.md5(f"rp:{p}:{j}".encode()).digest()[0] % 2 == 0 else -1
 
 
 @register(
@@ -887,77 +904,29 @@ def ann_rp_lsh_topk_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HASH-CHECKABLE twin of `ann_rp_lsh_topk` — the move that
     gave the minhash and simhash families their portable variants,
     applied to sign-LSH: every float enters through ONE deterministic
-    fixed-point quantization (floor(x·10⁶) as int64; x arrives as
-    float32 so the float→double product is exact IEEE in both engines),
-    and everything after — hyperplane projections, signature bits,
-    candidate ranking — is pure int64 arithmetic, which no engine can
-    reorder into a different answer.  A near-zero projection therefore
+    fixed-point quantization (`common.fixed_point`), and everything
+    after — hyperplane projections, signature bits, candidate ranking
+    — is pure int64 arithmetic, which no engine can reorder into a
+    different answer.  A near-zero projection therefore
     flips the SAME way everywhere, closing the float-sign caveat that
     keeps the float twin rows-only.
 
-    Same index structure as the float twin: 12 md5-parity ±1
-    hyperplanes, packed sign signature, hamming-1 multi-probe, exact
-    rank within the probe set — but ranked by the scaled integer dot
-    product (sim_scaled ≈ cosine·10¹², max |value| ≈ 64·10¹² « 2⁶³).
-    Top-k agreement with float cosine ranking is pinned in tests.
+    Same index as the float twin — `_rp_signature` searched by
+    `_rp_probe_topk` — built over `_rp_portable_sigs` and ranked by the
+    scaled integer dot product (sim_scaled ≈ cosine·10¹², max |value|
+    ≈ 64·10¹² « 2⁶³).  Top-k agreement with float cosine ranking is
+    pinned in tests.
 
     Scale (100 TB): identical plan shape to `ann_rp_lsh_topk` — one
-    narrow projection per row (12 zip_with/aggregate HOFs over the
-    64-dim array, JVM-side), a bucket-keyed shuffle of (id, sig, se),
+    narrow projection per row, a bucket-keyed shuffle of (id, sig, se),
     13× multi-probe fan on the query side only."""
-    _N_PLANES = 12
-    e = load(spark, sf_dir, "embeddings")
-    scaled = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * F.lit(1000000.0)).cast("bigint"),
-    )
-    sv = e.repartition(spark.sparkContext.defaultParallelism).select(
-        "vec_id", scaled.alias("se")
-    )
-
-    def proj(p: int) -> F.Column:
-        signs = F.array(*[F.lit(_rp_sign(p, j)) for j in range(64)])
-        return F.aggregate(
-            F.zip_with("se", signs, lambda x, s: x * s.cast("bigint")),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
-
-    sig = sum(
-        (
-            F.when(proj(p) > 0, F.lit(1 << p)).otherwise(F.lit(0))
-            for p in range(_N_PLANES)
-        ),
-        F.lit(0),
-    ).cast("bigint")
-    sigs = sv.select("vec_id", "se", sig.alias("sig"))
-    probes = F.array(
-        F.col("sig"),
-        *[F.col("sig").bitwiseXOR(F.lit(1 << p)) for p in range(_N_PLANES)],
-    )
-    q = sigs.filter(F.col("vec_id") < 10).select(
-        F.col("vec_id").alias("q_id"),
-        F.col("se").alias("q_se"),
-        F.explode(probes).alias("bucket"),
-    )
-    cand = sigs.select(
-        F.col("vec_id").alias("n_id"),
-        F.col("se").alias("n_se"),
-        F.col("sig").alias("bucket"),
-    )
-    sim = F.aggregate(
-        F.zip_with("q_se", "n_se", lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim_scaled"), F.asc("n_id"))
-    return (
-        q.join(cand, "bucket")
-        .filter(F.col("q_id") != F.col("n_id"))
-        .select("q_id", "n_id", sim.alias("sim_scaled"))
-        .dropDuplicates(["q_id", "n_id"])
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 5)
+    return _rp_probe_topk(
+        _rp_portable_sigs(spark, sf_dir),
+        "se",
+        idot,
+        "sim_scaled",
+        5,
+        queries=F.col("vec_id") < 10,
     )
 
 
@@ -1071,8 +1040,8 @@ def dedup_semantic_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     implemented AND driver-checkable: `near_dup_embedding` bounds its
     pair scan with the fixture's `label` column (supervision a raw
     corpus doesn't have); here the blocking key is DERIVED from the
-    data — the 12-bit fixed-point sign-LSH signature
-    (`ann_rp_lsh_topk_portable`'s family) banded 3×4 bits, exactly the
+    data — the 12-bit `_rp_portable_sigs` signature
+    (`ann_rp_lsh_topk_portable`'s index) banded 3×4 bits, exactly the
     banded-minhash move applied to embeddings.  Two vectors become
     candidates iff they agree on all 4 planes of some band
     (P = 1−(1−p⁴)³ for per-plane agreement p → 1 as cosine → 1);
@@ -1107,36 +1076,12 @@ def dedup_semantic_lsh_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     2.15 s).  Earlier measurements (HOF fold 2.24 s, codegen
     element_at sum 8.67 s, aggregate-over-sequence 3.93 s, Arrow
     per-pair dot 1.66 s at sf0.1) stand as the history."""
-    _N_PLANES, _BANDS, _BAND_BITS = 12, 3, 4
-    e = load(spark, sf_dir, "embeddings")
-    scaled = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * F.lit(1000000.0)).cast("bigint"),
-    )
-    sv = e.repartition(spark.sparkContext.defaultParallelism).select(
-        "vec_id", scaled.alias("se")
-    )
-
-    def proj(p: int) -> F.Column:
-        signs = F.array(*[F.lit(_rp_sign(p, j)) for j in range(64)])
-        return F.aggregate(
-            F.zip_with("se", signs, lambda x, s: x * s.cast("bigint")),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
-
-    sig = sum(
-        (
-            F.when(proj(p) > 0, F.lit(1 << p)).otherwise(F.lit(0))
-            for p in range(_N_PLANES)
-        ),
-        F.lit(0),
-    ).cast("bigint")
+    _BANDS, _BAND_BITS = 3, 4
     # ONE linear pass: quantize -> 12-plane signature -> band explode,
     # carrying the vector on each band row (3n narrow rows into the
     # bucket shuffle).  No self-join, no fetch-back, no checkpoint —
     # nothing executes before the caller's action.
-    bands = sv.select("vec_id", "se", sig.alias("sig")).select(
+    bands = _rp_portable_sigs(spark, sf_dir).select(
         "vec_id",
         "se",
         F.explode(
@@ -2912,18 +2857,21 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------- embedding_quantize_int8
 
+def _scaled_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(vec_id, se) — embeddings as `common.fixed_point` int64 vectors, so
+    every downstream similarity is an exact integer dot product."""
+    return load(spark, sf_dir, "embeddings").select(
+        "vec_id", fixed_point().alias("se")
+    )
+
+
 def _quantized_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, se, scale_int, q) — ONE fixed-point quantization shared
     by `embedding_quantize_int8` (the audit) and `quantize_recall_check`
     (the recall gate): se = ⌊x·10⁶⌋, scale_int = max(|se|, 1) absmax,
     q = ⌊se·127/scale⌋.  Changing any constant here changes BOTH ops
     together — the audits stay synchronized by construction."""
-    e = load(spark, sf_dir, "embeddings")
-    se = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * F.lit(1000000.0)).cast("bigint"),
-    )
-    base = e.select("vec_id", se.alias("se"))
+    base = _scaled_emb(spark, sf_dir)
     scale = F.greatest(
         F.array_max(F.transform("se", lambda x: F.abs(x))),
         F.lit(1).cast("bigint"),
@@ -3433,20 +3381,13 @@ def quantize_recall_check(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("q").alias("b_q"),
     )
 
-    def dot(x: str, y: str) -> F.Column:
-        return F.aggregate(
-            F.zip_with(x, y, lambda u, v: u * v),
-            F.lit(0).cast("bigint"),
-            lambda acc, t: acc + t,
-        )
-
     pairs = (
         b.join(F.broadcast(a), F.col("c_id") != F.col("q_id"))
         .select(
             "q_id",
             "c_id",
-            dot("a_se", "b_se").alias("exact_dot"),
-            (dot("a_q", "b_q") * F.col("a_scale") * F.col("b_scale")).alias(
+            idot("a_se", "b_se").alias("exact_dot"),
+            (idot("a_q", "b_q") * F.col("a_scale") * F.col("b_scale")).alias(
                 "quant_dot"
             ),
         )
@@ -3786,8 +3727,9 @@ def matryoshka_prefix_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     The whole point is that the n-proportional work happens at 16 dims
     instead of 64 — on a real corpus the prefix index is also the one
     short enough to cache in executor memory."""
-    qv = _quantized_embeddings(spark, sf_dir)
-    base = qv.select("vec_id", "se", F.slice("se", 1, 16).alias("pe"))
+    base = _scaled_emb(spark, sf_dir).select(
+        "vec_id", "se", F.slice("se", 1, 16).alias("pe")
+    )
     a = base.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("q_id"),
         F.col("se").alias("a_se"),
@@ -3799,18 +3741,11 @@ def matryoshka_prefix_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("pe").alias("b_pe"),
     )
 
-    def dot(x: str, y: str) -> F.Column:
-        return F.aggregate(
-            F.zip_with(x, y, lambda u, v: u * v),
-            F.lit(0).cast("bigint"),
-            lambda acc, t: acc + t,
-        )
-
     pairs = b.join(F.broadcast(a), F.col("c_id") != F.col("q_id")).select(
         "q_id",
         "c_id",
-        dot("a_pe", "b_pe").alias("prefix_dot"),
-        dot("a_se", "b_se").alias("full_dot"),
+        idot("a_pe", "b_pe").alias("prefix_dot"),
+        idot("a_se", "b_se").alias("full_dot"),
     )
     w_p = Window.partitionBy("q_id").orderBy(F.desc("prefix_dot"), F.asc("c_id"))
     w_f = Window.partitionBy("q_id").orderBy(F.desc("full_dot"), F.asc("c_id"))
@@ -5184,30 +5119,6 @@ def dedup_containment_superset(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ----------------------------------------------- IVF probe/recall sweep
 
-def _scaled_emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(vec_id, se: array<bigint>) — embeddings quantized to int64
-    micro-units (floor(x·10⁶), the `ann_rp_lsh_topk_portable` recipe)
-    so every downstream similarity is an exact integer dot product."""
-    return load(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.transform(
-            "embedding",
-            lambda x: F.floor(x.cast("double") * F.lit(1000000.0)).cast(
-                "bigint"
-            ),
-        ).alias("se"),
-    )
-
-
-def _ivf_idot(a: str, b: str) -> F.Column:
-    """Exact int64 dot of two micro-unit vectors (in-order fold)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-
-
 def _ivf_assign(scaled: DataFrame, cents: DataFrame) -> DataFrame:
     """(vec_id, c_id) — every vector assigned to its max-int-dot
     centroid (tiebreak: smallest c_id).  The K-row centroid table
@@ -5216,7 +5127,7 @@ def _ivf_assign(scaled: DataFrame, cents: DataFrame) -> DataFrame:
     Shared by `ann_ivf_probe_sweep` and `semdedup_centroid_prune`."""
     return (
         scaled.crossJoin(F.broadcast(cents))
-        .select("vec_id", "c_id", _ivf_idot("se", "ce").alias("dot"))
+        .select("vec_id", "c_id", idot("se", "ce").alias("dot"))
         .groupBy("vec_id")
         .agg(
             F.max_by(
@@ -5339,7 +5250,6 @@ def ann_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = scaled.filter(
         (F.col("vec_id") >= 10) & (F.col("vec_id") < 26)
     ).select(F.col("vec_id").alias("c_id"), F.col("se").alias("ce"))
-    idot = _ivf_idot
     assigned = _ivf_assign(scaled, cents)
     qs = scaled.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("q_id"), F.col("se").alias("qe")
@@ -5989,7 +5899,7 @@ def knn_graph_rp_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     clustering (SemDeDup-style cluster pruning, mutual-kNN community
     detection): every vector gets its top-3 in-bucket neighbors under
     the same portable sign-LSH index as `ann_rp_lsh_topk_portable`
-    (12 md5-parity hyperplanes, hamming-1 multi-probe), plus the
+    (`_rp_portable_sigs` searched by `_rp_probe_topk`), plus the
     `mutual` flag marking edges whose reverse edge also made the other
     node's top-3 — the robust edges graph algorithms keep.
 
@@ -5998,72 +5908,19 @@ def knn_graph_rp_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-join of the edge set with its own transpose, which is the
     first graph-shaped consumption of the ANN index in the repo.
 
-    Determinism: the shared quantize-then-integer pipeline (floor(x
-    ·10⁶) int64; all ranking on exact integer dots with n_id
-    tiebreak) — same recipe that made the topk twin hash-checkable.
+    Determinism: every node queries, and all ranking is on exact
+    integer dots with n_id tiebreak — the recipe that made the topk
+    twin hash-checkable.
 
     Scale (100 TB): signature build is one narrow JVM-side pass;
     the 13× probe fan-out is per-NODE here (it was per-query), so the
     bucket join shuffles 13·n rows keyed by signature — the documented
-    cost of graph construction; bucket sizes are the LSH-bounded ones,
-    and the transpose semi-join shuffles only the 3n edge rows."""
-    _N_PLANES = 12
-    e = load(spark, sf_dir, "embeddings")
-    scaled = F.transform(
-        "embedding",
-        lambda x: F.floor(x.cast("double") * F.lit(1000000.0)).cast("bigint"),
-    )
-    sv = e.repartition(spark.sparkContext.defaultParallelism).select(
-        "vec_id", scaled.alias("se")
-    )
-
-    def proj(p: int) -> F.Column:
-        signs = F.array(*[F.lit(_rp_sign(p, j)) for j in range(64)])
-        return F.aggregate(
-            F.zip_with("se", signs, lambda x, s: x * s.cast("bigint")),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: acc + x,
-        )
-
-    sig = sum(
-        (
-            F.when(proj(p) > 0, F.lit(1 << p)).otherwise(F.lit(0))
-            for p in range(_N_PLANES)
-        ),
-        F.lit(0),
-    ).cast("bigint")
+    cost of graph construction; the transpose semi-join shuffles only
+    the 3n edge rows."""
     # one signature pass reused by the probe side, the candidate side
     # and both exact-dot joins (the audit-lineage lesson)
-    sigs = sv.select("vec_id", "se", sig.alias("sig")).localCheckpoint()
-    probes = F.array(
-        F.col("sig"),
-        *[F.col("sig").bitwiseXOR(F.lit(1 << p)) for p in range(_N_PLANES)],
-    )
-    q = sigs.select(
-        F.col("vec_id").alias("q_id"),
-        F.col("se").alias("q_se"),
-        F.explode(probes).alias("bucket"),
-    )
-    cand = sigs.select(
-        F.col("vec_id").alias("n_id"),
-        F.col("se").alias("n_se"),
-        F.col("sig").alias("bucket"),
-    )
-    dot = F.aggregate(
-        F.zip_with("q_se", "n_se", lambda x, y: x * y),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-    w = Window.partitionBy("q_id").orderBy(F.desc("sim_scaled"), F.asc("n_id"))
-    edges = (
-        q.join(cand, "bucket")
-        .filter(F.col("q_id") != F.col("n_id"))
-        .select("q_id", "n_id", dot.alias("sim_scaled"))
-        .dropDuplicates(["q_id", "n_id"])
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .localCheckpoint()
-    )
+    sigs = _rp_portable_sigs(spark, sf_dir).localCheckpoint()
+    edges = _rp_probe_topk(sigs, "se", idot, "sim_scaled", 3).localCheckpoint()
     rev = edges.select(
         F.col("n_id").alias("q_id"), F.col("q_id").alias("n_id")
     ).withColumn("m", F.lit(True))
@@ -6269,12 +6126,7 @@ def embedding_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     two-level split only past ~9e10 rows per cell, which the per-task
     partials already provide."""
     e = load(spark, sf_dir, "embeddings")
-    q = e.select(
-        F.expr(
-            "transform(embedding,"
-            " x -> CAST(FLOOR(CAST(x AS DOUBLE) * 10000.0) AS BIGINT))"
-        ).alias("qq")
-    )
+    q = e.select(fixed_point(10000.0).alias("qq"))
     g = (
         _gram_partials(q)
         .filter(F.col("di") <= F.col("dj"))
@@ -6690,13 +6542,7 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = e.select(
         "label",
         (F.col("vec_id") % 2).alias("half"),
-        F.posexplode(
-            F.expr(
-                "transform(embedding,"
-                " x -> CAST(FLOOR(CAST(x AS DOUBLE) * 1000000.0)"
-                " AS BIGINT))"
-            )
-        ).alias("dim", "q"),
+        F.posexplode(fixed_point()).alias("dim", "q"),
     )
     m = c.groupBy("label", "half", "dim").agg(
         F.sum("q").cast("bigint").alias("s"),
@@ -6849,12 +6695,7 @@ def embedding_pca_power_iter(spark: SparkSession, sf_dir: str) -> DataFrame:
     with a broadcast d-row vector — driver-scale-free,
     cluster-resident end to end."""
     e = load(spark, sf_dir, "embeddings")
-    q = e.select(
-        F.expr(
-            "transform(embedding,"
-            " x -> CAST(FLOOR(CAST(x AS DOUBLE) * 10000.0) AS BIGINT))"
-        ).alias("qq")
-    )
+    q = e.select(fixed_point(10000.0).alias("qq"))
     gfull = (
         _gram_partials(q)  # per-task X^T X partials, not a 4096-
         # struct per-row explode (sf1 A/B e2e

@@ -12,8 +12,8 @@ Scale notes (100 TB):
   the 100 TB path is `dedup_minhash_lsh` (pipeline.py), which buckets
   by banded minhashes so candidate pairs ≪ n².
 - `cosine_topk` broadcasts the 10 query vectors and streams candidates
-  through a JVM-side zip_with/aggregate dot product (no Python, no
-  explode blowup); the 100 TB path is `ann_ivf_topk` (pipeline.py).
+  through Arrow-batched numpy matmuls (no explode blowup); the 100 TB
+  path is `ann_ivf_topk` (pipeline.py).
 """
 
 from __future__ import annotations
@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from migbq_spark.catalog import load
-from migbq_spark.common import dec, tokens
+from migbq_spark.common import dec, dot, tokens
 from migbq_spark.registry import register
 
 #: Tile width for the blocked jaccard kernel: peak per-task memory is
@@ -385,9 +385,10 @@ def cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Similarity search: top-5 neighbors by cosine (≡ dot product —
     embeddings are L2-normalized) for query vectors vec_id < 10.
 
-    Spark-first: the 10 query vectors are broadcast and every candidate
-    computes the dot product JVM-side with zip_with + aggregate (no
-    Python UDF, no 64× posexplode blowup).  Ranking orders by the
+    The 10 query vectors are collected and shipped into a mapInPandas
+    batch iterator; every candidate batch is one float64 numpy matmul
+    against them (no per-row Python, no 64× posexplode blowup).
+    Ranking orders by the
     ROUNDED similarity (4 dp, float32 inputs) with vec_id tiebreak so
     both engines cut the same top-5 even when raw doubles differ in the
     last ulp.  100 TB path: `ann_ivf_topk`."""
@@ -600,13 +601,11 @@ def edit_distance_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def vec_pair_dot_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise dot product of consecutive embeddings via higher-order
-    functions only: `zip_with` multiplies components, `aggregate` folds
-    the sum — the all-JVM vector kernel (no UDF, stays inside codegen),
-    complementing the Arrow-batched numpy path of cosine_topk.
-    Components widen float→double exactly before multiplying; the
-    rounded 4-dp score absorbs last-ulp accumulation differences
-    between Spark's sequential fold and the oracle's SUM (the
-    float-sensitive convention, SURVEY §7.4).
+    functions only: `common.dot`, the all-JVM vector kernel (no UDF,
+    stays inside codegen), complementing the Arrow-batched numpy path
+    of cosine_topk.  The rounded 4-dp score absorbs last-ulp
+    accumulation differences between `common.dot`'s sequential fold
+    and the oracle's SUM (the float-sensitive convention, SURVEY §7.4).
 
     Scale (100 TB): the self-join on adjacent ids is co-partitioned
     (same key ± 1 → range-partition both sides); per-row cost is one
@@ -617,14 +616,7 @@ def vec_pair_dot_hof(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("vec_id") - 1).alias("prev_id"), F.col("embedding").alias("emb_b")
     )
     pairs = a.join(b, a.vec_id == b.prev_id)
-    prod = F.zip_with(
-        "emb_a", "emb_b",
-        lambda x, y: x.cast("double") * y.cast("double"),
-    )
-    dot = F.aggregate(
-        prod, F.lit(0.0), lambda acc, v: acc + v
-    )
-    return pairs.select("vec_id", F.round(dot, 4).alias("dot"))
+    return pairs.select("vec_id", F.round(dot("emb_a", "emb_b"), 4).alias("dot"))
 
 
 # ------------------------------------------------------ arrays_zip_bigrams

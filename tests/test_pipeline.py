@@ -65,7 +65,7 @@ def test_ann_ivf_recall_vs_brute_force(spark, sf_dir):
     approx = {(r.q_id, r.n_id) for r in Q["ann_ivf_topk"](spark, sf_dir).collect()}
     assert len(approx) > 0
     recall = len(exact & approx) / len(exact)
-    # r5: trained (seeded KMeans) spherical centroids must beat the
+    # trained (seeded KMeans) spherical centroids must beat the
     # n_probe/n_cells ≈ 0.19 recall an untrained partition would give on
     # these cluster-free random vectors (measured 0.52 with training,
     # ~0.1-0.2 with the old stride-picked centroids)
@@ -93,7 +93,7 @@ def test_mm_decode_stub_rejects_unknown_format():
 
 
 def test_mm_real_header_decode_roundtrip():
-    """r4 (r3 VERDICT #7): `_decode_payload` must parse REAL PNG and
+    """`_decode_payload` must parse REAL PNG and
     JPEG headers — pinned against hand-checked byte layouts, not just
     our own packers."""
     import struct
@@ -133,7 +133,7 @@ def test_mm_real_header_decode_roundtrip():
 
 
 def test_mm_jpeg_walk_handles_standalone_markers():
-    """r5 (r4 ADVICE): real-world JPEG streams contain 0xFF fill bytes
+    """Real-world JPEG streams contain 0xFF fill bytes
     and length-LESS standalone markers (TEM, RSTn, EOI) — the walk must
     skip them rather than misread them as length-bearing segments."""
     import struct
@@ -350,7 +350,7 @@ def test_jaccard_tiling_invariant_under_skew(spark, monkeypatch):
     """The blocked jaccard kernel must return identical pairs whatever the
     tile width — including a degenerate tile smaller than any block — and
     under heavy source skew (one source holds ~80% of docs), the scenario
-    where the unbounded r1 kernel would have built one huge dense matrix."""
+    where an untiled kernel would build one huge dense matrix."""
     from migbq_spark.operators import textsim
 
     rows = []
@@ -379,15 +379,15 @@ def test_jaccard_tiling_invariant_under_skew(spark, monkeypatch):
             }
             return out
 
-        big = pairs(10_000)   # one tile covers everything (r1 semantics)
+        big = pairs(10_000)   # one tile covers everything (untiled semantics)
         tiny = pairs(3)       # many tiles, diagonal + off-diagonal paths
         assert big, "skewed fixture should produce near-dup pairs"
         assert big == tiny
 
 
 def test_jaccard_hot_source_fans_out_across_tasks(spark):
-    """r2 VERDICT "What's wrong" #1: a single hot source must NOT collapse
-    to one applyInPandas task.  The r3 tile fan-out keys the kernel by
+    """A single hot source must NOT collapse to one applyInPandas task.
+    The tile fan-out keys the kernel by
     (source, tile_i, tile_j): a single-source corpus spreads over
     T·(T+1)/2 shuffle groups, and the pair set is invariant to the tile
     count (tiles=1 reproduces the old one-task-per-source semantics)."""
@@ -407,7 +407,7 @@ def test_jaccard_hot_source_fans_out_across_tasks(spark):
 
     def key_pairs(tiles):
         # tile_min_docs=0 forces the tiled path regardless of source size
-        # (the r4 adaptive floor would otherwise keep this 60-doc fixture
+        # (the adaptive floor would otherwise keep this 60-doc fixture
         # on the single-task path; see test_jaccard_adaptive_tile_floor).
         return {
             (r.a_id, r.b_id): (r.shared, r.n_a, r.n_b, r.jaccard)
@@ -434,7 +434,7 @@ def test_jaccard_hot_source_fans_out_across_tasks(spark):
 
 
 def test_jaccard_adaptive_tile_floor(spark):
-    """r4 adaptive fan-out (r3 VERDICT #5): sources below the tile floor
+    """Adaptive fan-out: sources below the tile floor
     must run as ONE shuffle group (no replication), sources at/above it
     must fan out over T·(T+1)/2 groups — and the pair set must be
     identical either way."""
@@ -535,7 +535,7 @@ def test_tdigest_rolling_quantiles_track_exact(spark, sf_dir):
 
 
 def test_keep_cluster_canonical_invariants(spark, sf_dir):
-    """r5: the keep/drop decision must cover the corpus exactly once and
+    """The keep/drop decision must cover the corpus exactly once and
     every kept doc must belong to its own component."""
     out = Q["dedup_keep_cluster_canonical"](spark, sf_dir).collect()
     n_docs_total = sum(r.n_docs for r in out)
@@ -573,7 +573,7 @@ def test_warm_dedup_call_compiles_nothing(spark, sf_dir):
 
 
 def test_cc_twostar_screened_fixpoint_chain(spark):
-    """r14 opt round: the fixpoint loop's cheap (count, hash-sum)
+    """The fixpoint loop's cheap (count, hash-sum)
     screen must not change the result — a 40-node chain forces several
     contraction rounds (screen says 'changed', exceptAll skipped)
     before the exceptAll-proved final round, and every node must still
@@ -636,7 +636,7 @@ def test_ckpt_fusion_value_neutral(spark, sf_dir):
 
 
 def test_minhash_merge_equals_full_recompute(spark, sf_dir):
-    """r5: merged base+delta signatures must equal a one-shot full
+    """Merged base+delta signatures must equal a one-shot full
     aggregation (min-monoid mergeability) computed Spark-side too."""
     from pyspark.sql import functions as F
 
@@ -667,7 +667,7 @@ def test_minhash_merge_equals_full_recompute(spark, sf_dir):
 
 
 def test_pack_sequences_contiguous(spark, sf_dir):
-    """r5: per source, offsets must tile the concatenated stream with no
+    """Per source, offsets must tile the concatenated stream with no
     gaps or overlaps, and chunk spans must match the offsets."""
     rows = sorted(
         Q["pack_sequences_budget"](spark, sf_dir).collect(),
@@ -686,7 +686,7 @@ def test_pack_sequences_contiguous(spark, sf_dir):
 
 
 def test_shard_export_covers_corpus(spark, sf_dir):
-    """r5: the 8 shards must partition the corpus exactly (no doc lost
+    """The 8 shards must partition the corpus exactly (no doc lost
     or duplicated by the write→read-back round trip)."""
     out = Q["shard_export_training"](spark, sf_dir).collect()
     assert {r.shard for r in out} <= set(range(8))
@@ -695,7 +695,7 @@ def test_shard_export_covers_corpus(spark, sf_dir):
 
 
 def test_pkrange_source_plans_and_prunes_strides():
-    """r5: the Python DataSource must plan one stride per batch_size
+    """The Python DataSource must plan one stride per batch_size
     from row-group stats, and pushFilters must consume pk predicates and
     prune whole strides before planning."""
     from pyspark.sql.datasource import GreaterThan, LessThanOrEqual
@@ -774,7 +774,7 @@ def test_pkrange_source_reads_files_without_pk_statistics(spark, tmp_path):
 
 
 def test_loadjob_sink_commit_protocol(spark, tmp_path):
-    """r5: the custom sink must publish atomically — a commit leaves
+    """The custom sink must publish atomically — a commit leaves
     parts + manifest and no staging dir; a mid-write task failure must
     leave NOTHING visible in the destination."""
     import json
@@ -814,7 +814,7 @@ def test_loadjob_sink_commit_protocol(spark, tmp_path):
 
 
 def test_ann_rp_lsh_recall_vs_brute_force(spark, sf_dir):
-    """r5: sign-LSH recall on this CLUSTER-FREE random fixture is
+    """Sign-LSH recall on this CLUSTER-FREE random fixture is
     theoretically ≈ (1 - θ/π)^12 × 13 ≈ 0.04 (true neighbors sit at
     cosine ≈ 0.35 ⇒ θ ≈ 69°, per-plane collision ≈ 0.61) — the pin is
     that measured recall beats the probed corpus FRACTION (13/2^12 ≈
@@ -835,7 +835,7 @@ def test_ann_rp_lsh_recall_vs_brute_force(spark, sf_dir):
 
 
 def test_bpe_merges_match_reference(spark, sf_dir):
-    """r5: the distributed BPE trainer must learn exactly the merge
+    """The distributed BPE trainer must learn exactly the merge
     table a pure-Python reference BPE learns from the same word
     frequencies (same tie-break: weight desc, then pair text asc)."""
     from collections import Counter
@@ -885,7 +885,7 @@ def test_bpe_merges_match_reference(spark, sf_dir):
 
 
 def test_dup_span_ratio_hashed_twin_exact(spark, sf_dir):
-    """r7 (r6 VERDICT #4): the xxhash64-keyed production twin must emit
+    """The xxhash64-keyed production twin must emit
     bit-identical per-doc ratios to the string-keyed path (no 64-bit
     span collisions at fixture scale — and a collision would surface
     here AND in the shared oracle hash)."""
@@ -896,7 +896,7 @@ def test_dup_span_ratio_hashed_twin_exact(spark, sf_dir):
 
 
 def test_bpe_batched_trainer_exact_and_fewer_rounds(spark, sf_dir):
-    """r7 (r6 VERDICT #5): the batched-round trainer must learn the
+    """The batched-round trainer must learn the
     EXACT merge table of the sequential path (disjoint-prefix batching
     is equality-preserving, see _bpe_train) in strictly fewer driver
     rounds — merges/rounds ratio > 1 is the whole point."""
@@ -918,7 +918,7 @@ def test_bpe_batched_trainer_exact_and_fewer_rounds(spark, sf_dir):
 
 
 def test_bpe_batched_trainer_exact_at_64_merges(spark, sf_dir):
-    """r8 (r7 VERDICT #3): twin equality pinned BEYOND the toy count —
+    """Twin equality pinned BEYOND the toy count —
     at 64 merges the tie-hardened prefix rule must still reproduce the
     sequential table exactly (the sf1 measurement: 57 rounds vs 64,
     exact equality; deeper fixture runs exhaust the 31-word vocab)."""
@@ -931,7 +931,7 @@ def test_bpe_batched_trainer_exact_at_64_merges(spark, sf_dir):
 
 
 def test_bpe_apply_consistent_with_reference_tokenization(spark, sf_dir):
-    """r5: corpus BPE token counts from the distributed apply must equal
+    """Corpus BPE token counts from the distributed apply must equal
     tokenizing every word with the reference merge algorithm."""
     from collections import Counter
 
@@ -971,7 +971,7 @@ def test_bpe_apply_consistent_with_reference_tokenization(spark, sf_dir):
 
 
 def test_bpe_apply_trie_twin_exact_and_single_arrow_node(spark, sf_dir):
-    """r6: the broadcast-table pandas-UDF apply path must (a) produce
+    """The broadcast-table pandas-UDF apply path must (a) produce
     EXACTLY the fold path's per-source audit and (b) plan tokenization
     as a single Arrow-batched Python node (no chained fold expressions,
     no extra Python stages) — the production ~50k-merge plan shape."""
@@ -989,7 +989,7 @@ def test_bpe_apply_trie_twin_exact_and_single_arrow_node(spark, sf_dir):
 
 
 def test_rp_lsh_portable_hashable_and_recall(spark, sf_dir, duck):
-    """r6: the fixed-point sign-LSH twin must (a) value-hash-match its
+    """The fixed-point sign-LSH twin must (a) value-hash-match its
     DuckDB oracle (the portability claim) and (b) keep the float twin's
     recall bar vs exact brute-force cosine."""
     from migbq_spark.testing import compare_driver
@@ -1018,7 +1018,7 @@ def test_rp_lsh_portable_hashable_and_recall(spark, sf_dir, duck):
 
 
 def test_semantic_lsh_dedup_hashable_and_recall(spark, sf_dir, duck):
-    """r6: the unsupervised sign-LSH embedding near-dup must (a) value-
+    """The unsupervised sign-LSH embedding near-dup must (a) value-
     hash-match its DuckDB oracle and (b) recover a predictable fraction
     of the brute-force pair set at the fixture threshold (banded
     candidates: P = 1-(1-p^4)^3; the fixture's tau=0.3 pairs sit near
@@ -1064,7 +1064,7 @@ def test_semantic_lsh_dedup_hashable_and_recall(spark, sf_dir, duck):
 
 
 def test_cluster_canonical_and_funnel_drop_zero_token_docs(spark, tmp_path):
-    """r6 (r5 ADVICE #3): docs with zero non-empty tokens must be
+    """Docs with zero non-empty tokens must be
     EXCLUDED from the keep/drop decision on both engines — the Spark
     side used to keep them with quality = 0/0 = NULL while the oracle's
     inner join dropped them. The shipped fixtures contain no empty
@@ -1106,7 +1106,7 @@ def test_cluster_canonical_and_funnel_drop_zero_token_docs(spark, tmp_path):
 
 
 def test_collapse_repeated_tokens_properties(spark, tmp_path):
-    """r6: the stutter collapse must be (a) idempotent — collapsing the
+    """The stutter collapse must be (a) idempotent — collapsing the
     cleaned text again removes nothing — and (b) correct — no adjacent
     duplicate survives, and removal count equals the adjacent-dup count
     of the input.  Pinned on a synthetic corpus with heavy planted
@@ -1163,7 +1163,7 @@ def test_collapse_repeated_tokens_properties(spark, tmp_path):
 
 
 def test_r7_batch_semantics(spark, sf_dir):
-    """r7 batch: semantic invariants beyond the oracle hash parity —
+    """Semantic invariants beyond the oracle hash parity —
     CMS never under-estimates; matryoshka funnel recall is a valid
     fraction over exactly the 10 probes; chunking tiles each doc
     exactly (first chunk at 0, stride 48, last chunk ends at n_toks);
@@ -1210,7 +1210,7 @@ def test_r7_batch_semantics(spark, sf_dir):
 
 
 def test_r8_final_batch_semantics(spark, sf_dir):
-    """End-of-r8 batch: semantic invariants beyond the oracle hash —
+    """Semantic invariants beyond the oracle hash —
     paragraph dedup conserves blocks, keeps exactly one copy of each
     distinct block corpus-wide, and an untouched doc's kept_md5 equals
     the md5 of its re-tokenized text; the bloom decontaminator has NO
@@ -1275,7 +1275,7 @@ def test_r8_final_batch_semantics(spark, sf_dir):
 
 
 def test_r8_trio_semantics(spark, sf_dir):
-    """End-of-r8 trio: invariants beyond the oracle hash — band-shape
+    """Invariants beyond the oracle hash — band-shape
     candidate sets are NESTED by construction (a 2x8 band is the
     concatenation of two 4x4 bands, so a 2x8 match implies both 4x4
     matches), hence n_cand/n_hit/recall are monotone in band count;
@@ -2132,7 +2132,7 @@ def test_quantile_normalization_aligns_sources(spark, sf_dir):
 
 
 def test_arrow_udf_kernels_propagate_null(spark, tmp_path, sf_dir):
-    """r11 (r10 ADVICE): NULL inputs must yield NULL outputs from both
+    """NULL inputs must yield NULL outputs from both
     Arrow-path kernels — the SQL oracles propagate NULL, so a ''
     fallback (0 counts) or a TypeError on None would be a latent
     parity divergence the non-null fixtures never exercise.  Pin it

@@ -1,4 +1,4 @@
-"""Property-based pins for the r5 pure-Python components: the PK-range
+"""Property-based pins for the pure-Python components: the PK-range
 stride planner/pushdown and the JPEG marker walker — fast hypothesis
 targets with no Spark session."""
 
@@ -85,8 +85,7 @@ def test_jpeg_walk_recovers_dims_through_any_marker_prefix(w, h, junk):
 
 def test_jpeg_truncated_sof_raises_contract_error():
     """A stream that ends INSIDE the SOF dimension payload must raise the
-    walker's corrupt-stream contract error, not a bare struct.error
-    (r5 ADVICE)."""
+    walker's corrupt-stream contract error, not a bare struct.error."""
     import pytest
 
     from migbq_spark.operators.multimodal import _jpeg_dims
@@ -125,7 +124,7 @@ def _drain_stream(reader):
 
 
 def test_stream_read_is_bounded_and_cuts_at_pk_value_boundary(tmp_path):
-    """r5 ADVICE: (a) each micro-batch must read a stats-bounded range,
+    """(a) Each micro-batch must read a stats-bounded range,
     not every row past the offset; (b) duplicate pk values straddling
     the batch_size cut must never be skipped by the next `pk > last`."""
     import pyarrow as pa
@@ -175,7 +174,7 @@ def test_stream_hi_bound_prunes_row_groups(tmp_path):
 
 
 def test_stream_stats_lied_retry_widens_bounded(tmp_path, monkeypatch):
-    """r7 ADVICE: when row-group stats over-promise (bounded read returns
+    """When row-group stats over-promise (bounded read returns
     0 rows while rows remain further out), the retry must widen through
     successive row-group maxima — NEVER one unbounded read that
     materializes the whole remaining backlog into a single Arrow table."""

@@ -165,7 +165,7 @@ def test_mm_meta_audit_prunes_text_column(spark, sf_dir):
     "qid", ["mm_decode_headers", "mm_audio_headers", "mm_video_headers"]
 )
 def test_mm_header_probes_prune_text_column(spark, sf_dir, qid):
-    # the r4 header codecs plant dims from doc_id/n_chars — the wide
+    # the header codecs plant dims from doc_id/n_chars — the wide
     # `text` column must be pruned from the scan feeding mapInPandas
     plan = _plan(Q[qid](spark, sf_dir))
     read_schema = plan.split("ReadSchema:")[1].splitlines()[0]
@@ -186,40 +186,39 @@ _PY_ALLOWED = {
     "near_dup_embedding",
     "ann_ivf_topk",
     "rolling_quantile_tdigest",  # two-phase sketch build/merge kernels
-    "mm_decode_headers",  # r4: real PNG/JPEG header parse is mapInPandas
-    "mm_audio_headers",  # r4: real WAV RIFF-chunk probe is mapInPandas
-    "mm_video_headers",  # r4: real MP4 box-walk probe is mapInPandas
-    # r6: the production BPE apply IS a declared broadcast-table pandas
+    "mm_decode_headers",  # real PNG/JPEG header parse is mapInPandas
+    "mm_audio_headers",  # real WAV RIFF-chunk probe is mapInPandas
+    "mm_video_headers",  # real MP4 box-walk probe is mapInPandas
+    # the production BPE apply IS a declared broadcast-table pandas
     # UDF (single Arrow node over the distinct vocab, plan-asserted in
     # test_pipeline.py) — Python here is the design, not a leak
     "tokenizer_bpe_apply_trie",
-    # r10: sequential DPs de-serialized into ONE applyInPandas task
-    # over the collapsed daily frame (r9 VERDICT "What's wrong" #2 —
-    # the recursive-CTE form cost |days| scheduler round-trips; the
-    # CTE stays as the DuckDB oracle)
+    # sequential DPs de-serialized into ONE applyInPandas task
+    # over the collapsed daily frame (the recursive-CTE form cost
+    # |days| scheduler round-trips; the CTE stays as the DuckDB oracle)
     "burst_detection_twostate",
     "holt_linear_daily",
-    # r13: Holt-Winters shares holt_linear's declared shape — the
+    # Holt-Winters shares holt_linear's declared shape — the
     # sequential recurrence runs in ONE applyInPandas task over the
     # day-bounded frame
     "holt_winters_additive_daily",
-    # r13: Jaro-Winkler is a DECLARED vectorized pandas-UDF scorer
+    # Jaro-Winkler is a DECLARED vectorized pandas-UDF scorer
     # (cross-implementation check vs DuckDB's built-in)
     "jaro_winkler_pairs",
-    # r10: the declared §2.J mapInArrow surface itself
+    # the declared §2.J mapInArrow surface itself
     "mapinarrow_batch_audit",
-    # r10: MaxMatch segments the Heaps-bounded DISTINCT word vocab via
+    # MaxMatch segments the Heaps-bounded DISTINCT word vocab via
     # a broadcast-vocab pandas UDF (the tokenizer_bpe_apply precedent)
     "tokenizer_maxmatch_segment",
-    # r10: the declared Arrow-optimized scalar UDF surface itself
+    # the declared Arrow-optimized scalar UDF surface itself
     "udf_arrow_scalar",
-    # r14 optimization: the exact-verify dot over candidate pairs is a
+    # the exact-verify dot over candidate pairs is a
     # DECLARED Arrow batch kernel (np.einsum — guide §4.2's vectorized-
     # native sweet spot; measured 2.24 s -> 1.66 s interleaved min-of-5
     # vs the interpreted JVM fold, identical rows, hash-green).  Shape
     # pinned by test_semantic_lsh_verify_dot_is_arrow_vectorized.
     "dedup_semantic_lsh_portable",
-    # r15 optimization: the within-cluster exact dot matrix is a
+    # the within-cluster exact dot matrix is a
     # DECLARED grouped numpy matmul kernel (guide §4.2/§8: each vector
     # crosses the boundary once instead of both vectors per pair, and
     # the n_c² int64 dots run as chunked matmuls; measured sf1 e2e
@@ -227,7 +226,7 @@ _PY_ALLOWED = {
     # Arrow per-pair dot at 9.9 s between them; identical rows on all
     # arms, hash-green).  Pinned by test_semdedup_grouped_matmul_kernel.
     "semdedup_centroid_prune",
-    # r15 optimization: the d² gram build is a DECLARED per-task numpy
+    # the d² gram build is a DECLARED per-task numpy
     # X^T X partial kernel (guide §4.2/§8: one int64 matmul per Arrow
     # batch, d² = 4096 cells per TASK into the shuffle instead of 4096
     # structs per ROW through codegen; sf1 A/B e2e gram 6.80 -> 0.92 s,
@@ -235,7 +234,7 @@ _PY_ALLOWED = {
     # order-free).  Pinned by test_gram_kernel_*.
     "embedding_gram_matrix",
     "embedding_pca_power_iter",
-    # r15 session 5: the co-purchase C(basket,2) pair fan is a DECLARED
+    # the co-purchase C(basket,2) pair fan is a DECLARED
     # vectorized Arrow kernel (guide §4.2: the codegen nested-transform
     # explode allocated a boxed array-of-arrays per basket row; measured
     # interleaved CPU 3.18 -> 2.39 s sf0.1 / 55.1 -> 31.2 s sf1,
@@ -304,7 +303,7 @@ def test_dynamic_partition_pruning_on_month_join(spark, sf_dir):
 
 
 def test_dpp_survives_without_broadcast(spark, sf_dir):
-    """Broadcast-free DPP (r2 VERDICT item 6): when the dim side exceeds
+    """Broadcast-free DPP: when the dim side exceeds
     the broadcast budget (threshold -1 models a 100 TB dim), partition
     pruning must still carry the join — with
     dynamicPartitionPruning.reuseBroadcastOnly=false Spark plans a
@@ -387,7 +386,7 @@ def test_bloom_filter_runtime_join_pruning(spark, sf_dir):
 
 
 def test_dup_span_one_wide_exchange_no_strings(spark, sf_dir):
-    """r8 plan contract for the profiled dup_span rewrite: exactly ONE
+    """Plan contract for the profiled dup_span rewrite: exactly ONE
     exchange carries the span-key stream (the window), the hashed twin
     never materializes span STRINGS (no concat_ws anywhere in the
     plan — keys are per-token xxhash64 mixed in-register), and the
@@ -403,7 +402,7 @@ def test_dup_span_one_wide_exchange_no_strings(spark, sf_dir):
 
 
 def test_bpe_audit_explodes_hashes_not_strings(spark, sf_dir):
-    """r8 plan contract for the BPE-apply audit rewrite: the per-doc
+    """Plan contract for the BPE-apply audit rewrite: the per-doc
     word-count stream carries int64 word hashes (word_h) and the
     per-doc rollup exchanges on doc_id; the only string-keyed exchange
     left is the Heaps-bounded DISTINCT-vocab tokenization."""
@@ -413,7 +412,7 @@ def test_bpe_audit_explodes_hashes_not_strings(spark, sf_dir):
 
 
 def test_cms_hashes_vocab_not_occurrences(spark, sf_dir):
-    """r8 plan contract for the CMS Heaps rewrite: the md5 bucket hash
+    """Plan contract for the CMS Heaps rewrite: the md5 bucket hash
     must run over the counted DISTINCT vocabulary — i.e. cells
     aggregate sum(true_count), not count(1) over exploded occurrences."""
     p = _optimized(Q["sketch_count_min_heavy_hitters"](spark, sf_dir))
@@ -421,7 +420,7 @@ def test_cms_hashes_vocab_not_occurrences(spark, sf_dir):
 
 
 def test_bloom_prefilter_all_broadcast_no_smj(spark, sf_dir):
-    """r8 plan contract for join_bloom_prefilter: the position-set
+    """Plan contract for join_bloom_prefilter: the position-set
     prefilter and the exact verify are ALL broadcast joins — the fact
     side is never shuffled (that is the entire point of a runtime bloom
     prefilter at 100 TB)."""
@@ -431,7 +430,7 @@ def test_bloom_prefilter_all_broadcast_no_smj(spark, sf_dir):
 
 
 def test_winnowing_row_local_until_distinct(spark, sf_dir):
-    """r8 plan contract for winnowing_fingerprint: gram hashing and
+    """Plan contract for winnowing_fingerprint: gram hashing and
     the sliding window min are row-local array kernels — the ONLY
     exchange in the plan is the final distinct over the winnowed
     (doc_id, fp) stream, and no pandas/python evaluation appears."""
@@ -441,7 +440,7 @@ def test_winnowing_row_local_until_distinct(spark, sf_dir):
 
 
 def test_paragraph_dedup_two_exchanges(spark, sf_dir):
-    """r8 plan contract for paragraph_dedup_ccnet: block generation is
+    """Plan contract for paragraph_dedup_ccnet: block generation is
     row-local (no Python), the keep decision is ONE window keyed on the
     block string, and the only exchanges are that window's plus the
     doc-keyed re-assembly aggregate."""
@@ -452,7 +451,7 @@ def test_paragraph_dedup_two_exchanges(spark, sf_dir):
 
 
 def test_bloom_decontaminate_broadcasts_bitset(spark, sf_dir):
-    """r8 plan contract for decontaminate_bloom_portable: the bloom bit
+    """Plan contract for decontaminate_bloom_portable: the bloom bit
     set and the exact test-vocab probe join as BROADCAST joins (the
     point of the bloom — the train side is never shuffled against the
     test side)."""
@@ -461,7 +460,7 @@ def test_bloom_decontaminate_broadcasts_bitset(spark, sf_dir):
 
 
 def test_partition_skew_single_scan(spark, sf_dir):
-    """r8 plan contract for partition_skew_audit: one scan of events,
+    """Plan contract for partition_skew_audit: one scan of events,
     one partial-aggregated groupBy (<=32 rows), the mean as a global
     window over that tiny frame — no second scan of the fact table."""
     p = _plan(Q["partition_skew_audit"](spark, sf_dir))
@@ -470,7 +469,7 @@ def test_partition_skew_single_scan(spark, sf_dir):
 
 
 def test_band_shape_sweep_one_signature_build(spark, sf_dir):
-    """r8 plan contract for minhash_band_shape_sweep: all three band
+    """Plan contract for minhash_band_shape_sweep: all three band
     shapes ride ONE tagged band stream off one signature build — a
     per-shape loop re-derived the whole lineage per union branch
     (measured: 32 parquet scans); the single-stream plan reads the
@@ -481,7 +480,7 @@ def test_band_shape_sweep_one_signature_build(spark, sf_dir):
 
 
 def test_doc_length_histogram_tiny_windows(spark, sf_dir):
-    """r8 plan contract for doc_length_log2_histogram: token counts
+    """Plan contract for doc_length_log2_histogram: token counts
     row-local, ONE partial-aggregated groupBy to <=~20 bins, share
     windows over that tiny frame — one scan of documents."""
     p = _plan(Q["doc_length_log2_histogram"](spark, sf_dir))
@@ -490,7 +489,7 @@ def test_doc_length_histogram_tiny_windows(spark, sf_dir):
 
 
 def test_ivf_probe_sweep_map_side_assignment(spark, sf_dir):
-    """r8 plan contract for ann_ivf_probe_sweep: centroid assignment is
+    """Plan contract for ann_ivf_probe_sweep: centroid assignment is
     a broadcast of the 16-row centroid table collapsed by a map-side
     max_by partial aggregate (partial_max_by below the exchange), and
     all three probe levels ride one tagged stream — no per-level
@@ -501,7 +500,7 @@ def test_ivf_probe_sweep_map_side_assignment(spark, sf_dir):
 
 
 def test_unigram_seed_hashes_vocab_not_occurrences(spark, sf_dir):
-    """r8 plan contract for tokenizer_unigram_seed_vocab: gram
+    """Plan contract for tokenizer_unigram_seed_vocab: gram
     enumeration runs over the DISTINCT word vocabulary (grouped with
     its corpus frequency) and the top-64 cut is a bounded
     TakeOrderedAndProject, never a global sort."""
@@ -511,7 +510,7 @@ def test_unigram_seed_hashes_vocab_not_occurrences(spark, sf_dir):
 
 
 def test_ks_no_global_window_over_data(spark, sf_dir):
-    """r8 plan contract for ks_test_two_sample: the data-sized
+    """Plan contract for ks_test_two_sample: the data-sized
     cumulative pass is a window PARTITIONED by the coarse bucket —
     the only unpartitioned windows run over the <=few-hundred-row
     bucket-totals frame (bucket-prefix decomposition, never a global
@@ -522,7 +521,7 @@ def test_ks_no_global_window_over_data(spark, sf_dir):
 
 
 def test_join_cardinality_takeordered_heavy_hitters(spark, sf_dir):
-    """r8 plan contract for join_cardinality_estimate: the heavy-hitter
+    """Plan contract for join_cardinality_estimate: the heavy-hitter
     cut is a bounded TakeOrderedAndProject(20), never a global sort of
     the key-count frame."""
     p = _plan(Q["join_cardinality_estimate"](spark, sf_dir))
@@ -530,7 +529,7 @@ def test_join_cardinality_takeordered_heavy_hitters(spark, sf_dir):
 
 
 def test_semdedup_broadcasts_centroids(spark, sf_dir):
-    """r8 plan contract for semdedup_centroid_prune: the 16-row
+    """Plan contract for semdedup_centroid_prune: the 16-row
     centroid table broadcasts into the assignment (no shuffle of the
     embedding stream against centroids) and the assignment collapses
     map-side (partial_max_by below the exchange)."""
@@ -540,7 +539,7 @@ def test_semdedup_broadcasts_centroids(spark, sf_dir):
 
 
 def test_semdedup_grouped_matmul_kernel(spark, sf_dir):
-    """r15 plan contract for semdedup_centroid_prune: the within-cluster
+    """Plan contract for semdedup_centroid_prune: the within-cluster
     pair scoring is ONE grouped numpy kernel (FlatMapGroupsInPandas per
     c_id), never a pairwise self-join — the join form shipped both
     64-element vectors per candidate pair and paid an interpreted
@@ -585,7 +584,7 @@ def test_semdedup_kernel_values_and_chunking():
 
 
 def test_gram_kernel_plan_shape(spark, sf_dir):
-    """r15 plan contract for the gram family: the d² gram build is ONE
+    """Plan contract for the gram family: the d² gram build is ONE
     MapInPandas partial-gram kernel feeding a (di, dj) aggregation —
     never the per-row 4096-struct explode (Generate node) it replaced
     (sf1 A/B: gram 6.80 -> 0.92 s, pca 16.5 -> 2.3 s, identical rows)."""
@@ -633,7 +632,7 @@ def test_gram_kernel_values_match_bruteforce():
 
 
 def test_pair_fan_kernel_plan_shape(spark, sf_dir):
-    """r15 session-5 plan contract for the co-purchase graph family:
+    """Plan contract for the co-purchase graph family:
     the C(basket,2) pair fan is ONE ArrowMapInArrow/PythonMapInArrow
     kernel — never the nested-transform explode (Generate over the
     flatten(transform(...)) expression) it replaced."""
@@ -712,7 +711,7 @@ def test_pair_fan_kernel_values_match_bruteforce():
 
 
 def test_cusum_partial_agg_then_tiny_windows(spark, sf_dir):
-    """r9 plan contract for cusum_drift_daily: the corpus collapses in
+    """Plan contract for cusum_drift_daily: the corpus collapses in
     ONE partial aggregation (two HashAggregate levels) before any
     window touches it — windows run on the |days|-row daily frame."""
     plan = _plan(Q["cusum_drift_daily"](spark, sf_dir))
@@ -724,7 +723,7 @@ def test_cusum_partial_agg_then_tiny_windows(spark, sf_dir):
 
 
 def test_kneser_ney_single_corpus_pass(spark, sf_dir):
-    """r9 plan contract for ngram_lm_kneser_ney: every marginal (c(w1.),
+    """Plan contract for ngram_lm_kneser_ney: every marginal (c(w1.),
     N1+(w1.), N1+(.w2), |bigram types|) derives from the ONE aggregated
     bigram table — the corpus-scale pair explode is scanned once per
     join branch at most, and the 1-row type total is broadcast."""
@@ -735,9 +734,9 @@ def test_kneser_ney_single_corpus_pass(spark, sf_dir):
 
 
 def test_bbit_audit_sample_bounded_lineage(spark, sf_dir):
-    """r9 plan contract for minhash_bbit_estimate: the checkpointed
+    """Plan contract for minhash_bbit_estimate: the checkpointed
     sample + sampled-signature build keep the plan at <= 4 corpus
-    scans (the r9 lesson: un-checkpointed audit lineages re-derived
+    scans (un-checkpointed audit lineages re-derived
     corpus-wide signature builds per join branch — 22+ scans, 30 s at
     sf1 for a <=1280-doc audit)."""
     plan = _plan(Q["minhash_bbit_estimate"](spark, sf_dir))
@@ -761,7 +760,7 @@ def test_jaccard_estimate_one_signature_build(spark, sf_dir):
 
 
 def test_pareto_skyline_local_prune_before_global(spark, sf_dir):
-    """r9 plan contract for pareto_skyline_quality_cost: ONE corpus
+    """Plan contract for pareto_skyline_quality_cost: ONE corpus
     scan; the hash-group local skyline windows run BEFORE the global
     window, so the single-partition global pass only ever sees local
     survivors (~64 x per-group frontier), never the corpus."""
@@ -771,7 +770,7 @@ def test_pareto_skyline_local_prune_before_global(spark, sf_dir):
 
 
 def test_curriculum_global_window_bounded(spark, sf_dir):
-    """r9 plan contract for curriculum_interleave_order: one scan; the
+    """Plan contract for curriculum_interleave_order: one scan; the
     rank<=25 filter sits between the distributed per-source window and
     the global position window, bounding the single-partition sort."""
     plan = _plan(Q["curriculum_interleave_order"](spark, sf_dir))
@@ -780,7 +779,7 @@ def test_curriculum_global_window_bounded(spark, sf_dir):
 
 
 def test_token_budget_single_pass_broadcast_scalars(spark, sf_dir):
-    """r9 plan contract for token_budget_epoch_plan: the corpus is read
+    """Plan contract for token_budget_epoch_plan: the corpus is read
     once — the |sources|-row count frame is checkpointed so the budget
     scalars derive from IT, not from a second corpus scan — and the
     1-row scalar frame is broadcast back."""
@@ -790,7 +789,7 @@ def test_token_budget_single_pass_broadcast_scalars(spark, sf_dir):
 
 
 def test_snm_no_global_window_one_scan(spark, sf_dir):
-    """r9 plan contract for dedup_sorted_neighborhood: ONE corpus scan,
+    """Plan contract for dedup_sorted_neighborhood: ONE corpus scan,
     the neighbor window is partitioned by block (never a global-order
     single-partition window), and verification happens on the carried
     token arrays — no token-table re-join."""
@@ -801,7 +800,7 @@ def test_snm_no_global_window_one_scan(spark, sf_dir):
 
 
 def test_knn_graph_single_signature_lineage(spark, sf_dir):
-    """r9 plan contract for knn_graph_rp_portable: the checkpointed
+    """Plan contract for knn_graph_rp_portable: the checkpointed
     signature table feeds probes, candidates and both dot sides — the
     final plan reads NO parquet (audit-lineage rule), and the mutual
     flag joins only the 3n-edge checkpoint against itself."""
@@ -810,7 +809,7 @@ def test_knn_graph_single_signature_lineage(spark, sf_dir):
 
 
 def test_bm25_tf_feeds_everything(spark, sf_dir):
-    """r9 plan contract for bm25_top_terms_source: dl/df/corpus stats
+    """Plan contract for bm25_top_terms_source: dl/df/corpus stats
     all derive from the tf rollup or its checkpoint — at most the two
     tf-branch corpus scans (tf + df lineage), never one per stat."""
     plan = _plan(Q["bm25_top_terms_source"](spark, sf_dir))
@@ -819,7 +818,7 @@ def test_bm25_tf_feeds_everything(spark, sf_dir):
 
 
 def test_bm25_df_count_equals_distinct(spark, sf_dir):
-    """r15 contract for the df = COUNT (not COUNT DISTINCT) rewrite:
+    """Contract for the df = COUNT (not COUNT DISTINCT) rewrite:
     the tf rollup is KEYED by (doc_id, source, token) with source
     functionally dependent on doc_id, so (doc_id, token) is unique and
     plain COUNT per token is provably the distinct doc count.  Pin the
@@ -852,7 +851,7 @@ def test_bm25_df_count_equals_distinct(spark, sf_dir):
 
 
 def test_kaplan_meier_collapses_before_windows(spark, sf_dir):
-    """r9 plan contract for kaplan_meier_retention: the checkpointed
+    """Plan contract for kaplan_meier_retention: the checkpointed
     per-user frame feeds lifetimes + the observation-end scalar — the
     tail plan reads no parquet and windows run on the |days| frame."""
     plan = _plan(Q["kaplan_meier_retention"](spark, sf_dir))
@@ -861,7 +860,7 @@ def test_kaplan_meier_collapses_before_windows(spark, sf_dir):
 
 
 def test_ewma_one_aggregation_pass(spark, sf_dir):
-    """r9 plan contract for ewma_daily_volume: one corpus scan, one
+    """Plan contract for ewma_daily_volume: one corpus scan, one
     partial-aggregated collapse to |days| rows, all 16 lags in ONE
     window pass (a single Window node, not 16)."""
     plan = _plan(Q["ewma_daily_volume"](spark, sf_dir))
@@ -871,7 +870,7 @@ def test_ewma_one_aggregation_pass(spark, sf_dir):
 
 
 def test_pagerank_iterations_never_rescan_corpus(spark, sf_dir):
-    """r9 plan contract for pagerank_event_graph: the corpus feeds the
+    """Plan contract for pagerank_event_graph: the corpus feeds the
     checkpointed edge table once; both power iterations and the final
     assembly read NO parquet (iterations are joins on |types|-sized
     frames with broadcast scalars)."""
@@ -881,7 +880,7 @@ def test_pagerank_iterations_never_rescan_corpus(spark, sf_dir):
 
 
 def test_dq_suite_anti_joins_and_partial_aggs(spark, sf_dir):
-    """r9 plan contract for dq_expectation_suite: FK checks run as
+    """Plan contract for dq_expectation_suite: FK checks run as
     real anti-joins (BroadcastHashJoin/SortMergeJoin LeftAnti), and
     every count check partial-aggregates map-side."""
     plan = _plan(Q["dq_expectation_suite"](spark, sf_dir))
@@ -890,7 +889,7 @@ def test_dq_suite_anti_joins_and_partial_aggs(spark, sf_dir):
 
 
 def test_weighted_median_single_shuffle_per_key(spark, sf_dir):
-    """r9 plan contract for weighted_median_per_key (two-phase form):
+    """Plan contract for weighted_median_per_key (two-phase form):
     the bucket rollup partial-aggregates map-side, the ~3-row target
     bucket BROADCASTS back, and the exact-pick window only ever sees
     the selected bucket's sliver — never a corpus-wide per-key sort
@@ -902,7 +901,7 @@ def test_weighted_median_single_shuffle_per_key(spark, sf_dir):
 
 
 def test_share_of_parent_broadcasts_dims(spark, sf_dir):
-    """r9 plan contract for share_of_parent_rollup: nation/region (and
+    """Plan contract for share_of_parent_rollup: nation/region (and
     customer under AQE sizing) broadcast — no SMJ on the fact side;
     windows run on the |nations| frame after a map-side rollup."""
     plan = _plan(Q["share_of_parent_rollup"](spark, sf_dir))
@@ -911,7 +910,7 @@ def test_share_of_parent_broadcasts_dims(spark, sf_dir):
 
 
 def test_backlog_no_interval_expansion(spark, sf_dir):
-    """r9 plan contract for open_orders_backlog_daily: the sweep-line
+    """Plan contract for open_orders_backlog_daily: the sweep-line
     form never range-joins orders x days — no join below the daily
     stitch except the full-outer on the two |days| frames; both
     streams partial-aggregate map-side."""
@@ -922,7 +921,7 @@ def test_backlog_no_interval_expansion(spark, sf_dir):
 
 
 def test_rake_no_corpus_sort(spark, sf_dir):
-    """r9 plan contract for keyphrase_rake_top: phrase segmentation
+    """Plan contract for keyphrase_rake_top: phrase segmentation
     windows partition by doc_id (distributed), word stats collapse to
     vocab size, and the only row_number window is the bounded top-5
     per source."""
@@ -932,7 +931,7 @@ def test_rake_no_corpus_sort(spark, sf_dir):
 
 
 def test_fulfillment_sla_single_join(spark, sf_dir):
-    """r9 plan contract for orders_fulfillment_sla: one join between
+    """Plan contract for orders_fulfillment_sla: one join between
     the order scan and the map-side lineitem rollup; month rollup
     partial-aggregates."""
     plan = _plan(Q["orders_fulfillment_sla"](spark, sf_dir))
@@ -941,7 +940,7 @@ def test_fulfillment_sla_single_join(spark, sf_dir):
 
 
 def test_bootstrap_fanout_is_mapside(spark, sf_dir):
-    """r9 plan contract for bootstrap_ci_event_value: the 32x replicate
+    """Plan contract for bootstrap_ci_event_value: the 32x replicate
     fan-out happens map-side (broadcast cross join below the
     aggregation) — one corpus scan for the resample branch plus one
     for the point estimate; the means frame is 32 rows."""
@@ -952,7 +951,7 @@ def test_bootstrap_fanout_is_mapside(spark, sf_dir):
 
 
 def test_session_sweep_single_gap_pass(spark, sf_dir):
-    """r9 plan contract for session_timeout_sweep: gaps are computed in
+    """Plan contract for session_timeout_sweep: gaps are computed in
     ONE user-keyed window pass; the 4-threshold sweep is a broadcast
     fan over that pass, never four sessionizer runs."""
     plan = _plan(Q["session_timeout_sweep"](spark, sf_dir))
@@ -961,7 +960,7 @@ def test_session_sweep_single_gap_pass(spark, sf_dir):
 
 
 def test_srm_check_tail_reads_no_parquet(spark, sf_dir):
-    """r9 plan contract for ab_assignment_srm_check: the checkpointed
+    """Plan contract for ab_assignment_srm_check: the checkpointed
     2-row counts frame feeds total/chi-square/output — 0 parquet scans
     in the tail plan."""
     plan = _plan(Q["ab_assignment_srm_check"](spark, sf_dir))
@@ -969,7 +968,7 @@ def test_srm_check_tail_reads_no_parquet(spark, sf_dir):
 
 
 def test_variant_extract_stays_jvm(spark, sf_dir):
-    """r9 plan contract for props_variant_extract: parse_json +
+    """Plan contract for props_variant_extract: parse_json +
     variant_get are JVM expressions (no Python eval), and the rollup
     partial-aggregates map-side."""
     plan = _plan(Q["props_variant_extract"](spark, sf_dir))
@@ -978,7 +977,7 @@ def test_variant_extract_stays_jvm(spark, sf_dir):
 
 
 def test_pipe_q6_pushes_filters(spark, sf_dir):
-    """r9 plan contract for tpch_q6_pipe_syntax: the pipe dialect must
+    """Plan contract for tpch_q6_pipe_syntax: the pipe dialect must
     optimize exactly like classic SQL — pushed scan filters and a
     partial+final aggregate pair."""
     plan = _plan(Q["tpch_q6_pipe_syntax"](spark, sf_dir))
@@ -988,7 +987,7 @@ def test_pipe_q6_pushes_filters(spark, sf_dir):
 
 
 def test_q14_broadcasts_part_and_pushes_dates(spark, sf_dir):
-    """r9 plan contract for tpch_q14_promo_effect: part joins as a
+    """Plan contract for tpch_q14_promo_effect: part joins as a
     broadcast dim and the one-month ship-date filter reaches the
     lineitem scan."""
     plan = _plan(Q["tpch_q14_promo_effect"](spark, sf_dir))
@@ -998,9 +997,8 @@ def test_q14_broadcasts_part_and_pushes_dates(spark, sf_dir):
 
 
 def test_burst_dp_quantization_stays_sql_side(spark, sf_dir):
-    """r10 plan contract for burst_detection_twostate (supersedes the
-    r9 UnionLoop assertion — the DP moved into one applyInPandas task,
-    r9 VERDICT #2; see test_burst_dp_is_one_pandas_task_not_recursion):
+    """Plan contract for burst_detection_twostate (the DP runs in one
+    applyInPandas task; see test_burst_dp_is_one_pandas_task_not_recursion):
     the e0/e1/tu quantization must still run as the shared SQL text
     BELOW the pandas node (window over the daily frame), so the
     integers entering Python are engine-expression-identical to the
@@ -1011,7 +1009,7 @@ def test_burst_dp_quantization_stays_sql_side(spark, sf_dir):
 
 
 def test_skip_pmi_marginals_from_pair_table(spark, sf_dir):
-    """r9 plan contract for pmi_skip_bigrams: both marginals and the
+    """Plan contract for pmi_skip_bigrams: both marginals and the
     total derive from the aggregated pair table — corpus scans bounded
     by the pair lineage (<= 3 branches), 1-row total broadcast."""
     plan = _plan(Q["pmi_skip_bigrams"](spark, sf_dir))
@@ -1038,7 +1036,7 @@ def test_q4_semi_join_no_fanout(spark, sf_dir):
 
 
 def test_burst_dp_is_one_pandas_task_not_recursion(spark, sf_dir):
-    """r10 contract (r9 VERDICT #2): the burst DP must run as a single
+    """The burst DP must run as a single
     grouped-pandas task over the collapsed daily frame — not as a
     recursive-CTE frontier loop paying |days| scheduler round-trips."""
     plan = _plan(Q["burst_detection_twostate"](spark, sf_dir))
@@ -1049,7 +1047,7 @@ def test_burst_dp_is_one_pandas_task_not_recursion(spark, sf_dir):
 def test_gram_matrix_partial_aggregation_two_level(spark, sf_dir):
     """The gram fan must collapse map-side (two-level hash aggregate):
     the shuffle carries d² integer partial cells per task, never a
-    per-row stream.  Since r15 the fan comes from the DECLARED
+    per-row stream.  The fan comes from the DECLARED
     MapInPandas gram kernel (plan shape + values pinned by
     test_gram_kernel_*), which replaced the JVM-only 4096-struct
     explode this test used to require — the aggregation contract and
@@ -1254,7 +1252,7 @@ def test_stump_argmax_is_bounded_heap(spark, sf_dir):
     assert "EvalPython" not in plan
 
 
-# ------------------------------------------------- r12 plan contracts
+# ------------------------ rank-prefix, counter and persist plan contracts
 
 
 def _no_single_partition_window(plan: str) -> bool:
@@ -1278,7 +1276,7 @@ def _no_single_partition_window(plan: str) -> bool:
         # Anchor on the sort-direction TOKEN (' ASC'/' DESC' followed
         # by ' NULLS'/end), not a bare substring: a partition COLUMN
         # whose name contains "asc"/"desc" (e.g. asc_id) must not
-        # false-positive (r12 ADVICE).  Plan output renders direction
+        # false-positive.  Plan output renders direction
         # as "expr ASC NULLS FIRST" / "expr DESC NULLS LAST".
         if re.search(r" (ASC|DESC)( NULLS|$)", first):
             return False
@@ -1286,7 +1284,7 @@ def _no_single_partition_window(plan: str) -> bool:
 
 
 def test_rank_prefix_ops_have_no_global_window(spark, sf_dir):
-    """r12 (r11 VERDICT #4): every rank-statistic op built on the
+    """Every rank-statistic op built on the
     hierarchical prefix — including the rewritten mann_whitney — must
     plan ZERO unpartitioned WindowExec nodes."""
     for qid in (
@@ -1323,7 +1321,7 @@ def test_hits_edges_disk_only_persist(spark, sf_dir):
     """The 4 HITS aggregations share ONE DISK_ONLY-persisted edge
     table: the plan must carry an InMemoryTableScan whose relation is
     disk-serialized (zero heap residency — localCheckpoint's
-    heap-resident materialization OOMed a 128 GiB JVM at sf10, r12),
+    heap-resident materialization OOMed a 128 GiB JVM at sf10),
     and must NOT re-derive the orders x lineitem join four times."""
     df = Q["hits_hub_authority"](spark, sf_dir)
     plan = _plan(df)
@@ -1400,7 +1398,7 @@ def test_gamma_pair_cross_is_broadcast(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
-# ------------------------------------------------- r13 plan contracts
+# ------------------------------- SQL-surface and statistics plan contracts
 
 
 def test_ohlc_single_scan_no_window(spark, sf_dir):
@@ -1455,7 +1453,7 @@ def test_dynamic_overwrite_readback_prunes_partitions(spark, sf_dir):
 
 
 def test_surface_fills_stay_jvm(spark, sf_dir):
-    """The r13 SQL-surface fills are narrow codegen projections: no
+    """The SQL-surface fills are narrow codegen projections: no
     Python eval, and the pk/doc-modulo predicates reach the scan."""
     for qid in ("regexp_count_instr", "datetime_interval_arith"):
         plan = _plan(Q[qid](spark, sf_dir))
@@ -1522,10 +1520,10 @@ def test_centroid_drift_no_python(spark, sf_dir):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
 
-# ----------------------------------------------------------- r14 contracts
+# ------------------------------------ single-pass and map-side contracts
 
 def test_percentile_one_pass_reuses_freq_exchange(spark, sf_dir):
-    """r14 swap contract: CONT derives from the SAME frequency collapse
+    """CONT derives from the SAME frequency collapse
     as DISC — the plan must reuse the freq aggregate's exchange across
     the cum/total branches (ReusedExchange) instead of re-scanning, and
     the old second-pass `percentile(...)` aggregate must be gone."""
@@ -1536,7 +1534,7 @@ def test_percentile_one_pass_reuses_freq_exchange(spark, sf_dir):
 
 
 def test_funnel_one_scan_consumes_staged_token_base(spark, sf_dir):
-    """r14 funnel contract (opt round: parquet snapshot staging): every
+    """Funnel contract (parquet snapshot staging): every
     stage signal reads the per-invocation columnar token-base snapshot
     — the documents parquet never appears in the query plan (the ONE
     corpus scan happens at snapshot-write time, inside the query fn)."""
@@ -1547,7 +1545,7 @@ def test_funnel_one_scan_consumes_staged_token_base(spark, sf_dir):
 
 
 def test_finance_indicators_stay_jvm_day_collapsed(spark, sf_dir):
-    """r14 b1: the daily-indicator ops are map-side collapses + window
+    """The daily-indicator ops are map-side collapses + window
     passes — no Python nodes anywhere."""
     for q in ["rsi_indicator_daily", "sma_crossover_signals",
               "bollinger_bands_daily", "mase_seasonal_naive",
@@ -1558,7 +1556,7 @@ def test_finance_indicators_stay_jvm_day_collapsed(spark, sf_dir):
 
 
 def test_stats_single_pass_ops_have_no_join(spark, sf_dir):
-    """r14 b2: the one-row moments ops are a single aggregate pass —
+    """The one-row moments ops are a single aggregate pass —
     no join operator of any kind in the plan."""
     for q in ["jarque_bera_test", "two_proportion_z_test",
               "equivalence_tost_test"]:
@@ -1567,14 +1565,14 @@ def test_stats_single_pass_ops_have_no_join(spark, sf_dir):
 
 
 def test_adamic_adar_bounded_topk_heap(spark, sf_dir):
-    """r14 b3: the top-20 cut must be a bounded TakeOrderedAndProject,
+    """The top-20 cut must be a bounded TakeOrderedAndProject,
     never a global sort."""
     plan = _plan(Q["adamic_adar_link_pred"](spark, sf_dir))
     assert "TakeOrderedAndProject" in plan
 
 
 def test_concurrency_sweep_partitions_by_day(spark, sf_dir):
-    """r14 b3: the boundary sweep's running sum must window PARTITION
+    """The boundary sweep's running sum must window PARTITION
     BY day (parallel), never a single global partition."""
     plan = _plan(Q["concurrency_peak_daily"](spark, sf_dir))
     assert "partitionBy" not in plan  # executedPlan spells it as below
@@ -1584,7 +1582,7 @@ def test_concurrency_sweep_partitions_by_day(spark, sf_dir):
 
 
 def test_bit_agg_partials_fold_map_side(spark, sf_dir):
-    """r14 b5: bit_or/bit_and are partial-aggregable — the plan carries
+    """`bit_or`/`bit_and` are partial-aggregable — the plan carries
     a partial_ aggregate below the user-key exchange."""
     plan = _plan(Q["bit_agg_flags"](spark, sf_dir))
     assert "partial_bit_or" in plan or "partial_" in plan
@@ -1601,7 +1599,7 @@ def test_surface_b5_ops_stay_jvm(spark, sf_dir):
 
 
 def test_audit_family_broadcasts_sample_bounded_joins(spark, sf_dir):
-    """r14 optimization: every join in the audit family whose build side
+    """Every join in the audit family whose build side
     is bounded by the code-enforced `_AUDIT_DOC_CAP` sample budget is an
     explicit broadcast — the checkpointed sample lineage reports no
     stats, so without the hints the planner SMJ'd joins whose build
@@ -1620,8 +1618,7 @@ def test_audit_family_broadcasts_sample_bounded_joins(spark, sf_dir):
 
 
 def test_semantic_lsh_bucket_kernel_plan(spark, sf_dir):
-    """r15 optimization (supersedes the r14 ArrowEvalPython per-pair
-    dot): bucket scoring is ONE grouped numpy matmul kernel
+    """Bucket scoring is ONE grouped numpy matmul kernel
     (FlatMapGroupsInPandas per (band, bkey)) — no candidate self-join,
     no vector fetch-back joins, no per-pair Arrow dot (sf1 timed A/B
     8.20 -> 0.93 s, identical rows)."""

@@ -1,9 +1,11 @@
-"""Comments and docstrings under ``migbq_spark/`` say what the code does or
-what it relies on; they do not tag the development round a line came
-from (``r12``, ``r5``) or cite a per-round artifact file
-(``SCALING_r06.md``, ``BENCH_r15.json``).  Comments are read with
-``tokenize`` and docstrings with ``ast``, so code (a ``"r1"`` string
-literal, a variable named ``r2``) is not scanned."""
+"""Comments and docstrings under ``migbq_spark/``, ``tests/``, ``scripts/``
+and ``bench.py`` say what the code does or what it relies on; they do not
+tag the development round a line came from (an ``r`` followed by one or
+two digits, as a word) or cite a per-round artifact file (a ``SCALING_``
+or ``BENCH_`` name carrying such a tag).  Comments are read with
+``tokenize`` and docstrings with ``ast``, so code (a tag-shaped string
+literal or variable name) is not scanned; the detector's own self-check
+spells its tags in code for that reason."""
 
 import ast
 import io
@@ -15,9 +17,16 @@ import pytest
 
 REPO = Path(__file__).resolve().parent.parent
 PACKAGE = REPO / "migbq_spark"
+SCANNED = (
+    sorted(PACKAGE.rglob("*.py"))
+    + sorted((REPO / "tests").glob("*.py"))
+    + sorted((REPO / "scripts").rglob("*.py"))
+    + [REPO / "bench.py"]
+)
 
 _ROUND_TAG = re.compile(r"\br\d{1,2}\b")
-#: ``SCALING_r06_sf10.md``, ``bench_r3.json``, or a bare ``SCALING_r07``
+#: an artifact file name (``SCALING_`` / ``bench_`` + tag + ``.md`` /
+#: ``.json``) or a bare upper-case artifact stem carrying a tag
 _ARTIFACT = re.compile(r"\w*_r\d+\w*\.(?:md|json)\b|\b[A-Z]+(?:_[A-Z]+)*_r\d+")
 
 _DOC_OWNERS = (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
@@ -68,12 +77,12 @@ def test_detector_reads_only_comments_and_docstrings():
     assert round_tags(src) == [1, 3, 7, 9]
 
 
-MODULES = sorted(PACKAGE.rglob("*.py"))
+def _module_id(path: Path) -> str:
+    base = PACKAGE if path.is_relative_to(PACKAGE) else REPO
+    return str(path.relative_to(base))
 
 
-@pytest.mark.parametrize(
-    "module", MODULES, ids=lambda p: str(p.relative_to(PACKAGE))
-)
+@pytest.mark.parametrize("module", SCANNED, ids=_module_id)
 def test_no_round_tags(module):
     found = round_tags(module.read_text())
     assert not found, (

@@ -42,7 +42,7 @@ def test_session_window_exact_gap_boundary(spark):
     into the same session (merge is new_start <= prev_end), so the
     gaps-and-islands oracle must use a STRICT ``>`` gap predicate — and
     duplicate (user_id, ts) rows must not destabilize the islands sum
-    (ORDER BY ts, event_id).  Both halves of the r2 ADVICE claim, settled
+    (ORDER BY ts, event_id).  Both halves of that claim were settled
     empirically: the ``>=`` suggestion was wrong, the tie-break was right.
     """
     import datetime as dt
@@ -115,7 +115,7 @@ def test_streaming_dedup_subset_of_batch_keys(spark, sf_dir):
 
 
 def test_tws_runs_real_transport(spark, sf_dir):
-    """r4 (r3 VERDICT #3): with the pbcompat protobuf bootstrap,
+    """With the pbcompat protobuf bootstrap,
     `stream_stateful_tws` must run the REAL transformWithStateInPandas
     transport (RocksDB state store, protobuf state-server protocol) in a
     get_spark()-built session — not the in-process fallback — and still
@@ -152,7 +152,7 @@ def test_tws_runs_real_transport(spark, sf_dir):
 
 
 def test_tws_liststate_real_transport_matches_fallback(spark, sf_dir):
-    """r4: `stream_tws_liststate` must run typed ListState through the
+    """`stream_tws_liststate` must run typed ListState through the
     REAL transformWithState transport and agree exactly with the
     in-process fallback drive of the same processor (batching
     invariance) and with batch SQL."""
@@ -197,7 +197,7 @@ def test_tws_liststate_real_transport_matches_fallback(spark, sf_dir):
 
 
 def test_tws_mapstate_real_transport_matches_fallback(spark, sf_dir):
-    """r4: `stream_tws_mapstate` must run typed MapState through the
+    """`stream_tws_mapstate` must run typed MapState through the
     REAL transport and agree exactly with the in-process fallback drive
     and with the batch two-key GROUP BY."""
     import pytest
@@ -240,7 +240,7 @@ def test_tws_mapstate_real_transport_matches_fallback(spark, sf_dir):
 
 
 def test_tws_timers_fire_through_real_transport(spark, sf_dir):
-    """r4: `stream_tws_timers` must exercise event-time timers through
+    """`stream_tws_timers` must exercise event-time timers through
     the real transport — at least one session closed BY TIMER (watermark
     passing a deadline) and, batching permitting, some by data; the
     graded (user_id, session_end_ms) set must equal plain batch gap
@@ -316,7 +316,7 @@ def test_stateful_progress_evolves_across_batches(spark, sf_dir):
 
 
 def test_pk_range_stream_sync_resumes_across_runs(spark, sf_dir):
-    """r5: the custom Python streaming source must forward the corpus
+    """The custom Python streaming source must forward the corpus
     across MULTIPLE independent availableNow runs resuming from the
     same checkpoint — one PK stride per run (migbq's cron sync), not
     one big batch — and the union must be exactly-once."""
@@ -338,7 +338,7 @@ def test_pk_range_stream_sync_resumes_across_runs(spark, sf_dir):
 
 
 def test_stream_loadjob_epochs_exactly_once(spark, sf_dir):
-    """r5: the custom source→custom sink streaming pipeline must commit
+    """The custom source→custom sink streaming pipeline must commit
     one epoch per forwarded stride with a receipt line each, and the
     union of epochs must be exactly-once."""
     import hashlib as _h
@@ -364,7 +364,7 @@ def test_stream_loadjob_epochs_exactly_once(spark, sf_dir):
 
 
 def test_pk_stream_source_picks_up_new_data_between_runs(spark, tmp_path):
-    """r5: the PK-offset streaming source must forward rows that ARRIVE
+    """The PK-offset streaming source must forward rows that ARRIVE
     in the source between availableNow runs — migbq's actual sync
     scenario — resuming from the checkpointed offset, exactly once."""
     import pandas as pd
@@ -420,7 +420,7 @@ def test_pk_stream_source_picks_up_new_data_between_runs(spark, tmp_path):
 
 
 def test_stream_loadjob_crash_replay_exactly_once(spark, tmp_path):
-    """r6 (VERDICT #6): kill a micro-batch AFTER its tasks staged data
+    """Kill a micro-batch AFTER its tasks staged data
     but BEFORE the epoch commit, restart the query from the same
     checkpoint, and prove the replayed epoch publishes cleanly — the
     exactly-once claim exercised through an actual crash, not just
@@ -500,7 +500,7 @@ def test_stream_loadjob_crash_replay_exactly_once(spark, tmp_path):
 
 
 def test_tws_value_ttl_real_transport_and_semantics(spark, sf_dir):
-    """r6: the TTL op must (a) run the REAL transformWithState transport
+    """The TTL op must (a) run the REAL transformWithState transport
     under the repo session (no fallback warning), and (b) show the TTL
     contract: short state expired for every probed key, long state
     present exactly for keys the first run touched."""
@@ -525,8 +525,7 @@ def test_tws_value_ttl_real_transport_and_semantics(spark, sf_dir):
 
 
 def test_kafka_adapter_stream_matches_batch_parse(spark, sf_dir):
-    """r11 (r10 VERDICT "Next round" #4, the Derby-JDBC precedent): the
-    kafka_source_adapter's exercised path — events serialized to a
+    """The kafka_source_adapter's exercised path — events serialized to a
     4-file JSON-lines topic log, streamed with maxFilesPerTrigger=1
     through the SAME from_json schema, drained availableNow — must
     equal the batch parse of the same messages."""
@@ -561,7 +560,7 @@ def test_kafka_adapter_stream_matches_batch_parse(spark, sf_dir):
 
 
 def test_tws_real_transport_on_bare_session_subprocess():
-    """r14 (r13 VERDICT "Next round" #6): the runtime PYTHONPATH repair
+    """The runtime PYTHONPATH repair
     in session._ship_package (sc.environment['PYTHONPATH'] is read by
     PythonWorkerFactory's env merge at UDF-wrap time) is load-bearing
     for all five stream_tws_* ops on bare driver sessions.  Guard it
