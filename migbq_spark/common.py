@@ -1,8 +1,10 @@
 """Shared expression helpers enforcing the cross-engine determinism rules
 (SURVEY.md §7.4): DECIMAL-before-aggregation for money doubles, identical
 aliasing on both engine sides, unique window tiebreaks, the one corpus
-tokenization rule (`tokens`), and the vector kernels: the one embedding
-fixed-point quantizer (`fixed_point`) and the two dot folds (`dot`, `idot`).
+tokenization rule (`tokens`), the one portable hash (`md5_int`, the hex
+prefix of an md5 digest read as an integer), and the vector kernels: the
+one embedding fixed-point quantizer (`fixed_point`) and the two dot folds
+(`dot`, `idot`).
 """
 
 from __future__ import annotations
@@ -25,6 +27,17 @@ def tokens() -> Column:
     spell the same rule as ``list_filter(string_split(text, ' '),
     t -> t <> '')``."""
     return F.filter(F.split("text", " "), lambda t: t != "")
+
+
+def md5_int(col: str | Column, start: int = 1, length: int = 15) -> Column:
+    """The one portable hash: hex digits ``start .. start+length-1`` of
+    ``md5(col)`` read as a base-16 integer, as bigint — ``conv(substring(
+    md5(col), start, length), 16, 10)``.  The default 15 digits are the
+    top 60 bits; up to 15 digits fit a bigint, so the value is exact and
+    bit-identical to the DuckDB oracles' ``CAST('0x' || substr(md5(col),
+    start, length) AS BIGINT)``.  Salts, seeds and moduli stay with the
+    caller."""
+    return F.conv(F.substring(F.md5(col), start, length), 16, 10).cast("bigint")
 
 
 def fixed_point(scale: float = 1000000.0) -> Column:

@@ -43,7 +43,7 @@ def udf_python_scalar(spark: SparkSession, sf_dir: str) -> DataFrame:
     no float arithmetic, so parity is exact)."""
 
     @F.udf("string")
-    def band(p: float) -> str:
+    def band(p):
         if p < 50000:
             return "low"
         if p < 150000:

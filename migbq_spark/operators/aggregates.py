@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from migbq_spark.catalog import load
-from migbq_spark.common import DEC, cents, dec, scaled_sum_agg
+from migbq_spark.common import DEC, cents, dec, md5_int, scaled_sum_agg
 from migbq_spark.registry import register
 
 
@@ -1343,16 +1343,21 @@ def bootstrap_ci_event_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale by widening the CASE fan, never by re-reading data."""
     ev = load(spark, sf_dir, "events")
     b = spark.range(0, 32).select(F.col("id").cast("int").alias("b"))
-    u = (
-        "(CAST(conv(substr(md5(concat(CAST(event_id AS STRING), ':', "
-        "CAST(b AS STRING))), 1, 8), 16, 10) AS BIGINT) * 1.0 "
-        "/ 4294967296.0)"
-    )
+    # n / 2^32 is exact in double, and no 32-bit n lies near enough to a
+    # CDF literal for the double compare to pick another branch than a
+    # decimal one would
+    u = md5_int(
+        F.concat(
+            F.col("event_id").cast("string"), F.lit(":"), F.col("b").cast("string")
+        ),
+        1,
+        8,
+    ) / F.lit(4294967296.0)
     w = ev.crossJoin(b).select(
         "b",
         (dec("value") * 100).cast("bigint").alias("v_c"),
-        F.expr(_pois_case(u)).alias("wgt"),
-    )
+        u.alias("u"),
+    ).select("b", "v_c", F.expr(_pois_case("u")).alias("wgt"))
     means = w.groupBy("b").agg(
         (
             F.sum(F.col("wgt") * F.col("v_c")).cast("bigint")

@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from migbq_spark.catalog import load
+from migbq_spark.common import md5_int
 from migbq_spark.registry import register
 
 
@@ -1785,10 +1786,7 @@ def ab_assignment_srm_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     assign = ev.select(
         "user_id",
         (
-            F.expr(
-                "cast(conv(substr(md5(concat('exp1:', "
-                "cast(user_id as string))), 1, 8), 16, 10) as bigint)"
-            )
+            md5_int(F.concat(F.lit("exp1:"), F.col("user_id").cast("string")), 1, 8)
             % 2
         ).alias("variant"),
     ).distinct()

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from migbq_spark.catalog import load
-from migbq_spark.common import dec
+from migbq_spark.common import dec, md5_int
 from migbq_spark.registry import register
 
 
@@ -327,7 +327,7 @@ def table_checksum_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts, and being a commutative SUM it is partition-order-proof and
     cheap to maintain incrementally (add/subtract per changed row).
     md5 is cross-engine-identical; Spark parses the hex prefix with
-    `conv(,16,10)`, DuckDB with a 0x-cast.
+    `common.md5_int`, DuckDB with a 0x-cast.
 
     The sum ACCUMULATES IN DECIMAL(38,0) and publishes mod 2^48: a
     BIGINT accumulator overflows at n·2^48 > 2^63 ≈ 32 M rows, and
@@ -348,9 +348,7 @@ def table_checksum_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("event_type"),
         F.col("props"),
     )
-    prefix_int = F.conv(F.substring(F.md5(canon), 1, 12), 16, 10).cast(
-        "decimal(38,0)"
-    )
+    prefix_int = md5_int(canon, 1, 12).cast("decimal(38,0)")
     return ev.groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.pmod(F.sum(prefix_int), F.lit(_CHECKSUM_MOD))
@@ -414,9 +412,7 @@ def checksum_incremental_update(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def row_hash(status_col):
         canon = F.concat_ws("|", key.cast("string"), status_col)
-        return F.conv(F.substring(F.md5(canon), 1, 12), 16, 10).cast(
-            "decimal(38,0)"
-        )
+        return md5_int(canon, 1, 12).cast("decimal(38,0)")
 
     in_v1 = key % 17 != 2
     in_v2 = key % 13 != 5
@@ -799,12 +795,7 @@ def partition_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     regardless of key cardinality."""
     ev = load(spark, sf_dir, "events")
     bucket = F.pmod(
-        F.conv(
-            F.substring(F.md5(F.col("user_id").cast("string")), 1, 15),
-            16,
-            10,
-        ).cast("bigint"),
-        F.lit(_SKEW_BUCKETS),
+        md5_int(F.col("user_id").cast("string")), F.lit(_SKEW_BUCKETS)
     )
     per = ev.select(bucket.alias("bucket")).groupBy("bucket").agg(
         F.count(F.lit(1)).alias("n_rows")
@@ -1301,9 +1292,11 @@ def schema_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata, zero data rows move); the diff itself is
     driver-side over ≤ |columns| entries, then parallelized back
     through createDataFrame for the graded frame."""
+    from migbq_spark.operators.sources import _stage_dir
+
     c = load(spark, sf_dir, "customer")
-    v1_dest = _stage_dir_ctl(sf_dir, "schema_v1")
-    v2_dest = _stage_dir_ctl(sf_dir, "schema_v2")
+    v1_dest = _stage_dir(sf_dir, "schema_v1")
+    v2_dest = _stage_dir(sf_dir, "schema_v2")
     c.write.mode("overwrite").parquet(v1_dest)
     (
         c.drop("c_mktsegment")
@@ -1333,17 +1326,6 @@ def schema_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     return spark.createDataFrame(rows, schema).orderBy("col_name")
-
-
-def _stage_dir_ctl(sf_dir: str, name: str) -> str:
-    """control.py twin of sources._stage_dir (kept local to avoid a
-    cross-module import cycle)."""
-    import hashlib
-    from pathlib import Path
-
-    root = Path(__file__).resolve().parents[2] / ".stage"
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return str(root / tag / name)
 
 
 # ---------------------------------------------------- dup_row_full_hash_audit

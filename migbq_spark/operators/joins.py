@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from migbq_spark.catalog import load
-from migbq_spark.common import DEC, cents, scaled_sum_agg
+from migbq_spark.common import DEC, cents, md5_int, scaled_sum_agg
 from migbq_spark.registry import register
 
 
@@ -666,9 +666,7 @@ def join_bloom_prefilter(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load(spark, sf_dir, "orders")
 
     def h(prefix, key) -> F.Column:
-        return F.conv(
-            F.substring(F.md5(F.concat_ws(":", prefix, key)), 1, 15), 16, 10
-        ).cast("bigint") % 8192
+        return md5_int(F.concat_ws(":", prefix, key)) % 8192
 
     dim = o.filter(F.col("o_orderpriority") == "1-URGENT").select(
         F.col("o_orderkey").alias("k")

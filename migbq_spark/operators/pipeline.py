@@ -28,6 +28,8 @@ Every near-dup operator and audit composes ONE builder per step:
 | audit pair build     | `_sampled_token_pairs` under `_exact_jaccard_pairs_df` and `_containment_pairs_df` |
 | sketch estimates     | `_side_signatures` + `_n_match` |
 | connected components | `_cc_twostar_components` (run to the fixpoint) |
+| portable hash        | `common.md5_int` (md5 hex prefix as bigint, DuckDB's `'0x'` cast), per token `_md5_hash` |
+| portable HLL         | `_phll_coupon` (bucket, rho at m = 16^k registers) + `_phll_estimate` |
 
 The embedding operators do the same:
 
@@ -63,7 +65,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from migbq_spark.catalog import load
-from migbq_spark.common import dot, fixed_point, idot, tokens
+from migbq_spark.common import dot, fixed_point, idot, md5_int, tokens
 from migbq_spark.registry import register
 
 #: Previous invocation's persisted token base (unpersisted on the next
@@ -141,14 +143,8 @@ _LSH_BANDS = 4  # 4 bands × 4 rows ⇒ P(candidate) = 1-(1-j^4)^4
 
 
 def _md5_hash(i: int) -> F.Column:
-    """Portable per-token hash ``i``: the top 60 bits of md5(i ':' token),
-    bit-identical between Spark's ``conv(substr(md5(..),1,15),16,10)``
-    and DuckDB's ``CAST('0x'||substr(md5(..),1,15) AS BIGINT)``."""
-    return F.conv(
-        F.substring(F.md5(F.concat_ws(":", F.lit(i), F.col("token"))), 1, 15),
-        16,
-        10,
-    ).cast("bigint")
+    """Portable per-token hash ``i``: `common.md5_int` of (i ':' token)."""
+    return md5_int(F.concat_ws(":", F.lit(i), F.col("token")))
 
 
 def _xxhash(i: int) -> F.Column:
@@ -427,10 +423,9 @@ def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     the hash-checkable twin of `dedup_minhash_lsh`.
 
     `dedup_minhash_lsh` is rows-only because xxhash64 is engine-specific;
-    here each of the 16 hash functions is the top 60 bits of
-    md5(seed ':' token) parsed base-16 — verified bit-identical between
-    Spark (`conv(substr(md5(..),1,15),16,10)`) and DuckDB
-    (`CAST('0x'||substr(md5(..),1,15) AS BIGINT)`), so the ENTIRE
+    here each of the 16 hash functions is `common.md5_int` of
+    (seed ':' token), the top 60 bits of the md5 digest, which DuckDB
+    reproduces bit-for-bit, so the ENTIRE
     pipeline — signatures → 4×4 banding → source-blocked bucket join →
     exact-Jaccard verify ≥ 0.8 — is oracle-checked end-to-end, upgrading
     the 100 TB dedup path's evidence from "recall pinned in tests" to
@@ -555,17 +550,15 @@ def dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-checkable twin of `dedup_simhash`, the same upgrade
     `dedup_minhash_portable` gave the LSH pipeline.
 
-    Per-token hash = top 60 bits of md5(token) parsed base-16, verified
-    bit-identical between Spark (`conv(substr(md5(..),1,15),16,10)`) and
-    DuckDB (`CAST('0x'||substr(md5(..),1,15) AS BIGINT)`); simhash uses
-    its low 32 bits, so the ENTIRE signature → XOR → bit_count → hamming
+    Per-token hash = `common.md5_int(token)`, the top 60 bits of the md5
+    digest, which DuckDB reproduces bit-for-bit; simhash uses its low
+    32 bits, so the ENTIRE signature → XOR → bit_count → hamming
     ≤ 3 pipeline is oracle-checked end-to-end.  Same scale shape as
     `dedup_simhash` (one explode + one map-side-combinable groupBy; at
     100 TB block the pair scan on signature prefixes instead of
     `source`); md5 costs ~3× xxhash64 per token, so prefer the xxhash64
     twin when cross-engine determinism isn't required."""
-    v = F.conv(F.substring(F.md5("token"), 1, 15), 16, 10).cast("bigint")
-    return _simhash_pairs(_tok_df(spark, sf_dir), v)
+    return _simhash_pairs(_tok_df(spark, sf_dir), md5_int("token"))
 
 
 # ------------------------------------------------- embedding near-dup
@@ -1309,50 +1302,61 @@ def active_users_7d_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _phll_rows(df: DataFrame, tcol: str) -> DataFrame:
-    """(tcol, bucket, rho) — row-local portable-HLL coupon per event,
-    m=4096 from the md5 family: bucket = first 3 hex chars, rho = 49 −
-    bitlength of the next 48 bits (the `hll_portable_merge` recipe at
-    lgK=12, the default sketch size Spark's own datasketches HLL uses).
-    Shared by the batch `sliding_distinct_hll` and its streaming twin
-    (`streaming.structured.run_streaming_sliding_hll`), so both build
-    bit-identical registers."""
-    u = F.md5(F.col("user_id").cast("string"))
-    v = F.conv(F.substring(u, 4, 12), 16, 10).cast("bigint")
-    return df.select(
-        tcol,
-        F.conv(F.substring(u, 1, 3), 16, 10).cast("bigint").alias("bucket"),
+def _phll_coupon(k: int) -> tuple[F.Column, F.Column]:
+    """(bucket, rho) — the row-local portable-HLL coupon of ``user_id`` at
+    m = 16^k registers: bucket = the first k hex digits of md5(user_id),
+    rho = 49 − the bit length of the next 48 bits (49 when all are zero).
+    The one coupon of `sliding_distinct_hll` and its streaming twin (k=3,
+    lgK=12, the default size of Spark's own datasketches HLL),
+    `hll_portable_merge` (k=2) and `hll_m_sweep` (k=1..3); the DuckDB
+    oracles spell it with ``'0x'`` casts and ``bin``, bit-identically."""
+    uid = F.col("user_id").cast("string")
+    v = md5_int(uid, k + 1, 12)
+    return (
+        md5_int(uid, 1, k).alias("bucket"),
         F.when(v == 0, F.lit(49))
         .otherwise(F.lit(49) - F.length(F.conv(v, 10, 2)))
         .alias("rho"),
     )
 
 
-def _phll_window_estimate(regs: DataFrame) -> DataFrame:
-    """(window_start, au_est) from per-window registers (window_start,
-    bucket, r): the fixed-order m=4096 HLL estimator with the standard
-    small-range linear-counting correction (est ≤ 2.5 m with empty
-    buckets → m·ln(m/V)).  Register sums use INTEGER terms 2^(49−rho)
-    (exact, partition-order-independent); the estimator is a single
-    fixed-order double expression DuckDB reproduces bit-for-bit."""
+def _phll_estimate(regs: DataFrame, k: int, *keys: str) -> DataFrame:
+    """(*keys, est) — the portable-HLL estimate per ``keys`` group of
+    registers (bucket, r) at m = 16^k, with the standard small-range
+    linear-counting correction (est ≤ 2.5 m with empty registers →
+    m·ln(m/V)).  Register sums use INTEGER terms 2^(49−r) (exact,
+    partition-order-independent — a float Σ2^-r spans >52 bits of
+    mantissa); the estimator is one fixed-order double expression
+    DuckDB reproduces bit-for-bit.  α_m = 0.7213/(1 + 1.079/m), except
+    the tabulated α₁₆ = 0.673 the m=16 oracle uses."""
+    m = 16**k
+    alpha = 0.673 if m == 16 else 0.7213 / (1 + 1.079 / m)
+    nempty = F.lit(m) - F.count(F.lit(1))
+    # F.shiftleft requires a Python-int bit count; the SQL form accepts a
+    # column expression
     term = F.expr("shiftleft(cast(1 as bigint), 49 - r)")
-    two49 = F.lit(562949953421312).cast("bigint")
-    est = regs.groupBy("window_start").agg(
-        (F.sum(term) + (F.lit(4096) - F.count(F.lit(1))) * two49).alias("s"),
-        (F.lit(4096) - F.count(F.lit(1))).alias("nempty"),
+    sums = regs.groupBy(*keys).agg(
+        (F.sum(term) + nempty * F.lit(1 << 49)).alias("s"),
+        nempty.alias("nempty"),
     )
-    est_raw = (
-        F.lit(0.7213)
-        / (F.lit(1) + F.lit(1.079) / F.lit(4096))
-        * F.lit(16777216)
-        * F.lit(562949953421312.0)
-        / F.col("s")
-    )
-    est_final = F.when(
-        (est_raw <= F.lit(10240.0)) & (F.col("nempty") > 0),
-        F.lit(4096.0) * F.log(F.lit(4096.0) / F.col("nempty")),
-    ).otherwise(est_raw)
-    return est.select("window_start", F.round(est_final, 4).alias("au_est"))
+    # α·m²·2^49 / s: the register sums carry the 2^49 scale
+    raw = F.lit(alpha * m * m * 2.0**49) / F.col("s")
+    est = F.when(
+        (raw <= 2.5 * m) & (F.col("nempty") > 0),
+        F.lit(float(m)) * F.log(F.lit(float(m)) / F.col("nempty")),
+    ).otherwise(raw)
+    return sums.select(*keys, est.alias("est"))
+
+
+def _phll_graded() -> list[F.Column]:
+    """``est`` and its relative error against ``n_exact``, both rounded to
+    4 dp — the graded columns of `hll_portable_merge` / `hll_m_sweep`."""
+    return [
+        F.round("est", 4).alias("est"),
+        F.round(
+            (F.col("est") - F.col("n_exact")) * F.lit(1.0) / F.col("n_exact"), 4
+        ).alias("rel_err"),
+    ]
 
 
 @register(
@@ -1421,9 +1425,7 @@ def sliding_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     estimates to within a few % of the exact sliding count-distinct."""
     ev = load(spark, sf_dir, "events")
     hourly = (
-        _phll_rows(
-            ev.select(F.date_trunc("hour", "ts").alias("h"), "user_id"), "h"
-        )
+        ev.select(F.date_trunc("hour", "ts").alias("h"), *_phll_coupon(3))
         .groupBy("h", "bucket")
         .agg(F.max("rho").alias("r"))
     )
@@ -1432,7 +1434,9 @@ def sliding_distinct_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("r").alias("r"))
         .select(F.col("win.start").alias("window_start"), "bucket", "r")
     )
-    return _phll_window_estimate(win)
+    return _phll_estimate(win, 3, "window_start").select(
+        "window_start", F.round("est", 4).alias("au_est")
+    )
 
 
 # ---------------------------------------------------- dup_cc_twostar
@@ -3613,16 +3617,7 @@ def sketch_count_min_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFram
     )
 
     def bucket(seed_col, token_col) -> F.Column:
-        return (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws(":", seed_col, token_col)), 1, 15
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % 64
-        )
+        return md5_int(F.concat_ws(":", seed_col, token_col)) % 64
 
     truth = toks.groupBy("token").agg(F.count(F.lit(1)).alias("true_count"))
     cells = (
@@ -3904,10 +3899,9 @@ def winnowing_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n", F.size("t")
     ).filter(F.col("n") >= 4)
     # per-position gram hashes (1-based slice, 4 tokens each)
-    grams = F.expr(
-        "transform(sequence(1, n - 3), i -> "
-        " cast(conv(substring(md5(concat_ws(' ', slice(t, i, 4))), 1, 15),"
-        "           16, 10) as bigint))"
+    grams = F.transform(
+        F.sequence(F.lit(1), F.col("n") - 3),
+        lambda i: md5_int(F.concat_ws(" ", F.slice("t", i, F.lit(4)))),
     )
     # window minima: min over g[j..j+4], j bounded so every window is
     # full except the single clipped window of docs with ng < 5
@@ -4055,8 +4049,9 @@ def hll_portable_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     its exact count and relative error.  Unlike
     `agg_approx_distinct` / `active_users_7d_hll` (Spark's builtin HLL,
     engine-specific ⇒ rows-only), this sketch is built from the
-    portable md5 family — bucket = first 2 hex chars (m=256),
-    rho = 49 − bitlength of the next 48 bits — so DuckDB reproduces
+    portable md5 family (`_phll_coupon` / `_phll_estimate`) — bucket =
+    first 2 hex chars (m=256), rho = 49 − bitlength of the next 48
+    bits — so DuckDB reproduces
     every register and BOTH estimates bit-for-bit: the oracle
     hash-check verifies the max-monoid merge property itself, the
     reason 100 TB rollups never recount history (same argument
@@ -4084,54 +4079,15 @@ def hll_portable_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = (
         ev.select(F.to_date("ts").alias("day"), "user_id")
         .join(F.broadcast(days), "day")
-        .select(
-            "day",
-            "user_id",
-            F.conv(
-                F.substring(F.md5(F.col("user_id").cast("string")), 1, 2),
-                16, 10,
-            ).cast("bigint").alias("bucket"),
-            F.conv(
-                F.substring(F.md5(F.col("user_id").cast("string")), 3, 12),
-                16, 10,
-            ).cast("bigint").alias("v"),
-        )
-        .withColumn(
-            "rho",
-            F.when(F.col("v") == 0, F.lit(49)).otherwise(
-                F.lit(49) - F.length(F.conv(F.col("v"), 10, 2))
-            ),
-        )
+        .select("day", "user_id", *_phll_coupon(2))
     )
     regs = h.groupBy("day", "bucket").agg(F.max("rho").alias("r"))
-    # F.shiftleft requires a Python-int bit count; the SQL form accepts a
-    # column expression
-    term = F.expr("shiftleft(cast(1 as bigint), 49 - r)")
-    two49 = F.lit(562949953421312).cast("bigint")
-
-    def est_df(grouped, scope_col):
-        return grouped.agg(
-            (F.sum(term) + (F.lit(256) - F.count(F.lit(1))) * two49).alias("s"),
-            (F.lit(256) - F.count(F.lit(1))).alias("nempty"),
-        ).select(
-            scope_col.alias("scope"),
-            "s",
-            "nempty",
-            (
-                F.lit(0.7213)
-                / (F.lit(1) + F.lit(1.079) / F.lit(256))
-                * F.lit(65536)
-                * F.lit(562949953421312.0)
-                / F.col("s")
-            ).alias("est_raw"),
-        )
-
-    day_est = est_df(regs.groupBy("day"), F.col("day").cast("string"))
-    merged_est = est_df(
-        regs.groupBy("bucket").agg(F.max("r").alias("r")).groupBy(),
-        F.lit("merged"),
+    day_est = _phll_estimate(regs, 2, "day").select(
+        F.col("day").cast("string").alias("scope"), "est"
     )
-    ests = day_est.unionByName(merged_est)
+    merged_est = _phll_estimate(
+        regs.groupBy("bucket").agg(F.max("r").alias("r")), 2
+    ).select(F.lit("merged").alias("scope"), "est")
     exacts = (
         h.groupBy(F.col("day").cast("string").alias("scope"))
         .agg(F.countDistinct("user_id").alias("n_exact"))
@@ -4141,21 +4097,10 @@ def hll_portable_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     )
-    est_final = F.when(
-        (F.col("est_raw") <= 640.0) & (F.col("nempty") > 0),
-        F.lit(256.0) * F.log(F.lit(256.0) / F.col("nempty")),
-    ).otherwise(F.col("est_raw"))
     return (
-        ests.join(exacts, "scope")
-        .select(
-            "scope",
-            "n_exact",
-            F.round(est_final, 4).alias("est"),
-            F.round(
-                (est_final - F.col("n_exact")) * F.lit(1.0) / F.col("n_exact"),
-                4,
-            ).alias("rel_err"),
-        )
+        day_est.unionByName(merged_est)
+        .join(exacts, "scope")
+        .select("scope", "n_exact", *_phll_graded())
     )
 
 
@@ -4812,14 +4757,7 @@ def decontaminate_bloom_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def pos(j: int) -> F.Column:
         return F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws(":", F.lit(j), F.col("gram"))), 1, 15
-                ),
-                16,
-                10,
-            ).cast("bigint"),
-            F.lit(_BLOOM_M),
+            md5_int(F.concat_ws(":", F.lit(j), F.col("gram"))), F.lit(_BLOOM_M)
         )
 
     test_g = grams.filter(F.col("m") == 9).select("gram").distinct()
@@ -5313,7 +5251,7 @@ def ann_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SEMDEDUP_TAU = 300000000000  # 0.3 in micro-unit^2 dot scale (2.4σ @ 64-d)
 
 
-def _semdedup_cluster_kernel(key: tuple, pdf) -> "pd.DataFrame":  # noqa: F821
+def _semdedup_cluster_kernel(key, pdf):
     """Exact within-cluster near-dup hits: for one centroid cluster,
     compute EVERY pairwise int64 dot as a chunked numpy matmul and emit
     only the (v, c_id, k, d) rows with d >= τ and k < v — identical
@@ -6206,11 +6144,11 @@ def hll_m_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     6.5% / 1.6%), the same audit shape `minhash_band_shape_sweep`
     provides for LSH band geometry.
 
-    Determinism: registers come from the salted-free md5 family
-    (bucket = first k hex chars, rho = 49 − bitlength of the next 48
-    bits), register sums are exact integer 2^(49-rho) terms, and each
-    estimator (with the standard small-range linear-counting branch)
-    is one fixed-order expression — both engines reproduce every
+    Determinism: registers come from `_phll_coupon`'s salt-free md5
+    family (bucket = first k hex chars, rho = 49 − bitlength of the next
+    48 bits), and `_phll_estimate` sums exact integer 2^(49-rho) terms
+    into one fixed-order estimator (with the standard small-range
+    linear-counting branch) — both engines reproduce every
     register and every estimate bit-for-bit.
 
     Scale (100 TB): one scan serves all three sweeps (three grouped
@@ -6218,63 +6156,18 @@ def hll_m_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle); the exact count is the audit column, not the serving
     path."""
     ev = load(spark, sf_dir, "events")
-    uid = F.col("user_id").cast("string")
     exact = ev.agg(F.count_distinct("user_id").alias("n_exact"))
     outs = []
-    for m, k, alpha in (
-        (16, 1, 0.673),
-        (256, 2, 0.7182725932495458),
-        (4096, 3, 0.7211100396160289),
-    ):
-        v = F.conv(F.substring(F.md5(uid), k + 1, 12), 16, 10).cast(
-            "bigint"
+    for k in (1, 2, 3):
+        regs = (
+            ev.select(*_phll_coupon(k))
+            .groupBy("bucket")
+            .agg(F.max("rho").alias("r"))
         )
-        h = ev.select(
-            F.conv(F.substring(F.md5(uid), 1, k), 16, 10)
-            .cast("bigint")
-            .alias("bucket"),
-            F.when(v == 0, F.lit(49))
-            .otherwise(F.lit(49) - F.length(F.conv(v, 10, 2)))
-            .alias("rho"),
-        )
-        regs = h.groupBy("bucket").agg(F.max("rho").alias("r"))
-        term = F.expr("shiftleft(cast(1 as bigint), 49 - r)")
-        two49 = F.lit(562949953421312).cast("bigint")
-        est = regs.agg(
-            (F.sum(term) + (F.lit(m) - F.count(F.lit(1))) * two49).alias(
-                "s"
-            ),
-            (F.lit(m) - F.count(F.lit(1))).alias("nempty"),
-        ).select(
-            F.lit(m).alias("m"),
-            "s",
-            "nempty",
-            (
-                F.lit(alpha)
-                * F.lit(m)
-                * F.lit(m)
-                * F.lit(562949953421312.0)
-                / F.col("s")
-            ).alias("est_raw"),
-        )
-        fixed = F.when(
-            (F.col("est_raw") <= F.lit(m) * 2.5) & (F.col("nempty") > 0),
-            F.lit(m)
-            * F.lit(1.0)
-            * F.log(F.lit(m) * F.lit(1.0) / F.col("nempty")),
-        ).otherwise(F.col("est_raw"))
         outs.append(
-            est.crossJoin(F.broadcast(exact)).select(
-                "m",
-                "n_exact",
-                F.round(fixed, 4).alias("est"),
-                F.round(
-                    (fixed - F.col("n_exact"))
-                    * F.lit(1.0)
-                    / F.col("n_exact"),
-                    4,
-                ).alias("rel_err"),
-            )
+            _phll_estimate(regs, k)
+            .crossJoin(F.broadcast(exact))
+            .select(F.lit(16**k).alias("m"), "n_exact", *_phll_graded())
         )
     out = outs[0]
     for o in outs[1:]:
@@ -6392,13 +6285,7 @@ def bloom_m_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def khash(k: int) -> F.Column:
-        return F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit(f"{k}:"), F.col("g"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("bigint")
+        return md5_int(F.concat(F.lit(f"{k}:"), F.col("g")))
 
     vocab = (
         sh.repartition("g")

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from migbq_spark.catalog import load, path_for
-from migbq_spark.common import dec
+from migbq_spark.common import dec, md5_int
 from migbq_spark.session import ensure_runtime_confs
 from migbq_spark.registry import register
 
@@ -424,14 +424,7 @@ def shard_export_training(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "source", "lang", "text"
     )
     shard = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws(":", F.lit("shard"), F.col("doc_id"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("bigint"),
-        F.lit(8),
+        md5_int(F.concat_ws(":", F.lit("shard"), F.col("doc_id"))), F.lit(8)
     )
     dest = _stage_dir(sf_dir, "documents_training_shards")
     (
@@ -634,23 +627,14 @@ def shard_ring_rebalance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything collapses in ONE scalar partial aggregate — the doc
     stream is never exchanged at all."""
     d = load(spark, sf_dir, "documents")
-    h = d.select(
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
-        ).cast("bigint").alias("hv"),
-    )
+    h = d.select(md5_int(F.col("doc_id").cast("string")).alias("hv"))
     ring = (
         spark.range(9)
         .select(F.col("id").cast("int").alias("node"))
         .crossJoin(spark.range(64).select(F.col("id").cast("int").alias("v")))
         .select(
             "node",
-            F.conv(
-                F.substring(
-                    F.md5(F.concat_ws("#", F.col("node"), F.col("v"))), 1, 15
-                ),
-                16, 10,
-            ).cast("bigint").alias("bh"),
+            md5_int(F.concat_ws("#", F.col("node"), F.col("v"))).alias("bh"),
         )
     )
     grid = 1 << 50  # 1024 cells over the 60-bit md5-prefix space

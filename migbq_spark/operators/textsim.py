@@ -153,13 +153,13 @@ _JACCARD_SCHEMA = (
 _JACCARD_MAX_LITERAL_HOT = 1024
 
 
-def _jaccard_one_group(key: tuple, pdf) -> "pd.DataFrame":  # noqa: F821
+def _jaccard_one_group(key, pdf):
     return _jaccard_block(
         pdf["doc_id"].to_numpy(), pdf["toks"].tolist(), None, None
     )
 
 
-def _jaccard_tile_kernel(key: tuple, pdf) -> "pd.DataFrame":  # noqa: F821
+def _jaccard_tile_kernel(key, pdf):
     _, ti, tj = key
     if ti == tj:
         return _jaccard_block(

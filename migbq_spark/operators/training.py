@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from migbq_spark.catalog import load
-from migbq_spark.common import dec, tokens
+from migbq_spark.common import dec, md5_int, tokens
 from migbq_spark.registry import register
 
 # ------------------------------------------------------------- pii_scrub
@@ -1010,7 +1010,7 @@ def sample_hash_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
     split.  Plain `doc_id % 100` correlates with any id-assignment
     pattern (append order, shard striping); hashing the id first gives
     a pseudo-random but REPRODUCIBLE coin per row, identical in Spark
-    (`conv(substr(md5,1,15),16,10)`) and DuckDB ('0x' cast) — so the
+    (`common.md5_int`) and DuckDB ('0x' cast) — so the
     sample is engine-exact and re-runnable, unlike `rand()`/TABLESAMPLE.
     The salt prefix ('smp:') decorrelates this coin from every other
     md5-family use (minhash seeds).
@@ -1020,14 +1020,7 @@ def sample_hash_bernoulli(spark: SparkSession, sf_dir: str) -> DataFrame:
     — one map-side-combinable shuffle."""
     d = load(spark, sf_dir, "documents")
     coin = F.pmod(
-        F.conv(
-            F.substring(
-                F.md5(F.concat_ws(":", F.lit("smp"), F.col("doc_id"))), 1, 15
-            ),
-            16,
-            10,
-        ).cast("bigint"),
-        F.lit(100),
+        md5_int(F.concat_ws(":", F.lit("smp"), F.col("doc_id"))), F.lit(100)
     )
     return (
         d.filter(coin < 10)
@@ -2631,9 +2624,7 @@ def sample_reservoir_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     (collect top-5 per partition, merge), so no key ever needs its
     full event list in one task."""
     ev = load(spark, sf_dir, "events")
-    hrank = F.conv(
-        F.substring(F.md5(F.col("event_id").cast("string")), 1, 15), 16, 10
-    ).cast("bigint")
+    hrank = md5_int(F.col("event_id").cast("string"))
     w = Window.partitionBy("user_id").orderBy(hrank, "event_id")
     return (
         ev.select("user_id", "event_id", F.row_number().over(w).alias("rk"))
@@ -2681,12 +2672,9 @@ def sample_weighted_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection; top-50 is TakeOrderedAndProject (per-partition heaps +
     a 50-row driver merge, no global sort)."""
     d = load(spark, sf_dir, "documents").filter(F.col("n_chars") > 0)
-    u = (
-        F.conv(
-            F.substring(F.md5(F.col("doc_id").cast("string")), 1, 15), 16, 10
-        ).cast("bigint")
-        + 1
-    ) / F.lit(1152921504606846976.0)
+    u = (md5_int(F.col("doc_id").cast("string")) + 1) / F.lit(
+        1152921504606846976.0
+    )
     key = F.round(F.log(u) / F.col("n_chars"), 8)
     return (
         d.select("doc_id", "n_chars", key.alias("priority_key"))
@@ -3971,16 +3959,7 @@ def fim_split_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def coin(salt: str, mod: int) -> F.Column:
         return F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit(salt + ":"), F.col("doc_id"))),
-                    1,
-                    15,
-                ),
-                16,
-                10,
-            ).cast("bigint"),
-            F.lit(mod),
+            md5_int(F.concat(F.lit(salt + ":"), F.col("doc_id"))), F.lit(mod)
         )
 
     elig = d.select(
@@ -4557,14 +4536,7 @@ def kfold_assignment_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = load(spark, sf_dir, "documents")
     f = d.select(
         F.pmod(
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("fold:"), F.col("doc_id"))), 1, 15
-                ),
-                16,
-                10,
-            ).cast("bigint"),
-            F.lit(5),
+            md5_int(F.concat(F.lit("fold:"), F.col("doc_id"))), F.lit(5)
         ).alias("fold"),
         "lang",
     )
@@ -4856,7 +4828,7 @@ def span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     and target lengths BEFORE materializing corrupted text.
 
     Determinism: the coin is the house portable-md5 family
-    (conv(substr(md5(...),1,15)) % 100 < 15) — identical bits on both
+    (`common.md5_int(...) % 100 < 15`) — identical bits on both
     engines; span starts counted via a per-doc LAG (mask=1, prev=0).
 
     Scale (100 TB): positions explode corpus-linearly; the only
@@ -4873,10 +4845,14 @@ def span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     coin = pos.withColumn(
         "m",
         F.when(
-            F.expr(
-                "CAST(conv(substr(md5(concat(CAST(doc_id AS STRING), ':',"
-                " CAST(i AS STRING))), 1, 15), 16, 10) AS BIGINT) % 100"
+            md5_int(
+                F.concat(
+                    F.col("doc_id").cast("string"),
+                    F.lit(":"),
+                    F.col("i").cast("string"),
+                )
             )
+            % 100
             < 15,
             1,
         ).otherwise(0),

@@ -18,6 +18,7 @@ and streaming share the DataFrame plans.
 from __future__ import annotations
 
 import hashlib
+import shutil
 import uuid
 import warnings
 from pathlib import Path
@@ -94,7 +95,8 @@ def _drain(sdf: DataFrame, name_seed: str, mode: str = "append") -> str:
 
     NOTE: a memory sink cannot RECOVER a checkpoint, so multi-run
     resume operators cannot use _drain — they need foreachBatch with a
-    stable checkpoint (see `stream_tws_value_ttl`).
+    stable checkpoint (see `stream_tws_value_ttl`).  The one-shot
+    checkpoint is deleted once the query has terminated.
 
     Scopes `spark.sql.shuffle.partitions` → `_STREAM_SHUFFLE_PARTITIONS`
     around start+termination: the conf is read at query start and fixes
@@ -117,6 +119,7 @@ def _drain(sdf: DataFrame, name_seed: str, mode: str = "append") -> str:
         )
         query.awaitTermination()
     finally:
+        shutil.rmtree(_CHECKPOINT_ROOT / name, ignore_errors=True)
         if saved is None:
             spark.conf.unset("spark.sql.shuffle.partitions")
         else:
@@ -149,8 +152,8 @@ def run_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
 def run_streaming_sliding_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming twin of `sliding_distinct_hll`: approx-distinct users per
     24 h/6 h sliding window as ONE streaming register aggregation over
-    the PORTABLE md5-HLL family (shares `_phll_rows` /
-    `_phll_window_estimate` with the batch op, so both build
+    the PORTABLE md5-HLL family (shares `_phll_coupon` /
+    `_phll_estimate` with the batch op, so both build
     bit-identical registers).  Register-wise MAX is commutative-monoid
     state, so the micro-batch partials Spark maintains per (window,
     bucket) are exactly the batch form's hourly partials merged —
@@ -159,20 +162,19 @@ def run_streaming_sliding_hll(spark: SparkSession, sf_dir: str) -> DataFrame:
     is ≤ m=4096 small ints (a fixed-size sketch), bounded by the
     watermark; the estimator runs post-drain on the ≤ |windows|·m
     register table."""
-    from migbq_spark.operators.pipeline import (
-        _phll_rows,
-        _phll_window_estimate,
-    )
+    from migbq_spark.operators.pipeline import _phll_coupon, _phll_estimate
 
     sdf = events_stream(spark, sf_dir).withWatermark("ts", "1 hour")
-    rows = _phll_rows(sdf, "ts")
+    rows = sdf.select("ts", *_phll_coupon(3))
     agg = (
         rows.groupBy(F.window("ts", "24 hours", "6 hours").alias("win"), "bucket")
         .agg(F.max("rho").alias("r"))
         .select(F.col("win.start").alias("window_start"), "bucket", "r")
     )
     name = _drain(agg, f"sliding_hll_{sf_dir}", mode="complete")
-    return _phll_window_estimate(spark.table(name))
+    return _phll_estimate(spark.table(name), 3, "window_start").select(
+        "window_start", F.round("est", 4).alias("au_est")
+    )
 
 
 def _progress_update(key, pdf_iter, state: GroupState):
@@ -395,8 +397,6 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     epoch — the write inside is a distributed parquet append, and the
     same pattern drives MERGE INTO upserts (merge_upsert_latest) or
     JDBC/BigQuery loads per micro-batch."""
-    import shutil
-
     out = _STAGE_ROOT / f"fes_{Path(sf_dir).name}"
     shutil.rmtree(out, ignore_errors=True)
     sdf = events_stream(spark, sf_dir).select("event_id", "user_id", "event_type")
@@ -404,14 +404,17 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     def write_batch(df: DataFrame, epoch_id: int) -> None:
         df.write.mode("overwrite").parquet(f"{out}/epoch={epoch_id}")
 
-    name = "fes_" + uuid.uuid4().hex[:12]
-    query = (
-        sdf.writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", str(_CHECKPOINT_ROOT / name))
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
+    ckpt = _CHECKPOINT_ROOT / ("fes_" + uuid.uuid4().hex[:12])
+    try:
+        query = (
+            sdf.writeStream.foreachBatch(write_batch)
+            .option("checkpointLocation", str(ckpt))
+            .trigger(availableNow=True)
+            .start()
+        )
+        query.awaitTermination()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.read.parquet(str(out)).select(
         "event_id", "user_id", "event_type"
     )
@@ -1352,8 +1355,6 @@ def pk_range_stream_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
     swapped for a per-range RDBMS query is a resumable CDC-style bulk
     sync; batch_size bounds per-run memory and the checkpoint bounds
     re-work on failure to one stride."""
-    import shutil
-
     import pyarrow.parquet as pq
 
     from migbq_spark.pkrange_source import register_sources
@@ -1413,8 +1414,6 @@ def stream_pk_sync_loadjob(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale (100 TB): this is the CDC-to-lake shape — swap the stride
     read for the RDBMS range query and the NDJSON epoch for a columnar
     commit; offsets, commit protocol, and idempotency carry unchanged."""
-    import shutil
-
     import pyarrow.parquet as pq
 
     from migbq_spark.pkrange_source import register_sources
@@ -1555,7 +1554,6 @@ def stream_tws_value_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     no per-key timer state; this operator is the semantics pin for
     it."""
     import glob
-    import shutil
     import time as _time
 
     ensure_runtime_confs(spark)

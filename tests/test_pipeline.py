@@ -2181,3 +2181,18 @@ def test_arrow_udf_kernels_propagate_null(spark, tmp_path, sf_dir):
     out = Q["udf_arrow_scalar"](spark, str(orders_dir))
     row = out.filter(F.col("o_orderkey") == 1_000_000).collect()
     assert len(row) == 1 and row[0]["price_mod"] is None
+
+
+def test_python_function_ops_raise_no_type_hint_warning(spark, sf_dir):
+    """The grouped-map kernels of `semdedup_centroid_prune` and
+    `near_dup_jaccard` and the `udf_python_scalar` UDF carry no type
+    hints PySpark cannot read, so building these ops raises no "Cannot
+    infer the eval type" warning."""
+    import warnings
+
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        Q["semdedup_centroid_prune"](spark, sf_dir)
+        Q["near_dup_jaccard"](spark, sf_dir)
+        Q["udf_python_scalar"](spark, sf_dir)
+    assert not [w for w in caught if "Cannot infer the eval type" in str(w.message)]

@@ -36,6 +36,24 @@ def test_streaming_session_correlate_matches_batch(spark, sf_dir):
     assert _canon(stream) == _canon(batch)
 
 
+def test_one_shot_drains_leave_no_checkpoint(spark, sf_dir):
+    """A memory-sink drain and the foreachBatch sink each checkpoint under
+    a uuid name no later run reads; both checkpoints are deleted once
+    the query has terminated, so the checkpoint root lists the same
+    entries before and after."""
+    from migbq_spark.streaming.structured import _CHECKPOINT_ROOT
+
+    def listing():
+        if not _CHECKPOINT_ROOT.exists():
+            return []
+        return sorted(p.name for p in _CHECKPOINT_ROOT.iterdir())
+
+    before = listing()
+    run_streaming_dedup(spark, sf_dir)
+    registry.queries()["stream_foreach_batch_sink"](spark, sf_dir)
+    assert listing() == before
+
+
 def test_session_window_exact_gap_boundary(spark):
     """Pins the session_window boundary convention verified on pyspark
     4.1.2: an event exactly gap-duration after the previous one MERGES
