@@ -27,7 +27,7 @@ Every near-dup operator and audit composes ONE builder per step:
 | exact verify         | `_with_exact_jaccard` over `_jaccard` |
 | audit pair build     | `_sampled_token_pairs` under `_exact_jaccard_pairs_df` and `_containment_pairs_df` |
 | sketch estimates     | `_side_signatures` + `_n_match` |
-| connected components | `_cc_twostar_components` (run to the fixpoint) |
+| connected components | `_cc_twostar_components` (rounds while the edges exceed the driver budget, then a driver union-find) |
 | portable hash        | `common.md5_int` (md5 hex prefix as bigint, DuckDB's `'0x'` cast), per token `_md5_hash` |
 | portable HLL         | `_phll_coupon` (bucket, rho at m = 16^k registers) + `_phll_estimate` |
 
@@ -49,7 +49,7 @@ mega-cluster showed that pair-LISTING a giant similarity cluster is
 inherently quadratic.  Cross-source cluster discovery is
 `dedup_cross_source_cc`: unblocked buckets emit per-bucket STAR
 edges (linear in bucket size, connectivity-equivalent to the clique)
-and two-star CC labels the components — so cross-source dedup stays
+and `_cc_twostar_components` labels the components — so cross-source dedup stays
 end-to-end discoverable without any quadratic pair listing.
 """
 
@@ -1453,7 +1453,7 @@ def _cc_canon(E: DataFrame) -> DataFrame:
 def _cc_large_star(E: DataFrame) -> DataFrame:
     """Large-star: every neighbor v > u re-attaches to min(Γ(u) ∪ {u})."""
     und = E.union(E.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    m = und.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
+    m = und.groupBy("u").agg(F.least(F.min("v"), F.col("u")).alias("m"))
     return und.join(m, "u").filter(F.col("v") > F.col("u")).select(
         F.col("v").alias("u"), F.col("m").alias("v")
     )
@@ -1463,24 +1463,55 @@ def _cc_small_star(E: DataFrame) -> DataFrame:
     """Small-star: every smaller neighbor (and u itself) re-attaches to
     the minimum of u's smaller neighborhood."""
     lo = E.select(F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v"))
-    m = lo.groupBy("u").agg(F.least(F.min("v"), F.first("u")).alias("m"))
+    m = lo.groupBy("u").agg(F.least(F.min("v"), F.col("u")).alias("m"))
     return lo.join(m, "u").select(
         F.col("v").alias("u"), F.col("m").alias("v")
     ).union(m.select("u", F.col("m").alias("v")))
 
 
+#: Canonical edge count at or below which `_cc_twostar_components`
+#: stops running distributed rounds and finishes on the driver.  A
+#: pure-Python union-find over 1M random edges takes ~4 s on one core;
+#: tests lower it to exercise the rounds.
+_CC_DRIVER_EDGES = 1_000_000
+
+
+def _cc_union_find(edges: list) -> list[tuple]:
+    """(node, min node of its component) for every node of ``edges``:
+    union-find with path halving, always linking the larger root under
+    the smaller, so each root is its component's minimum."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in edges:
+        ru = find(parent.setdefault(u, u))
+        rv = find(parent.setdefault(v, v))
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return [(x, find(x)) for x in parent]
+
+
 def _cc_twostar_components(pairs: DataFrame) -> DataFrame:
-    """Run alternating large-star/small-star contractions over the edge
-    list ``(u, v)`` to the fixpoint and return ``(doc_id, component_id)``
-    with component_id = min node id in the component.  The one CC
-    fixpoint: `dup_connected_components`, `dup_cc_twostar` and the
-    cross-source dedup all run on it.  O(log n) rounds, looped until a
-    round leaves the edge set unchanged (never a round cap, which would
-    return a non-fixpoint labelling); per-round lineage cut with
+    """Connected components of the edge list ``(u, v)`` as
+    ``(doc_id, component_id)``, component_id = min node id in the
+    component, ids keeping the input type.  The one CC function:
+    `dup_connected_components`, `dup_cc_twostar` and the cross-source
+    dedup all run on it.  It runs alternating large-star/small-star
+    rounds while the edges exceed the driver budget
+    (`_CC_DRIVER_EDGES`), then a driver union-find over the collected
+    edges.  Every round keeps the components, so the tail may start
+    after any round.  An edge set that never fits runs its O(log n)
+    rounds to the exact fixpoint (never a round cap, which would return
+    a non-fixpoint labelling); per-round lineage is cut with
     localCheckpoint."""
     def _edge_stats(df: DataFrame) -> tuple[int, object]:
-        """(count, xxhash64-sum) of the canonical edge set in ONE tiny
-        agg job — a NECESSARY condition screen for set equality:
+        """(count, xxhash64-sum) of the canonical edge set in ONE small
+        aggregation — a NECESSARY condition screen for set equality:
         differing stats PROVE the round changed the edges,
         so the expensive exceptAll proof runs only on the candidate
         fixpoint round (count+hash match), never per round.  The sum
@@ -1494,55 +1525,61 @@ def _cc_twostar_components(pairs: DataFrame) -> DataFrame:
         ).collect()[0]
         return r["n"], r["h"]
 
-    # Lazy checkpoint: the _edge_stats agg right below (and, per round,
-    # the one for E2) computes every partition anyway, so the checkpoint
-    # materializes inside that job — one pass over the edge set instead
-    # of a checkpoint job plus a cached re-read.  Sites whose first
-    # consumer is a broadcast build stay eager: the build did not absorb
-    # the checkpoint job there.
+    # Lazy checkpoint: the first action over E materializes it, so the
+    # edge set is computed once for the driver read below and, above
+    # the budget, for the first round.
     E = _cc_canon(pairs).localCheckpoint(eager=False)
-    n, h = _edge_stats(E)
-    # Size the loop's shuffle partitions from the OBSERVED edge count
-    # (~100k edges per task, floor 8): each round is ~5 tiny shuffles,
-    # and scheduling 32 near-empty tasks per stage dominated the round
-    # cost at fixture scale (5.0 s → 3.6 s at sf0.1's 19k edges); a
-    # 100 TB edge set sizes itself up through the same formula.  The
-    # conf is scoped and restored — star edges are already star-shaped
-    # by construction so the count is a cheap cached-checkpoint scan.
+    # One task reads the edges and stops one past the budget: an edge
+    # set that fits arrives whole in one job, and one that does not
+    # costs at most _CC_DRIVER_EDGES + 1 rows to find out.
+    edges = E.coalesce(1).limit(_CC_DRIVER_EDGES + 1).collect()
     spark = pairs.sparkSession
-    saved = spark.conf.get("spark.sql.shuffle.partitions", None)
-    spark.conf.set(
-        "spark.sql.shuffle.partitions", str(max(8, n // 100_000))
-    )
-    try:
-        changed = True
-        while changed:
-            E2 = _cc_canon(
-                _cc_small_star(_cc_large_star(E))
-            ).localCheckpoint(eager=False)
-            # exact fixpoint test at half the cost of a symmetric diff:
-            # exceptAll(E2, E) empty means every E2 row (with
-            # multiplicity) occurs in E; with equal counts that IS
-            # multiset equality (_cc_canon output is distinct, so set
-            # equality).  The stats screen above means the join runs
-            # only when count+hash already match — one agg job per
-            # round instead of count + exceptAll.
-            n2, h2 = _edge_stats(E2)
-            changed = (n2 != n) or (h2 != h) or E2.exceptAll(E).count() > 0
-            E, n, h = E2, n2, h2
-    finally:
-        if saved is None:
-            spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            spark.conf.set("spark.sql.shuffle.partitions", saved)
-    # fixpoint is a star: canonical edges are (root, member)
-    return (
-        E.select(F.col("v").alias("doc_id"), F.col("u").alias("component_id"))
-        .union(
-            E.select(F.col("u").alias("doc_id"), F.col("u").alias("component_id"))
+    if len(edges) > _CC_DRIVER_EDGES:
+        del edges
+        n, h = _edge_stats(E)
+        # Size the rounds' shuffle partitions from the OBSERVED edge
+        # count (~100k edges per task, floor 8): each round is ~5
+        # shuffles, and a 100 TB edge set sizes itself up through the
+        # same formula.  The conf is session-global, so it is set only
+        # around the rounds and restored.
+        saved = spark.conf.get("spark.sql.shuffle.partitions", None)
+        spark.conf.set(
+            "spark.sql.shuffle.partitions", str(max(8, n // 100_000))
         )
-        .distinct()
-    )
+        try:
+            changed = True
+            while changed and n > _CC_DRIVER_EDGES:
+                E2 = _cc_canon(
+                    _cc_small_star(_cc_large_star(E))
+                ).localCheckpoint(eager=False)
+                # exact fixpoint test at half the cost of a symmetric
+                # diff: exceptAll(E2, E) empty means every E2 row (with
+                # multiplicity) occurs in E; with equal counts that IS
+                # multiset equality (_cc_canon output is distinct, so
+                # set equality).  The stats screen means the join runs
+                # only when count+hash already match.
+                n2, h2 = _edge_stats(E2)
+                changed = (n2 != n) or (h2 != h) or E2.exceptAll(E).count() > 0
+                E, n, h = E2, n2, h2
+        finally:
+            if saved is None:
+                spark.conf.unset("spark.sql.shuffle.partitions")
+            else:
+                spark.conf.set("spark.sql.shuffle.partitions", saved)
+        if not changed:
+            # fixpoint is a star: canonical edges are (root, member)
+            return (
+                E.select(F.col("v").alias("doc_id"), F.col("u").alias("component_id"))
+                .union(
+                    E.select(F.col("u").alias("doc_id"), F.col("u").alias("component_id"))
+                )
+                .distinct()
+            )
+        edges = E.collect()
+    schema = E.select(
+        F.col("v").alias("doc_id"), F.col("u").alias("component_id")
+    ).schema
+    return spark.createDataFrame(_cc_union_find(edges), schema)
 
 
 @register(
@@ -1554,12 +1591,13 @@ def dup_cc_twostar(spark: SparkSession, sf_dir: str) -> DataFrame:
     contractions (Kiveris et al., "Connected Components in MapReduce and
     Beyond") over the `ngram_jaccard` near-dup edges — the registry id
     of the two-star algorithm itself; `dup_connected_components` runs
-    the same `_cc_twostar_components` fixpoint, and both are
-    hash-checked against one recursive-CTE oracle.  Each round is two
-    groupBy+join passes over the edge list; the fixpoint is the star
-    graph rooting every node at its component minimum, extracted
-    directly from the final edges (root = the `least` side of each
-    canonical star edge).
+    the same `_cc_twostar_components`, and both are hash-checked
+    against one recursive-CTE oracle.  It runs rounds while the edges
+    exceed the driver budget, then a driver union-find; each round is
+    two groupBy+join passes over the edge list.  An edge set that never
+    fits ends at the fixpoint, the star graph rooting every node at its
+    component minimum, extracted directly from the final edges (root =
+    the `least` side of each canonical star edge).
 
     Scale (100 TB): round count is logarithmic in the largest component
     (pathological chains included); per-round cost is |E| shuffled on
@@ -1630,8 +1668,9 @@ def dedup_cross_source_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
        pairs — connectivity-equivalent to the full clique, linear in
        bucket size (the sf0.1 mega-cluster emits ~10 k edges where the
        unblocked pair join measured 12 M pairs / 91 s).
-    3. Two-star connected components over the star-edge union across
-       bands (`_cc_twostar_components`, O(log n) rounds).
+    3. Connected components over the star-edge union across bands
+       (`_cc_twostar_components`: rounds while the edges exceed the
+       driver budget, then a driver union-find).
 
     Output: (doc_id, component_id=min id in component) for every doc
     that shares at least one LSH bucket with another doc — the
@@ -1645,12 +1684,13 @@ def dedup_cross_source_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale (100 TB): signature build is one map-side-combinable groupBy;
     the hub assignment is a window-min per bucket (one shuffle on
     (band, bkey), no self-join); edges ≤ bands × |docs|; CC rounds are
-    logarithmic.  Nothing is quadratic in cluster size anywhere."""
+    logarithmic and stop once the edges fit the driver budget.  Nothing
+    is quadratic in cluster size anywhere."""
     return _cross_source_cc(_portable_band_df(spark, sf_dir))
 
 
 def _cross_source_cc(bands: DataFrame) -> DataFrame:
-    """Star edges per LSH bucket (hub = min doc_id) → two-star CC.
+    """Star edges per LSH bucket (hub = min doc_id) → connected components.
     Shared by `dedup_cross_source_cc` and the one-scan curation funnel,
     which feeds bands derived from its persisted token base."""
     w = Window.partitionBy("band", "bkey")
@@ -1736,7 +1776,8 @@ def _cross_source_cc(bands: DataFrame) -> DataFrame:
 )
 def dedup_keep_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """END-TO-END near-dup dedup driver: LSH candidate clusters
-    (`dedup_cross_source_cc`'s star-edge two-star CC) joined with the
+    (`dedup_cross_source_cc`'s star-edge CC: rounds while the edges
+    exceed the driver budget, then a driver union-find) joined with the
     `quality_score` signal, keeping the highest-quality document per
     cluster (ties broken by lowest doc_id) — one row per component with
     the kept doc and the drop count.  Docs sharing no LSH bucket are
@@ -1745,12 +1786,12 @@ def dedup_keep_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline executes after cluster discovery.
 
     The whole pipeline — portable MinHash signatures, banded buckets,
-    star edges, two-star CC, quality arg-max — is value-hash-checked
+    star edges, connected components, quality arg-max — is value-hash-checked
     against a recursive-CTE + window oracle.
 
     Scale (100 TB): adds one broadcast-sized quality join and a per-
     component arg-max (max of a (quality, -doc_id) struct — one shuffle
-    keyed by component) on top of the CC rounds; nothing quadratic."""
+    keyed by component) on top of the CC; nothing quadratic."""
     comps = dedup_cross_source_cc(spark, sf_dir)
     d = load(spark, sf_dir, "documents")
     toks = tokens()
@@ -1775,9 +1816,7 @@ def dedup_keep_cluster_canonical(spark: SparkSession, sf_dir: str) -> DataFrame:
     best = F.max(F.struct(F.col("quality"), (-F.col("doc_id")).alias("neg_id")))
     return labeled.groupBy("component_id").agg(
         (-best.getField("neg_id")).cast("bigint").alias("kept_doc_id"),
-        F.max(F.struct(F.col("quality"), (-F.col("doc_id")).alias("neg_id")))
-        .getField("quality")
-        .alias("kept_quality"),
+        best.getField("quality").alias("kept_quality"),
         F.count(F.lit(1)).alias("n_docs"),
         (F.count(F.lit(1)) - 1).alias("n_dropped"),
     )

@@ -507,17 +507,17 @@ def dup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     hits into keep-one-per-CLUSTER dedup (pairs alone under-delete:
     A~B, B~C but A≁C must still collapse to one cluster).
 
-    Spark side is the two-star contraction fixpoint
-    (`pipeline._cc_twostar_components`, shared with `dup_cc_twostar`
-    and the cross-source dedup): O(log n) rounds, run until a round
-    changes nothing, so a long chain is never cut short.  The oracle is
-    the same fixpoint via a recursive CTE (reachability closure + min)
+    Spark side is `pipeline._cc_twostar_components`, shared with
+    `dup_cc_twostar` and the cross-source dedup: two-star contraction
+    rounds while the edges exceed the driver budget, then a driver
+    union-find, so a long chain is never cut short.  The oracle is
+    the same labelling via a recursive CTE (reachability closure + min)
     — non-SQL-expressible in single-pass SQL, but DuckDB recursion
     makes it hash-checkable anyway.
 
     Scale (100 TB): |E| ≪ |docs|² thanks to the τ-filtered candidate
-    generation (at scale, MinHash-LSH candidates feed the same
-    fixpoint — see `dedup_cross_source_cc`); per-round cost is |E|
+    generation (at scale, MinHash-LSH candidates feed the same CC
+    function — see `dedup_cross_source_cc`); per-round cost is |E|
     shuffled on node id."""
     from migbq_spark.operators.pipeline import _cc_twostar_components
 

@@ -572,52 +572,109 @@ def test_warm_dedup_call_compiles_nothing(spark, sf_dir):
     assert recompiled == 0, f"warm call compiled {recompiled} classes"
 
 
-def test_cc_twostar_screened_fixpoint_chain(spark):
+#: The three ways `_cc_twostar_components` can finish: two-star rounds to
+#: the fixpoint (driver budget 0), rounds until the edges fit and then
+#: the driver union-find, or the union-find alone (the module default).
+CC_PATHS = ["rounds", "rounds_then_driver", "driver"]
+
+
+def _cc_path(monkeypatch, path, fixpoint_edges):
+    """Set the CC driver budget for `path` and count the two-star rounds
+    and union-find tails that run.  `fixpoint_edges` is the graph's
+    nodes − components, the edge count of its fixpoint star and the
+    least any round can leave; as the budget it lets a graph with a
+    cycle (more edges than that) start with rounds and finish on the
+    driver.  A forest starts at that count, so it needs a cycle."""
+    from migbq_spark.operators import pipeline
+
+    seen = {"rounds": 0, "union_find": 0}
+    large_star, union_find = pipeline._cc_large_star, pipeline._cc_union_find
+
+    def counted_large_star(E):
+        seen["rounds"] += 1
+        return large_star(E)
+
+    def counted_union_find(edges):
+        seen["union_find"] += 1
+        return union_find(edges)
+
+    monkeypatch.setattr(pipeline, "_cc_large_star", counted_large_star)
+    monkeypatch.setattr(pipeline, "_cc_union_find", counted_union_find)
+    if path != "driver":
+        budget = 0 if path == "rounds" else fixpoint_edges
+        monkeypatch.setattr(pipeline, "_CC_DRIVER_EDGES", budget)
+    return seen
+
+
+def _assert_cc_path(seen, path):
+    ran = (seen["rounds"] > 0, seen["union_find"])
+    assert ran == {
+        "rounds": (True, 0),
+        "rounds_then_driver": (True, 1),
+        "driver": (False, 1),
+    }[path], seen
+
+
+@pytest.mark.parametrize("path", CC_PATHS)
+def test_cc_twostar_screened_fixpoint_chain(spark, monkeypatch, path):
     """The fixpoint loop's cheap (count, hash-sum)
-    screen must not change the result — a 40-node chain forces several
+    screen must not change the result — a 40-hop chain forces several
     contraction rounds (screen says 'changed', exceptAll skipped)
     before the exceptAll-proved final round, and every node must still
-    root at the chain minimum."""
+    root at the chain minimum, on every path to the labels.  The chord
+    (100, 102) gives the chain the cycle the rounds-then-driver path
+    needs."""
     from migbq_spark.operators.pipeline import _cc_twostar_components
 
     edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(100, 140)], "u: long, v: long"
+        [(i, i + 1) for i in range(100, 140)] + [(100, 102)],
+        "u: long, v: long",
     )
+    seen = _cc_path(monkeypatch, path, fixpoint_edges=40)
     out = {
         (r.doc_id, r.component_id)
         for r in _cc_twostar_components(edges).collect()
     }
     assert out == {(i, 100) for i in range(100, 141)}
+    _assert_cc_path(seen, path)
 
 
-def test_dup_connected_components_long_chain(spark, sf_dir, monkeypatch):
+@pytest.mark.parametrize("path", CC_PATHS)
+def test_dup_connected_components_long_chain(spark, sf_dir, monkeypatch, path):
     """A 31-node near-dup chain (30 hops, past any fixed round budget a
-    min-label propagation would need) must come back fully contracted:
-    every node rooted at the chain minimum, never a partial labelling."""
+    min-label propagation would need; the chord (200, 202) shortens it
+    by one) must come back fully contracted: every node rooted at the
+    chain minimum, never a partial labelling, on every path."""
     from migbq_spark.operators import training
 
     chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(200, 230)], "a_id: long, b_id: long"
+        [(i, i + 1) for i in range(200, 230)] + [(200, 202)],
+        "a_id: long, b_id: long",
     )
     monkeypatch.setattr(training, "ngram_jaccard", lambda spark, sf_dir: chain)
+    seen = _cc_path(monkeypatch, path, fixpoint_edges=30)
     out = {
         (r.doc_id, r.component_id)
         for r in Q["dup_connected_components"](spark, sf_dir).collect()
     }
     assert out == {(i, 200) for i in range(200, 231)}
+    _assert_cc_path(seen, path)
 
 
-def test_ckpt_fusion_value_neutral(spark, sf_dir):
+@pytest.mark.parametrize("path", CC_PATHS)
+def test_ckpt_fusion_value_neutral(spark, sf_dir, monkeypatch, path):
     """The lazy localCheckpoint at the fused loop sites (materialized by
     each round's action) must give the values the eager form
-    gave: pinned for the CC fixpoint and the BPE trainer."""
+    gave: pinned for the CC fixpoint on every path (the chord (0, 2)
+    gives the chain a cycle) and, once, for the BPE trainer."""
     from migbq_spark.operators.pipeline import _cc_twostar_components
     from migbq_spark.operators.training import _bpe_train
 
     edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(0, 25)] + [(50, 52), (52, 54)],
+        [(i, i + 1) for i in range(0, 25)] + [(0, 2), (50, 52), (52, 54)],
         "u: long, v: long",
     )
+    seen = _cc_path(monkeypatch, path, fixpoint_edges=27)
     comps = {
         (r.doc_id, r.component_id)
         for r in _cc_twostar_components(edges).collect()
@@ -625,7 +682,8 @@ def test_ckpt_fusion_value_neutral(spark, sf_dir):
     assert comps == {(i, 0) for i in range(26)} | {
         (50, 50), (52, 50), (54, 50)
     }
-    if sf_dir.rstrip("/").endswith("sf0.001"):
+    _assert_cc_path(seen, path)
+    if path == "rounds" and sf_dir.rstrip("/").endswith("sf0.001"):
         merges, _ = _bpe_train(spark, sf_dir, n_merges=4)
         assert merges == [
             (0, "e", "r", 4650),
@@ -633,6 +691,128 @@ def test_ckpt_fusion_value_neutral(spark, sf_dir):
             (2, "n", "_", 2898),
             (3, "o", "r", 2880),
         ]
+
+
+def _random_cc_graph(seed):
+    """Chains, stars and isolated pairs over sparse bigint ids, with
+    chords (cycles), repeated and reversed edges and self-loops."""
+    import random
+
+    rng = random.Random(seed)
+    ids = iter(rng.sample(range(1, 10**12), 400))
+    edges, comps = [], []
+    for kind in rng.choices(["chain", "star", "pair"], k=40):
+        k = {"chain": rng.randint(3, 15), "star": rng.randint(3, 10), "pair": 2}
+        nodes = [next(ids) for _ in range(k[kind])]
+        if kind == "star":
+            edges += [(nodes[0], x) for x in nodes[1:]]
+        else:
+            edges += list(zip(nodes, nodes[1:]))
+        if kind != "pair" and rng.random() < 0.7:
+            edges.append(tuple(rng.sample(nodes, 2)))
+        comps.append(nodes)
+    edges += [(v, u) for u, v in rng.sample(edges, 10)]
+    edges += [(u, u) for u, _ in rng.sample(edges, 5)]
+    rng.shuffle(edges)
+    return edges, comps
+
+
+def _components_by_search(edges):
+    """Plain-Python reference: (node, min node reachable) by graph search."""
+    adj = {}
+    for u, v in edges:
+        adj.setdefault(u, set()).add(v)
+        adj.setdefault(v, set()).add(u)
+    label = {}
+    for start in adj:
+        if start in label:
+            continue
+        seen, stack = {start}, [start]
+        while stack:
+            for y in adj[stack.pop()] - seen:
+                seen.add(y)
+                stack.append(y)
+        root = min(seen)
+        label.update((x, root) for x in seen)
+    return set(label.items())
+
+
+@pytest.mark.parametrize("path", CC_PATHS)
+def test_cc_random_graph_matches_reference(spark, monkeypatch, path):
+    """A seeded random graph with non-contiguous bigint ids gets the same
+    labels as a plain-Python graph search on every path."""
+    from migbq_spark.operators.pipeline import _cc_twostar_components
+
+    edges, comps = _random_cc_graph(seed=9)
+    nodes = sum(len(c) for c in comps)
+    seen = _cc_path(monkeypatch, path, fixpoint_edges=nodes - len(comps))
+    out = _cc_twostar_components(
+        spark.createDataFrame(edges, "u: bigint, v: bigint")
+    ).collect()
+    assert len(out) == nodes
+    assert {(r.doc_id, r.component_id) for r in out} == _components_by_search(
+        edges
+    )
+    _assert_cc_path(seen, path)
+
+
+@pytest.mark.parametrize("rows", [[], [(3, 3), (7, 7)]], ids=["empty", "self_loops"])
+def test_cc_without_edges_is_empty(spark, rows):
+    from migbq_spark.operators.pipeline import _cc_twostar_components
+
+    out = _cc_twostar_components(spark.createDataFrame(rows, "u: long, v: long"))
+    assert out.columns == ["doc_id", "component_id"]
+    assert out.collect() == []
+
+
+@pytest.mark.parametrize("path", ["rounds", "driver"])
+@pytest.mark.parametrize("id_type", ["int", "bigint"])
+def test_cc_keeps_id_type(spark, monkeypatch, id_type, path):
+    from migbq_spark.operators.pipeline import _cc_twostar_components
+
+    _cc_path(monkeypatch, path, fixpoint_edges=0)
+    out = _cc_twostar_components(
+        spark.createDataFrame([(5, 6), (6, 7)], f"u: {id_type}, v: {id_type}")
+    )
+    assert [f.dataType.simpleString() for f in out.schema] == [id_type] * 2
+    assert sorted(out.collect()) == [(5, 5), (6, 5), (7, 5)]
+
+
+def test_cc_under_budget_is_two_jobs_without_conf_writes(spark, monkeypatch):
+    """An edge set within the driver budget is read in one bounded job
+    after the canonical edges' shuffle, and the session-global
+    `spark.sql.shuffle.partitions` is never written."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    from migbq_spark.operators.pipeline import _cc_twostar_components
+
+    writes = []
+    real_set, real_unset = RuntimeConfig.set, RuntimeConfig.unset
+
+    def recording_set(self, key, value):
+        writes.append(key)
+        return real_set(self, key, value)
+
+    def recording_unset(self, key):
+        writes.append(key)
+        return real_unset(self, key)
+
+    monkeypatch.setattr(RuntimeConfig, "set", recording_set)
+    monkeypatch.setattr(RuntimeConfig, "unset", recording_unset)
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(0, 60)], "u: long, v: long"
+    )
+    sc = spark.sparkContext
+    group = "cc-under-budget"
+    sc.setJobGroup(group, group)
+    try:
+        _cc_twostar_components(edges)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 2, f"{len(jobs)} jobs"
+    assert "spark.sql.shuffle.partitions" not in writes
 
 
 def test_minhash_merge_equals_full_recompute(spark, sf_dir):
