@@ -35,6 +35,7 @@ per table per call: a call commits all or nothing.
 
 from __future__ import annotations
 
+import functools
 import shutil
 import uuid
 from pathlib import Path
@@ -44,7 +45,9 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from migbq_spark.app.config import PipelineConfig, TableSpec
-from migbq_spark.app.metadata import MetadataStore, local_frame
+from migbq_spark.app.metadata import MetadataStore
+from migbq_spark.catalog import read_parquet
+from migbq_spark.common import local_frame
 from migbq_spark.session import ensure_runtime_confs
 
 _MAX_JDBC_PARTITIONS = 256
@@ -92,7 +95,7 @@ class Forwarder:
         JDBC read is also bounded above by its bounds probe, and is None
         when the probe finds no rows past ``lo``."""
         if self.cfg.in_type == "parquet":
-            df = self.spark.read.parquet(f"{self.cfg.in_path}/{table.name}.parquet")
+            df = read_parquet(self.spark, f"{self.cfg.in_path}/{table.name}.parquet")
             if lo is not None:
                 df = df.filter(F.col(table.pk) > lo)  # pushed to the scan
             return df
@@ -197,7 +200,7 @@ class Forwarder:
         p = Path(self._dest_path(table))
         if not any(p.glob("*.parquet")):
             return None
-        return self.spark.read.parquet(str(p))
+        return read_parquet(self.spark, str(p))
 
     def _commit(
         self,
@@ -295,42 +298,40 @@ class Forwarder:
         Each table's report (range_lo, n_src, n_dst = distinct keys,
         n_dup = rows beyond one per key, mismatch) is collected once, and
         returned as that snapshot; with ``repair`` it is what the repair
-        acted on."""
+        acted on.  Both sides' keys, tagged by side, go through one
+        exchange on ``range_lo``; the per-key and per-range aggregations
+        that follow reuse its partitioning."""
         self._recover()
         run_id = uuid.uuid4().hex[:12]
         reports: dict[str, DataFrame] = {}
         for table in self.cfg.tables:
-            pk = F.col(table.pk)
-            rng = self._range_lo(table).alias("range_lo")
-            src = self.read_source(table)
-            if src is None:
-                src_counts = self.spark.createDataFrame([], "range_lo long, n_src long")
-            else:
-                src_counts = src.groupBy(rng).agg(F.count(F.lit(1)).alias("n_src"))
-            dest = self.read_dest(table)
-            if dest is None:
-                dest_counts = self.spark.createDataFrame(
-                    [], "range_lo long, n_dst long, n_dup long"
+            keys = [
+                df.select(
+                    self._range_lo(table).alias("range_lo"),
+                    F.col(table.pk).alias("pk"),
+                    F.lit(is_src).alias("is_src"),
                 )
-            else:
-                dest_counts = (
-                    dest.groupBy(pk).agg(F.count(F.lit(1)).alias("n"))
-                    .groupBy(rng)
+                for df, is_src in ((self.read_source(table), True), (self.read_dest(table), False))
+                if df is not None
+            ]
+            rows = []
+            if keys:
+                per_key = (
+                    functools.reduce(DataFrame.union, keys)
+                    .repartition("range_lo")
+                    .groupBy("range_lo", "pk")
                     .agg(
-                        F.count(F.lit(1)).alias("n_dst"),
-                        (F.sum("n") - F.count(F.lit(1))).alias("n_dup"),
+                        F.count_if("is_src").alias("s"),
+                        F.count_if(~F.col("is_src")).alias("d"),
                     )
                 )
-            rows = sorted(
-                src_counts.join(dest_counts, "range_lo", "full")
-                .select(
-                    "range_lo",
-                    F.coalesce("n_src", F.lit(0)).alias("n_src"),
-                    F.coalesce("n_dst", F.lit(0)).alias("n_dst"),
-                    F.coalesce("n_dup", F.lit(0)).alias("n_dup"),
+                rows = sorted(
+                    per_key.groupBy("range_lo").agg(
+                        F.sum("s").alias("n_src"),
+                        F.count_if(F.col("d") > 0).alias("n_dst"),
+                        F.sum(F.greatest(F.col("d") - 1, F.lit(0))).alias("n_dup"),
+                    ).collect()
                 )
-                .collect()
-            )
             reports[table.name] = local_frame(
                 self.spark,
                 [(*r, r.n_src != r.n_dst or r.n_dup > 0) for r in rows],

@@ -49,10 +49,10 @@ import sqlite3
 from contextlib import contextmanager
 from pathlib import Path
 
-import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-from pyspark.sql.pandas.types import to_arrow_schema
+
+from migbq_spark.common import local_frame
 
 PROGRESS_SCHEMA = T.StructType(
     [
@@ -86,16 +86,6 @@ _DDL = (
 MISSING_SCHEMA = T.StructType(JOB_LOG_SCHEMA.fields[1:3])
 
 _JOB_COLS = ", ".join(f.name for f in JOB_LOG_SCHEMA.fields)
-
-
-def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
-    """A DataFrame over a few driver-side rows.  Built from Arrow it is a
-    local relation, so reading it runs no Spark job (a list of tuples
-    would be parallelized through a Python worker)."""
-    cols = list(zip(*rows)) or [()] * len(schema)
-    return spark.createDataFrame(
-        pa.Table.from_pydict(dict(zip(schema.names, cols)), schema=to_arrow_schema(schema))
-    )
 
 
 def _unlink(path: Path) -> None:

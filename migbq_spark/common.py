@@ -4,18 +4,33 @@ aliasing on both engine sides, unique window tiebreaks, the one corpus
 tokenization rule (`tokens`), the one portable hash (`md5_int`, the hex
 prefix of an md5 digest read as an integer), and the vector kernels: the
 one embedding fixed-point quantizer (`fixed_point`) and the two dot folds
-(`dot`, `idot`).
+(`dot`, `idot`); and `local_frame`, the one builder of a DataFrame from
+driver-side rows.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 #: Canonical money/decimal type used before any SUM/AVG over double money
 #: columns — Spark and DuckDB disagree in the last ulp of a raw
 #: SUM(double) (different add order), decimal addition is exact.
 DEC = "decimal(18,2)"
+
+
+def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """A DataFrame over driver-side rows.  Built from Arrow it is a local
+    relation with a known size: reading it runs no Spark job, and a join
+    against it can broadcast it.  (A list of tuples would be parallelized
+    through a Python worker, as a scan of unknown size.)"""
+    cols = list(zip(*rows)) or [()] * len(schema)
+    return spark.createDataFrame(
+        pa.Table.from_pydict(dict(zip(schema.names, cols)), schema=to_arrow_schema(schema))
+    )
 
 
 def tokens() -> Column:

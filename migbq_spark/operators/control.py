@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from migbq_spark.catalog import load
+from migbq_spark.catalog import load, read_parquet
 from migbq_spark.common import dec, md5_int
 from migbq_spark.registry import register
 
@@ -234,7 +234,7 @@ def compact_merge_on_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     dest = _stage_dir(sf_dir, "mor_compacted")
     resolved.write.mode("overwrite").parquet(dest)
-    return spark.read.parquet(dest)
+    return read_parquet(spark, dest)
 
 
 @register(
@@ -1305,8 +1305,8 @@ def schema_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(v2_dest)
     )
-    s1 = {f.name: f.dataType.simpleString() for f in spark.read.parquet(v1_dest).schema.fields}
-    s2 = {f.name: f.dataType.simpleString() for f in spark.read.parquet(v2_dest).schema.fields}
+    s1 = {f.name: f.dataType.simpleString() for f in read_parquet(spark, v1_dest).schema.fields}
+    s2 = {f.name: f.dataType.simpleString() for f in read_parquet(spark, v2_dest).schema.fields}
     rows = []
     for name in sorted(set(s1) | set(s2)):
         if name not in s2:

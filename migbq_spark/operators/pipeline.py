@@ -64,8 +64,8 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from migbq_spark.catalog import load
-from migbq_spark.common import dot, fixed_point, idot, md5_int, tokens
+from migbq_spark.catalog import load, read_parquet
+from migbq_spark.common import dot, fixed_point, idot, local_frame, md5_int, tokens
 from migbq_spark.registry import register
 
 #: Previous invocation's persisted token base (unpersisted on the next
@@ -1504,11 +1504,13 @@ def _cc_twostar_components(pairs: DataFrame) -> DataFrame:
     dedup all run on it.  It runs alternating large-star/small-star
     rounds while the edges exceed the driver budget
     (`_CC_DRIVER_EDGES`), then a driver union-find over the collected
-    edges.  Every round keeps the components, so the tail may start
-    after any round.  An edge set that never fits runs its O(log n)
-    rounds to the exact fixpoint (never a round cap, which would return
-    a non-fixpoint labelling); per-round lineage is cut with
-    localCheckpoint."""
+    edges, whose labels come back as an Arrow local relation
+    (`common.local_frame`): Spark knows its size, so a join against it
+    broadcasts, and no Python worker runs.  Every round keeps the
+    components, so the tail may start after any round.  An edge set
+    that never fits runs its O(log n) rounds to the exact fixpoint
+    (never a round cap, which would return a non-fixpoint labelling);
+    per-round lineage is cut with localCheckpoint."""
     def _edge_stats(df: DataFrame) -> tuple[int, object]:
         """(count, xxhash64-sum) of the canonical edge set in ONE small
         aggregation — a NECESSARY condition screen for set equality:
@@ -1579,7 +1581,7 @@ def _cc_twostar_components(pairs: DataFrame) -> DataFrame:
     schema = E.select(
         F.col("v").alias("doc_id"), F.col("u").alias("component_id")
     ).schema
-    return spark.createDataFrame(_cc_union_find(edges), schema)
+    return local_frame(spark, _cc_union_find(edges), schema)
 
 
 @register(
@@ -2500,7 +2502,7 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         _FUNNEL_STAGE_DIR = dest
         base.write.mode("overwrite").parquet(dest + "/t")
-        arr = spark.read.parquet(dest + "/t")
+        arr = read_parquet(spark, dest + "/t")
     else:
         arr = base.persist(StorageLevel.DISK_ONLY)
         _FUNNEL_CACHE = arr

@@ -23,8 +23,10 @@ forbids writes outside the repo.
 
 Scale notes (100 TB): extraction parallelism = `numPartitions` sized so
 each partition ≈ migbq's batch_size×k rows; staging writes are
-per-partition (no driver funnel); read-backs use explicit schemas so the
-round trip never pays inference.
+per-partition (no driver funnel).  JSON/CSV/ORC read-backs pass explicit
+schemas, so their round trip never pays inference; parquet read-backs go
+through `catalog.read_parquet`.  A fresh write is a new file set, so a
+parquet read-back still infers its schema once, from one footer.
 """
 
 from __future__ import annotations
@@ -36,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from migbq_spark.catalog import load, path_for
+from migbq_spark.catalog import load, path_for, read_parquet
 from migbq_spark.common import dec, md5_int
 from migbq_spark.session import ensure_runtime_confs
 from migbq_spark.registry import register
@@ -130,7 +132,7 @@ def parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     src = load(spark, sf_dir, "region")
     dest = _stage_dir(sf_dir, "region_sink")
     src.write.mode("overwrite").parquet(dest)
-    return spark.read.parquet(dest)
+    return read_parquet(spark, dest)
 
 
 @register(
@@ -165,7 +167,7 @@ def parquet_sink_day_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     dest = _stage_dir(sf_dir, "orders_sink_monthly")
     src.write.mode("overwrite").partitionBy("o_month").parquet(dest)
     return (
-        spark.read.parquet(dest)
+        read_parquet(spark, dest)
         .filter(F.col("o_month") == "1997-03")
         .select("o_orderkey", "o_custkey", "o_totalprice", "o_month")
     )
@@ -834,7 +836,7 @@ def partition_overwrite_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     return (
-        spark.read.parquet(dest)
+        read_parquet(spark, dest)
         .filter(F.col("o_month").isin("1997-02", "1997-03", "1997-04"))
         .groupBy("o_month")
         .agg(
@@ -1152,7 +1154,7 @@ def parquet_codec_roundtrip_audit(
             dest
         )
         outs.append(
-            spark.read.parquet(dest).agg(
+            read_parquet(spark, dest).agg(
                 F.count(F.lit(1)).cast("bigint").alias("n_rows"),
                 F.sum("price_cents").cast("bigint").alias(
                     "price_cents_sum"

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from migbq_spark.catalog import load, path_for
+from migbq_spark.catalog import load, path_for, read_parquet
 from migbq_spark.registry import register
 from migbq_spark.session import ensure_runtime_confs
 
@@ -42,7 +42,7 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-off batch read (schema-only, no data scan)."""
     ensure_runtime_confs(spark)
     path = path_for(sf_dir, "events")
-    schema = spark.read.parquet(path).schema
+    schema = read_parquet(spark, path).schema
     # The file source monitors a DIRECTORY; the fixture is a single file,
     # so stream the parent dir with a glob filter selecting just events.
     sdf = (
@@ -225,7 +225,7 @@ def stream_stateful_progress(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select("event_type", "event_id")
     ev.repartitionByRange(8, "event_id").write.mode("overwrite").parquet(chunks)
 
-    schema = spark.read.parquet(chunks).schema
+    schema = read_parquet(spark, chunks).schema
     sdf = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -326,7 +326,7 @@ def stream_stateful_rocksdb(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select("user_id", "event_id")
     ev.repartitionByRange(8, "event_id").write.mode("overwrite").parquet(chunks)
 
-    schema = spark.read.parquet(chunks).schema
+    schema = read_parquet(spark, chunks).schema
     sdf = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 2)
@@ -415,7 +415,7 @@ def stream_foreach_batch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         query.awaitTermination()
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.read.parquet(str(out)).select(
+    return read_parquet(spark, str(out)).select(
         "event_id", "user_id", "event_type"
     )
 
@@ -941,7 +941,7 @@ def _run_tws_stream(
         _STAGE_ROOT / f"events_chunks_{hashlib.md5(seed.encode()).hexdigest()[:10]}"
     )
     ev.repartitionByRange(8, "event_id").write.mode("overwrite").parquet(chunks)
-    schema = spark.read.parquet(chunks).schema
+    schema = read_parquet(spark, chunks).schema
     sdf = (
         spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
@@ -1127,7 +1127,7 @@ def stream_tws_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
                 chunks
             )
             _order_chunk_mtimes(chunks)
-            schema = spark.read.parquet(chunks).schema
+            schema = read_parquet(spark, chunks).schema
             sdf = (
                 spark.readStream.schema(schema)
                 .option("maxFilesPerTrigger", 1)
@@ -1388,7 +1388,7 @@ def pk_range_stream_sync(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
         q.awaitTermination()
-    return spark.read.parquet(str(dest)).select(
+    return read_parquet(spark, str(dest)).select(
         "event_id", "user_id", "event_type", "value", "props"
     )
 
@@ -1448,7 +1448,7 @@ def stream_pk_sync_loadjob(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
 
-    schema = spark.read.parquet(path).select(
+    schema = read_parquet(spark, path).select(
         "event_id", "user_id", "event_type", "value", "props"
     ).schema
     return (
@@ -1601,7 +1601,7 @@ def stream_tws_value_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
         shutil.rmtree(tmp_dir, ignore_errors=True)
 
     _stage(a, "a.parquet")
-    schema = spark.read.parquet(str(stream_dir)).schema
+    schema = read_parquet(spark, str(stream_dir)).schema
 
     def _run(dest: str) -> None:
         # trigger(once=True), NOT availableNow: under

@@ -90,6 +90,27 @@ def test_check_clean_and_repair(spark, cfg_path, tmp_path):
     assert fwd.check()["events"].filter("mismatch").count() == 0
 
 
+def test_warm_check_is_one_exchange(spark, cfg_path):
+    """A repeat check of unchanged tables infers no schema and reconciles
+    each table in one range-partitioned exchange: its map job and the
+    collect, two jobs per table."""
+    fwd = _forwarder(spark, cfg_path)
+    fwd.run()
+    fwd.check()
+    sc = spark.sparkContext
+    group = "warm-check"
+    sc.setJobGroup(group, group)
+    try:
+        reports = fwd.check()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    assert len(jobs) <= 2 * len(reports), f"{len(jobs)} jobs"
+    for rep in reports.values():
+        assert rep.filter("mismatch").count() == 0
+
+
 def test_check_ranges_cover_keys_at_and_below_zero(spark, tmp_path):
     """Each key is reported in the range ``(range_lo, range_lo + batch_size]``
     that holds it, also for keys <= 0."""

@@ -815,6 +815,19 @@ def test_cc_under_budget_is_two_jobs_without_conf_writes(spark, monkeypatch):
     assert "spark.sql.shuffle.partitions" not in writes
 
 
+def test_dedup_joins_driver_labels_as_local_relation(spark, sf_dir):
+    """The union-find labels come back as a local relation of known size:
+    the executed dedup plan scans no Python RDD, and its quality join
+    broadcasts the labels."""
+    df = Q["dedup_keep_cluster_canonical"](spark, sf_dir)
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan
+    assert "LocalTableScan" in plan
+    assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
+
+
 def test_minhash_merge_equals_full_recompute(spark, sf_dir):
     """Merged base+delta signatures must equal a one-shot full
     aggregation (min-monoid mergeability) computed Spark-side too."""
