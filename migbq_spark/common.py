@@ -4,8 +4,8 @@ aliasing on both engine sides, unique window tiebreaks, the one corpus
 tokenization rule (`tokens`), the one portable hash (`md5_int`, the hex
 prefix of an md5 digest read as an integer), and the vector kernels: the
 one embedding fixed-point quantizer (`fixed_point`) and the two dot folds
-(`dot`, `idot`); and `local_frame`, the one builder of a DataFrame from
-driver-side rows.
+(`dot`, `idot`); and `local_frame`, which turns driver-side rows into a
+DataFrame that is a local relation.
 """
 
 from __future__ import annotations
