@@ -2,7 +2,7 @@
 CLI lifecycle (SURVEY.md §3.1 EP1-EP3) re-expressed as Spark jobs.
 
 - config.py    — YAML `in:` / `out:` / `meta:` pipeline config
-- metadata.py  — sqlite progress + job log, and the staged commit
+- metadata.py  — sqlite progress + job log (commits: migbq_spark/commit.py)
 - forwarder.py — the run/sync/check pipeline itself
 - cli.py       — `python -m migbq_spark.app run config.yml`
 """

@@ -44,6 +44,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from migbq_spark import commit
 from migbq_spark.app.config import PipelineConfig, TableSpec
 from migbq_spark.app.metadata import MetadataStore
 from migbq_spark.catalog import read_parquet
@@ -211,13 +212,13 @@ class Forwarder:
         range_lo: int | None = None,
         replaces: list[str] | None = None,
     ) -> int:
-        """Write ``df`` once into the table's staging directory, then
-        publish it with its progress (`MetadataStore.stage`/`publish`).
+        """Write ``df`` once into the run's staging directory, then publish
+        it with its progress (`migbq_spark/commit.py`, ``commit_run``).
         With ``replaces`` the rows replace those files of the destination;
         otherwise they are appended, and a pass that found no rows is
         discarded."""
-        dest = Path(self._dest_path(table))
-        staging = dest / "_staging" / run_id
+        dest = self._dest_path(table)
+        staging = Path(dest) / "_staging" / run_id
         pk = F.col(table.pk)
         seen = Observation()
         df.observe(
@@ -225,22 +226,29 @@ class Forwarder:
         ).write.parquet(str(staging))
         n_rows, last_pk = seen.get["n_rows"], seen.get["last_pk"]
         if not n_rows and replaces is None:
-            shutil.rmtree(staging)
+            commit.abort(dest, run_id)
             self.meta.append_jobs([(table.name, range_lo, range_lo, 0, "done", run_id)])
             return 0
-        self.meta.stage(
-            run_id, table.name, command, str(dest), str(staging),
-            range_lo, n_rows, last_pk, replaces,
-        )
-        self.meta.publish(run_id, table.name)
+        run = {
+            "run_id": run_id, "table": table.name, "command": command,
+            "mode": "append" if replaces is None else "replace",
+            "range_lo": range_lo, "range_hi": last_pk, "n_rows": n_rows,
+        }
+        moves = [(p.name, p.name) for p in staging.glob("part-*")]
+        commit.commit(dest, run_id, moves, replaces or [], run, self.meta.commit_run)
         return n_rows
 
     def _recover(self) -> None:
-        """Finish what an interrupted call left behind: staged runs are
-        published, unrecorded staging and dropped tables are deleted."""
-        self.meta.recover()
+        """Finish what an interrupted call left behind: publish committed
+        runs, delete staging that never committed and dropped tables."""
+        if self.meta._query("SELECT 1 FROM runs WHERE state = 'staged' LIMIT 1"):
+            raise RuntimeError(
+                f"{self.cfg.meta_path} holds runs an older migbq_spark left "
+                "'staged': finish them with that version before upgrading"
+            )
         for table in self.cfg.tables:
             dest = Path(self._dest_path(table))
+            commit.recover(str(dest), self.meta.commit_run)
             shutil.rmtree(dest / "_staging", ignore_errors=True)
             for old in dest.parent.glob(f".{dest.name}.*.dropped"):
                 shutil.rmtree(old)
@@ -347,7 +355,7 @@ class Forwarder:
         ROW_NUMBER()=1 dedup — retried loads double-insert, the dedup
         repairs).  ``dropDuplicates`` keeps one arbitrary row of each
         key, not the latest: the copies are of the same source row.  The
-        rewrite goes through the staged commit, replacing exactly the
+        rewrite goes through `migbq_spark/commit.py`, replacing exactly the
         files it read, and resets progress to what it wrote."""
         short = [(r.range_lo,) for r in report if r.n_dst < r.n_src]
         if not short and not any(r.n_dup for r in report):

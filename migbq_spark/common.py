@@ -4,11 +4,16 @@ aliasing on both engine sides, unique window tiebreaks, the one corpus
 tokenization rule (`tokens`), the one portable hash (`md5_int`, the hex
 prefix of an md5 digest read as an integer), and the vector kernels: the
 one embedding fixed-point quantizer (`fixed_point`) and the two dot folds
-(`dot`, `idot`); and `local_frame`, which turns driver-side rows into a
-DataFrame that is a local relation.
+(`dot`, `idot`); `local_frame`, which turns driver-side rows into a
+DataFrame that is a local relation; and `stage_root`, the one place the
+package puts its own scratch files.
 """
 
 from __future__ import annotations
+
+import os
+import tempfile
+from pathlib import Path
 
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -31,6 +36,13 @@ def local_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) ->
     return spark.createDataFrame(
         pa.Table.from_pydict(dict(zip(schema.names, cols)), schema=to_arrow_schema(schema))
     )
+
+
+def stage_root() -> Path:
+    """Root of the package's scratch files: ``MIGBQ_STAGE_DIR`` when set
+    (on a cluster, a filesystem every executor shares), otherwise a
+    directory under the system temp directory, never the source tree."""
+    return Path(os.environ.get("MIGBQ_STAGE_DIR") or Path(tempfile.gettempdir()) / "migbq_stage")
 
 
 def tokens() -> Column:

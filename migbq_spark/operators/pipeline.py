@@ -65,7 +65,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from migbq_spark.catalog import load, read_parquet
-from migbq_spark.common import dot, fixed_point, idot, local_frame, md5_int, tokens
+from migbq_spark.common import dot, fixed_point, idot, local_frame, md5_int, stage_root, tokens
 from migbq_spark.registry import register
 
 #: Previous invocation's persisted token base (unpersisted on the next
@@ -99,19 +99,12 @@ def _funnel_stage_root(spark: SparkSession) -> str | None:
     `local[*]` masters; on any other master we return None and the caller
     falls back to the DISK_ONLY persist (cluster-safe: executor-resident
     blocks, no shared path needed)."""
-    env = os.environ.get("MIGBQ_STAGE_DIR")
-    if env:
-        os.makedirs(env, exist_ok=True)
-        return env
-    if spark.sparkContext.master.startswith("local"):
-        root = os.path.join(
-            os.path.dirname(os.path.dirname(os.path.dirname(__file__))),
-            ".stage",
-            "tmp",
-        )
-        os.makedirs(root, exist_ok=True)
-        return root
-    return None
+    shared = os.environ.get("MIGBQ_STAGE_DIR")
+    if not shared and not spark.sparkContext.master.startswith("local"):
+        return None
+    root = stage_root()
+    os.makedirs(root, exist_ok=True)
+    return str(root)
 
 # ---------------------------------------------------------------- tokens
 
@@ -2462,7 +2455,7 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Staging contract: the parquet snapshot goes under
     `MIGBQ_STAGE_DIR` when set (on a cluster: a shared FS / object
-    store path), under a repo-local temp root on `local[*]`, and is
+    store path), under the system temp directory on `local[*]`, and is
     SKIPPED (DISK_ONLY persist fallback) on non-local masters without
     `MIGBQ_STAGE_DIR` — executors cannot write a driver-local temp
     path.  One live funnel frame at a time: each invocation deletes

@@ -18,8 +18,7 @@ is one operator here:
 - `bq_sink_adapter` — the production BigQuery writer config (connector
   jar not present offline; plan construction only).
 
-Staging files live under <repo>/.stage (gitignored) — the container
-forbids writes outside the repo.
+Staged files live under `common.stage_root()`.
 
 Scale notes (100 TB): extraction parallelism = `numPartitions` sized so
 each partition ≈ migbq's batch_size×k rows; staging writes are
@@ -32,18 +31,17 @@ parquet read-back still infers its schema once, from one footer.
 from __future__ import annotations
 
 import hashlib
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from migbq_spark.catalog import load, path_for, read_parquet
-from migbq_spark.common import dec, md5_int
+from migbq_spark.common import dec, md5_int, stage_root
 from migbq_spark.session import ensure_runtime_confs
 from migbq_spark.registry import register
 
-_STAGE_ROOT = Path(__file__).resolve().parents[2] / ".stage"
+_STAGE_ROOT = stage_root()
 
 
 def _stage_dir(sf_dir: str, name: str) -> str:
@@ -505,12 +503,13 @@ def pk_range_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
 def load_job_sink_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """migbq's BigQuery LOAD-JOB sink rebuilt on Spark's Python
     DataSourceWriter commit protocol (`pkrange_source.LoadJobWriter`):
-    tasks stage gzip-NDJSON parts under `_staging/`, `commit()` runs
-    only after every task succeeded — moving parts into the destination
-    and writing the `_MANIFEST.json` load-job receipt — and `abort()`
-    leaves nothing visible on failure.  The graded result reads the
-    committed NDJSON back with an explicit schema, so the hash check
-    proves the two-phase commit published exactly the input rows.
+    tasks stage gzip-NDJSON parts under the job's `_staging/<job_id>`,
+    `commit()` runs only after every task succeeded — publishing the
+    parts through `migbq_spark/commit.py` (manifest first, then the
+    moves) and writing the `_MANIFEST.json` load-job receipt — and
+    `abort()` leaves nothing visible when a task fails.  The graded result
+    reads the committed NDJSON back with an explicit schema, so the hash
+    check proves the two-phase commit published exactly the input rows.
 
     Scale (100 TB): this IS how atomic bulk publication works without a
     transactional store — stage, then an O(files) driver-side commit;

@@ -48,6 +48,8 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from migbq_spark import commit
+
 _PA_TO_SPARK = {
     "int32": "int",
     "int64": "bigint",
@@ -370,26 +372,20 @@ class PkRangeStreamDataSource(DataSource):
 
 
 class LoadJobCommitMessage(WriterCommitMessage):
-    """Per-task receipt: (staged file name, rows, bytes, final name).
+    """Per-task receipt: (staged file name, rows, bytes).
 
-    ``final_filename`` is the deterministic name the streaming epoch
-    commit publishes the attempt-unique staged file under — staging
-    names must be attempt-unique so concurrent attempts of one partition
-    (speculation, zombie post-retry attempts) can never interleave
-    writes into a shared gzip stream, while the published name stays
-    deterministic so a REPLAYED epoch overwrites instead of duplicating.
-    The batch commit keeps the staged name."""
+    Staged names are attempt-unique, so concurrent attempts of one
+    partition (speculation, zombie post-retry attempts) can never
+    interleave writes into a shared gzip stream.  Files keep the name
+    when published."""
 
-    def __init__(
-        self, filename: str, n_rows: int, n_bytes: int, final_filename: str
-    ):
+    def __init__(self, filename: str, n_rows: int, n_bytes: int):
         self.filename, self.n_rows, self.n_bytes = filename, n_rows, n_bytes
-        self.final_filename = final_filename
 
 
-def _stage_part(dest: str, cols: list[str], iterator) -> LoadJobCommitMessage:
-    """Write one task's rows as a gzip-NDJSON part under
-    ``<dest>/_staging`` (attempt-unique name) and return its receipt."""
+def _stage_part(staging: str, cols: list[str], iterator) -> LoadJobCommitMessage:
+    """Write one task's rows as a gzip-NDJSON part under ``staging``
+    (attempt-unique name) and return its receipt."""
     import gzip
     import json
     import os
@@ -399,8 +395,6 @@ def _stage_part(dest: str, cols: list[str], iterator) -> LoadJobCommitMessage:
 
     tc = TaskContext.get()
     part = tc.partitionId() if tc is not None else 0
-    staging = os.path.join(dest, "_staging")
-    os.makedirs(staging, exist_ok=True)
     fname = f"part-{part:05d}-{_uuid.uuid4().hex[:8]}.jsonl.gz"
     tmp = os.path.join(staging, fname)
     n = 0
@@ -409,64 +403,51 @@ def _stage_part(dest: str, cols: list[str], iterator) -> LoadJobCommitMessage:
             fh.write(json.dumps(dict(zip(cols, row)), sort_keys=True))
             fh.write("\n")
             n += 1
-    return LoadJobCommitMessage(
-        fname, n, os.path.getsize(tmp), f"part-{part:05d}.jsonl.gz"
-    )
-
-
-def _drop_staging(dest: str) -> None:
-    import os
-    import shutil
-
-    shutil.rmtree(os.path.join(dest, "_staging"), ignore_errors=True)
+    return LoadJobCommitMessage(fname, n, os.path.getsize(tmp))
 
 
 class LoadJobWriter(DataSourceWriter):
     """migbq's BigQuery LOAD-JOB sink as a Python ``DataSourceWriter``
     with the real two-phase commit protocol: every task stages its rows
-    as one gzip-NDJSON part under ``_staging/`` and returns a commit
-    message; ``commit()`` runs only when ALL tasks succeeded — it moves
-    the parts into the destination and writes a ``_MANIFEST.json``
+    as one gzip-NDJSON part under ``_staging/<job_id>`` and returns a
+    commit message; ``commit()`` runs only when ALL tasks succeeded — it
+    publishes the parts through `migbq_spark/commit.py`, after any job
+    killed mid-commit, ending with the ``_MANIFEST.json`` receipt
     (migbq's load-job result row: files, rows, bytes); ``abort()``
-    deletes the staging dir so a failed job leaves NOTHING visible.
-    That is exactly the atomicity migbq got from BigQuery load jobs —
-    rebuilt on the engine's own commit protocol."""
+    deletes the job's staging, so a job that fails before its commit
+    leaves NOTHING visible, and one whose commit failed after its
+    manifest is finished by the next write."""
 
     def __init__(self, options: dict, schema):
+        import uuid
+
         self.dest = options["path"]
         self.cols = [f.name for f in schema.fields]
+        self.job_id = uuid.uuid4().hex[:12]  # minted once, on the driver
 
     def write(self, iterator):
-        return _stage_part(self.dest, self.cols, iterator)
+        return _stage_part(commit.stage_dir(self.dest, self.job_id), self.cols, iterator)
+
+    def _write_receipt(self, receipt: dict) -> None:
+        """Commit's ``done``; the last job's receipt is kept."""
+        import os
+
+        commit.write_json(os.path.join(self.dest, "_MANIFEST.json"), receipt)
 
     def commit(self, messages):
-        import json
-        import os
-        import shutil
-
-        staging = os.path.join(self.dest, "_staging")
-        files = []
-        for m in messages:
-            if m is None:
-                continue
-            shutil.move(
-                os.path.join(staging, m.filename),
-                os.path.join(self.dest, m.filename),
-            )
-            files.append(
-                {"file": m.filename, "rows": m.n_rows, "bytes": m.n_bytes}
-            )
-        _drop_staging(self.dest)
-        manifest = {
+        commit.recover(self.dest, self._write_receipt)
+        parts = [m for m in messages if m is not None]
+        files = [{"file": m.filename, "rows": m.n_rows, "bytes": m.n_bytes} for m in parts]
+        receipt = {
             "n_files": len(files),
             "n_rows": sum(f["rows"] for f in files),
             "files": sorted(files, key=lambda f: f["file"]),
         }
-        with open(os.path.join(self.dest, "_MANIFEST.json"), "w") as fh:
-            json.dump(manifest, fh, sort_keys=True)
+        moves = [(m.filename, m.filename) for m in parts]
+        commit.commit(self.dest, self.job_id, moves, [], receipt, self._write_receipt)
 
     def abort(self, messages):
-        _drop_staging(self.dest)
+        commit.abort(self.dest, self.job_id)
 
 
 class LoadJobSinkDataSource(DataSource):
@@ -482,14 +463,17 @@ class LoadJobSinkDataSource(DataSource):
 
 class EpochLoadJobStreamWriter(DataSourceStreamWriter):
     """Streaming twin of ``LoadJobWriter``: one load-job commit PER
-    MICRO-BATCH.  Tasks stage ``epoch=<batchId>`` parts under
-    ``_staging/``; ``commit(messages, batchId)`` publishes the epoch's
-    parts and appends a line to ``_EPOCHS.jsonl`` (batchId, files,
-    rows).  A REPLAYED epoch (failure between publish and Spark's
-    checkpoint commit) overwrites its own ``epoch=<id>`` files instead
-    of duplicating — idempotent epoch publication + checkpointed source
+    MICRO-BATCH.  Tasks stage parts under ``_staging/epoch=<batchId>``;
+    ``commit(messages, batchId)`` moves them into ``epoch=<batchId>``,
+    replacing that directory's other files, and appends a line to
+    ``_EPOCHS.jsonl`` (batchId, files, rows).  A REPLAYED epoch (failure
+    between publish and Spark's checkpoint commit) supersedes the killed
+    attempt's manifest and replaces its ``epoch=<id>`` files instead of
+    duplicating them — idempotent epoch publication + checkpointed source
     offsets = end-to-end exactly-once, the contract migbq approximated
-    with load-job retries."""
+    with load-job retries.  The epoch names the job because Spark builds
+    a fresh writer for every commit; tasks read it from the micro-batch's
+    ``streaming.sql.batchId`` local property."""
 
     def __init__(self, options: dict, schema):
         self.dest = options["path"]
@@ -503,7 +487,11 @@ class EpochLoadJobStreamWriter(DataSourceStreamWriter):
     def write(self, iterator):
         import os
 
-        msg = _stage_part(self.dest, self.cols, iterator)
+        from pyspark import TaskContext
+
+        batch = TaskContext.get().getLocalProperty("streaming.sql.batchId")
+        staging = commit.stage_dir(self.dest, f"epoch={batch}")
+        msg = _stage_part(staging, self.cols, iterator)
         if self.fail_once_path:
             try:
                 fd = os.open(
@@ -517,41 +505,32 @@ class EpochLoadJobStreamWriter(DataSourceStreamWriter):
                 pass  # already failed once: proceed normally
         return msg
 
-    def commit(self, messages, batchId: int):
+    def _append_receipt(self, receipt: dict) -> None:
+        """Commit's ``done``; readers take a batch id's last line."""
         import json
         import os
-        import shutil
 
-        staging = os.path.join(self.dest, "_staging")
-        epoch_dir = os.path.join(self.dest, f"epoch={batchId}")
-        shutil.rmtree(epoch_dir, ignore_errors=True)  # replay-idempotent
-        os.makedirs(epoch_dir, exist_ok=True)
-        files = []
-        for m in messages:
-            if m is None:
-                continue
-            src = os.path.join(staging, m.filename)
-            if os.path.exists(src):
-                # attempt-unique staged name -> deterministic epoch name
-                shutil.move(src, os.path.join(epoch_dir, m.final_filename))
-                files.append({"file": m.final_filename, "rows": m.n_rows})
-        # also sweeps losing-attempt leftovers from this epoch
-        _drop_staging(self.dest)
         with open(os.path.join(self.dest, "_EPOCHS.jsonl"), "a") as fh:
-            fh.write(
-                json.dumps(
-                    {
-                        "batch_id": batchId,
-                        "n_files": len(files),
-                        "n_rows": sum(f["rows"] for f in files),
-                    },
-                    sort_keys=True,
-                )
-                + "\n"
-            )
+            fh.write(json.dumps(receipt, sort_keys=True) + "\n")
+
+    def commit(self, messages, batchId: int):
+        import os
+
+        epoch = f"epoch={batchId}"
+        epoch_dir = os.path.join(self.dest, epoch)
+        old = os.listdir(epoch_dir) if os.path.isdir(epoch_dir) else []
+        parts = [m for m in messages if m is not None]
+        receipt = {
+            "batch_id": batchId,
+            "n_files": len(parts),
+            "n_rows": sum(m.n_rows for m in parts),
+        }
+        moves = [(m.filename, f"{epoch}/{m.filename}") for m in parts]
+        replaces = [f"{epoch}/{f}" for f in old]
+        commit.commit(self.dest, epoch, moves, replaces, receipt, self._append_receipt)
 
     def abort(self, messages, batchId: int):
-        _drop_staging(self.dest)
+        commit.abort(self.dest, f"epoch={batchId}")
 
 
 class EpochLoadJobStreamDataSource(DataSource):
@@ -579,6 +558,7 @@ def _pickle_self_by_value() -> None:
         from pyspark import cloudpickle
 
         cloudpickle.register_pickle_by_value(_sys.modules[__name__])
+        cloudpickle.register_pickle_by_value(commit)
     except Exception:
         pass  # older cloudpickle: fall back to by-reference + PYTHONPATH
 

@@ -28,11 +28,12 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from migbq_spark.catalog import load, path_for, read_parquet
+from migbq_spark.common import stage_root
 from migbq_spark.registry import register
 from migbq_spark.session import ensure_runtime_confs
 
-_CHECKPOINT_ROOT = Path(__file__).resolve().parents[2] / ".stage" / "checkpoints"
-_STAGE_ROOT = Path(__file__).resolve().parents[2] / ".stage"
+_STAGE_ROOT = stage_root()
+_CHECKPOINT_ROOT = _STAGE_ROOT / "checkpoints"
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:

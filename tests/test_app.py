@@ -140,6 +140,15 @@ def test_full_refresh_resets_progress(spark, cfg_path, sf_dir):
         assert fwd.read_dest(fwd.cfg.tables[0]).count() == n_src
 
 
+def test_run_staged_by_older_version_is_refused(spark, cfg_path):
+    """A run an older version left ``staged`` has no manifest this
+    version could publish; forwarding past it could write its rows twice."""
+    fwd = _forwarder(spark, cfg_path)
+    fwd.meta.append_jobs([("events", None, 1000, 1000, "staged", "oldrun")])
+    with pytest.raises(RuntimeError, match="older migbq_spark"):
+        fwd.sync()
+
+
 def test_missing_range_requeue(spark, cfg_path):
     fwd = _forwarder(spark, cfg_path)
     fwd.run()
@@ -314,13 +323,16 @@ def test_sync_bounded_by_probe(spark, tmp_path):
 
 @pytest.mark.parametrize(
     "step,after",
-    [("stage", False), ("stage", True), ("_publish_files", True), ("_commit_progress", True)],
+    [("write_json", False), ("write_json", True), ("commit_run", False), ("commit_run", True)],
     ids=["before-manifest", "after-manifest", "after-publish", "in-progress-commit"],
 )
 def test_sync_crash_recovers_exactly_once(spark, tmp_path, monkeypatch, step, after):
     """A sync that dies at any step of the commit leaves state the next
     plain sync completes: every key once, progress equal to the
-    destination."""
+    destination.  The steps: writing the manifest (``commit.write_json``);
+    recording the published run (``commit_run``), which a crash after it
+    leaves with its staging directory still in place."""
+    from migbq_spark import commit
     from migbq_spark.app import Forwarder, PipelineConfig
 
     src = tmp_path / "src"
@@ -334,14 +346,15 @@ def test_sync_crash_recovers_exactly_once(spark, tmp_path, monkeypatch, step, af
     assert fwd.run() == {"t": 1000}
     _keys(spark, 1000, 1200).write.mode("append").parquet(str(src / "t.parquet"))
 
-    real = getattr(fwd.meta, step)
+    owner = commit if step == "write_json" else fwd.meta
+    real = getattr(owner, step)
 
     def crash(*a, **kw):
         if after:
             real(*a, **kw)
         raise RuntimeError(f"killed at {step}")
 
-    monkeypatch.setattr(fwd.meta, step, crash)
+    monkeypatch.setattr(owner, step, crash)
     with pytest.raises(RuntimeError, match="killed"):
         fwd.sync()
     monkeypatch.undo()

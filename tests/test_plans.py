@@ -173,109 +173,6 @@ def test_mm_header_probes_prune_text_column(spark, sf_dir, qid):
     assert "text" not in read_schema
 
 
-# Queries allowed to carry Python/Arrow execution nodes: the declared
-# UDF surface + the vectorized numpy similarity kernels.
-_PY_ALLOWED = {
-    "udf_python_scalar",
-    "udf_pandas_vectorized",
-    "udaf_pandas_grouped",
-    "udtf_grouped_map",
-    "udtf_lateral_split",
-    "cosine_topk",
-    "near_dup_jaccard",
-    "near_dup_embedding",
-    "ann_ivf_topk",
-    "rolling_quantile_tdigest",  # two-phase sketch build/merge kernels
-    "mm_decode_headers",  # real PNG/JPEG header parse is mapInPandas
-    "mm_audio_headers",  # real WAV RIFF-chunk probe is mapInPandas
-    "mm_video_headers",  # real MP4 box-walk probe is mapInPandas
-    # the production BPE apply IS a declared broadcast-table pandas
-    # UDF (single Arrow node over the distinct vocab, plan-asserted in
-    # test_pipeline.py) — Python here is the design, not a leak
-    "tokenizer_bpe_apply_trie",
-    # sequential DPs de-serialized into ONE applyInPandas task
-    # over the collapsed daily frame (the recursive-CTE form cost
-    # |days| scheduler round-trips; the CTE stays as the DuckDB oracle)
-    "burst_detection_twostate",
-    "holt_linear_daily",
-    # Holt-Winters shares holt_linear's declared shape — the
-    # sequential recurrence runs in ONE applyInPandas task over the
-    # day-bounded frame
-    "holt_winters_additive_daily",
-    # Jaro-Winkler is a DECLARED vectorized pandas-UDF scorer
-    # (cross-implementation check vs DuckDB's built-in)
-    "jaro_winkler_pairs",
-    # the declared §2.J mapInArrow surface itself
-    "mapinarrow_batch_audit",
-    # MaxMatch segments the Heaps-bounded DISTINCT word vocab via
-    # a broadcast-vocab pandas UDF (the tokenizer_bpe_apply precedent)
-    "tokenizer_maxmatch_segment",
-    # the declared Arrow-optimized scalar UDF surface itself
-    "udf_arrow_scalar",
-    # the exact-verify dot over candidate pairs is a
-    # DECLARED Arrow batch kernel (np.einsum — guide §4.2's vectorized-
-    # native sweet spot; measured 2.24 s -> 1.66 s interleaved min-of-5
-    # vs the interpreted JVM fold, identical rows, hash-green).  Shape
-    # pinned by test_semantic_lsh_verify_dot_is_arrow_vectorized.
-    "dedup_semantic_lsh_portable",
-    # the within-cluster exact dot matrix is a
-    # DECLARED grouped numpy matmul kernel (guide §4.2/§8: each vector
-    # crosses the boundary once instead of both vectors per pair, and
-    # the n_c² int64 dots run as chunked matmuls; measured sf1 e2e
-    # 20.4 s -> 1.56 s vs the pairwise self-join + JVM fold, with an
-    # Arrow per-pair dot at 9.9 s between them; identical rows on all
-    # arms, hash-green).  Pinned by test_semdedup_grouped_matmul_kernel.
-    "semdedup_centroid_prune",
-    # the d² gram build is a DECLARED per-task numpy
-    # X^T X partial kernel (guide §4.2/§8: one int64 matmul per Arrow
-    # batch, d² = 4096 cells per TASK into the shuffle instead of 4096
-    # structs per ROW through codegen; sf1 A/B e2e gram 6.80 -> 0.92 s,
-    # pca 16.5 -> 2.3 s, identical rows — exact int64 partial sums are
-    # order-free).  Pinned by test_gram_kernel_*.
-    "embedding_gram_matrix",
-    "embedding_pca_power_iter",
-    # the co-purchase C(basket,2) pair fan is a DECLARED
-    # vectorized Arrow kernel (guide §4.2: the codegen nested-transform
-    # explode allocated a boxed array-of-arrays per basket row; measured
-    # interleaved CPU 3.18 -> 2.39 s sf0.1 / 55.1 -> 31.2 s sf1,
-    # identical 3573 / 35730 edges).  Shared via _copurchase_edges +
-    # triangle_count_copurchase, so the whole graph family carries the
-    # one MapInArrow node.  Pinned by test_pair_fan_kernel_*.
-    "triangle_count_copurchase",
-    "clustering_coeff_per_node",
-    "label_prop_communities",
-    "kcore_peel_rounds",
-    "jaccard_node_similarity",
-    "adamic_adar_link_pred",
-    "degree_assortativity",
-}
-# Skipped in the sweep: plan construction would execute side effects
-# (streaming drains, sink writes, JDBC, driver-loop iteration) already
-# exercised elsewhere in the suite.
-_PY_SWEEP_SKIP_PREFIX = ("stream_", "kafka_")
-_PY_SWEEP_SKIP = {
-    "parquet_sink", "parquet_sink_day_partitioned", "csv_export",
-    "jsonl_gz_export", "compact_merge_on_read", "jdbc_source",
-    "bq_sink_adapter", "dup_connected_components", "dup_cc_twostar",
-    "mm_decode_stub", "mm_frame_sample",
-}
-
-
-def test_registry_wide_jvm_purity(spark, sf_dir):
-    # engine-wide invariant: Python execution nodes appear ONLY in the
-    # declared Python surface — every other operator must stay inside
-    # whole-stage-codegen-able JVM plans at any scale
-    markers = ("EvalPython", "InPandas", "PythonMapInArrow")
-    offenders = []
-    for qid, fn in sorted(Q.items()):
-        if qid.startswith(_PY_SWEEP_SKIP_PREFIX) or qid in _PY_SWEEP_SKIP:
-            continue
-        plan = _plan(fn(spark, sf_dir))
-        if any(m in plan for m in markers) and qid not in _PY_ALLOWED:
-            offenders.append(qid)
-    assert not offenders, f"undeclared Python in plans: {offenders}"
-
-
 def test_dynamic_partition_pruning_on_month_join(spark, sf_dir):
     """Joining the partitioned sink on its partition column against a
     filtered dim must plan a DPP subquery: the fact scan's partition
