@@ -33,6 +33,7 @@ no built-in equivalent.
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql.datasource import (
     DataSource,
     DataSourceReader,
@@ -564,9 +565,13 @@ def _pickle_self_by_value() -> None:
 
 
 def register_sources(spark) -> None:
-    """Idempotently register this module's four data sources on
-    ``spark``: ``migbq_pkrange``, ``migbq_pkrange_stream``,
-    ``migbq_loadjob`` and ``migbq_loadjob_stream``."""
+    """Register this module's four data sources on ``spark`` once:
+    ``migbq_pkrange``, ``migbq_pkrange_stream``, ``migbq_loadjob`` and
+    ``migbq_loadjob_stream``.  The session is marked after the first
+    call, so a later call neither pickles the module again nor makes
+    Spark replace (and warn about) a registered source."""
+    if getattr(spark, "_migbq_sources_registered", False):
+        return
     _pickle_self_by_value()
     for ds in (
         PkRangeDataSource,
@@ -576,5 +581,9 @@ def register_sources(spark) -> None:
     ):
         try:
             spark.dataSource.register(ds)
-        except Exception:
-            pass  # already registered on this session
+        except AnalysisException as e:
+            # Spark refuses a name that the active session already holds
+            # (its lookups resolve the name through that session).
+            if e.getCondition() != "DATA_SOURCE_ALREADY_EXISTS":
+                raise
+    spark._migbq_sources_registered = True

@@ -1,8 +1,8 @@
 """Per-operator profiler: warm e2e wall (min-of-N), executor CPU and job
 count for a list of registered queries, on a UI-enabled engine session.
 For each run it also prints the compile cost outside executor tasks: the
-classes Janino compiled (``compiles``) and the CPU of the JVM's C1/C2 JIT
-compiler threads (``jit``).
+classes Janino compiled (``compiles``) and the milliseconds the JVM's
+C1/C2 JIT compilers spent (``jit_ms``).
 
 Wall seconds on this box swing with host weather; executor CPU from the
 REST API is the throttle-immune number.  Use for
@@ -49,29 +49,12 @@ def _janino_compiles(spark) -> int:
     return int(metrics.METRIC_COMPILATION_TIME().getCount())
 
 
-def _jit_ticks(pid: int) -> dict[int, int]:
-    """CPU ticks (utime + stime) of each live ``C1/C2 CompilerThread*``
-    thread of the JVM, by thread id, from ``/proc/<pid>/task/*/stat``."""
-    ticks = {}
-    for task in Path(f"/proc/{pid}/task").iterdir():
-        try:
-            # comm is cut at 15 characters: "C2 CompilerThre"
-            if (task / "comm").read_text().startswith(
-                ("C1 CompilerThre", "C2 CompilerThre")
-            ):
-                stat = (task / "stat").read_text().rsplit(")", 1)[1].split()
-                ticks[int(task.name)] = int(stat[11]) + int(stat[12])
-        except (OSError, IndexError):
-            pass  # the thread ended meanwhile
-    return ticks
-
-
-def _jit_cpu_s(before: dict[int, int], after: dict[int, int]) -> float:
-    """JIT compiler CPU (s) between two ``_jit_ticks`` reads.  HotSpot
-    starts and retires compiler threads on demand; one retired in between
-    is not counted, so this can undercount, never overcount."""
-    ticks = sum(t - before.get(tid, 0) for tid, t in after.items())
-    return ticks / os.sysconf("SC_CLK_TCK")
+def _jit_ms(spark) -> int:
+    """Milliseconds the JVM's JIT compilers have spent so far, summed over
+    compiler threads (``CompilationMXBean``).  HotSpot starts and retires
+    compiler threads on demand; this total keeps a retired thread's time."""
+    mf = spark._jvm.java.lang.management.ManagementFactory
+    return int(mf.getCompilationMXBean().getTotalCompilationTime())
 
 
 def _cpu_since(ui: str, app: str, first_job: int) -> float:
@@ -110,7 +93,6 @@ def main() -> None:
     sc = spark.sparkContext
     ui = sc.uiWebUrl
     app = sc.applicationId
-    jvm_pid = int(spark._jvm.java.lang.ProcessHandle.current().pid())
     # session warm-up (JVM/codegen/parquet footers), same as bench.py
     queries["agg_pk_bounds"](spark, SF_DIR).collect()
     summary = {}
@@ -124,13 +106,13 @@ def main() -> None:
                     urllib.request.urlopen(f"{ui}/api/v1/applications/{app}/jobs")
                 )
             )
-            compiles0, jit0 = _janino_compiles(spark), _jit_ticks(jvm_pid)
+            compiles0, jit0 = _janino_compiles(spark), _jit_ms(spark)
             t0 = time.monotonic()
             df = fn(spark, SF_DIR)
             df.write.format("noop").mode("overwrite").save()
             wall = time.monotonic() - t0
             compiles = _janino_compiles(spark) - compiles0
-            jit = _jit_cpu_s(jit0, _jit_ticks(jvm_pid))
+            jit = _jit_ms(spark) - jit0
             jobs1 = json.load(
                 urllib.request.urlopen(f"{ui}/api/v1/applications/{app}/jobs")
             )
@@ -140,7 +122,7 @@ def main() -> None:
             runs.append((wall, njobs, cpu, compiles, jit))
             print(
                 f"{qid:36s} r{r} wall={wall:7.3f}s jobs={njobs:3d} "
-                f"cpu={cpu:7.2f}s compiles={compiles:4d} jit={jit:6.2f}s",
+                f"cpu={cpu:7.2f}s compiles={compiles:4d} jit_ms={jit:6d}",
                 flush=True,
             )
         walls, jobs, cpus, compiles, jits = (sorted(col) for col in zip(*runs))
@@ -148,12 +130,12 @@ def main() -> None:
         summary[qid] = (walls[0], jobs[mid], cpus[0], compiles[mid], jits[mid])
     print(
         "\n== summary (warm wall_min / median jobs / cpu_min / "
-        "median compiles / median jit) =="
+        "median compiles / median jit_ms) =="
     )
     for qid, (w, j, c, n, t) in summary.items():
         print(
             f"{qid:36s} wall_min={w:7.3f} jobs={j:3d} cpu_min={c:7.2f} "
-            f"compiles={n:4d} jit={t:6.2f}"
+            f"compiles={n:4d} jit_ms={t:6d}"
         )
     spark.stop()
 
